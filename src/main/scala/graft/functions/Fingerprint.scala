@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -53,15 +53,37 @@ object Fingerprint {
 
   final case class TableDigest(count: Long, checksum: BigInt)
 
-  /** One-pass count + order-insensitive checksum. The hash sum is carried as
-    * decimal(38,0): Spark 4 runs ANSI mode by default, so a plain long sum of
-    * xxhash64 values overflow-throws after a handful of rows; decimal(38,0)
-    * is exact to ~1e19 rows and still map-side combinable. */
+  object TableDigest {
+    /** Reads the (count, checksum) row that [[aggregates]] produce. */
+    def fromRow(row: Row): TableDigest = {
+      val chk = if (row.isNullAt(1)) BigInt(0) else BigInt(row.getDecimal(1).toBigInteger)
+      TableDigest(row.getLong(0), chk)
+    }
+  }
+
+  /** The digest's two aggregates, in the order [[TableDigest.fromRow]]
+    * reads them: the row count and the order-insensitive checksum. The
+    * hash sum is carried as decimal(38,0): Spark 4 runs ANSI mode by
+    * default, so a plain long sum of xxhash64 values overflow-throws after
+    * a handful of rows; decimal(38,0) is exact to ~1e19 rows and still
+    * map-side combinable. */
+  def aggregates(df: DataFrame): Seq[Column] = Seq(
+    count(lit(1)).as("cnt"),
+    sum(rowHash(df).cast(DecimalType(38, 0))).as("chk"))
+
+  /** One-pass count + order-insensitive checksum. */
   def digest(df: DataFrame): TableDigest = {
-    val row = df.agg(
-      count(lit(1)).as("cnt"),
-      sum(rowHash(df).cast(DecimalType(38, 0))).as("chk")).head()
-    val chk = if (row.isNullAt(1)) BigInt(0) else BigInt(row.getDecimal(1).toBigInteger)
-    TableDigest(row.getLong(0), chk)
+    val aggs = aggregates(df)
+    TableDigest.fromRow(df.agg(aggs.head, aggs.tail: _*).head())
+  }
+
+  /** `df` with its digest attached as an [[Observation]]: the first action
+    * over the returned frame (a write, typically) computes the digest in
+    * its own pass, with no extra job. Read it afterwards from the
+    * observation's row with [[TableDigest.fromRow]]. */
+  def observed(df: DataFrame): (DataFrame, Observation) = {
+    val obs = Observation()
+    val aggs = aggregates(df)
+    (df.observe(obs, aggs.head, aggs.tail: _*), obs)
   }
 }

@@ -140,6 +140,7 @@ final case class DataVerificationResult(
     sampleMatch: Boolean,
     startTime: Double,
     endTime: Double,
+    sourceDigest: String, // "recorded" (from the migrate write) | "scanned"
     error: Option[String] = None) {
   def duration: Double = endTime - startTime
   def ok: Boolean = countsMatch && checksumMatch && sampleMatch

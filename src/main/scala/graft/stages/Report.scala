@@ -115,12 +115,12 @@ object Report {
     val totalOk = results.count(_.ok)
     results.groupBy(_.database).toSeq.sortBy(_._1).foreach { case (db, rs) =>
       sb.append(s"\n📁 Database: $db\n").append("-" * 80).append('\n')
-      sb.append(s"${pad("Table Name", 40)} ${pad("Status", 10)} ${pad("Records", 20)} ${pad("Duration(s)", 10)}\n")
-      sb.append("-" * 80).append('\n')
+      sb.append(s"${pad("Table Name", 40)} ${pad("Status", 10)} ${pad("Records", 20)} ${pad("Duration(s)", 12)} ${pad("Source", 10)}\n")
+      sb.append("-" * 96).append('\n')
       rs.foreach { r =>
         val icon = if (r.ok) "✅" else "❌"
         val records = f"${r.sourceCount}%,d → ${r.targetCount}%,d"
-        sb.append(s"${pad(r.tableName, 40)} ${pad(icon, 10)} ${pad(records, 20)} ${pad(f"${r.duration}%.2f", 10)}\n")
+        sb.append(s"${pad(r.tableName, 40)} ${pad(icon, 10)} ${pad(records, 20)} ${pad(f"${r.duration}%.2f", 12)} ${pad(r.sourceDigest, 10)}\n")
         r.error.foreach(e => sb.append(s"  Error: $e\n"))
         if (r.error.isEmpty && !r.ok) {
           if (!r.countsMatch) sb.append("  ⚠️ Record counts do not match\n")

@@ -1,16 +1,20 @@
 package graft.stages
 
+import java.nio.file.Paths
 import java.time.Instant
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.catalog.SnapshotCatalog
+import graft.catalog.{JObj, JStr, Json, SnapshotCatalog}
 import graft.functions.Fingerprint
+import graft.functions.Fingerprint.TableDigest
 
 /** Stage 1 — snapshot collection (`/root/reference/1_collect_src_snapshots.py`).
   *
@@ -197,14 +201,17 @@ object SchemaVerifier {
     infos.map(verifyOne(cat, _))
 }
 
-/** Stage 5 — migrate table data
-  * (`/root/reference/5_migrate_tables_data.py:44-110`).
+/** Stage 5 — migrate table data (`5_migrate_tables_data.py:44-110`).
   *
   * Per table: assert the snapshot exists, time-travel read, overwrite-write
-  * into the target. Two scale improvements over the reference:
+  * into the target. Scale improvements over the reference:
   *   - the reference runs `df.count()` and then writes — two full scans of
   *     the source (`5:76` then `5:80-83`); our record count rides the write
   *     itself via `Observation` inside `SnapshotCatalog.commit`, one scan.
+  *   - the source fingerprint that stage 6 compares against (count +
+  *     checksum, [[graft.functions.Fingerprint]]) rides the same write as a
+  *     second `Observation` and is recorded on the target
+  *     ([[SourceDigest]]), so verification need not scan the source again.
   *   - the existence check is a log lookup, not a Spark job (`5:62-69`).
   * The write preserves the target's declared partition spec (partitionBy in
   * the commit), so migrated data lands partition-pruned for readers.
@@ -224,8 +231,11 @@ object Migrator {
         dst.createTable(info.database, info.tableName, df.schema,
           partitionCols = info.partitionCols.map(_.name))
       }
-      val snap = dst.overwrite(info.database, info.tableName, df)
-      snap.summary.get("added_records").map(_.toLong).getOrElse(snap.recordCount)
+      val (observed, obs) = Fingerprint.observed(df)
+      val snap = dst.overwrite(info.database, info.tableName, observed)
+      val records = snap.summary.get("added_records").map(_.toLong).getOrElse(snap.recordCount)
+      SourceDigest.record(src, dst, info, snap.snapshotId, obs, records)
+      records
     } match {
       case Success(records) =>
         MigrationResult(info.database, info.tableName, info.snapshotId, records,
@@ -240,22 +250,77 @@ object Migrator {
     infos.map(migrateOne(src, dst, _))
 }
 
-/** Stage 6 — verify data integrity
-  * (`/root/reference/6_verify_data_integrity.py:45-115`).
+/** The source fingerprint a migrate write observed, kept as the target
+  * table property [[Property]] and bound to what it describes: the source
+  * warehouse (absolute, normalized, so catalogs opened on a relative and an
+  * absolute spelling of one warehouse agree), `db.table`, the source
+  * snapshot id, and the target snapshot id the migrate commit produced.
+  *
+  * The record is written after the commit. A crash in between leaves no
+  * record (or an older one naming an earlier target snapshot), so
+  * verification scans the source and a retried migration converges.
+  */
+object SourceDigest {
+  val Property = "migrate.source-digest"
+
+  private def binding(src: SnapshotCatalog, info: TableInfo,
+      targetSnapshotId: Long): Map[String, String] = Map(
+    "source_warehouse" -> Paths.get(src.warehouse).toAbsolutePath.normalize().toString,
+    "table" -> info.tableKey,
+    "source_snapshot_id" -> info.snapshotId.toString,
+    "target_snapshot_id" -> targetSnapshotId.toString)
+
+  /** Record the digest `obs` saw, once the write that fired it has
+    * committed `targetSnapshotId` with `records` rows. A digest whose count
+    * disagrees with the commit's is dropped, and verification then scans:
+    * the observed frame ran through more than the write, as when a target
+    * with a `write.sort-order` range-samples it first. */
+  def record(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo,
+      targetSnapshotId: Long, obs: Observation, records: Long): Unit =
+    Try(Await.result(obs.future, 30.seconds)).toOption.map(TableDigest.fromRow)
+      .filter(_.count == records)
+      .foreach { d =>
+        val fields = binding(src, info, targetSnapshotId) ++
+          Map("count" -> d.count.toString, "checksum" -> d.checksum.toString)
+        dst.setProperty(info.database, info.tableName, Property,
+          Some(Json.write(Json.fromStrMap(fields))))
+      }
+
+  /** The recorded source digest, when every bound field matches; `None`
+    * for an absent, unbound or unreadable record. */
+  def recorded(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo,
+      targetSnapshotId: Long): Option[TableDigest] = Try {
+    dst.meta(info.database, info.tableName).properties.get(Property).map(Json.parse)
+      .collect { case o: JObj => o.fields.collect { case (k, JStr(v)) => k -> v }.toMap }
+      .filter(m => binding(src, info, targetSnapshotId).forall { case (k, v) => m.get(k).contains(v) })
+      .map(m => TableDigest(m("count").toLong, BigInt(m("checksum"))))
+  }.toOption.flatten
+}
+
+/** Stage 6 — verify data integrity (`6_verify_data_integrity.py:45-115`).
   *
   * Source (as of the migrated snapshot) vs target: row counts equal AND
   * order-insensitive checksums equal. `sample_match` is derived from the
   * other two, exactly like the reference's argument at `6:83-87`.
-  * Each side is ONE fused scan (count + checksum in a single agg) vs the
-  * reference's two; see [[graft.functions.Fingerprint]].
+  * The target is always read back in full, in ONE fused scan (count +
+  * checksum in a single agg) vs the reference's two; see
+  * [[graft.functions.Fingerprint]]. The source side is the digest the
+  * migrate write recorded ([[SourceDigest]]) when its binding matches the
+  * target's current snapshot — the source is then scanned once across
+  * stages 5 and 6 — and otherwise one fused scan of the source, as of the
+  * migrated snapshot. `sourceDigest` in the result says which.
   */
 object IntegrityVerifier {
 
   def verifyOne(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo): DataVerificationResult = {
     val t0 = System.currentTimeMillis() / 1000.0
+    val targetId = Try(dst.currentSnapshotId(info.database, info.tableName))
+    val recorded = targetId.toOption.flatMap(SourceDigest.recorded(src, dst, info, _))
+    val sourceDigest = if (recorded.isDefined) "recorded" else "scanned"
     Try {
-      val srcDigest = Fingerprint.digest(src.readAsOf(info.database, info.tableName, info.snapshotId))
-      val dstDigest = Fingerprint.digest(dst.readLatest(info.database, info.tableName))
+      val srcDigest = recorded.getOrElse(
+        Fingerprint.digest(src.readAsOf(info.database, info.tableName, info.snapshotId)))
+      val dstDigest = Fingerprint.digest(dst.readAsOf(info.database, info.tableName, targetId.get))
       (srcDigest, dstDigest)
     } match {
       case Success((s, d)) =>
@@ -263,11 +328,11 @@ object IntegrityVerifier {
         val checksumMatch = s.checksum == d.checksum
         DataVerificationResult(info.database, info.tableName, s.count, d.count,
           countsMatch, checksumMatch, sampleMatch = countsMatch && checksumMatch,
-          t0, System.currentTimeMillis() / 1000.0)
+          t0, System.currentTimeMillis() / 1000.0, sourceDigest)
       case Failure(e) =>
         DataVerificationResult(info.database, info.tableName, 0L, 0L,
           countsMatch = false, checksumMatch = false, sampleMatch = false,
-          t0, System.currentTimeMillis() / 1000.0, Some(e.getMessage))
+          t0, System.currentTimeMillis() / 1000.0, sourceDigest, Some(e.getMessage))
     }
   }
 

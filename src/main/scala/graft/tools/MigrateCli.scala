@@ -109,7 +109,8 @@ object MigrateCli {
           println(s"Verification report saved to: $p")
           results.foreach(r => println(
             s"${if (r.ok) "✅" else "❌"} ${r.database}.${r.tableName}: " +
-            s"src=${r.sourceCount} dst=${r.targetCount} checksum=${r.checksumMatch}"))
+            s"src=${r.sourceCount} dst=${r.targetCount} checksum=${r.checksumMatch} " +
+            s"source=${r.sourceDigest}"))
           if (!results.forall(_.ok)) sys.exit(1)
 
         case "full" =>
@@ -152,7 +153,8 @@ object MigrateCli {
           Report.dataVerification(verified, workDir)
           verified.foreach(r => println(
             s"      ${if (r.ok) "✅" else "❌"} ${r.database}.${r.tableName}: " +
-            s"src=${r.sourceCount} dst=${r.targetCount} counts=${r.countsMatch} checksum=${r.checksumMatch}"))
+            s"src=${r.sourceCount} dst=${r.targetCount} counts=${r.countsMatch} " +
+            s"checksum=${r.checksumMatch} source=${r.sourceDigest}"))
           if (!verified.forall(_.ok)) { println("⚠️ verification FAILED"); sys.exit(1) }
           println("All tables migrated and verified ✅")
 

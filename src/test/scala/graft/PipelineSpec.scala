@@ -1,12 +1,15 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.time.Instant
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.SnapshotCatalog
+import graft.catalog.{JObj, JStr, Json, SnapshotCatalog}
 import graft.functions.Fingerprint
 import graft.stages._
 
@@ -100,6 +103,146 @@ class PipelineSpec extends AnyFunSuite {
       region.withColumn("r_name", when(col("r_regionkey") === 0, lit("XXXXX")).otherwise(col("r_name"))))
     val r = IntegrityVerifier.verifyOne(src, dst, info)
     assert(r.countsMatch && !r.checksumMatch && !r.ok)
+    assert(r.sourceDigest == "scanned", "the tampering commit unbinds the migrate record")
+  }
+
+  /** A source table `db.t` whose as-of snapshot (returned) carries live
+    * position deletes, with a later commit on top so it is not the latest. */
+  private def morSource(src: SnapshotCatalog): TableInfo = {
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+    src.createTable("db", "t", li.schema)
+    src.append("db", "t", li)
+    val asOf = src.deleteMoR("db", "t", col("l_quantity") < 5)
+    assert(asOf.deleteFiles.nonEmpty, "as-of snapshot must carry position deletes")
+    src.append("db", "t", li.limit(10))
+    SchemaCapture.captureTable(src, "db", "t", asOf.snapshotId).get
+  }
+
+  private def recordedDigest(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo) =
+    SourceDigest.recorded(src, dst, info, dst.currentSnapshotId(info.database, info.tableName))
+
+  test("recorded source digest equals an independent digest of a MoR as-of snapshot") {
+    val src = newCat()
+    val dst = newCat()
+    val info = morSource(src)
+    val m = Migrator.migrateOne(src, dst, info)
+    assert(m.status == "success", m)
+    val expected = Fingerprint.digest(src.readAsOf("db", "t", info.snapshotId))
+    assert(expected.count > 0 && expected.count < 6000)
+    assert(recordedDigest(src, dst, info).contains(expected))
+  }
+
+  test("recorded source digest covers top-level and nested map columns") {
+    val src = newCat()
+    val dst = newCat()
+    // top-level map -> sort_array(map_entries); struct/array of map and a
+    // map of maps -> to_json: every hashableCols branch runs inside observe
+    val df = spark.range(0, 50).selectExpr("id",
+      "map(concat('k', id % 3), id, 'z', id * 2) as m",
+      "named_struct('inner', map('a', id)) as st",
+      "array(map('x', cast(id as string))) as am",
+      "map('outer', map('in', id)) as mm")
+    src.createTable("db", "maps", df.schema)
+    val s1 = src.append("db", "maps", df)
+    val info = SchemaCapture.captureTable(src, "db", "maps", s1.snapshotId).get
+    assert(Migrator.migrateOne(src, dst, info).status == "success")
+    val expected = Fingerprint.digest(src.readAsOf("db", "maps", s1.snapshotId))
+    assert(expected.count == 50)
+    assert(recordedDigest(src, dst, info).contains(expected))
+    val v = IntegrityVerifier.verifyOne(src, dst, info)
+    assert(v.ok && v.sourceDigest == "recorded", v)
+  }
+
+  test("verify trusts only a matching record: source files gone still verifies; each mismatch scans") {
+    val src = newCat()
+    val dst = newCat()
+    val info = morSource(src)
+    assert(Migrator.migrateOne(src, dst, info).status == "success")
+
+    // move the source's data files away: a recorded verify never opens them
+    val data = Paths.get(src.warehouse, "db", "t", "data")
+    val parked = Files.createTempDirectory("graft_parked_").resolve("data")
+    Files.move(data, parked)
+    val r = IntegrityVerifier.verifyOne(src, dst, info)
+    assert(r.ok && r.sourceDigest == "recorded", r)
+    Files.move(parked, data)
+
+    def verifyScans(why: String): Unit = {
+      val v = IntegrityVerifier.verifyOne(src, dst, info)
+      assert(v.ok && v.sourceDigest == "scanned", s"$why: $v")
+    }
+    val prop = dst.meta("db", "t").properties(SourceDigest.Property)
+    // another source snapshot id in the record
+    val fields = Json.parse(prop).asInstanceOf[JObj].fields.collect { case (k, JStr(v)) => k -> v }.toMap
+    val otherSnap = fields + ("source_snapshot_id" -> (info.snapshotId + 1).toString)
+    dst.setProperty("db", "t", SourceDigest.Property, Some(Json.write(Json.fromStrMap(otherSnap))))
+    verifyScans("record names another source snapshot")
+    // no record at all
+    dst.setProperty("db", "t", SourceDigest.Property, None)
+    verifyScans("record absent")
+    // the record is back, but the target was re-committed since
+    dst.setProperty("db", "t", SourceDigest.Property, Some(prop))
+    assert(IntegrityVerifier.verifyOne(src, dst, info).sourceDigest == "recorded")
+    dst.overwrite("db", "t", src.readAsOf("db", "t", info.snapshotId))
+    verifyScans("target re-committed")
+  }
+
+  test("a sort-ordered target double-counts the observation: no record, verify scans") {
+    val src = newCat()
+    val dst = newCat()
+    val info = morSource(src)
+    // the range partitioner's sampling job runs the observed frame too
+    dst.createTable("db", "t", src.snapshotAt("db", "t", info.snapshotId).schema,
+      properties = Map("write.sort-order" -> "l_quantity"))
+    val m = Migrator.migrateOne(src, dst, info)
+    assert(m.status == "success" &&
+      m.recordsCount == src.readAsOf("db", "t", info.snapshotId).count(), m)
+    assert(!dst.meta("db", "t").properties.contains(SourceDigest.Property))
+    val v = IntegrityVerifier.verifyOne(src, dst, info)
+    assert(v.ok && v.sourceDigest == "scanned", v)
+  }
+
+  test("separate migrate and verify catalogs match across relative and absolute warehouse paths") {
+    val src = newCat()
+    val dst = newCat()
+    val info = morSource(src)
+    // as if `migrate-data` and `verify-data` ran as two processes: fresh
+    // catalogs, one given a relative and one an absolute (unnormalized)
+    // spelling of the same source warehouse
+    val abs = Paths.get(src.warehouse).toAbsolutePath
+    val rel = Paths.get("").toAbsolutePath.relativize(abs).toString
+    assert(!Paths.get(rel).isAbsolute)
+    val migrateSrc = new SnapshotCatalog(spark, rel)
+    assert(Migrator.migrateOne(migrateSrc, new SnapshotCatalog(spark, dst.warehouse), info)
+      .status == "success")
+    val verifySrc = new SnapshotCatalog(spark, s"$abs/./../${abs.getFileName}")
+    val v = IntegrityVerifier.verifyOne(verifySrc, new SnapshotCatalog(spark, dst.warehouse), info)
+    assert(v.ok && v.sourceDigest == "recorded", v)
+  }
+
+  test("migrate + verify of one MoR table run 4 Spark jobs (counter gate)") {
+    val src = newCat()
+    val dst = newCat()
+    val info = morSource(src)
+    assert(TableCreator.createOne(dst, info).status == "success")
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftColumnBridge.waitListenerBus(spark, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Migrator.migrateOne(src, dst, info).status == "success")
+      val v = IntegrityVerifier.verifyOne(src, dst, info)
+      assert(v.ok && v.sourceDigest == "recorded", v)
+      GraftColumnBridge.waitListenerBus(spark, 10000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // Before the source digest rode the migrate write: 7 jobs. Migrate ran
+    // 2 (the position-delete broadcast and the write); verify ran 5, 3 of
+    // them a second source read (delete broadcast, partial and final
+    // aggregate) and 2 for the target. Now: the same 2 for migrate, and
+    // only the target's 2 for verify.
+    assert(jobs.get() == 4, s"jobs: ${jobs.get()}")
   }
 
   test("schema verifier reports missing and extra columns") {
