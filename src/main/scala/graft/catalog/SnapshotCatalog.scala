@@ -7507,11 +7507,16 @@ final class SnapshotCatalog(
 
   /** Update one table property (ALTER TABLE SET/UNSET TBLPROPERTIES). */
   def setProperty(db: String, table: String, key: String,
-      value: Option[String]): Unit = withTableLock(db, table) {
+      value: Option[String]): Unit = setProperties(db, table, Map(key -> value))
+
+  /** Set (`Some`) and unset (`None`) table properties in ONE metadata
+    * write, so no reader or crash ever sees part of the change. */
+  def setProperties(db: String, table: String,
+      changes: Map[String, Option[String]]): Unit = withTableLock(db, table) {
     val tm = meta(db, table)
-    val props = value match {
-      case Some(v) => tm.properties + (key -> v)
-      case None    => tm.properties - key
+    val props = changes.foldLeft(tm.properties) {
+      case (ps, (k, Some(v))) => ps + (k -> v)
+      case (ps, (k, None))    => ps - k
     }
     writeString(metaPath(db, table), Json.writePretty(tm.copy(properties = props).toJson))
   }

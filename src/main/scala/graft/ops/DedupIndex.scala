@@ -43,16 +43,10 @@ import graft.catalog.SnapshotCatalog
   * is what lets a DuckDB oracle state the result as plain all-pairs
   * Jaccard.
   *
-  * [[refresh]] advances the index to the base's current snapshot from
-  * per-commit metadata (`changeSetsAcrossRange` — the machinery behind
-  * retractable MVs and the vector/text indexes): a pure-append range
-  * sketches and appends the new docs' bands; any range with deletes
-  * takes the TOUCHED-ID REPAIR — retract every id the churn names (an
-  * equality delete on the index; no band file rewritten), then re-sketch
-  * those ids' rows as they stand in the base. Non-enumerable ranges
-  * (rollback, true rewrite, evolution) fall back to a full re-sketch —
-  * honest cost, same layout. Document ids must be UNIQUE per row (the
-  * id-keyed-index contract shared with [[TextIndex]]).
+  * [[refresh]] advances the index through [[IndexMaintainer]] (pure
+  * append, touched-id repair or full re-sketch; the lanes and the
+  * repair's rationale are documented there). Document ids must be
+  * UNIQUE per row (the maintainer's id-keyed-index contract).
   */
 object DedupIndex {
 
@@ -69,16 +63,6 @@ object DedupIndex {
     * pruning folds the probed set into driver-side metadata, both
     * O(nbuckets) ([[TextIndex.MaxBuckets]] reasoning, verbatim). */
   val MaxBuckets = 65536
-
-  /** Probed-bucket counts up to this ride an inline IN literal (static
-    * directory pruning, pushed filter); larger sets prune driver-side
-    * only ([[SnapshotCatalog.readLatestPruned]]) so a huge literal never
-    * bloats the plan. The equi-join on (band_idx, band_hash) enforces
-    * exactness either way: rows from over-read buckets cannot equi-join
-    * a probe hash that routes elsewhere. Tunable for specs. */
-  private def maxInlineBuckets(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("graft.dedupindex.maxInlineBuckets")
-      .map(_.toInt).getOrElse(1024)
 
   private def bucketOf(bandHash: Column, nbuckets: Int): Column =
     pmod(bandHash.cast("long"), lit(nbuckets.toLong))
@@ -121,27 +105,24 @@ object DedupIndex {
     require(w > 0, s"shingle width must be positive, got $w")
     require(bands > 0 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    require(!cat.tableExists(db, name), s"index $db.$name already exists")
-    val base = cat.readLatest(db, baseTable)
-    val pin = cat.currentSnapshotId(db, baseTable)
-    cat.createTable(db, name, indexSchema(base.schema(idCol)),
-      partitionCols = Seq("bucket"),
-      properties = Map(
-        PropBase -> s"$db.$baseTable", PropIdCol -> idCol,
-        PropTextCol -> textCol, PropShingleW -> w.toString,
-        PropNumHashes -> numHashes.toString, PropBands -> bands.toString,
-        PropBuckets -> nbuckets.toString, PropPin -> pin.toString))
-    try cat.append(db, name,
-      bandsOf(base, idCol, textCol, w, numHashes, bands, nbuckets))
-    catch {
-      case t: Throwable =>
-        // never strand a half-built index: drop this attempt's table so
-        // the same name can retry cleanly (the VectorIndex discipline)
-        try if (cat.tableExists(db, name)) cat.dropTable(db, name)
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw t
-    }
+    val props = Map(PropBase -> s"$db.$baseTable", PropIdCol -> idCol,
+      PropTextCol -> textCol, PropShingleW -> w.toString,
+      PropNumHashes -> numHashes.toString, PropBands -> bands.toString,
+      PropBuckets -> nbuckets.toString)
+    IndexMaintainer.create(cat, db, name, kindOf(props), indexSchema, "bucket", props)
   }
+
+  /** The index's part of the [[IndexMaintainer]] skeleton. */
+  private def kindOf(p: Map[String, String]): IndexMaintainer.Kind = {
+    val Array(bdb, btab) = p(PropBase).split("\\.", 2)
+    val (idCol, textCol) = (p(PropIdCol), p(PropTextCol))
+    IndexMaintainer.Kind(bdb, btab, PropPin, idCol, Seq(idCol, textCol),
+      bandsOf(_, idCol, textCol, p(PropShingleW).toInt, p(PropNumHashes).toInt,
+        p(PropBands).toInt, p(PropBuckets).toInt))
+  }
+
+  private[graft] def kind(cat: SnapshotCatalog, db: String,
+      name: String): IndexMaintainer.Kind = kindOf(cat.meta(db, name).properties)
 
   private def state(cat: SnapshotCatalog, db: String, name: String) = {
     val p = cat.meta(db, name).properties
@@ -152,50 +133,11 @@ object DedupIndex {
   }
 
   /** Advance the index to the base table's current snapshot. Returns
-    * (mode, commits advanced): "fresh" (nothing to do), "incremental"
-    * (per-commit metadata enumerated the exact insert/delete sets; cost
-    * is churn-sized — the touched docs are re-sketched, nothing else),
-    * or "full" (non-enumerable range — one full re-sketch). */
-  def refresh(cat: SnapshotCatalog, db: String, name: String): (String, Long) = {
-    val (bdb, btab, idCol, textCol, w, nh, nb, nbk, pin) = state(cat, db, name)
-    val cur = cat.currentSnapshotId(bdb, btab)
-    if (cur == pin) return ("fresh", 0L)
-    val sets =
-      try cat.changeSetsAcrossRange(bdb, btab, pin, cur)
-      catch { case scala.util.control.NonFatal(_) => None }
-    val mode = sets match {
-      case Some((ins0, del0)) =>
-        // churn-sized frames re-execute for every probe/commit below —
-        // cache them for the refresh's scope (r15, guide §5: the ins/del
-        // sets re-read the churn files on each action otherwise)
-        val ins = ins0.localCheckpoint(); val del = del0.localCheckpoint()
-        try {
-          val delIds = del.select(col(idCol))
-          if (delIds.isEmpty) {
-            if (!ins.isEmpty)
-              cat.append(db, name, bandsOf(ins, idCol, textCol, w, nh, nb, nbk))
-          } else {
-            val touched = ins.select(col(idCol)).union(delIds).distinct().localCheckpoint()
-            try {
-              cat.deleteMoREq(db, name, touched)
-              val fresh = cat.readLatest(bdb, btab)
-                .join(touched, Seq(idCol), "left_semi").localCheckpoint()
-              try {
-                if (!fresh.isEmpty)
-                  cat.append(db, name, bandsOf(fresh, idCol, textCol, w, nh, nb, nbk))
-              } finally fresh.unpersist()
-            } finally touched.unpersist()
-          }
-        } finally { ins.unpersist(); del.unpersist() }
-        "incremental"
-      case None =>
-        cat.overwrite(db, name,
-          bandsOf(cat.readLatest(bdb, btab), idCol, textCol, w, nh, nb, nbk))
-        "full"
-    }
-    cat.setProperty(db, name, PropPin, Some(cur.toString))
-    (mode, cur - pin)
-  }
+    * (mode, commits advanced): "fresh", "incremental" or "full" — the
+    * [[IndexMaintainer]] lanes; an incremental refresh re-sketches only
+    * the churned docs. */
+  def refresh(cat: SnapshotCatalog, db: String, name: String): (String, Long) =
+    IndexMaintainer.refresh(cat, db, name, kind(cat, db, name))
 
   /** Exact Jaccard verification of candidate pairs against full shingle
     * sets — [[Dedup]]'s integer cross-multiplication, generalized to
@@ -264,14 +206,10 @@ object DedupIndex {
     val probe = bandsOf(batch, batchIdCol, batchTextCol, w, nh, nb, nbk)
       .select(col(batchIdCol).as("batch_id"), col("bucket"),
         col("band_idx"), col("band_hash"))
-    val probed = probe.select(col("bucket")).distinct()
-      .collect().map(_.getLong(0)).toIndexedSeq.sorted
-    val bucketPred =
-      if (probed.isEmpty) lit(false) else col("bucket").isin(probed: _*)
-    val idx =
-      if (probed.length <= maxInlineBuckets(batch))
-        cat.readLatestWhere(db, name, bucketPred)
-      else cat.readLatestPruned(db, name, bucketPred)
+    // the equi-join on (band_idx, band_hash) keeps an over-read bucket
+    // exact: its rows cannot join a probe hash that routes elsewhere
+    val idx = IndexMaintainer.probedRead(cat, db, name, "bucket",
+      probe.select(col("bucket")))
     val cand = probe.drop("bucket")
       .join(idx.select(col(idCol).as("corpus_id"), col("band_idx"), col("band_hash")),
         Seq("band_idx", "band_hash"))

@@ -34,15 +34,10 @@ import graft.catalog.SnapshotCatalog
   *     by nothing and `avgdl = total_dl / n_docs` matches a from-scratch
   *     average bit-for-bit.
   *
-  * [[refresh]] advances the index to the base table's current snapshot
-  * from per-commit metadata (`changeSetsAcrossRange`, the machinery that
-  * maintains retractable MVs and the vector index): a pure-append range
-  * tokenizes and appends the new docs' postings; any range with deletes
-  * takes the TOUCHED-ID REPAIR — retract every id the churn names (an
-  * equality delete on the index; no posting file rewritten), then
-  * re-tokenize those ids' rows as they stand in the base (one semi-join
-  * pass). Non-enumerable ranges (rollback, true rewrite, evolution) fall
-  * back to a full re-tokenization — honest cost, same layout.
+  * [[refresh]] advances the index through [[IndexMaintainer]] (pure
+  * append, touched-id repair or full re-tokenization; the lanes and the
+  * repair's rationale are documented there), folding the corpus scalars
+  * from the same changelog.
   *
   * The design point at scale: ingest 10^6 documents into a 10^10 corpus
   * and the index advances with one 10^6-doc tokenize + one metadata
@@ -50,9 +45,9 @@ import graft.catalog.SnapshotCatalog
   * directories — the recompute-per-call alternative re-tokenizes the
   * lake per query batch.
   *
-  * Document ids must be UNIQUE per row (the standard contract of an
-  * id-keyed index; the repair retracts by id, and BM25's per-doc length
-  * normalization is only well-defined for one text per id).
+  * Document ids must be UNIQUE per row (the id-keyed-index contract of
+  * [[IndexMaintainer]]; BM25's per-doc length normalization is also only
+  * well-defined for one text per id).
   */
 object TextIndex {
 
@@ -71,17 +66,6 @@ object TextIndex {
     * still spreads ~15k terms per bucket, each file-skippable by the
     * term column's own footer stats within the directory. */
   val MaxBuckets = 65536
-
-  /** Probed-bucket counts up to this ride an inline IN literal in the
-    * scan (static directory pruning, pushed filter); larger sets prune
-    * driver-side only ([[SnapshotCatalog.readLatestPruned]]) so a huge
-    * literal never bloats the plan — the equi-join on `term` below
-    * enforces exactness either way (a term's postings live wholly in its
-    * own bucket; rows from over-read buckets cannot equi-join a query
-    * term that hashes elsewhere). Tunable for specs. */
-  private def maxInlineBuckets(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("graft.textindex.maxInlineBuckets")
-      .map(_.toInt).getOrElse(1024)
 
   private def bucketOf(term: Column, nbuckets: Int): Column =
     pmod(xxhash64(term), lit(nbuckets.toLong))
@@ -107,17 +91,23 @@ object TextIndex {
       .select(col(idCol), bucketOf(col("term"), nbuckets).as("bucket"),
         col("term"), col("tf"), col("dl"))
 
-  /** (token-bearing doc count, total token count) of a frame — the two
-    * corpus scalars, computed in ONE aggregation. Zero-token docs are
-    * outside the scoring universe (they hold no postings and cannot
-    * match any query), so they count in neither. */
-  private def tokStats(rows: DataFrame, textCol: String): (Long, Long) = {
-    val r = rows.select(size(Retrieval.toks(col(textCol))).cast("long").as("dl"))
-      .where(col("dl") > 0)
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("t"))
-      .head()
-    (r.getLong(0), r.getLong(1))
+  /** The index's part of the [[IndexMaintainer]] skeleton. The corpus
+    * scalars are per-doc counters: token-bearing docs count 1 and add
+    * their token count; zero-token docs are outside the scoring universe
+    * (they hold no postings and cannot match any query), so they count
+    * in neither. */
+  private def kindOf(p: Map[String, String]): IndexMaintainer.Kind = {
+    val Array(bdb, btab) = p(PropBase).split("\\.", 2)
+    val (idCol, textCol) = (p(PropIdCol), p(PropTextCol))
+    val dl = size(Retrieval.toks(col(textCol))).cast("long")
+    IndexMaintainer.Kind(bdb, btab, PropPin, idCol, Seq(idCol, textCol),
+      postingsOf(_, idCol, textCol, p(PropBuckets).toInt),
+      Map(PropNDocs -> when(dl > 0, 1L).otherwise(0L),
+        PropTotalDl -> when(dl > 0, dl).otherwise(0L)))
   }
+
+  private[graft] def kind(cat: SnapshotCatalog, db: String,
+      name: String): IndexMaintainer.Kind = kindOf(cat.meta(db, name).properties)
 
   /** Build the index over `db.baseTable`'s CURRENT snapshot. `nbuckets`
     * is the pruning granularity: queries read ~(distinct query terms)
@@ -126,98 +116,18 @@ object TextIndex {
       idCol: String, textCol: String, nbuckets: Int = 256): Unit = {
     require(nbuckets > 0 && nbuckets <= MaxBuckets,
       s"nbuckets must be in [1, $MaxBuckets], got $nbuckets")
-    require(!cat.tableExists(db, name), s"index $db.$name already exists")
-    val base = cat.readLatest(db, baseTable)
-    val pin = cat.currentSnapshotId(db, baseTable)
-    val (nDocs, totalDl) = tokStats(base, textCol)
-    cat.createTable(db, name, indexSchema(base.schema(idCol)),
-      partitionCols = Seq("bucket"),
-      properties = Map(
-        PropBase -> s"$db.$baseTable", PropIdCol -> idCol,
-        PropTextCol -> textCol, PropBuckets -> nbuckets.toString,
-        PropPin -> pin.toString, PropNDocs -> nDocs.toString,
-        PropTotalDl -> totalDl.toString))
-    try cat.append(db, name, postingsOf(base, idCol, textCol, nbuckets))
-    catch {
-      case t: Throwable =>
-        // never strand a half-built index: drop this attempt's table so
-        // the same name can retry cleanly (the VectorIndex discipline)
-        try if (cat.tableExists(db, name)) cat.dropTable(db, name)
-        catch { case scala.util.control.NonFatal(_) => () }
-        throw t
-    }
-  }
-
-  private def state(cat: SnapshotCatalog, db: String, name: String) = {
-    val p = cat.meta(db, name).properties
-    val Array(bdb, btab) = p(PropBase).split("\\.", 2)
-    (bdb, btab, p(PropIdCol), p(PropTextCol), p(PropPin).toLong,
-      p(PropBuckets).toInt)
+    val props = Map(PropBase -> s"$db.$baseTable", PropIdCol -> idCol,
+      PropTextCol -> textCol, PropBuckets -> nbuckets.toString)
+    IndexMaintainer.create(cat, db, name, kindOf(props), indexSchema, "bucket", props)
   }
 
   /** Advance the index to the base table's current snapshot. Returns
-    * (mode, commits advanced): "fresh" (nothing to do), "incremental"
-    * (per-commit metadata enumerated the exact insert/delete sets), or
-    * "full" (non-enumerable range — one full re-tokenization).
-    *
-    * The incremental discipline is the [[VectorIndex.refresh]] one,
-    * MULTISET-exact: a pure-append range tokenizes and appends; any
-    * range with deletes takes the touched-id repair — retract every id
-    * the churn names, re-tokenize those ids' rows as they stand in the
-    * base at cur. The corpus scalars fold from the SAME changelog
-    * multisets (`n' = n + |ins| - |del|` over token-bearing docs,
-    * likewise total dl), so a recomputed average could never disagree:
-    * the changelog is exact, the arithmetic is integer. */
-  def refresh(cat: SnapshotCatalog, db: String, name: String): (String, Long) = {
-    val (bdb, btab, idCol, textCol, pin, nb) = state(cat, db, name)
-    val cur = cat.currentSnapshotId(bdb, btab)
-    if (cur == pin) return ("fresh", 0L)
-    val p = cat.meta(db, name).properties
-    val sets =
-      try cat.changeSetsAcrossRange(bdb, btab, pin, cur)
-      catch { case scala.util.control.NonFatal(_) => None }
-    val mode = sets match {
-      case Some((ins0, del0)) =>
-        // churn-sized frames re-execute for every probe/stat/commit below
-        // — cache them for the refresh's scope (r15, guide §5: the
-        // ins/del sets re-read the churn files on each action otherwise)
-        val ins = ins0.localCheckpoint(); val del = del0.localCheckpoint()
-        try {
-          val (inN, inDl) = tokStats(ins, textCol)
-          val (deN, deDl) = tokStats(del, textCol)
-          val delIds = del.select(col(idCol))
-          if (delIds.isEmpty) {
-            if (!ins.isEmpty)
-              cat.append(db, name, postingsOf(ins, idCol, textCol, nb))
-          } else {
-            val touched = ins.select(col(idCol)).union(delIds).distinct().localCheckpoint()
-            try {
-              cat.deleteMoREq(db, name, touched)
-              val fresh = cat.readLatest(bdb, btab)
-                .join(touched, Seq(idCol), "left_semi").localCheckpoint()
-              try {
-                if (!fresh.isEmpty)
-                  cat.append(db, name, postingsOf(fresh, idCol, textCol, nb))
-              } finally fresh.unpersist()
-            } finally touched.unpersist()
-          }
-          cat.setProperty(db, name, PropNDocs,
-            Some((p(PropNDocs).toLong + inN - deN).toString))
-          cat.setProperty(db, name, PropTotalDl,
-            Some((p(PropTotalDl).toLong + inDl - deDl).toString))
-        } finally { ins.unpersist(); del.unpersist() }
-        "incremental"
-      case None =>
-        val base = cat.readLatest(bdb, btab)
-        val (nDocs, totalDl) = tokStats(base, textCol)
-        cat.overwrite(db, name, postingsOf(base, idCol, textCol, nb))
-        cat.setProperty(db, name, PropNDocs, Some(nDocs.toString))
-        cat.setProperty(db, name, PropTotalDl, Some(totalDl.toString))
-        "full"
-    }
-    cat.setProperty(db, name, PropPin, Some(cur.toString))
-    (mode, cur - pin)
-  }
+    * (mode, commits advanced): "fresh", "incremental" or "full" — the
+    * [[IndexMaintainer]] lanes. The corpus scalars fold from the same
+    * changelog multisets (`n' = n + |ins| - |del|` over token-bearing
+    * docs, likewise total dl) and land with the pin in one write. */
+  def refresh(cat: SnapshotCatalog, db: String, name: String): (String, Long) =
+    IndexMaintainer.refresh(cat, db, name, kind(cat, db, name))
 
   /** BM25 top-k served ENTIRELY from the index: route each query term to
     * its bucket, read ONLY those buckets' partitions (the probed set is
@@ -236,7 +146,8 @@ object TextIndex {
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val p = cat.meta(db, name).properties
-    val (_, _, idCol, _, _, nb) = state(cat, db, name)
+    val idCol = p(PropIdCol)
+    val nb = p(PropBuckets).toInt
     val nDocs = p(PropNDocs).toLong
     val totalDl = p(PropTotalDl).toLong
     require(nDocs > 0, s"index $db.$name holds no token-bearing documents")
@@ -247,17 +158,11 @@ object TextIndex {
       .select(col(qIdCol).as("query_id"),
         explode(Retrieval.toks(col(qTextCol))).as("term"))
       .distinct()
-    val probed = qTerms.select(bucketOf(col("term"), nb).as("bucket"))
-      .distinct().collect().map(_.getLong(0)).toIndexedSeq.sorted
-    // a term-less query batch probes nothing: a false predicate reads
-    // zero files and the joins below produce the empty, correctly-typed
-    // result through the one code path
-    val bucketPred =
-      if (probed.isEmpty) lit(false) else col("bucket").isin(probed: _*)
-    val idx =
-      if (probed.length <= maxInlineBuckets(queries))
-        cat.readLatestWhere(db, name, bucketPred)
-      else cat.readLatestPruned(db, name, bucketPred)
+    // a term-less query batch probes nothing and reads zero files; the
+    // equi-join on `term` below keeps an over-read bucket exact (a term's
+    // postings live wholly in its own bucket)
+    val idx = IndexMaintainer.probedRead(cat, db, name, "bucket",
+      qTerms.select(bucketOf(col("term"), nb)))
     // postings of the query's terms only; per-term df via a window count
     // (one pass — each term's partition IS its full corpus posting list)
     val matched = idx

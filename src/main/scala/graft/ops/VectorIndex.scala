@@ -29,15 +29,11 @@ import graft.catalog.SnapshotCatalog
   *     rest), and the stored vector (exact float→double widening) makes
   *     the re-rank self-contained: queries never touch the base table.
   *
-  * [[refresh]] advances the index to the base table's current snapshot
-  * from PER-COMMIT METADATA (`changeSetsAcrossRange`, the machinery that
-  * maintains retractable MVs): inserts assign to the frozen centroids and
-  * APPEND (one churn-sized scan), deleted ids retract as an EQUALITY
-  * DELETE on the index (merge-on-read — no index file rewritten), updates
-  * are the composition. Ranges the metadata walk cannot enumerate
-  * (rollback, true rewrites) fall back to a full re-assignment — honest
-  * cost, frozen centroids. The refresh never retrains and never rescans
-  * the unchanged corpus.
+  * [[refresh]] advances the index through [[IndexMaintainer]] from
+  * per-commit metadata (pure append, touched-id repair or full
+  * re-assignment; the lanes and the repair's rationale are documented
+  * there): churned rows assign to the FROZEN centroids, so the refresh
+  * never retrains and never rescans the unchanged corpus.
   *
   * The design point this buys at scale: ingest 10^6 vectors into a 10^10
   * corpus and the index advances with one 10^6-row assignment pass + one
@@ -64,14 +60,6 @@ object VectorIndex {
     * so nlist is a driver-memory knob, not a data-size one. sqrt(10^10)
     * = 10^5 sits exactly at this bound. */
   val MaxNlist = 100000
-
-  /** Probed-cell counts up to this ride an inline IN literal in the scan
-    * (static directory pruning, pushed filter); larger sets prune
-    * driver-side only ([[SnapshotCatalog.readLatestPruned]]) so a
-    * 10^4-value literal never bloats the plan. Tunable for specs. */
-  private def maxInlineCells(df: DataFrame): Int =
-    df.sparkSession.conf.getOption("graft.vecindex.maxInlineCells")
-      .map(_.toInt).getOrElse(1024)
 
   /** Index (re)trainings this JVM — lets callers assert a refresh stayed
     * incremental (no hidden retrain), mirroring `ivfTrainingCount`. */
@@ -151,8 +139,8 @@ object VectorIndex {
       require(!cat.tableExists(db, t),
         s"index side table $db.$t already exists " +
           "(orphan of an interrupted create?) - drop it to retry")
-    val base = cat.readLatest(db, baseTable)
     val pin = cat.currentSnapshotId(db, baseTable)
+    val base = cat.readAsOf(db, baseTable, pin)
     val mod =
       if (sampleMod > 0) sampleMod
       else math.max(1L, (cat.recordCount(db, baseTable, pin) +
@@ -254,67 +242,23 @@ object VectorIndex {
       if (p.contains(PropPqM)) Some(loadBooks(cat, db, name)) else None)
   }
 
-  /** Advance the index to the base table's current snapshot. Returns
-    * (mode, commits advanced): "fresh" (nothing to do), "incremental"
-    * (per-commit metadata enumerated the exact insert/delete sets), or
-    * "full" (non-enumerable range: rollback / true rewrite / schema
-    * evolution — one full re-assignment under the FROZEN centroids).
-    * Never retrains.
-    *
-    * The incremental discipline is MULTISET-exact: a pure-append range
-    * just assigns and appends the inserts; any range with deletes takes
-    * the TOUCHED-ID REPAIR — retract every id the churn names (an
-    * equality delete on the index), then re-assign those ids' rows as
-    * they stand in the base at cur (one semi-join pass, footer-stat
-    * file skipping applies). Id-level delete-then-append would be
-    * wrong twice over — an id added AND deleted inside the range would
-    * resurrect, and a pre-range duplicate copy of a partially-deleted
-    * id would vanish — the repair reads the base's own truth for
-    * exactly the churned ids instead (caught by the randomized battery
-    * in VectorIndexSpec). */
-  def refresh(cat: SnapshotCatalog, db: String, name: String): (String, Long) = {
-    val (bdb, btab, idCol, vecCol, pin) = state(cat, db, name)
-    val cur = cat.currentSnapshotId(bdb, btab)
-    if (cur == pin) return ("fresh", 0L)
-    val asg = assignerOf(cat, db, name)
-    val sets =
-      try cat.changeSetsAcrossRange(bdb, btab, pin, cur)
-      catch { case scala.util.control.NonFatal(_) => None }
-    val mode = sets match {
-      case Some((ins0, del0)) =>
-        // churn-sized frames re-execute for every probe/commit below —
-        // cache them for the refresh's scope (r15, guide §5: the ins/del
-        // sets re-read the churn files on each action otherwise)
-        val ins = ins0.localCheckpoint(); val del = del0.localCheckpoint()
-        try {
-          val delIds = del.select(col(idCol))
-          if (delIds.isEmpty) {
-            val newRows = ins.select(col(idCol), col(vecCol))
-            if (!newRows.isEmpty)
-              cat.append(db, name, asg.assign(newRows, idCol, vecCol))
-          } else {
-            val touched = ins.select(col(idCol)).union(delIds).distinct().localCheckpoint()
-            try {
-              cat.deleteMoREq(db, name, touched)
-              val fresh = cat.readLatest(bdb, btab)
-                .join(touched, Seq(idCol), "left_semi")
-                .select(col(idCol), col(vecCol)).localCheckpoint()
-              try {
-                if (!fresh.isEmpty)
-                  cat.append(db, name, asg.assign(fresh, idCol, vecCol))
-              } finally fresh.unpersist()
-            } finally touched.unpersist()
-          }
-        } finally { ins.unpersist(); del.unpersist() }
-        "incremental"
-      case None =>
-        cat.overwrite(db, name, asg.assign(cat.readLatest(bdb, btab)
-          .select(col(idCol), col(vecCol)), idCol, vecCol))
-        "full"
-    }
-    cat.setProperty(db, name, PropPin, Some(cur.toString))
-    (mode, cur - pin)
+  /** The index's part of the [[IndexMaintainer]] skeleton. The frozen
+    * centroids (and codebooks) load only when a lane derives rows, so a
+    * fresh refresh reads no table. */
+  private[graft] def kind(cat: SnapshotCatalog, db: String,
+      name: String): IndexMaintainer.Kind = {
+    val (bdb, btab, idCol, vecCol, _) = state(cat, db, name)
+    lazy val asg = assignerOf(cat, db, name)
+    IndexMaintainer.Kind(bdb, btab, PropPin, idCol, Seq(idCol, vecCol),
+      asg.assign(_, idCol, vecCol))
   }
+
+  /** Advance the index to the base table's current snapshot. Returns
+    * (mode, commits advanced): "fresh", "incremental" or "full" — the
+    * [[IndexMaintainer]] lanes; the full lane re-assigns under the FROZEN
+    * centroids. Never retrains. */
+  def refresh(cat: SnapshotCatalog, db: String, name: String): (String, Long) =
+    IndexMaintainer.refresh(cat, db, name, kind(cat, db, name))
 
   /** Top-k cosine neighbors for each (bounded, broadcast) query row,
     * served ENTIRELY from the index: probe each query's `nprobe` nearest
@@ -338,19 +282,9 @@ object VectorIndex {
       explode(Similarity.ivfProbes(
         Similarity.quantize(col(queryVec)), cents, nprobe)).as("cell"))
     // the union of probed cells is bounded by nlist <= MaxNlist — a
-    // metadata-sized collect that becomes a STATIC partition predicate
-    // (directory pruning at plan time, no runtime filter needed). Below
-    // the inline threshold the literal IN is strictly best; above it the
-    // same IN would bloat the plan and codegen (the HeavyHitters lesson),
-    // so the literal is used for DRIVER-SIDE file pruning only and never
-    // enters the plan — the inner join on `cell` below enforces
-    // exactness either way.
-    val probed = q0.select("cell").distinct().collect().map(_.getLong(0))
-      .toIndexedSeq.sorted
-    val cellPred = col("cell").isin(probed: _*)
-    val idx =
-      if (probed.length <= maxInlineCells(queries)) cat.readLatestWhere(db, name, cellPred)
-      else cat.readLatestPruned(db, name, cellPred)
+    // metadata-sized collect that prunes directories at plan time; the
+    // inner join on `cell` below keeps an over-read cell exact
+    val idx = IndexMaintainer.probedRead(cat, db, name, "cell", q0.select("cell"))
     val self: Column =
       if (excludeSelf) idx(idCol) =!= col("query_id") else lit(true)
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
@@ -448,8 +382,8 @@ object VectorIndex {
     val nlist = p(PropNlist).toInt
     val iters = p(PropIters).toInt
     val mod = p(PropSampleMod).toLong
-    val base = cat.readLatest(bdb, btab)
     val cur = cat.currentSnapshotId(bdb, btab)
+    val base = cat.readAsOf(bdb, btab, cur)
     val cents = Similarity.trainIvfCentroids(base, idCol, vecCol, nlist, iters, mod)
     val books = p.get(PropPqM).map { mStr =>
       Similarity.trainPqCodebooks(base, idCol, vecCol, mStr.toInt,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.SnapshotCatalog
-import graft.ops.{Dedup, DedupIndex}
+import graft.ops.{Dedup, DedupIndex, IndexMaintainer}
 
 /** The persistent incremental MinHash near-dup index: pair parity with
   * the recompute operator, churn-only maintenance, the batch-vs-corpus
@@ -147,7 +147,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val want = inline.select("batch_id", "corpus_id", "inter_sz", "union_sz")
       .as[Pair].collect().toSet
     val inlineFiles = inline.inputFiles.filter(_.contains("bucket=")).toSet
-    spark.conf.set("graft.dedupindex.maxInlineBuckets", "2")
+    spark.conf.set(IndexMaintainer.MaxInlineProbesKey, "2")
     try {
       val pruned = DedupIndex.pairsAgainst(cat, "dd", "idx", batch, "doc_id", "text")
       val plan = pruned.queryExecution.executedPlan.toString
@@ -157,7 +157,7 @@ class DedupIndexSpec extends AnyFunSuite {
         "driver-side pruning must read exactly the probed partitions")
       assert(pruned.select("batch_id", "corpus_id", "inter_sz", "union_sz")
         .as[Pair].collect().toSet == want)
-    } finally spark.conf.unset("graft.dedupindex.maxInlineBuckets")
+    } finally spark.conf.unset(IndexMaintainer.MaxInlineProbesKey)
   }
 
   test("an empty batch probes nothing and returns the empty typed frame") {

@@ -1160,6 +1160,19 @@ class SnapshotCatalogSpec extends AnyFunSuite {
       Set((5L, None, "insert")), "pre-evolution insert null-fills w")
   }
 
+  test("setProperties sets one key and unsets another in the same call") {
+    val cat = freshCatalog()
+    cat.createTable("db", "p", Seq((1L, "a")).toDF("id", "name").schema,
+      properties = Map("keep" -> "k", "old" -> "o"))
+    val snaps = cat.snapshotList("db", "p").size
+    cat.setProperties("db", "p", Map("new" -> Some("n"), "old" -> None))
+    assert(cat.meta("db", "p").properties == Map("keep" -> "k", "new" -> "n"))
+    assert(cat.snapshotList("db", "p").size == snaps, "properties never commit")
+    // setProperty is the one-key form of the same write
+    cat.setProperty("db", "p", "keep", None)
+    assert(cat.meta("db", "p").properties == Map("new" -> "n"))
+  }
+
 }
 
 /** Pure unit tests for the stats-merge ordering edge cases (no Spark). */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.SnapshotCatalog
-import graft.ops.{Retrieval, TextIndex}
+import graft.ops.{IndexMaintainer, Retrieval, TextIndex}
 
 /** The persistent incremental inverted text index: BM25 parity with the
   * recompute operator, churn-only maintenance, exact folded corpus
@@ -141,7 +141,7 @@ class TextIndexSpec extends AnyFunSuite {
     val want = inline.select("query_id", "doc_id", "score_q", "rank")
       .as[Hit].collect().toSet
     val inlineFiles = inline.inputFiles.filter(_.contains("bucket=")).toSet
-    spark.conf.set("graft.textindex.maxInlineBuckets", "2")
+    spark.conf.set(IndexMaintainer.MaxInlineProbesKey, "2")
     try {
       val pruned = TextIndex.topK(cat, "lex", "idx", queries, "qid", "qtext",
         k = 10, k1 = 1.5, b = 0.75)
@@ -152,7 +152,7 @@ class TextIndexSpec extends AnyFunSuite {
         "driver-side pruning must read exactly the probed partitions")
       assert(pruned.select("query_id", "doc_id", "score_q", "rank")
         .as[Hit].collect().toSet == want)
-    } finally spark.conf.unset("graft.textindex.maxInlineBuckets")
+    } finally spark.conf.unset(IndexMaintainer.MaxInlineProbesKey)
   }
 
   test("unseen query terms match nothing; a term-less batch returns empty") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.SnapshotCatalog
-import graft.ops.{Similarity, VectorIndex}
+import graft.ops.{IndexMaintainer, Similarity, VectorIndex}
 
 /** The persistent incremental vector index: parity with the per-query IVF
   * operator, churn-only maintenance, frozen centroids, and the
@@ -172,7 +172,7 @@ class VectorIndexSpec extends AnyFunSuite {
     val inlineFiles = inline.inputFiles.filter(_.contains("cell=")).toSet
     // now force the above-threshold path: the probed-cell literal must
     // stay OUT of the plan while the pruned file set stays identical
-    spark.conf.set("graft.vecindex.maxInlineCells", "2")
+    spark.conf.set(IndexMaintainer.MaxInlineProbesKey, "2")
     try {
       val pruned = VectorIndex.topK(cat, "ann", "idx", queries, "qid", "qvec",
         k = 10, nprobe = 3)
@@ -184,7 +184,7 @@ class VectorIndexSpec extends AnyFunSuite {
       assert(pruned.inputFiles.filter(_.contains("cell=")).toSet == inlineFiles,
         "driver-side pruning must read exactly the probed partitions")
       assert(pruned.as[(Long, Long, Long)].collect().toSet == want)
-    } finally spark.conf.unset("graft.vecindex.maxInlineCells")
+    } finally spark.conf.unset(IndexMaintainer.MaxInlineProbesKey)
   }
 
   test("create refuses an orphan _cent table up front and retries after a drop (r13)") {
