@@ -7,6 +7,9 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -3510,23 +3513,45 @@ final class SnapshotCatalog(
       s"equality-delete type mismatch: " + retyped.map(c =>
         s"$c: table=${schema(c).dataType.sql} keys=${keys.schema(c).dataType.sql}")
         .mkString(", "))
+    // a LOCAL key frame (a LocalRelation, e.g. an index refresh's touched
+    // ids) dedupes and scopes in this JVM: its only job is the write
+    val local = keys.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(keys.collect().distinctBy(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }))
+      case _ => None
+    }
     // candidate coverage: footer-stat range scoping over the KEY frame
     // only (one tiny agg — the corpus stays untouched); multi-column keys
     // cover every current file
     val covers = eqCols match {
+      case _ if local.exists(_.isEmpty) => Seq.empty // empty key frame: nothing dies
       case Seq(k) if ColumnStats.statable(schema(k).dataType) =>
-        val mm = keys.agg(min(col(s"`$k`")).as("mn"), max(col(s"`$k`")).as("mx"),
-          count(lit(1)).as("n"), count(col(s"`$k`")).as("nk")).head()
-        if (mm.getLong(2) == 0) Seq.empty // empty key frame: nothing dies
-        else if (mm.isNullAt(0)) prev.files // all-null keys: stats can't scope
+        // (rows, non-null keys, min, max)
+        val (n, nk, mn, mx) = local match {
+          case Some(rows) =>
+            val dt = schema(k).dataType
+            val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+            val ord = TypeUtils.getInterpretedOrdering(dt).on(toCatalyst)
+            val vs = rows.map(_.get(0)).filter(_ != null)
+            (rows.length.toLong, vs.length.toLong,
+              vs.minOption(ord).orNull, vs.maxOption(ord).orNull)
+          case None =>
+            val mm = keys.agg(min(col(s"`$k`")), max(col(s"`$k`")),
+              count(lit(1)), count(col(s"`$k`"))).head()
+            (mm.getLong(2), mm.getLong(3), mm.get(0), mm.get(1))
+        }
+        if (n == 0) Seq.empty // empty key frame: nothing dies
+        else if (nk == 0) prev.files // all-null keys: stats can't scope
         else {
           // two-level: shards the key range provably excludes never parse
           // (the file-tier keep set is identical — a skipped shard's fold
           // excludes each of its files for the same range predicate)
           val ranged = resolveWhere(db, table, prevEntry.snapshotId,
-            col(s"`$k`") >= lit(mm.get(0)) && col(s"`$k`") <= lit(mm.get(1))).kept
+            col(s"`$k`") >= lit(mn) && col(s"`$k`") <= lit(mx)).kept
           // null keys match null-keyed rows anywhere — widen to all files
-          if (mm.getLong(3) < mm.getLong(2)) prev.files else ranged
+          if (nk < n) prev.files else ranged
         }
       case _ => prev.files
     }
@@ -3547,7 +3572,8 @@ final class SnapshotCatalog(
     if (covers.isEmpty) return pointerNoOp()
     val delDirRel = s"deletes/s$newId$tag"
     val delDir = tablePath(db, table).resolve("deletes").resolve(s"s$newId$tag")
-    keys.dropDuplicates(eqCols).coalesce(1)
+    local.fold(keys.dropDuplicates(eqCols))(rows =>
+      spark.createDataFrame(rows.toSeq.asJava, keys.schema)).coalesce(1)
       .write.mode("overwrite").parquet(delDir.toString)
     val conf = spark.sessionState.newHadoopConf()
     val root = tablePath(db, table)

@@ -1,8 +1,9 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -25,11 +26,25 @@ import graft.catalog.SnapshotCatalog
   *   - TOUCHED-ID REPAIR (the range deleted rows): retract every id the
   *     churn names, inserted or deleted (an equality delete on the index
   *     — no index file rewritten), then derive those ids' rows as they
-  *     stand in the base at the target (one semi-join pass; footer-stat
-  *     file skipping applies) and append them;
+  *     stand in the base at the target and append them;
   *   - full: a range the metadata walk cannot enumerate (rollback, true
   *     rewrite, schema evolution) re-derives the whole base — honest
-  *     cost, same layout.
+  *     cost, same layout; the counters ride the overwrite's own job.
+  *
+  * The incremental lanes cost a fixed handful of Spark jobs, whatever
+  * the churn, because small refreshes are bound by Spark's per-job
+  * floor, not by data. The range's inserted (+1) and deleted (-1) rows
+  * form ONE signed churn frame, checkpointed once under an
+  * `Observation` of #deleted, #inserted and each counter's signed sum:
+  * that one job decides the lane, tells the append lane whether there is
+  * anything to append and folds the counters. When the churn is at most
+  * [[MaxInlineProbesKey]] rows, the repair collects the touched ids from
+  * the checkpoint (no shuffle), dedupes them locally and hands them
+  * to `deleteMoREq` as a local key frame (scoped and deduped without a
+  * job; the delete-file write is its only job); the base re-read is an
+  * inline IN (two-level file pruning, no semi-join) whose row count is
+  * observed on its own checkpoint. Larger churns keep the distributed
+  * key frame and a semi-join.
   *
   * Why the repair reads the base instead of applying the changelog by
   * id: id-level delete-then-append would be wrong twice over — an id
@@ -67,7 +82,9 @@ object IndexMaintainer {
   /** Probed-partition counts up to this ride an inline IN literal in the
     * index scan (static directory pruning, pushed filter); larger sets
     * prune driver-side only ([[SnapshotCatalog.readLatestPruned]]) so a
-    * 10^4-value literal never bloats the plan. */
+    * 10^4-value literal never bloats the plan. The same bound caps the
+    * churned rows whose touched ids a repair-lane refresh collects into a
+    * local key frame. */
   val MaxInlineProbesKey = "graft.index.maxInlineProbes"
 
   /** The index rows in the partitions `probes` (one Long column of
@@ -81,9 +98,7 @@ object IndexMaintainer {
       partCol: String, probes: DataFrame): DataFrame = {
     val probed = probes.distinct().collect().map(_.getLong(0)).toIndexedSeq.sorted
     val pred = if (probed.isEmpty) lit(false) else col(partCol).isin(probed: _*)
-    val maxInline = cat.spark.conf.getOption(MaxInlineProbesKey).map(_.toInt)
-      .getOrElse(1024)
-    if (probed.length <= maxInline) cat.readLatestWhere(db, name, pred)
+    if (probed.length <= maxInline(cat)) cat.readLatestWhere(db, name, pred)
     else cat.readLatestPruned(db, name, pred)
   }
 
@@ -127,59 +142,87 @@ object IndexMaintainer {
       try cat.changeSetsAcrossRange(baseDb, baseTable, pin, target)
       catch { case NonFatal(_) => None }
     val (mode, props) = sets match {
-      case Some((ins0, del0)) =>
-        // a frame is checkpointed only when two or more actions read it:
-        // del feeds the lane test and the touched ids; ins feeds the
-        // emptiness test and the append (append lane) or the touched ids
-        // alone (repair lane), plus the counter fold when there is one
-        val del = project(del0).localCheckpoint()
+      case Some((ins, del)) =>
+        val obs = Observation()
+        val churn = project(ins).withColumn(Sign, lit(1L))
+          .unionByName(project(del).withColumn(Sign, lit(-1L)))
+          .observe(obs, count(when(col(Sign) < 0, 1)).as(NDel),
+            count(when(col(Sign) > 0, 1)).as(NIns) +: counterSums(kind, col(Sign)): _*)
+          .localCheckpoint()
         try {
-          val repair = !del.isEmpty
-          val ins =
-            if (repair && counters.isEmpty) project(ins0)
-            else project(ins0).localCheckpoint()
-          try {
-            if (!repair) {
-              if (!ins.isEmpty) cat.append(db, name, derive(ins))
-            } else {
-              val touched = ins.select(col(idCol)).union(del.select(col(idCol)))
-                .distinct().localCheckpoint()
+          val m = observed(obs)
+          if (m(NDel) == 0) {
+            if (m(NIns) > 0) cat.append(db, name, derive(churn.drop(Sign)))
+          } else {
+            val (keys, rows) = touched(cat, kind, churn, m(NDel) + m(NIns), target)
+            try {
+              cat.deleteMoREq(db, name, keys)
+              val found = Observation()
+              val fresh = project(rows).observe(found, count(lit(1)).as("n"))
+                .localCheckpoint()
               try {
-                cat.deleteMoREq(db, name, touched)
-                val fresh = project(cat.readAsOf(baseDb, baseTable, target))
-                  .join(touched, Seq(idCol), "left_semi").localCheckpoint()
-                try {
-                  if (!fresh.isEmpty) cat.append(db, name, derive(fresh))
-                } finally fresh.unpersist()
-              } finally touched.unpersist()
-            }
-            ("incremental",
-              sums(kind, ins, del).map { case (k, d) => k -> (p(k).toLong + d) })
-          } finally ins.unpersist()
-        } finally del.unpersist()
+                if (observed(found)("n") > 0) cat.append(db, name, derive(fresh))
+              } finally fresh.unpersist()
+            } finally keys.unpersist()
+          }
+          ("incremental", counters.keys.map(k => k -> (p(k).toLong + m(k))).toMap)
+        } finally churn.unpersist()
       case None =>
         val base = project(cat.readAsOf(baseDb, baseTable, target))
-        cat.overwrite(db, name, derive(base))
-        ("full", sums(kind, base))
+        val (obs, aggs) = (Observation(), counterSums(kind, lit(1L)))
+        cat.overwrite(db, name, derive(
+          if (aggs.isEmpty) base else base.observe(obs, aggs.head, aggs.tail: _*)))
+        ("full", if (aggs.isEmpty) Map.empty[String, Long] else observed(obs))
     }
     cat.setProperties(db, name,
       props.map { case (k, v) => k -> Some(v.toString) } + (pinKey -> Some(target.toString)))
     (mode, target - pin)
   }
 
-  /** Each counter summed over `plus` minus over `minus`, in ONE
-    * aggregation (no job when the kind has no counters). */
-  private def sums(kind: Kind, plus: DataFrame,
-      minus: DataFrame*): Map[String, Long] =
+  private val Sign = "__churn_sign"
+  private val NDel = "__churn_deleted"
+  private val NIns = "__churn_inserted"
+
+  /** The repair lane's touched ids as an equality-delete key frame, and
+    * the base rows holding them at `target`. Up to [[MaxInlineProbesKey]]
+    * churned rows, the ids are collected (a shuffle-free read of
+    * the checkpoint): the key frame is local and the base read prunes
+    * files on an inline IN. Above it, both stay distributed: a distinct
+    * checkpoint and a semi-join. */
+  private def touched(cat: SnapshotCatalog, kind: Kind, churn: DataFrame,
+      churned: Long, target: Long): (DataFrame, DataFrame) = {
+    import kind._
+    if (churned <= maxInline(cat)) {
+      val ids = churn.select(col(idCol)).collect().map(_.get(0)).filter(_ != null).distinct
+      val keys = cat.spark.createDataFrame(ids.toSeq.map(Row(_)).asJava,
+        StructType(Seq(churn.schema(idCol))))
+      (keys, cat.readWhere(baseDb, baseTable, target,
+        if (ids.isEmpty) lit(false) else col(idCol).isin(ids.toIndexedSeq: _*)))
+    } else {
+      val keys = churn.select(col(idCol)).distinct().localCheckpoint()
+      (keys, cat.readAsOf(baseDb, baseTable, target).join(keys, Seq(idCol), "left_semi"))
+    }
+  }
+
+  private def maxInline(cat: SnapshotCatalog): Int =
+    cat.spark.conf.getOption(MaxInlineProbesKey).map(_.toInt).getOrElse(1024)
+
+  /** An observation's Long metrics; a null (an empty frame's sum) reads 0. */
+  private def observed(obs: Observation): Map[String, Long] = longs(obs.get)
+
+  private def longs(m: Map[String, Any]): Map[String, Long] =
+    m.map { case (k, v) => k -> (if (v == null) 0L else v.asInstanceOf[Long]) }
+
+  /** Each counter summed over a frame's rows, each row's value times `sign`. */
+  private def counterSums(kind: Kind, sign: Column): Seq[Column] =
+    kind.counters.toSeq.map { case (k, c) => sum(c * sign).as(k) }
+
+  /** Each counter summed over `rows` (no job when the kind has none). */
+  private def sums(kind: Kind, rows: DataFrame): Map[String, Long] =
     if (kind.counters.isEmpty) Map.empty
     else {
-      val keys = kind.counters.keys.toIndexedSeq
-      def signed(rows: DataFrame, sign: Long): DataFrame =
-        rows.select(keys.indices.map(i =>
-          (kind.counters(keys(i)) * sign).as(s"c$i")): _*)
-      val aggs = keys.indices.map(i => coalesce(sum(col(s"c$i")), lit(0L)))
-      val r = (signed(plus, 1L) +: minus.map(signed(_, -1L))).reduce(_.union(_))
-        .agg(aggs.head, aggs.tail: _*).head()
-      keys.indices.map(i => keys(i) -> r.getLong(i)).toMap
+      val aggs = counterSums(kind, lit(1L))
+      val r = rows.agg(aggs.head, aggs.tail: _*).head()
+      longs(r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
     }
 }

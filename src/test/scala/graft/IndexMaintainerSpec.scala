@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +14,10 @@ import graft.ops.{DedupIndex, IndexMaintainer, TextIndex, VectorIndex}
 /** The shared index refresh skeleton, driven per index kind: every step
   * to an explicit target snapshot (older than the base head, then the
   * head) must leave the index equal to a fresh build at that snapshot,
-  * and each lane commits a fixed number of index snapshots. */
+  * and each lane commits a fixed number of index snapshots and runs at
+  * most a fixed number of Spark jobs. The incremental lanes run again
+  * with the inline touched-id bound at 1, which forces the distributed
+  * path. */
 class IndexMaintainerSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -72,7 +77,14 @@ class IndexMaintainerSpec extends AnyFunSuite {
     assert(p(TextIndex.PropTotalDl).toLong == r.getLong(1), s"total-dl at $snap")
   }
 
-  test("append lane: step to a middle snapshot, then to the head") {
+  /** `body` with the inline touched-id bound at 1: every churn takes the
+    * distributed key-frame path. */
+  private def overBound(body: => Unit): Unit = {
+    spark.conf.set(IndexMaintainer.MaxInlineProbesKey, "1")
+    try body finally spark.conf.unset(IndexMaintainer.MaxInlineProbesKey)
+  }
+
+  private def appendLane(): Unit = {
     val cat = setup(col("doc_id") < 60)
     cat.append("im", "base", rows.where(col("doc_id").between(60, 79)))
     val mid = head(cat)
@@ -83,7 +95,7 @@ class IndexMaintainerSpec extends AnyFunSuite {
     assertBuiltAt(cat, head(cat))
   }
 
-  test("repair lane: the middle commit deletes an id the head re-appends") {
+  private def repairLane(): Unit = {
     val cat = setup(col("doc_id") < 60)
     cat.deleteMoR("im", "base", col("doc_id").isin(5, 6))
     val mid = head(cat)
@@ -96,6 +108,38 @@ class IndexMaintainerSpec extends AnyFunSuite {
     assertBuiltAt(cat, mid)
     assert(stepTo(cat, head(cat)).values.forall(_._1 == "incremental"))
     assertBuiltAt(cat, head(cat))
+  }
+
+  test("append lane: step to a middle snapshot, then to the head") {
+    appendLane()
+  }
+
+  test("repair lane: the middle commit deletes an id the head re-appends") {
+    repairLane()
+  }
+
+  test("append lane over the inline touched-id bound") {
+    overBound(appendLane())
+  }
+
+  test("repair lane over the inline touched-id bound") {
+    overBound(repairLane())
+  }
+
+  test("a range holding only a compact advances the pin and nothing else") {
+    overBound {
+      val cat = setup(col("doc_id") < 60)
+      val before = indexes.map { case (name, _) => name -> cat.meta("im", name).properties }
+      cat.compact("im", "base", 1)
+      // the churn is empty: its observed counter sums are null and read 0
+      assert(stepTo(cat, head(cat)).values.forall(_ == (("incremental", 0))))
+      assertBuiltAt(cat, head(cat))
+      for ((name, props) <- before) {
+        val k = indexes.toMap.apply(name)(cat, "im", name)
+        assert(cat.meta("im", name).properties == props + (k.pinKey -> head(cat).toString),
+          s"$name: only the pin may change")
+      }
+    }
   }
 
   test("full lane: a rollback in range rebuilds at the target, not the head") {
@@ -112,30 +156,67 @@ class IndexMaintainerSpec extends AnyFunSuite {
     assertBuiltAt(cat, head(cat))
   }
 
+  /** One base change per refresh lane, applied in this order to one
+    * 60-row base. */
+  private val lanes: Seq[(String, SnapshotCatalog => Unit)] = Seq(
+    "fresh" -> (_ => ()),
+    "pure append" -> (c => c.append("im", "base", rows.where(col("doc_id").between(60, 79)))),
+    "repair" -> (c => c.updateMoR("im", "base", col("doc_id") === 3,
+      Map("text" -> concat(col("text"), lit(" edited"))))),
+    "repair, no touched id survives" ->
+      (c => c.deleteMoR("im", "base", col("doc_id") === 7)),
+    "full" -> (c => c.rollback("im", "base",
+      c.snapshotList("im", "base").find(_.operation == "append").get.snapshotId)))
+
   test("commits per refresh, per kind and lane") {
-    // (lane, base change, mode, index commits): the gate pins today's
-    // commit pattern — data commits, then one metadata write for the pin
-    val cases: Seq[(String, SnapshotCatalog => Unit, String, Int)] = Seq(
-      ("fresh", _ => (), "fresh", 0),
-      ("pure append",
-        c => c.append("im", "base", rows.where(col("doc_id").between(60, 79))),
-        "incremental", 1),
-      ("repair",
-        c => c.updateMoR("im", "base", col("doc_id") === 3,
-          Map("text" -> concat(col("text"), lit(" edited")))),
-        "incremental", 2),
-      ("repair, no touched id survives",
-        c => c.deleteMoR("im", "base", col("doc_id") === 7), "incremental", 1),
-      ("full",
-        c => c.rollback("im", "base",
-          c.snapshotList("im", "base").find(_.operation == "append").get.snapshotId),
-        "full", 1))
+    // (mode, index commits) per lane: the gate pins today's commit
+    // pattern — data commits, then one metadata write for the pin
+    val expected = Seq(("fresh", 0), ("incremental", 1), ("incremental", 2),
+      ("incremental", 1), ("full", 1))
     val cat = setup(col("doc_id") < 60)
-    for ((lane, change, mode, commits) <- cases) {
+    for (((lane, change), want) <- lanes.zip(expected)) {
       change(cat)
       val got = stepTo(cat, head(cat))
       for ((name, _) <- indexes)
-        assert(got(name) == ((mode, commits)), s"$name, $lane lane")
+        assert(got(name) == want, s"$name, $lane lane")
+      assertBuiltAt(cat, head(cat))
+    }
+  }
+
+  test("Spark jobs per refresh, per kind and lane (counter gate)") {
+    // the most jobs each (lane, kind) may run. One observed checkpoint of
+    // the signed churn decides the lane and folds the text counters; a
+    // repair collects its touched ids locally and observes the
+    // re-read's row count on its checkpoint; the full lane's counters
+    // ride the overwrite. What remains besides those: the join jobs of
+    // position-delete merge reads and the index writes. Before (text / dedup /
+    // vector): append 7 / 4 / 7, repair 18 / 14 / 17, no survivor
+    // 19 / 17 / 17, full 4 / 1 / 4
+    val most = Map(
+      "fresh" -> Map("tix" -> 0, "dix" -> 0, "vix" -> 0),
+      "pure append" -> Map("tix" -> 3, "dix" -> 2, "vix" -> 5),
+      "repair" -> Map("tix" -> 8, "dix" -> 7, "vix" -> 10),
+      "repair, no touched id survives" -> Map("tix" -> 7, "dix" -> 7, "vix" -> 7),
+      "full" -> Map("tix" -> 2, "dix" -> 1, "vix" -> 4))
+    val cat = setup(col("doc_id") < 60)
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    for ((lane, change) <- lanes) {
+      change(cat)
+      for ((name, kind) <- indexes) {
+        val k = kind(cat, "im", name)
+        GraftColumnBridge.waitListenerBus(spark, 10000)
+        jobs.set(0)
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          IndexMaintainer.refreshTo(cat, "im", name, k, head(cat))
+          GraftColumnBridge.waitListenerBus(spark, 10000)
+        } finally spark.sparkContext.removeSparkListener(listener)
+        info(s"$lane, $name: ${jobs.get()} jobs")
+        assert(jobs.get() <= most(lane)(name), s"$name, $lane lane: ${jobs.get()} jobs")
+      }
       assertBuiltAt(cat, head(cat))
     }
   }

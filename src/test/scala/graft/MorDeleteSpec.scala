@@ -698,6 +698,47 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(left.toSeq == Seq(1L, 4L))
   }
 
+  test("equality delete: a local key frame commits what the same keys commit distributed") {
+    val cat = freshCatalog()
+    val df = ((0L until 30L).map(k => (Option(k), s"g${k % 3}", k * 2)) :+
+      ((None: Option[Long], "g0", -1L))).toDF("k", "g", "v")
+    cat.createTable("db", "t", df.schema)
+    // three appends of one file each, with disjoint k ranges, so a ranged
+    // key set scopes its coverage; `files(i)` is the table after append i
+    val files = Seq(col("k") < 10, col("k").between(10, 19), col("k") >= 20 || col("k").isNull)
+      .map(c => cat.append("db", "t", df.where(c).coalesce(1)).files.toSet)
+    val base = cat.currentSnapshotId("db", "t")
+    def eqFiles(s: Snapshot) =
+      s.deleteFiles.filterNot(_.isPositional).map(d => (d.covers, d.eqCols, d.eqTuples))
+    def visible(s: Snapshot) =
+      cat.readAsOf("db", "t", s.snapshotId).collect().map(_.toString).sorted.toSeq
+    val cases = Seq(
+      "one column, duplicates" -> Seq(3L, 3L, 12L).toDF("k"),
+      "one column, duplicates and a null" -> Seq(Some(3L), None, Some(3L)).toDF("k"),
+      "two columns, duplicates and a null" ->
+        Seq((Option(4L), "g1"), (Option(4L), "g1"), (None, "g0"), (Option(5L), "g0"))
+          .toDF("k", "g"))
+    for ((label, keys) <- cases) {
+      assert(keys.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], label)
+      val local = cat.deleteMoREq("db", "t", keys)
+      cat.rollback("db", "t", base)
+      val distributed = cat.deleteMoREq("db", "t", keys.repartition(2))
+      cat.rollback("db", "t", base)
+      assert(eqFiles(local).nonEmpty, label)
+      assert(eqFiles(local) == eqFiles(distributed), label)
+      assert(local.summary("delete_files") == distributed.summary("delete_files"), label)
+      assert(visible(local) == visible(distributed), label)
+    }
+    // the ranged key set {3, 12} covers the first two files only
+    assert(eqFiles(cat.deleteMoREq("db", "t", Seq(3L, 12L).toDF("k"))).head._1.keySet ==
+      files(1))
+    cat.rollback("db", "t", base)
+    // an empty local frame is the pointer no-op: no delete file
+    val noop = cat.deleteMoREq("db", "t", Seq.empty[Long].toDF("k"))
+    assert(noop.deleteFiles.isEmpty && noop.summary("added_records") == "0")
+    assert(visible(noop).length == 31)
+  }
   test("randomized: stacked MoR deletes reproduce progressive filtering, value-exact") {
     val rng = new scala.util.Random(20260813L)
     val cat = freshCatalog()
