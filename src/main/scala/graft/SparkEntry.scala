@@ -3542,7 +3542,7 @@ object SparkEntry {
     // then every key divisible by 10 — without rewriting ANY data file
     // (shape asserted in MorDeleteSpec; a 1-row GDPR delete on a 100-TB
     // table commits KB of positions, not rewritten files). The read
-    // anti-joins the broadcast delete set over covered files only.
+    // drops dead positions inside the covered files' readers only.
     "q88_mor_delete" -> ((s, dir) => {
       WarehouseFixture.forDir(s, dir).src.readLatest("maint", "orders_mor")
         .groupBy("o_orderstatus")

@@ -78,18 +78,13 @@ trait PointerLogStore {
   * from the serializing [[FileLockCommitMutex]], so behavior (and every
   * deterministic `data/s<id>` path) is unchanged from prior rounds. */
 object FilePointerLogStore extends PointerLogStore {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+  import java.nio.file.{Files, Paths}
   override def read(key: String): Option[(String, Long)] = {
     val p = Paths.get(key)
     if (Files.exists(p)) Some((Files.readString(p), 0L)) else None
   }
   override def writeIf(key: String, content: String, expected: Option[Long]): Long = {
-    val p = Paths.get(key)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.write(Paths.get(key), content)
     0L
   }
   override def delete(key: String): Unit =

@@ -16,17 +16,26 @@ trait SidecarStore {
 }
 
 /** Filesystem deployment: one file per sidecar under a directory,
-  * written temp-then-atomic-rename so readers never observe a torn
+  * written through [[AtomicFile]] so readers never observe a torn
   * sidecar (same discipline as [[FilePointerLogStore]]). */
 final class FileSidecarStore(dir: java.nio.file.Path) extends SidecarStore {
-  import java.nio.file.{Files, StandardCopyOption}
+  import java.nio.file.Files
   override def read(name: String): Option[String] = {
     val p = dir.resolve(name)
     if (Files.exists(p)) Some(Files.readString(p)) else None
   }
-  override def write(name: String, content: String): Unit = {
-    Files.createDirectories(dir)
-    val p = dir.resolve(name)
+  override def write(name: String, content: String): Unit =
+    AtomicFile.write(dir.resolve(name), content)
+}
+
+/** Temp-then-atomic-rename file writes: readers never observe a torn
+  * file, and a crash mid-write leaves the previous content in place. The
+  * temp name is unique per write, so concurrent writers of one path never
+  * share a temp file — the last rename wins. */
+object AtomicFile {
+  def write(p: java.nio.file.Path, content: String): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(
       p.getFileName.toString + s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     Files.writeString(tmp, content)

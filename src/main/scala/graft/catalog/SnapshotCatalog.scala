@@ -78,7 +78,7 @@ object Snapshot {
   *    `covers` maps each referenced data file to its EXACT position
   *    count (recorded at delete-commit time from the written positions
   *    themselves) — which is what keeps everything metadata-served:
-  *    reads anti-join ONLY covered files, partial rewrites decide shard
+  *    reads merge ONLY covered files, partial rewrites decide shard
   *    carry and visible-row counts without opening a delete file, and
   *    `record_count` stays exact.
   *  - EQUALITY delete (`eqCols` set): parquet of key tuples over those
@@ -429,7 +429,7 @@ final class SnapshotCatalog(
     createNamespace(db)
     Files.createDirectories(dataPath(db, table))
     Files.createDirectories(logPath(db, table).getParent)
-    writeString(metaPath(db, table), Json.writePretty(TableMeta(db, table, partitionCols, properties).toJson))
+    AtomicFile.write(metaPath(db, table), Json.writePretty(TableMeta(db, table, partitionCols, properties).toJson))
     SnapshotCatalog.purgeManifestCache(tablePath(db, table))
     writeEntries(db, table, Seq(SnapshotEntry(1L, clock().toString, "create",
       Map("record_count" -> "0", "added_files" -> "0", "total_files" -> "0"),
@@ -682,7 +682,7 @@ final class SnapshotCatalog(
       require(!viewExists(newDb, newTable),
         s"view already exists: $newDb.$newTable")
       val m = meta(db, table)
-      writeString(metaPath(db, table),
+      AtomicFile.write(metaPath(db, table),
         Json.writePretty(m.copy(database = newDb, tableName = newTable).toJson))
       SnapshotCatalog.purgeManifestCache(tablePath(db, table))
       Files.move(tablePath(db, table), tablePath(newDb, newTable),
@@ -703,7 +703,7 @@ final class SnapshotCatalog(
 
   def setNamespaceProperties(db: String, props: Map[String, String]): Unit = {
     require(namespaceExists(db), s"no such namespace: $db")
-    writeString(nsMetaPath(db),
+    AtomicFile.write(nsMetaPath(db),
       Json.writePretty(Json.obj("properties" -> Json.fromStrMap(props))))
   }
 
@@ -851,7 +851,7 @@ final class SnapshotCatalog(
   private def writeDeleteShard(db: String, table: String, name: String,
       entries: Seq[DeleteFile]): Unit = {
     val p = manifestPath(db, table, name)
-    writeString(p, Json.writePretty(Json.obj(
+    AtomicFile.write(p, Json.writePretty(Json.obj(
       "entries" -> JArr(entries.toVector.map(_.toJson: JValue)))))
     SnapshotCatalog.deleteShardCache.put(p.toAbsolutePath.normalize().toString,
       entries.toVector)
@@ -1040,7 +1040,7 @@ final class SnapshotCatalog(
 
   private def writeManifest(db: String, table: String, name: String, m: Manifest): Unit = {
     val p = manifestPath(db, table, name)
-    writeString(p, Json.writePretty(m.toJson))
+    AtomicFile.write(p, Json.writePretty(m.toJson))
     SnapshotCatalog.manifestCache.put(p.toAbsolutePath.normalize().toString, m)
   }
 
@@ -1416,75 +1416,11 @@ final class SnapshotCatalog(
       else Some(relevant.iterator.map(_.covers.view.filterKeys(s).values.sum).sum)
     }
 
-  /** Above this many recorded rows the delete set stops being broadcast
-    * and the anti-join shuffles both sides — the crossover where shipping
-    * the set to every executor costs more than one exchange. */
-  private val MorBroadcastRows = 4L << 20
-
-  /** Anti-join a position-tagged scan against the given delete files:
-    * ONE join over the unioned position files, then one join per distinct
-    * equality-column set (null-safe equality — an eq tuple with NULLs
-    * kills NULL-keyed rows, Iceberg semantics). Delete sets are tiny
-    * relative to the table in every sane MoR workload (that is the point
-    * of the format), so each set broadcasts by default: the table side
-    * never shuffles, the merge is a map-side hash lookup. */
-  private def antiJoinDeletes(db: String, table: String, scanned: DataFrame,
-      deletes: Seq[DeleteFile]): DataFrame = {
-    val root = tablePath(db, table)
-    def sized(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= MorBroadcastRows) broadcast(df) else df
-    val (pos, eq) = deletes.partition(_.isPositional)
-    var out = scanned
-    if (pos.nonEmpty) {
-      val del = spark.read.schema(deleteFileSchema)
-        .parquet(pos.map(d => root.resolve(d.path).toString): _*)
-      val d = sized(del, pos.map(_.rows).sum)
-      out = out.join(d,
-        out(MorFileCol) === d("_file") && out(MorPosCol) === d("_pos"), "left_anti")
-    }
-    eq.groupBy(_.eqCols).toSeq.sortBy(_._1.mkString(",")).foreach { case (cols, fs) =>
-      // An EQUALITY delete applies ONLY to the files it covered at
-      // commit time (Iceberg's sequence-number rule): a key re-inserted
-      // AFTER the delete must NOT be retro-killed by it. Matching keys
-      // alone is therefore wrong — each shard gets an ordinal bit, ONE
-      // metadata-sized broadcast maps every covered file to its
-      // coverage MASK, and the anti-join additionally requires the
-      // matching shard's bit on the row's file. Exact for any covers
-      // topology (no nesting assumption), still one join per column
-      // set for up to 64 live shards; beyond that the shards chunk
-      // (several joins — honest cost for a pathological shard count).
-      fs.grouped(64).foreach { chunk =>
-        val keys = chunk.zipWithIndex.map { case (s, i) =>
-          spark.read.parquet(root.resolve(s.path).toString)
-            .dropDuplicates(cols)
-            .withColumn("__shard_bit", lit(1L << i))
-        }.reduce(_.unionByName(_))
-        val maskOf = scala.collection.mutable.HashMap.empty[String, Long]
-        chunk.zipWithIndex.foreach { case (s, i) =>
-          s.covers.keysIterator.foreach { f =>
-            maskOf(f) = maskOf.getOrElse(f, 0L) | (1L << i) }
-        }
-        val maskDf = broadcast(spark.createDataFrame(
-          maskOf.toSeq.sortBy(_._1)).toDF("__mask_file", "__mask"))
-        val tagged = out.join(maskDf,
-          out(MorFileCol) === maskDf("__mask_file"), "left")
-        val d = sized(keys, chunk.map(_.rows).sum)
-        val cond = cols.map(c => tagged(s"`$c`") <=> d(s"`$c`")).reduce(_ && _) &&
-          coalesce(tagged("__mask"), lit(0L))
-            .bitwiseAND(d("__shard_bit")) =!= lit(0L)
-        out = tagged.join(d, cond, "left_anti")
-          .drop("__mask_file", "__mask")
-      }
-    }
-    out
-  }
-
-  /** The VISIBLE rows of `files` under `snap`: covered files are scanned
-    * with position identity and anti-joined against the relevant delete
-    * files; uncovered files take the plain vectorized scan untouched. The
-    * merge-on-read tax is scoped to exactly the files deletes touch —
-    * on a 100-TB table with a few GDPR deletes, everything else reads as
-    * if the feature did not exist.
+  /** The VISIBLE rows of `files` under `snap`: covered files are read
+    * through the reader-level merge ([[readMerged]]); uncovered files take
+    * the plain vectorized scan untouched. The merge-on-read tax is scoped
+    * to exactly the files deletes touch — on a 100-TB table with a few
+    * GDPR deletes, everything else reads as if the feature did not exist.
     *
     * First merged read of an EQUALITY-delete snapshot also triggers the
     * lazy [[backfillEqCount]] (the bounded materialization the zero-scan
@@ -1499,27 +1435,58 @@ final class SnapshotCatalog(
   }
 
   private def readVisibleRaw(db: String, table: String, snap: Snapshot,
-      files: Seq[String]): DataFrame = {
-    val live = liveDeletesFor(snap, files)
-    if (live.isEmpty) return readFiles(db, table, snap.schema, files)
-    val covered = live.flatMap(_.covers.keys).toSet
-    val (dirty, clean) = files.partition(covered.contains)
-    val merged = antiJoinDeletes(db, table,
-      readFilesWithPos(db, table, snap.schema, dirty), live)
-      .select(snap.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
-    if (clean.isEmpty) merged
-    else readFiles(db, table, snap.schema, clean).unionByName(merged)
-  }
+      files: Seq[String]): DataFrame =
+    readVisibleScan(db, table, snap, snap.schema, files, withPos = false)
 
   /** Position-tagged VISIBLE rows — the delete-writer's scan: candidates
     * with their (file, pos) identity, rows already dead under `snap`'s
     * delete files merged out (a re-delete must neither duplicate a
     * position nor double-decrement the count). */
   private def readVisibleWithPos(db: String, table: String, snap: Snapshot,
-      files: Seq[String]): DataFrame = {
-    val scanned = readFilesWithPos(db, table, snap.schema, files)
+      files: Seq[String]): DataFrame =
+    readVisibleScan(db, table, snap, snap.schema, files, withPos = true)
+
+  /** Visible rows of `files` under `schema`, clean files through the
+    * plain scan and covered ones through [[readMerged]]; `withPos` adds
+    * the identity columns on both sides. */
+  private def readVisibleScan(db: String, table: String, snap: Snapshot,
+      schema: StructType, files: Seq[String], withPos: Boolean): DataFrame = {
+    def plain(fs: Seq[String]): DataFrame =
+      if (withPos) readFilesWithPos(db, table, schema, fs) else readFiles(db, table, schema, fs)
     val live = liveDeletesFor(snap, files)
-    if (live.isEmpty) scanned else antiJoinDeletes(db, table, scanned, live)
+    if (live.isEmpty) return plain(files)
+    val covered = live.flatMap(_.covers.keys).toSet
+    val (dirty, clean) = files.partition(covered.contains)
+    val merged = readMerged(db, table, schema, dirty, live, withPos)
+    if (clean.isEmpty) merged else plain(clean).unionByName(merged)
+  }
+
+  /** Delete-covered `files` read through the reader-level merge
+    * ([[graft.catalog.spark.MorScanMerge.mergedScan]]): one DSv2 relation
+    * whose tasks drop the rows `deletes` kill, each snapshot dir read
+    * with its own `basePath` and the table's column defaults. No join and
+    * no broadcast — the tasks load the dead positions and equality keys
+    * themselves. `withPos` adds [[MorFileCol]] (the file's
+    * table-root-relative path) and [[MorPosCol]] (the row index). */
+  private def readMerged(db: String, table: String, schema: StructType,
+      files: Seq[String], deletes: Seq[DeleteFile], withPos: Boolean): DataFrame = {
+    val root = tablePath(db, table).toAbsolutePath.normalize()
+    val readSchema = withDefaultMeta(db, table, schema)
+    val groups = files.groupBy(f => f.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
+      .map { case (snapDir, fs) =>
+        (new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          Map("basePath" -> root.resolve(snapDir).toString).asJava),
+          fs.map(f => root.resolve(f).toString))
+      }
+    val relSchema = if (!withPos) readSchema else StructType(readSchema.fields ++
+      StructType.fromDDL(s"$MorFileCol STRING NOT NULL, $MorPosCol BIGINT NOT NULL").fields)
+    new org.apache.spark.sql.GraftAssembledTable(s"$db.$table", relSchema,
+      (pushed, required) => graft.catalog.spark.MorScanMerge.mergedScan(spark,
+        s"$db.$table", groups, readSchema,
+        pushed.filter(_.references.forall(a => readSchema.fieldNames.contains(a.name))),
+        required, required, root.toString + "/",
+        rel => deletes.filter(_.covers.contains(rel))))
+      .frame(spark)
   }
 
   /** `true` when `row.lineage=true` is set on the table — the opt-in
@@ -1569,9 +1536,7 @@ final class SnapshotCatalog(
         org.apache.spark.sql.types.LongType, nullable = true),
       org.apache.spark.sql.types.StructField("__rseq",
         org.apache.spark.sql.types.LongType, nullable = true)))
-    val scanned = readFilesWithPos(db, table, schemaPlus, files)
-    val live = liveDeletesFor(snap, files)
-    val merged = if (live.isEmpty) scanned else antiJoinDeletes(db, table, scanned, live)
+    val merged = readVisibleScan(db, table, snap, schemaPlus, files, withPos = true)
     val fridRows = files.flatMap { f =>
       val st = snap.fileStats.getOrElse(f, Map.empty)
       val frid = st.get("first_row_id").map(_.toLong)
@@ -2522,7 +2487,7 @@ final class SnapshotCatalog(
     Option(linkErr.get()).foreach(t => throw t)
     // table doc: schema/partition spec/properties carry; refs, branches
     // and any staged state do not (fresh lineage)
-    writeString(metaPath(dstDb, dstTable), Json.writePretty(
+    AtomicFile.write(metaPath(dstDb, dstTable), Json.writePretty(
       TableMeta(dstDb, dstTable, tm.partitionCols, tm.properties).toJson))
     SnapshotCatalog.purgeManifestCache(dstRoot)
     // one fresh manifest shard (same name discipline as a normal commit at
@@ -3383,7 +3348,7 @@ final class SnapshotCatalog(
     * retraction): a copy-on-write delete rewrites every file containing a
     * match (write amplification ∝ file size × match spread), while this
     * commit's cost is O(matched rows). Reads merge lazily ([[readVisible]]:
-    * covered files anti-join a broadcast delete set, untouched files scan
+    * covered files drop dead rows in their readers, untouched files scan
     * clean); [[compact]] is the materialize step that folds deletes into
     * data files and restores summary min/max bounds.
     *
@@ -3422,7 +3387,7 @@ final class SnapshotCatalog(
     val snap = deleteMoRFrom(db, table, entries, baseEntry, cond,
       Map("branch.ref" -> name, "branch.parent" -> headId.toString))
     val tm = meta(db, table)
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(branches = tm.branches + (name -> snap.snapshotId)).toJson))
     snap
   }
@@ -6748,8 +6713,8 @@ final class SnapshotCatalog(
       // (r15, guide §6): the dead pairs ride the upsert's own
       // position-delete pass (alsoDeleteKeys) instead of paying a
       // separate equality-delete commit — same rows die, half the
-      // commits, and readers apply position deletes (cheaper than the
-      // eq-delete anti-join merge).
+      // commits, and readers apply position deletes (a position lookup,
+      // no key projection).
       SnapshotCatalog.timed(s"refresh.sidecar.commits $db.$name") {
         dvStates.foreach { st =>
           // one probe over the cached merge frame (was two): a sidecar
@@ -7544,7 +7509,7 @@ final class SnapshotCatalog(
       case (ps, (k, Some(v))) => ps + (k -> v)
       case (ps, (k, None))    => ps - k
     }
-    writeString(metaPath(db, table), Json.writePretty(tm.copy(properties = props).toJson))
+    AtomicFile.write(metaPath(db, table), Json.writePretty(tm.copy(properties = props).toJson))
   }
 
   /** PARTITION SPEC EVOLUTION (Iceberg `ALTER TABLE ... WRITE ORDERED/
@@ -7568,7 +7533,7 @@ final class SnapshotCatalog(
     val schema = currentSnapshot(db, table).schema
     val unknown = partitionCols.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty, s"partition columns not in schema: ${unknown.mkString(",")}")
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(partitionCols = partitionCols).toJson))
   }
 
@@ -7580,7 +7545,7 @@ final class SnapshotCatalog(
       partitionCols: Seq[String],
       properties: Map[String, String]): Unit = withTableLock(db, table) {
     val tm = meta(db, table) // refs survive the spec replace
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(partitionCols = partitionCols, properties = properties).toJson))
   }
 
@@ -7664,7 +7629,7 @@ final class SnapshotCatalog(
 
   private def writeIntent(id: String, status: String,
       ops: Seq[((String, String), Long)]): Unit =
-    writeString(txnsDir.resolve(s"$id.json"), Json.writePretty(Json.obj(
+    AtomicFile.write(txnsDir.resolve(s"$id.json"), Json.writePretty(Json.obj(
       "status" -> JStr(status),
       "ops" -> JArr(ops.map { case ((d, t), sid) =>
         Json.obj("db" -> JStr(d), "table" -> JStr(t),
@@ -7828,14 +7793,14 @@ final class SnapshotCatalog(
     require(!tm.refs.contains(name), s"tag '$name' already exists on $db.$table")
     require(!tm.branches.contains(name),
       s"'$name' is already a branch on $db.$table (tags and branches share the VERSION AS OF namespace)")
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(refs = tm.refs + (name -> snapshotId)).toJson))
   }
 
   def dropTag(db: String, table: String, name: String): Unit = withTableLock(db, table) {
     val tm = meta(db, table)
     require(tm.refs.contains(name), s"no such tag '$name' on $db.$table")
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(refs = tm.refs - name).toJson))
   }
 
@@ -7870,14 +7835,14 @@ final class SnapshotCatalog(
     require(!tm.branches.contains(name), s"branch '$name' already exists on $db.$table")
     require(!tm.refs.contains(name),
       s"'$name' is already a tag on $db.$table (tags and branches share the VERSION AS OF namespace)")
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(branches = tm.branches + (name -> from)).toJson))
   }
 
   def dropBranch(db: String, table: String, name: String): Unit = withTableLock(db, table) {
     val tm = meta(db, table)
     require(tm.branches.contains(name), s"no such branch '$name' on $db.$table")
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(branches = tm.branches - name).toJson))
   }
 
@@ -7903,7 +7868,7 @@ final class SnapshotCatalog(
         "branch.ref" -> name, "branch.parent" -> headId.toString),
       base = Some(baseEntry))
     val tm = meta(db, table)
-    writeString(metaPath(db, table),
+    AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(branches = tm.branches + (name -> snap.snapshotId)).toJson))
     snap
   }
@@ -8652,16 +8617,6 @@ final class SnapshotCatalog(
         .toSeq.sortBy(_.toString)
       finally stream.close()
     }
-
-  /** All metadata writes are temp-then-atomic-rename: a crash mid-write
-    * must never leave a truncated log.json/table.json behind. */
-  private def writeString(p: Path, s: String): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.writeString(tmp, s)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
 
   private def readString(p: Path): String = Files.readString(p)
 }

@@ -68,6 +68,23 @@ private[spark] object ScanDefaults {
         s.estimateStatistics()
       case _ => unknownStatistics
     }
+  /** Sum across sub-scans when every one reports; unknown otherwise — a
+    * partial sum would UNDERSTATE and could green-light broadcasting a
+    * huge side of a join. */
+  def summedStatistics(scans: Seq[Scan]): org.apache.spark.sql.connector.read.Statistics = {
+    val stats = scans.map(statisticsOf)
+    def total(f: org.apache.spark.sql.connector.read.Statistics => java.util.OptionalLong) = {
+      val vs = stats.map(f)
+      if (vs.nonEmpty && vs.forall(_.isPresent)) java.util.OptionalLong.of(vs.map(_.getAsLong).sum)
+      else java.util.OptionalLong.empty()
+    }
+    val size = total(_.sizeInBytes)
+    val rows = total(_.numRows)
+    new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = size
+      override def numRows(): java.util.OptionalLong = rows
+    }
+  }
 }
 
 /** One bucket's worth of a parquet scan's input partitions, keyed so

@@ -87,8 +87,8 @@ trait HasSnapshotIdentity {
 trait MorMergeable {
   /** True when the effective snapshot has live position-delete files. */
   def morHasDeletes(snapshotId: Option[Long]): Boolean
-  /** Resolved logical plan of the MERGED read — covered data files
-    * anti-joined against the delete set, visible columns in table order. */
+  /** Resolved logical plan of the MERGED read — covered data files read
+    * through the reader-level merge, visible columns in table order. */
   def morMergedPlan(snapshotId: Option[Long]): LogicalPlan
 }
 
@@ -126,8 +126,8 @@ class ChangelogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
 /** Merge-on-read enforcement for the SQL surface: a scan relation over a
   * snapcat table whose snapshot carries position-delete files is replaced
   * (at analysis time, so the WHOLE optimizer still runs over the result —
-  * filters push into the underlying parquet scans, the broadcast anti-join
-  * plans like any join) by the library's merged read, re-aliased to the
+  * filters push into the underlying parquet scans, whose readers drop the
+  * dead rows) by the library's merged read, re-aliased to the
   * relation's original attribute ids so parent operators resolve
   * untouched. Tables without live deletes pass through and keep the stock
   * V2 scan path — the MoR tax exists only where deletes exist.
@@ -200,8 +200,8 @@ class MorReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
   * can — so this rule swaps the relation for that plan AT THE END OF
   * ANALYSIS, re-aliased to the relation's attribute ids. The whole
   * optimizer still runs over the result: the DML condition pushes into the
-  * substituted V1 parquet scans, the anti-join against live delete files
-  * broadcasts, and Spark's own MergeRows / split-update machinery (action
+  * substituted parquet scans, whose readers drop rows live delete files
+  * kill, and Spark's own MergeRows / split-update machinery (action
   * ordering, cardinality checks) operates untouched on top.
   *
   * Candidate scoping: the rewrite's static condition (UPDATE/DELETE WHERE)

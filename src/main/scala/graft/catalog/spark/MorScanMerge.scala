@@ -6,23 +6,28 @@ import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.types.{Decimal, StructType}
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.types.{DataType, Decimal, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** READER-LEVEL merge-on-read for the bucketed V2 scan (the Iceberg
-  * `DeleteFilter` design, re-expressed for Spark's DSv2): position deletes
-  * are applied INSIDE each covered file's partition reader instead of by a
-  * logical anti-join rewrite, so the scan keeps reporting
+import graft.catalog.{DeleteFile, SnapshotCatalog}
+
+/** READER-LEVEL merge-on-read (the Iceberg `DeleteFile` design,
+  * re-expressed for Spark's DSv2) — the ONE way graft applies deletes on
+  * read: the bucketed V2 scan, the streaming tail and the library's
+  * visible reads all build their delete-covered ("dirty") partitions with
+  * [[MorScanMerge.mergedScan]]. Deletes apply INSIDE each covered file's
+  * partition reader instead of by a join, so no delete set is broadcast,
+  * and the bucketed scan keeps reporting
   * [[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning]]
-  * and storage-partitioned joins stay exchange-free over tables with live
-  * deletes — without this, one 100-row MoR delete on a 100-TB bucketed
-  * fact table would put a full-table shuffle back into every co-bucketed
-  * join until compact().
+  * (storage-partitioned joins stay exchange-free over live deletes).
   *
   * Mechanics:
   *  - covered data files are scanned through a sub-scan whose schema
@@ -31,22 +36,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *    with the row's ABSOLUTE ordinal in its file, correct under file
   *    splits and row-group skipping (so predicate pushdown stays on);
   *  - each covered file's partitions are re-grouped one-file-per-partition
-  *    ([[MorFilePartition]]) so a task knows which file's dead positions
-  *    apply; TASKS load those positions straight from the delete-shard
-  *    parquet — the Iceberg executor-side pattern: no driver collect, no
-  *    broadcast, row-group + record skipping on the shard's `_file` column
-  *    (shards are written sorted by `(_file, _pos)`);
-  *  - the columnar handoff SURVIVES live deletes (r7): a merged partition
+  *    ([[MorFilePartition]]) so a task knows which file's deletes apply;
+  *    TASKS load the dead positions straight from the delete-shard parquet
+  *    (row-group + record skipping on the shard's `_file` column — shards
+  *    are written sorted by `(_file, _pos)`) and the equality keys through
+  *    a Spark parquet read planned on the driver ([[EqKeyFile]]);
+  *  - the columnar handoff survives live deletes: a merged partition
   *    reads the inner vectorized batches and re-exposes each through a
   *    SELECTION VECTOR — dead ordinals dropped, surviving ones remapped by
   *    [[SelectedColumnVector]] with zero copying (batches with no dead
-  *    rows re-project the inner vectors directly). `supportColumnarReads`
-  *    therefore stays uniformly whatever the stock parquet factory
-  *    reports, so whole-stage codegen keeps consuming ColumnarBatch over
-  *    a bucketed fact table with a 100-row delete — previously one tiny
-  *    delete de-vectorized every scan until compact(). Equality deletes
-  *    keep the logical rewrite (their key columns need not be in the
-  *    read schema).
+  *    rows re-project the inner vectors directly). Equality-key columns
+  *    are force-included into the sub-scan and dropped from the output.
   */
 object MorScanMerge {
   /** Spark's reserved temporary column name: a NULLABLE BIGINT field of
@@ -55,47 +55,78 @@ object MorScanMerge {
     * (`ParquetRowIndexUtil.findRowIndexColumnIndexInSchema`). */
   val RowIdxCol = "_tmp_metadata_row_index"
 
-  /** Key-tuple set of one EQUALITY-delete parquet file, generalized to
-    * COMPOSITE keys (r8 — (tenant_id, row_id)-shaped CDC keys merge
-    * in-scan too): each record becomes one normalized tuple over `cols`,
-    * null elements included (null-safe equality — a null key component
-    * kills rows whose component is null). Values normalize to Long
-    * (int32/int64) or String (binary/UTF8), the same normalization
-    * [[EqMatcher]] applies to scanned rows, so matching is type-exact.
-    * Tuples are `java.util.ArrayList` for element-wise equals/hashCode.
-    * Executor-side, bounded by the eq file's tuple count (the CDC key
-    * frame — KBs). */
-  def eqKeyTuples(path: String, cols: Seq[String], conf: Configuration)
-      : java.util.HashSet[java.util.ArrayList[AnyRef]] = {
-    val set = new java.util.HashSet[java.util.ArrayList[AnyRef]]()
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(path))
-      .withConf(conf).build()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        val t = new java.util.ArrayList[AnyRef](cols.length)
-        cols.foreach { c =>
-          val fi = g.getType.getFieldIndex(c)
-          if (g.getFieldRepetitionCount(fi) == 0) t.add(null)
-          else {
-            val prim = g.getType.getFields.get(fi).asPrimitiveType().getPrimitiveTypeName
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-            val v: AnyRef = prim match {
-              case INT32  => java.lang.Long.valueOf(g.getInteger(fi, 0).toLong)
-              case INT64  => java.lang.Long.valueOf(g.getLong(fi, 0))
-              case BINARY => g.getString(fi, 0)
-              case other => throw new IllegalStateException(
-                s"unsupported equality-delete key type $other in $path")
-            }
-            t.add(v)
-          }
-        }
-        set.add(t)
-        g = reader.read()
-      }
-    } finally reader.close()
-    set
+  /** Row-identity columns a merged read may emit: the file as its
+    * table-root-relative path, the position as the row index. */
+  private val IdentityCols = Set(SnapshotCatalog.MorFileCol, SnapshotCatalog.MorPosCol)
+
+  /** Projection of a row's key columns (ordinals `ords`, types `dts`) to
+    * an [[UnsafeRow]], floats normalized the way Spark normalizes join
+    * keys (`NormalizeNaNAndZero`: -0.0 = 0.0, one NaN). Byte equality of
+    * two such rows is then null-safe value equality — the `<=>` an
+    * equality delete means — for every key type. */
+  private def keyProjection(ords: Seq[Int], dts: Seq[DataType]): UnsafeProjection =
+    UnsafeProjection.create(ords.zip(dts).map { case (o, dt) =>
+      GraftColumnBridge.normalizeFloats(BoundReference(o, dt, nullable = true))
+    })
+
+  /** Driver-side: plan a Spark parquet read of each equality-delete file
+    * among `deletes`, its key columns typed as `schema` types them (one
+    * scan per key-column set), keyed by the file's table-root-relative
+    * path. Tasks decode the keys exactly as the data scan decodes the
+    * table's columns. */
+  def eqKeyFiles(spark: SparkSession, deletes: Seq[DeleteFile], schema: StructType,
+      rootPrefix: String): Map[String, EqKeyFile] =
+    deletes.filterNot(_.isPositional).distinct.groupBy(_.eqCols).flatMap { case (cols, ds) =>
+      val keySchema = StructType(cols.map(c => StructField(c, schema(c).dataType)))
+      val scan = org.apache.spark.sql.GraftScanUtils.parquetScanFor(spark,
+        s"equality keys (${cols.mkString(",")})", ds.map(rootPrefix + _.path),
+        keySchema, CaseInsensitiveStringMap.empty(), Nil, None)
+      val b = scan.toBatch
+      val factory = b.createReaderFactory()
+      val chunks = b.planInputPartitions().toSeq.flatMap {
+        case fp: FilePartition => fp.files.toSeq
+        case other => throw new IllegalStateException(
+          s"expected FilePartition from the parquet batch, got ${other.getClass}")
+      }.groupBy(_.filePath.toPath.toUri.getPath.stripPrefix(rootPrefix))
+      ds.map(d => d.path -> EqKeyFile(cols, factory, FilePartition(0, chunks(d.path).toArray)))
+    }
+
+  /** The merged scan of delete-covered data files — the one dirty-partition
+    * builder. `groups` holds each snapshot dir's read options (its
+    * `basePath`) and absolute file paths; `covering(rel)` lists the delete
+    * files that apply to a table-root-relative data file. Each group reads
+    * through one row-indexed parquet sub-scan carrying `pushed` and the
+    * columns of `required` (plus any equality-key column the query
+    * pruned); its partitions regroup one file each and read through a
+    * [[MorMergingReaderFactory]] that emits `out`, which may name the
+    * identity columns [[SnapshotCatalog.MorFileCol]]/`MorPosCol`. */
+  def mergedScan(spark: SparkSession, label: String,
+      groups: Seq[(CaseInsensitiveStringMap, Seq[String])], schema: StructType,
+      pushed: Seq[Expression], required: StructType, out: StructType,
+      rootPrefix: String, covering: String => Seq[DeleteFile]): MergedScan = {
+    val deletes = groups.flatMap(_._2).flatMap(f => covering(f.stripPrefix(rootPrefix))).distinct
+    val eqKeys = eqKeyFiles(spark, deletes, schema, rootPrefix)
+    val idxField = StructField(RowIdxCol, LongType, nullable = true)
+    val base = required.fields.filterNot(f => f.name == RowIdxCol || IdentityCols(f.name))
+    val missingKeys = deletes.flatMap(_.eqCols).distinct
+      .filterNot(c => base.exists(_.name == c)).map(c => schema(c))
+    val schemaIdx = StructType(schema.fields :+ idxField)
+    val reqIdx = StructType((base ++ missingKeys) :+ idxField)
+    val confMap = {
+      import scala.jdk.CollectionConverters._
+      spark.sessionState.newHadoopConf().iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    }
+    new MergedScan(label, out, groups.map { case (opts, files) =>
+      val sub = org.apache.spark.sql.GraftScanUtils.parquetScanFor(spark, label, files,
+        schemaIdx, opts, pushed, Some(reqIdx))
+      val b = sub.toBatch
+      val f = new MorMergingReaderFactory(b.createReaderFactory(), sub.readSchema(),
+        out.fieldNames, confMap)
+      sub -> perFilePartitions(b.planInputPartitions(), rootPrefix,
+        rel => covering(rel).filter(_.isPositional).map(rootPrefix + _.path),
+        rel => covering(rel).filterNot(_.isPositional).map(d => eqKeys(d.path)))
+        .toSeq.map(p => CarriedFactoryPartition(p, f): InputPartition)
+    })
   }
 
   /** Dead positions of one data file, read from its covering delete
@@ -127,16 +158,16 @@ object MorScanMerge {
     * shards. Splits of a file may stay in separate partitions (row
     * indexes are absolute). Files not in `shardsFor`'s domain keep flowing
     * too (empty shard list = nothing dead). `eqShardsFor` lists the
-    * EQUALITY-delete files covering a file as (absolute path, key columns)
-    * pairs — composite keys supported, applied tuple-wise in the reader.
+    * EQUALITY-delete files covering a file ([[eqKeyFiles]]) — composite
+    * keys supported, applied tuple-wise in the reader.
     * `newEqShardsFor` carries a SECOND eq set per file, used only by the
     * CDC pre-image reader ([[EqDeadRowsReaderFactory]]): the commit's NEW
     * eq shards, matched positively while `eqShardsFor`'s prior coverage
     * filters to rows still alive before the commit. */
   def perFilePartitions(parts: Array[InputPartition], rootPrefix: String,
       shardsFor: String => Seq[String],
-      eqShardsFor: String => Seq[(String, Seq[String])] = _ => Seq.empty,
-      newEqShardsFor: String => Seq[(String, Seq[String])] = _ => Seq.empty)
+      eqShardsFor: String => Seq[EqKeyFile] = _ => Seq.empty,
+      newEqShardsFor: String => Seq[EqKeyFile] = _ => Seq.empty)
       : Array[InputPartition] =
     parts.flatMap {
       case fp: FilePartition =>
@@ -151,65 +182,31 @@ object MorScanMerge {
           s"expected FilePartition from the parquet batch, got ${other.getClass}")
     }
 
-  /** One loaded equality-delete matcher over a sub-scan schema: key
-    * ordinals, their Spark types (drive row/vector value normalization to
-    * the same Long/String domain [[eqKeyTuples]] produced), and the key
-    * tuple set. The probe tuple is REUSED across rows (single-threaded
-    * per partition reader; `HashSet.contains` does not retain its
-    * argument), so the per-row cost is normalization + one hash lookup,
-    * no allocation. */
-  final class EqMatcher(ords: Array[Int],
-      dts: Array[org.apache.spark.sql.types.DataType],
-      set: java.util.HashSet[java.util.ArrayList[AnyRef]]) extends Serializable {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    private[this] val probe = {
-      val p = new java.util.ArrayList[AnyRef](ords.length)
-      var i = 0; while (i < ords.length) { p.add(null); i += 1 }
-      p
-    }
-    def deadRow(row: InternalRow): Boolean = {
-      var i = 0
-      while (i < ords.length) {
-        val o = ords(i)
-        probe.set(i,
-          if (row.isNullAt(o)) null
-          else dts(i) match {
-            case IntegerType => java.lang.Long.valueOf(row.getInt(o).toLong)
-            case LongType    => java.lang.Long.valueOf(row.getLong(o))
-            case StringType  => row.getUTF8String(o).toString
-            case other => throw new IllegalStateException(s"unsupported eq key type $other")
-          })
-        i += 1
-      }
-      set.contains(probe)
-    }
-    def deadVec(b: ColumnarBatch, row: Int): Boolean = {
-      var i = 0
-      while (i < ords.length) {
-        val v = b.column(ords(i))
-        probe.set(i,
-          if (v.isNullAt(row)) null
-          else dts(i) match {
-            case IntegerType => java.lang.Long.valueOf(v.getInt(row).toLong)
-            case LongType    => java.lang.Long.valueOf(v.getLong(row))
-            case StringType  => v.getUTF8String(row).toString
-            case other => throw new IllegalStateException(s"unsupported eq key type $other")
-          })
-        i += 1
-      }
-      set.contains(probe)
-    }
+  /** One loaded equality-delete matcher over a sub-scan schema: the
+    * file's key tuples as [[keyProjection]] rows, and the same projection
+    * over the scanned row's key ordinals. The projection's output buffer
+    * is REUSED across rows (single-threaded per partition reader;
+    * `HashSet.contains` does not retain its argument), so the per-row cost
+    * is one projection + one hash lookup, no allocation. */
+  final class EqMatcher(ords: Seq[Int], dts: Seq[DataType],
+      keys: java.util.HashSet[UnsafeRow]) {
+    private[this] val probe = keyProjection(ords, dts)
+    def deadRow(row: InternalRow): Boolean = keys.contains(probe(row))
+    def deadVec(b: ColumnarBatch, row: Int): Boolean = keys.contains(probe(b.getRow(row)))
   }
 
-  /** Load the [[EqMatcher]]s for one file's covering eq shards, resolving
+  /** Load the [[EqMatcher]]s for one file's covering eq files, resolving
     * key ordinals/types against `schema` (the sub-scan's schema — key
     * columns are force-included there by every caller). */
-  def eqMatchersFor(shards: Seq[(String, Seq[String])], schema: StructType,
-      conf: Configuration): Seq[EqMatcher] =
-    shards.map { case (path, cols) =>
-      new EqMatcher(cols.map(schema.fieldIndex).toArray,
-        cols.map(c => schema(c).dataType).toArray,
-        eqKeyTuples(path, cols, conf))
+  def eqMatchersFor(shards: Seq[EqKeyFile], schema: StructType): Seq[EqMatcher] =
+    shards.map { k =>
+      val dts = k.cols.map(c => schema(c).dataType)
+      val load = keyProjection(k.cols.indices, dts)
+      val keys = new java.util.HashSet[UnsafeRow]()
+      val r = k.factory.createReader(k.part)
+      try while (r.next()) keys.add(load(r.get()).copy())
+      finally r.close()
+      new EqMatcher(k.cols.map(schema.fieldIndex), dts, keys)
     }
 
   /** The stable row-id expression of one file's rows for a CDC reader:
@@ -221,8 +218,7 @@ object MorScanMerge {
     * breaks). `dirtySchema` must carry both `__rid` and [[RowIdxCol]]. */
   def ridExpr(dirtySchema: StructType, relFile: String,
       frids: Map[String, Long]): org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Literal}
-    import org.apache.spark.sql.types.LongType
+    import org.apache.spark.sql.catalyst.expressions.{Add, Coalesce}
     val idxOrd = dirtySchema.fieldIndex(RowIdxCol)
     val physOrd = dirtySchema.fieldIndex("__rid")
     val derived = frids.get(relFile) match {
@@ -234,27 +230,59 @@ object MorScanMerge {
   }
 }
 
+/** One equality-delete file as a task reads it: its key columns and a
+  * Spark parquet read of the file planned on the driver (the reader
+  * factory and the file's input partition — [[MorScanMerge.eqKeyFiles]]). */
+final case class EqKeyFile(cols: Seq[String], factory: PartitionReaderFactory,
+    part: InputPartition)
+
 /** One covered file's chunk(s): the delegate partition reads this file
   * only, `shards` are the position-delete parquet files whose `covers`
-  * include it, and `eqShards` the covering equality-delete files as
-  * (path, key columns) — composite keys supported. `newEqShards` is the
-  * CDC pre-image reader's positive-match set (a commit's NEW eq shards);
-  * empty everywhere else. */
+  * include it, and `eqShards` the covering equality-delete files —
+  * composite keys supported. `newEqShards` is the CDC pre-image reader's
+  * positive-match set (a commit's NEW eq shards); empty everywhere else. */
 final case class MorFilePartition(relFile: String, shards: Seq[String],
     delegate: InputPartition,
-    eqShards: Seq[(String, Seq[String])] = Seq.empty,
-    newEqShards: Seq[(String, Seq[String])] = Seq.empty) extends InputPartition {
+    eqShards: Seq[EqKeyFile] = Seq.empty,
+    newEqShards: Seq[EqKeyFile] = Seq.empty) extends InputPartition {
   override def preferredLocations(): Array[String] = delegate.preferredLocations()
 }
 
-/** Reader factory applying position deletes in-task: reads the row-idx
-  * sub-scan, drops rows whose index is dead, projects the output back to
-  * the scan's visible column order (`perm` maps output ordinal to
-  * sub-scan ordinal). Columnar support mirrors the inner factory's: a
-  * columnar merged read filters each inner ColumnarBatch through a
-  * selection vector ([[SelectedColumnVector]]); the row path keeps the
-  * per-row skip. `confMap` rebuilds a hadoop Configuration task-side
-  * (Configuration itself is not serializable). */
+/** The merged scan [[MorScanMerge.mergedScan]] builds: the per-file merged
+  * partitions of every sub-scan, each carrying its reader factory.
+  * Statistics and description are the parquet sub-scans', so joins over a
+  * merged read plan as they would over the plain scan.
+  *
+  * It advertises no runtime-filter column, yet Spark hands it the dynamic
+  * pruning filters pushed through a union of a library read's clean and
+  * merged halves (the planner gives every filtered V2 scan its runtime
+  * filters, then casts); pruning is an optimization the join above
+  * repeats, so `filter` ignores them. */
+final class MergedScan(label: String, out: StructType,
+    subs: Seq[(Scan, Seq[InputPartition])])
+    extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeV2Filtering {
+  override def readSchema(): StructType = out
+  override def description(): String =
+    s"merge-on-read $label: ${subs.map(_._1.description()).mkString("; ")}"
+  override def toBatch: Batch = this
+  override def planInputPartitions(): Array[InputPartition] = subs.flatMap(_._2).toArray
+  override def createReaderFactory(): PartitionReaderFactory = CarryingReaderFactory
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+    ScanDefaults.summedStatistics(subs.map(_._1))
+  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+    Array.empty
+  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = ()
+}
+
+/** Reader factory applying deletes in-task: reads the row-idx sub-scan,
+  * drops rows whose index is dead or whose key an equality delete names,
+  * and projects the output to `outNames` (sub-scan columns by name; the
+  * identity column [[SnapshotCatalog.MorPosCol]] is the row index and
+  * [[SnapshotCatalog.MorFileCol]] the partition's file). Columnar support
+  * mirrors the inner factory's: a columnar merged read filters each inner
+  * ColumnarBatch through a selection vector ([[SelectedColumnVector]]);
+  * the row path keeps the per-row skip. `confMap` rebuilds a hadoop
+  * Configuration task-side (Configuration itself is not serializable). */
 final class MorMergingReaderFactory(
     inner: PartitionReaderFactory,
     dirtySchema: StructType,
@@ -262,7 +290,12 @@ final class MorMergingReaderFactory(
     confMap: Map[String, String]) extends PartitionReaderFactory {
 
   private val idxOrd = dirtySchema.fieldIndex(MorScanMerge.RowIdxCol)
-  private val perm = outNames.map(dirtySchema.fieldIndex)
+  // output ordinal -> sub-scan ordinal; -1 marks the file column
+  private val perm = outNames.map {
+    case SnapshotCatalog.MorPosCol => idxOrd
+    case SnapshotCatalog.MorFileCol => -1
+    case n => dirtySchema.fieldIndex(n)
+  }
 
   private def hadoopConf: Configuration = {
     val conf = new Configuration(false)
@@ -274,14 +307,7 @@ final class MorMergingReaderFactory(
     MorScanMerge.deadPositions(mp.shards, mp.relFile, hadoopConf)
 
   private def eqFor(mp: MorFilePartition): Seq[MorScanMerge.EqMatcher] =
-    if (mp.eqShards.isEmpty) Seq.empty
-    else MorScanMerge.eqMatchersFor(mp.eqShards, dirtySchema, hadoopConf)
-
-  private def eqDeadRow(eqs: Seq[MorScanMerge.EqMatcher], row: InternalRow): Boolean =
-    eqs.exists(_.deadRow(row))
-
-  private def eqDeadVec(eqs: Seq[MorScanMerge.EqMatcher], b: ColumnarBatch, i: Int): Boolean =
-    eqs.exists(_.deadVec(b, i))
+    MorScanMerge.eqMatchersFor(mp.eqShards, dirtySchema)
 
   override def supportColumnarReads(p: InputPartition): Boolean =
     inner.supportColumnarReads(p.asInstanceOf[MorFilePartition].delegate)
@@ -291,14 +317,15 @@ final class MorMergingReaderFactory(
     val dead = deadFor(mp)
     val eqs = eqFor(mp)
     val r = inner.createReader(mp.delegate)
-    val proj = UnsafeProjection.create(perm.map(i =>
-      BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)).toIndexedSeq)
+    val proj = UnsafeProjection.create(perm.toSeq.map(i =>
+      if (i < 0) Literal(UTF8String.fromString(mp.relFile), StringType)
+      else BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)))
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean = {
         while (r.next()) {
           val row = r.get()
-          if (!dead.contains(row.getLong(idxOrd)) && !eqDeadRow(eqs, row)) {
+          if (!dead.contains(row.getLong(idxOrd)) && !eqs.exists(_.deadRow(row))) {
             cur = row; return true
           }
         }
@@ -313,6 +340,7 @@ final class MorMergingReaderFactory(
     val mp = p.asInstanceOf[MorFilePartition]
     val dead = deadFor(mp)
     val eqs = eqFor(mp)
+    val file = UTF8String.fromString(mp.relFile)
     val r = inner.createColumnarReader(mp.delegate)
     new PartitionReader[ColumnarBatch] {
       private var out: ColumnarBatch = _
@@ -330,16 +358,19 @@ final class MorMergingReaderFactory(
           var i = 0
           while (i < n) {
             if (!dead.contains(idx.getLong(i)) &&
-                (eqs.isEmpty || !eqDeadVec(eqs, b, i))) { sel(k) = i; k += 1 }
+                (eqs.isEmpty || !eqs.exists(_.deadVec(b, i)))) { sel(k) = i; k += 1 }
             i += 1
           }
           if (k > 0) {
-            val cols: Array[ColumnVector] =
-              if (k == n) perm.map(o => b.column(o))
-              else {
-                val s = java.util.Arrays.copyOf(sel, k)
-                perm.map(o => new SelectedColumnVector(b.column(o), s): ColumnVector)
-              }
+            val s = if (k == n) null else java.util.Arrays.copyOf(sel, k)
+            val cols: Array[ColumnVector] = perm.map { o =>
+              if (o < 0) {
+                val v = new ConstantColumnVector(k, StringType)
+                v.setUtf8String(file)
+                v
+              } else if (s == null) b.column(o)
+              else new SelectedColumnVector(b.column(o), s)
+            }
             out = new ColumnarBatch(cols, k)
             return true
           }
@@ -371,8 +402,6 @@ final class DeadRowsReaderFactory(
     confMap: Map[String, String],
     ridCol: Option[String] = None,
     frids: Map[String, Long] = Map.empty) extends PartitionReaderFactory {
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.unsafe.types.UTF8String
 
   private val idxOrd = dirtySchema.fieldIndex(MorScanMerge.RowIdxCol)
 
@@ -386,7 +415,7 @@ final class DeadRowsReaderFactory(
     val r = inner.createReader(mp.delegate)
     val proj = UnsafeProjection.create(out.fields.map { f =>
       if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), org.apache.spark.sql.types.StringType)
+        Literal(UTF8String.fromString(tag), StringType)
       else if (ridCol.contains(f.name))
         MorScanMerge.ridExpr(dirtySchema, mp.relFile, frids)
       else {
@@ -434,8 +463,6 @@ final class EqDeadRowsReaderFactory(
     confMap: Map[String, String],
     ridCol: Option[String] = None,
     frids: Map[String, Long] = Map.empty) extends PartitionReaderFactory {
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.unsafe.types.UTF8String
 
   private val idxOrd = dirtySchema.fieldIndex(MorScanMerge.RowIdxCol)
 
@@ -447,12 +474,12 @@ final class EqDeadRowsReaderFactory(
     confMap.foreach { case (k, v) => conf.set(k, v) }
     // prior coverage = alive-at-parent filter; new shards = positive match
     val priorDead = MorScanMerge.deadPositions(mp.shards, mp.relFile, conf)
-    val priorEqs = MorScanMerge.eqMatchersFor(mp.eqShards, dirtySchema, conf)
-    val newEqs = MorScanMerge.eqMatchersFor(mp.newEqShards, dirtySchema, conf)
+    val priorEqs = MorScanMerge.eqMatchersFor(mp.eqShards, dirtySchema)
+    val newEqs = MorScanMerge.eqMatchersFor(mp.newEqShards, dirtySchema)
     val r = inner.createReader(mp.delegate)
     val proj = UnsafeProjection.create(out.fields.map { f =>
       if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), org.apache.spark.sql.types.StringType)
+        Literal(UTF8String.fromString(tag), StringType)
       else if (ridCol.contains(f.name))
         MorScanMerge.ridExpr(dirtySchema, mp.relFile, frids)
       else {
@@ -488,8 +515,6 @@ final class TaggingReaderFactory(
     out: StructType,
     tagCol: String,
     tag: String) extends PartitionReaderFactory {
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.unsafe.types.UTF8String
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
@@ -497,7 +522,7 @@ final class TaggingReaderFactory(
     val r = inner.createReader(p)
     val proj = UnsafeProjection.create(out.fields.map { f =>
       if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), org.apache.spark.sql.types.StringType)
+        Literal(UTF8String.fromString(tag), StringType)
       else {
         val i = dataSchema.fieldIndex(f.name)
         BoundReference(i, dataSchema(i).dataType, dataSchema(i).nullable)
@@ -528,7 +553,6 @@ final class RidTaggingReaderFactory(
     tag: String,
     ridCol: String,
     frids: Map[String, Long]) extends PartitionReaderFactory {
-  import org.apache.spark.sql.catalyst.expressions.Literal
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 
@@ -537,7 +561,7 @@ final class RidTaggingReaderFactory(
     val r = inner.createReader(mp.delegate)
     val proj = UnsafeProjection.create(out.fields.map { f =>
       if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), org.apache.spark.sql.types.StringType)
+        Literal(UTF8String.fromString(tag), StringType)
       else if (f.name == ridCol)
         MorScanMerge.ridExpr(dirtySchema, mp.relFile, frids)
       else {

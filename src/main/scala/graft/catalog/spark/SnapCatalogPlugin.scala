@@ -586,31 +586,12 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         .map(cat.snapshotAt(db, table, _)).getOrElse(snap)
 
     /** Can the V2 scan itself merge this snapshot's deletes (reader-level,
-      * [[MorScanMerge]])? Bucketed tables with purely POSITIONAL deletes:
-      * the in-scan merge keeps KeyGroupedPartitioning alive so
-      * storage-partitioned joins stay exchange-free over live deletes.
-      * Equality deletes merge in-scan too — COMPOSITE keys included (r8,
-      * the (tenant_id, row_id) CDC shape) — when every key column is an
-      * int/long/string table column; the merge force-includes the key
-      * columns into the sub-scan and matches normalized tuples task-side.
-      * Exotic-typed keys fall back to the logical rewrite, which is
-      * always correct. */
-    private def eqMergeableInScan(schema: StructType,
-        d: graft.catalog.DeleteFile): Boolean =
-      d.eqCols.nonEmpty && d.eqCols.forall(c =>
-        schema.fieldNames.contains(c) &&
-          (schema(c).dataType match {
-            case org.apache.spark.sql.types.IntegerType |
-                 org.apache.spark.sql.types.LongType |
-                 org.apache.spark.sql.types.StringType => true
-            case _ => false
-          }))
-    private def scanMergesDeletes(schema: StructType,
-        deletes: Seq[graft.catalog.DeleteFile]): Boolean =
-      tableMeta.bucketSpec.isDefined && deletes.nonEmpty &&
-        deletes.forall(d => d.isPositional || eqMergeableInScan(schema, d))
-    private def scanMergesDeletes(s: Snapshot): Boolean =
-      scanMergesDeletes(s.schema, s.deleteFiles)
+      * [[MorScanMerge]])? Bucketed tables: the in-scan merge keeps
+      * KeyGroupedPartitioning alive so storage-partitioned joins stay
+      * exchange-free over live deletes. Other tables merge through the
+      * library read [[MorReadRule]] swaps in. */
+    private def scanMergesDeletes(deletes: Seq[graft.catalog.DeleteFile]): Boolean =
+      tableMeta.bucketSpec.isDefined && deletes.nonEmpty
 
     /** Probed by [[MorReadRule]] on EVERY snapcat relation in a plan —
       * must stay pointer-log-sized (delete-shard metadata only, never the
@@ -620,14 +601,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       val e = snapshotId.filter(_ != entry.snapshotId)
         .map(cat.entryAt(db, table, _)).getOrElse(entry)
       val dels = cat.entryDeleteFiles(db, table, e)
-      dels.nonEmpty && !scanMergesDeletes(e.schema, dels)
+      dels.nonEmpty && !scanMergesDeletes(dels)
     }
 
-    /** The merged read (position deletes anti-joined), projected to the
+    /** The merged read (deletes applied in the readers), projected to the
       * SQL-visible columns — [[MorReadRule]] swaps this in for the raw
-      * relation. Built on the library read path, whose V1 parquet
-      * relations keep full pushdown/pruning once the optimizer runs over
-      * the substituted plan. */
+      * relation. Built on the library read path, whose scans keep full
+      * pushdown/pruning once the optimizer runs over the substituted
+      * plan. */
     override def morMergedPlan(snapshotId: Option[Long]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
       val visible = schema().fieldNames
       cat.readAsOf(db, table, morSnap(snapshotId).snapshotId)
@@ -1258,13 +1239,6 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       // receive absolute paths)
       def dirOf(abs: String): String =
         abs.stripPrefix(rootPrefix).split("/").take(2).mkString("/")
-      // serializable form of the session's hadoop conf for reader-level
-      // MoR merging (tasks open delete shards themselves; Configuration
-      // is not serializable, a string map is)
-      lazy val hadoopConfMap: Map[String, String] = {
-        val c = spark.sessionState.newHadoopConf()
-        c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-      }
       def dirOpts(dir: String): CaseInsensitiveStringMap =
         new CaseInsensitiveStringMap(
           Map("basePath" -> root.resolve(dir).toString).asJava)
@@ -1368,27 +1342,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
           // column pruning — the data-skipping layer stays live, and a
           // bucket's files may span snapshot dirs (per-dir batches union).
           case Some((bCol, n)) =>
-            // reader-level MoR merge (MorScanMerge): when live deletes are
-            // positional or in-scan-mergeable equality deletes (single
-            // supported key column, r7), covered files read through a
-            // row-indexed sub-scan whose tasks drop dead rows — the scan
-            // keeps its KeyGroupedPartitioning, so SPJ survives MoR DML
+            // reader-level MoR merge (MorScanMerge): covered files read
+            // through a row-indexed sub-scan whose tasks drop dead rows
+            // (positions and equality keys of any type) — the scan keeps
+            // its KeyGroupedPartitioning, so SPJ survives MoR DML
             val morLive =
-              if (scanMergesDeletes(snap)) snap.deleteFiles else Seq.empty
+              if (scanMergesDeletes(snap.deleteFiles)) snap.deleteFiles else Seq.empty
             val coveredRel = morLive.flatMap(_.covers.keys).toSet
             def relOf(abs: String): String = abs.stripPrefix(rootPrefix)
-            def shardsFor(rel: String): Seq[String] =
-              morLive.filter(d => d.isPositional && d.covers.contains(rel))
-                .map(d => root.resolve(d.path).toString)
-            def eqShardsFor(rel: String): Seq[(String, Seq[String])] =
-              morLive.filter(d => !d.isPositional && d.covers.contains(rel))
-                .map(d => (root.resolve(d.path).toString, d.eqCols))
-            // eq key columns must survive into the sub-scan even when the
-            // projection pruned them (the merge matches on their values);
-            // they stay out of the OUTER read schema, so the permutation
-            // drops them after filtering
-            val eqKeyCols = morLive.filterNot(_.isPositional)
-              .flatMap(_.eqCols).distinct
             def cleanBatch(label: String, files: Seq[String])
                 : org.apache.spark.sql.connector.read.Batch =
               if (!multiDir)
@@ -1417,31 +1378,12 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
                     cb.planInputPartitions().toSeq
                       .map(p => CarriedFactoryPartition(p, f))
                   }
-                val idxField = org.apache.spark.sql.types.StructField(
-                  MorScanMerge.RowIdxCol,
-                  org.apache.spark.sql.types.LongType, nullable = true)
-                val schemaIdx = StructType(snapSchema.fields :+ idxField)
-                val reqBase = requiredSchema.getOrElse(scan.readSchema()).fields
-                  .filterNot(_.name == MorScanMerge.RowIdxCol)
-                val missingEqKeys = eqKeyCols
-                  .filterNot(c => reqBase.exists(_.name == c))
-                  .map(c => snapSchema(c))
-                val reqIdx = Some(StructType(
-                  (reqBase ++ missingEqKeys) :+ idxField))
-                val dirtyParts: Seq[InputPartition] =
-                  dirty.groupBy(dirOf).toSeq.sortBy(_._1).flatMap { case (d, fs) =>
-                    val ds = org.apache.spark.sql.GraftScanUtils.parquetScanFor(
-                      spark, s"$tableName mor b$b $d", fs, schemaIdx,
-                      dirOpts(d), pushedExprs, reqIdx)
-                    val batch = ds.toBatch
-                    val f = new MorMergingReaderFactory(
-                      batch.createReaderFactory(), ds.readSchema(),
-                      scan.readSchema().fieldNames, hadoopConfMap)
-                    MorScanMerge.perFilePartitions(
-                      batch.planInputPartitions(), rootPrefix, shardsFor,
-                      eqShardsFor)
-                      .map(p => CarriedFactoryPartition(p, f)).toSeq
-                  }
+                val dirtyParts: Seq[InputPartition] = MorScanMerge.mergedScan(spark,
+                  s"$tableName mor b$b",
+                  dirty.groupBy(dirOf).toSeq.sortBy(_._1).map { case (d, fs) => (dirOpts(d), fs) },
+                  snapSchema, pushedExprs, requiredSchema.getOrElse(scan.readSchema()),
+                  scan.readSchema(), rootPrefix,
+                  rel => morLive.filter(_.covers.contains(rel))).planInputPartitions().toSeq
                 val all = (cleanParts ++ dirtyParts).toArray
                 new org.apache.spark.sql.connector.read.Batch {
                   override def planInputPartitions(): Array[InputPartition] = all
@@ -1794,27 +1736,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         prevDeletes = enDeletes
       }
       val added = emit.toSeq
-      // deletes covering emitted files merge READER-LEVEL (MorScanMerge;
-      // positional only — equality deletes' key columns need not survive
-      // column pruning, and CDC eq-deletes target pre-range rows in every
-      // sane workload); coverage comes from the END snapshot unless a
-      // compact froze it earlier
+      // deletes covering emitted files merge READER-LEVEL (MorScanMerge);
+      // coverage comes from the END snapshot unless a compact froze it
+      // earlier
       def covFor(rel: String): Seq[graft.catalog.DeleteFile] =
         frozenCov.getOrElse(rel, toDeletes.filter(_.covers.contains(rel)))
-      val liveDeletes = added.flatMap(covFor).distinct
-      require(liveDeletes.forall(_.isPositional),
-        s"streaming read of $db.$table ($s, $e]: EQUALITY delete files " +
-          "cover in-range appends; compact() the table or restart the " +
-          "stream from the current snapshot")
       val coveredRel = added.filter(f => covFor(f).nonEmpty).toSet
       val root = java.nio.file.Paths.get(warehouse, db, table)
       val rootPrefix = root.toString + java.io.File.separator
-      def shardsFor(rel: String): Seq[String] =
-        covFor(rel).map(d => root.resolve(d.path).toString)
-      lazy val confMap: Map[String, String] = {
-        val c = spark.sessionState.newHadoopConf()
-        c.iterator().asScala.map(en => en.getKey -> en.getValue).toMap
-      }
       // PARTITIONED tables: each appended snapshot dir is hive-laid, so the
       // batch assembles per dir with that dir's basePath (same per-dir
       // treatment as the batch read path) and every planned partition
@@ -1841,25 +1770,10 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         val dirtyParts: Array[InputPartition] =
           if (dirty.isEmpty) Array.empty
           else {
-            val base = tableSchema.getOrElse(cat.entryLog(db, table).last.schema)
-            val idxField = StructField(MorScanMerge.RowIdxCol,
-              org.apache.spark.sql.types.LongType, nullable = true)
-            val schemaIdx = StructType(
-              base.fields.filterNot(_.name == MorScanMerge.RowIdxCol) :+ idxField)
-            val reqIdx = StructType(
-              prunedSchema.fields.filterNot(_.name == MorScanMerge.RowIdxCol) :+ idxField)
-            val cism = new CaseInsensitiveStringMap(opts.asJava)
-            val builder = ParquetTable(s"$db.$table stream mor", spark, cism,
-              dirty.map(f => root.resolve(f).toString), Some(schemaIdx),
-              classOf[ParquetFileFormat]).newScanBuilder(cism)
-            builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-              .pruneColumns(reqIdx)
-            val scan = builder.build()
-            val b = scan.toBatch
-            val mf = new MorMergingReaderFactory(b.createReaderFactory(),
-              scan.readSchema(), prunedSchema.fieldNames, confMap)
-            MorScanMerge.perFilePartitions(b.planInputPartitions(), rootPrefix, shardsFor)
-              .map(p => CarriedFactoryPartition(p, mf))
+            MorScanMerge.mergedScan(spark, s"$db.$table stream mor",
+              Seq((new CaseInsensitiveStringMap(opts.asJava), dirty.map(f => root.resolve(f).toString))),
+              tableSchema.getOrElse(cat.entryLog(db, table).last.schema), Nil,
+              prunedSchema, prunedSchema, rootPrefix, covFor).planInputPartitions()
           }
         cleanParts ++ dirtyParts
       }.toArray
@@ -2061,10 +1975,11 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         val prevEq = prev.deleteFiles.filterNot(_.isPositional)
         def posShardsFor(rel: String): Seq[String] =
           prevPos.filter(_.covers.contains(rel)).map(d => root.resolve(d.path).toString)
-        def prevEqFor(rel: String): Seq[(String, Seq[String])] =
-          prevEq.filter(_.covers.contains(rel)).map(d => (root.resolve(d.path).toString, d.eqCols))
-        def newEqFor(rel: String): Seq[(String, Seq[String])] =
-          newEq.filter(_.covers.contains(rel)).map(d => (root.resolve(d.path).toString, d.eqCols))
+        val eqKeys = MorScanMerge.eqKeyFiles(spark, newEq ++ prevEq, visibleSchema, rootPrefix)
+        def prevEqFor(rel: String): Seq[EqKeyFile] =
+          prevEq.filter(_.covers.contains(rel)).map(d => eqKeys(d.path))
+        def newEqFor(rel: String): Seq[EqKeyFile] =
+          newEq.filter(_.covers.contains(rel)).map(d => eqKeys(d.path))
         val idxField = StructField(MorScanMerge.RowIdxCol,
           org.apache.spark.sql.types.LongType, nullable = true)
         val eqKeyCols = (newEq ++ prevEq).flatMap(_.eqCols).distinct

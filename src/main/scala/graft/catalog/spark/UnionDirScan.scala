@@ -1,7 +1,5 @@
 package graft.catalog.spark
 
-import java.util.OptionalLong
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportStatistics}
@@ -61,23 +59,8 @@ private[spark] final class UnionDirScan(
     new SubScanDispatchFactory(factories, perms, out)
   }
 
-  /** Sum across dirs when every sub-scan reports; unknown otherwise — a
-    * partial sum would UNDERSTATE and could green-light broadcasting a
-    * huge side of a join. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val stats = subScans.map(ScanDefaults.statisticsOf)
-    def total(f: org.apache.spark.sql.connector.read.Statistics => OptionalLong): OptionalLong = {
-      val vs = stats.map(f)
-      if (vs.nonEmpty && vs.forall(_.isPresent)) OptionalLong.of(vs.map(_.getAsLong).sum)
-      else OptionalLong.empty()
-    }
-    val size = total(_.sizeInBytes)
-    val rows = total(_.numRows)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): OptionalLong = size
-      override def numRows(): OptionalLong = rows
-    }
-  }
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+    ScanDefaults.summedStatistics(subScans)
 
   // unreachable through the plugin (SnapStreamableScan owns the streaming
   // personality, including partitioned tails); defensive for direct use

@@ -12,6 +12,11 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `e` with its floats normalized the way Spark normalizes join keys
+    * (`NormalizeNaNAndZero`: -0.0 = 0.0, one NaN; private[sql]). */
+  def normalizeFloats(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** DataFrame from a logical plan (`Dataset.ofRows` is private[sql]) —
     * lets the materialized-view refresher run a stored view body with a
     * relation surgically swapped for an incremental delta plan. */

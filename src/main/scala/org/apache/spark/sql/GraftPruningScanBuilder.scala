@@ -55,6 +55,38 @@ object GraftScanUtils {
     parquetScanFor(spark, name, files, schema, options, pushed, required).toBatch
 }
 
+/** A read-only DSv2 table whose [[Scan]] is assembled per query from the
+  * pushed filters and the pruned schema — how a library read puts a scan
+  * graft built itself (the merge-on-read scan of delete-covered files)
+  * into a DataFrame. Every pushed filter stays a post-scan residual, so
+  * Spark re-checks it, while `assemble` hands it to its parquet sub-scans
+  * for partition and row-group skipping. The relation has no catalog, so
+  * the rules that rewrite catalog relations pass it by. */
+final class GraftAssembledTable(tableName: String, tableSchema: StructType,
+    assemble: (Seq[Expression], StructType) => Scan)
+    extends org.apache.spark.sql.connector.catalog.Table
+    with org.apache.spark.sql.connector.catalog.SupportsRead {
+  override def name(): String = tableName
+  override def schema(): StructType = tableSchema
+  override def capabilities(): java.util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
+    java.util.EnumSet.of(org.apache.spark.sql.connector.catalog.TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns {
+      private var pushed: Seq[Expression] = Nil
+      private var required = tableSchema
+      override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+        pushed = filters; filters
+      }
+      override def pushedFilters: Array[Predicate] = Array.empty
+      override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
+      override def build(): Scan = assemble(pushed, required)
+    }
+
+  def frame(spark: SparkSession): DataFrame = GraftColumnBridge.ofRows(spark,
+    org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+      this, None, None, CaseInsensitiveStringMap.empty()))
+}
+
 class GraftPruningScanBuilder(
     spark: SparkSession,
     tableName: String,

@@ -367,29 +367,138 @@ class MorDeleteSpec extends AnyFunSuite {
       f.startsWith(s"data/s${snap.snapshotId}/")), "copies land hive-laid under the new value")
   }
 
-  test("merged SQL plan shape: pushdown reaches the parquet scans, delete set broadcasts") {
+  test("merged SQL plan shape: pushdown reaches the merged scan, no join, no broadcast") {
     val cat = freshCatalog()
     withNation(cat)
     cat.deleteMoR("db", "nation", col("n_nationkey") < 5)
+    cat.deleteMoREq("db", "nation", Seq(12).toDF("n_nationkey"))
     spark.conf.set("spark.sql.catalog.morplan", "graft.catalog.spark.SnapCatalogPlugin")
     spark.conf.set("spark.sql.catalog.morplan.warehouse", cat.warehouse)
     val df = spark.sql("SELECT n_name FROM morplan.db.nation WHERE n_nationkey >= 10")
     val phys = df.queryExecution.executedPlan.toString
     // the user predicate must reach the file scan as a pushed filter (the
     // relation swap happens at ANALYSIS time precisely so the optimizer
-    // can still push through the anti-join's left side)
+    // can still push into the merged scan)
     assert(phys.contains("GreaterThanOrEqual(n_nationkey,10)"),
       s"predicate not pushed:\n$phys")
-    // the delete set joins as a BROADCAST anti join - the table side never
-    // shuffles for the merge
-    assert(phys.contains("BroadcastHashJoin") && phys.contains("LeftAnti"),
-      s"no broadcast anti join:\n$phys")
-    assert(df.count() == 15)
-    // clean scan shortcut: after compact there is no join at all
+    // both delete kinds apply inside the scan's readers: the merge adds
+    // no anti join and no broadcast
+    assert(!phys.contains("LeftAnti"), s"merge still anti-joins:\n$phys")
+    assert(!phys.contains("BroadcastHashJoin") && !phys.contains("BroadcastExchange"),
+      s"merge still broadcasts:\n$phys")
+    assert(df.count() == 14)
+    // clean scan shortcut: after compact there is no merge at all
     cat.compact("db", "nation", 1)
     val phys2 = spark.sql("SELECT n_name FROM morplan.db.nation WHERE n_nationkey >= 10")
       .queryExecution.executedPlan.toString
-    assert(!phys2.contains("LeftAnti"), s"compacted table still pays the merge:\n$phys2")
+    assert(!phys2.contains("LeftAnti") && !phys2.contains("merge-on-read"),
+      s"compacted table still pays the merge:\n$phys2")
+  }
+
+  test("reads over live position and equality deletes run no more jobs than over a compacted copy (counter gate)") {
+    val cat = freshCatalog()
+    for (t <- Seq("live", "flat")) {
+      cat.createTable("db", t, nation.schema)
+      cat.append("db", t, nation)
+      cat.deleteMoR("db", t, col("n_nationkey") < 5)
+      cat.deleteMoREq("db", t, Seq(12, 17).toDF("n_nationkey"))
+    }
+    cat.compact("db", "flat", 1)
+    assert(cat.currentSnapshot("db", "live").deleteFiles.map(_.isPositional).toSet ==
+      Set(true, false))
+    assert(cat.currentSnapshot("db", "flat").deleteFiles.isEmpty)
+    // first read of the equality history backfills its exact count (a
+    // commit of its own); the gate measures the reads after it
+    assert(cat.readLatest("db", "live").count() == 18)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(read: String => org.apache.spark.sql.DataFrame, t: String): (Int, Seq[Int]) = {
+      val df = read(t)
+      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
+      jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val keys = df.select("n_nationkey").as[Int].collect().sorted.toSeq
+        org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
+        (jobs.get(), keys)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val reads: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "readLatest" -> (t => cat.readLatest("db", t)),
+      "readAsOf" -> (t => cat.readAsOf("db", t, cat.currentSnapshot("db", t).snapshotId)),
+      "readWhere" -> (t => cat.readWhere("db", t, cat.currentSnapshot("db", t).snapshotId,
+        col("n_nationkey") >= 3)))
+    for ((name, read) <- reads) {
+      val (live, liveKeys) = jobsOf(read, "live")
+      val (flat, flatKeys) = jobsOf(read, "flat")
+      info(s"$name: $live jobs over live deletes, $flat compacted")
+      assert(liveKeys == flatKeys, name)
+      assert(live <= flat, s"$name: $live jobs over live deletes vs $flat compacted")
+    }
+  }
+
+  /** One key type of the equality-delete matrix: `data` (an `id` column
+    * plus the key columns) commits to a plain and a bucketed table, the
+    * same `keys` rows delete from both, and each read must equal a plain
+    * Spark null-safe left_anti join. */
+  private def eqTypeCase(name: String, data: org.apache.spark.sql.DataFrame,
+      keyCols: Seq[String], keyWhere: String, extraKeys: Seq[org.apache.spark.sql.Row] = Nil): Unit = {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_eqtype_").toString
+    val cat = new SnapshotCatalog(spark, dir)
+    val rows = data.collect().toSeq
+    val local = spark.createDataFrame(rows.asJava, data.schema)
+    val keySchema = org.apache.spark.sql.types.StructType(keyCols.map(data.schema(_)))
+    val keyRows = (data.where(keyWhere).select(keyCols.map(col): _*).collect().toSeq ++
+      extraKeys)
+    def keys = spark.createDataFrame(keyRows.asJava, keySchema)
+    cat.createTable("db", "p", data.schema)
+    cat.append("db", "p", local)
+    cat.createBucketedTable("db", "b", data.schema, bucketCol = "id", nBuckets = 2)
+    cat.appendBucketed("db", "b", local)
+    cat.deleteMoREq("db", "p", keys)
+    cat.deleteMoREq("db", "b", keys)
+    val k = keys
+    val expect = local.join(k, keyCols.map(c => local(c) <=> k(c)).reduce(_ && _), "left_anti")
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(expect.size < rows.size && expect.nonEmpty, s"$name: the case must delete some rows")
+    assert(cat.readLatest("db", "p").select("id").as[Long].collect().sorted.toSeq == expect,
+      s"$name: library read")
+    // a session caches a catalog by name: one name per warehouse
+    val catName = s"eqty${dir.hashCode.abs}"
+    spark.conf.set(s"spark.sql.catalog.$catName", "graft.catalog.spark.SnapCatalogPlugin")
+    spark.conf.set(s"spark.sql.catalog.$catName.warehouse", dir)
+    val q = spark.sql(s"SELECT id FROM $catName.db.b")
+    assert(!q.queryExecution.executedPlan.toString.contains("LeftAnti"), s"$name: in-scan merge")
+    assert(q.as[Long].collect().sorted.toSeq == expect, s"$name: bucketed SQL scan")
+  }
+
+  test("equality keys of every type match in the reader like a null-safe anti join") {
+    val base = spark.range(0, 40).withColumn("m", col("id") % 7)
+    def typed(expr: String) = base.selectExpr("id", s"CASE WHEN m = 6 THEN NULL ELSE $expr END AS k")
+    eqTypeCase("date", typed("date_add(DATE'2020-02-27', cast(m AS INT))"), Seq("k"),
+      "m IN (1, 3)")
+    eqTypeCase("timestamp", typed("timestamp_seconds(m * 3600 + 1)"), Seq("k"), "m IN (0, 6)")
+    eqTypeCase("decimal(10,2)", typed("cast(m * 1.25 AS DECIMAL(10,2))"), Seq("k"), "m = 2")
+    eqTypeCase("decimal(38,6)",
+      typed("cast(concat(cast(m AS STRING), '2345678901234567890123.456789') AS DECIMAL(38,6))"),
+      Seq("k"), "m IN (4, 5)")
+    eqTypeCase("boolean", typed("m % 2 = 0"), Seq("k"), "m = 1")
+    eqTypeCase("binary", typed("cast(cast(m AS STRING) AS BINARY)"), Seq("k"), "m IN (0, 6)")
+    // -0.0 and 0.0 are one key; NaN matches NaN (Spark's join-key
+    // normalization — the <=> an equality delete means)
+    val dbl = base.selectExpr("id", "CASE m WHEN 0 THEN 0.0D WHEN 1 THEN -0.0D " +
+      "WHEN 2 THEN double('NaN') WHEN 3 THEN 1.5D WHEN 4 THEN -2.5D ELSE NULL END AS k")
+    eqTypeCase("double -0.0", dbl, Seq("k"), "m = 1")
+    eqTypeCase("double NaN", dbl, Seq("k"), "m = 2")
+    eqTypeCase("composite with nulls",
+      base.selectExpr("id", "CASE WHEN m < 2 THEN NULL ELSE cast(m % 3 AS INT) END AS a",
+        "CASE WHEN m IN (2, 5) THEN NULL ELSE concat('s', cast(m % 2 AS STRING)) END AS b"),
+      Seq("a", "b"), "m IN (0, 2, 4)")
   }
 
   test("bucketed table: library MoR delete merges across __bucket dirs") {
