@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** One committed snapshot of a table: a full table state addressed by id.
   *
@@ -1355,44 +1355,6 @@ final class SnapshotCatalog(
   private def deleteFileSchema: StructType =
     StructType.fromDDL("_file STRING, _pos BIGINT")
 
-  /** Table-root-relative path of the scanned file, derived from
-    * `_metadata.file_path` at RUNTIME with `locate` on the absolute root —
-    * the same expression computes the key on the delete-write side and the
-    * read side, so the two agree regardless of how the filesystem renders
-    * the scheme prefix (`file:/...` vs `file:///...`). */
-  private def morRelPath(db: String, table: String): Column = {
-    val marker = tablePath(db, table).toAbsolutePath.normalize().toString + "/"
-    val fp = col("_metadata.file_path")
-    fp.substr(locate(marker, fp) + lit(marker.length), lit(Int.MaxValue))
-  }
-
-  /** [[readFiles]] plus the merge-on-read identity columns: each row tagged
-    * with its table-root-relative file path and its row ordinal within the
-    * file (`_metadata.row_index` — generated by the vectorized reader from
-    * row-group offsets, zero scan overhead). */
-  private def readFilesWithPos(db: String, table: String,
-      schema: StructType, files: Seq[String]): DataFrame = {
-    val outCols = schema.fieldNames.map(n => col(s"`$n`")) ++
-      Seq(col(MorFileCol), col(MorPosCol))
-    if (files.isEmpty) {
-      val withMeta = StructType(schema.fields ++
-        StructType.fromDDL(s"$MorFileCol STRING, $MorPosCol BIGINT").fields)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withMeta)
-    }
-    val root = tablePath(db, table)
-    val readSchema = withDefaultMeta(db, table, schema)
-    val bySnapDir = files.groupBy(f => f.split("/").take(2).mkString("/"))
-    val parts = bySnapDir.toSeq.sortBy(_._1).map { case (snapDir, fs) =>
-      spark.read
-        .schema(readSchema)
-        .option("basePath", root.resolve(snapDir).toString)
-        .parquet(fs.map(f => root.resolve(f).toString): _*)
-        .withColumn(MorFileCol, morRelPath(db, table))
-        .withColumn(MorPosCol, col("_metadata.row_index"))
-    }
-    parts.reduce(_.unionByName(_)).select(outCols.toIndexedSeq: _*)
-  }
-
   /** Delete entries of `snap` relevant to a file subset (exact coverage —
     * recorded per data file at delete-commit time). */
   private def liveDeletesFor(snap: Snapshot, files: Seq[String]): Seq[DeleteFile] = {
@@ -1435,8 +1397,14 @@ final class SnapshotCatalog(
   }
 
   private def readVisibleRaw(db: String, table: String, snap: Snapshot,
-      files: Seq[String]): DataFrame =
-    readVisibleScan(db, table, snap, snap.schema, files, withPos = false)
+      files: Seq[String]): DataFrame = {
+    val live = liveDeletesFor(snap, files)
+    if (live.isEmpty) return readFiles(db, table, snap.schema, files)
+    val covered = live.flatMap(_.covers.keys).toSet
+    val (dirty, clean) = files.partition(covered.contains)
+    val merged = readMerged(db, table, snap, dirty, Nil)
+    if (clean.isEmpty) merged else readFiles(db, table, snap.schema, clean).unionByName(merged)
+  }
 
   /** Position-tagged VISIBLE rows — the delete-writer's scan: candidates
     * with their (file, pos) identity, rows already dead under `snap`'s
@@ -1444,48 +1412,47 @@ final class SnapshotCatalog(
     * position nor double-decrement the count). */
   private def readVisibleWithPos(db: String, table: String, snap: Snapshot,
       files: Seq[String]): DataFrame =
-    readVisibleScan(db, table, snap, snap.schema, files, withPos = true)
+    readMerged(db, table, snap, files, IdentityFields)
 
-  /** Visible rows of `files` under `schema`, clean files through the
-    * plain scan and covered ones through [[readMerged]]; `withPos` adds
-    * the identity columns on both sides. */
-  private def readVisibleScan(db: String, table: String, snap: Snapshot,
-      schema: StructType, files: Seq[String], withPos: Boolean): DataFrame = {
-    def plain(fs: Seq[String]): DataFrame =
-      if (withPos) readFilesWithPos(db, table, schema, fs) else readFiles(db, table, schema, fs)
-    val live = liveDeletesFor(snap, files)
-    if (live.isEmpty) return plain(files)
-    val covered = live.flatMap(_.covers.keys).toSet
-    val (dirty, clean) = files.partition(covered.contains)
-    val merged = readMerged(db, table, schema, dirty, live, withPos)
-    if (clean.isEmpty) merged else plain(clean).unionByName(merged)
-  }
+  /** The `(file, pos)` identity columns of a position-tagged read. */
+  private val IdentityFields =
+    StructType.fromDDL(s"$MorFileCol STRING NOT NULL, $MorPosCol BIGINT NOT NULL").fields.toSeq
 
-  /** Delete-covered `files` read through the reader-level merge
+  /** `files` of `snap` read through the per-file reader
     * ([[graft.catalog.spark.MorScanMerge.mergedScan]]): one DSv2 relation
-    * whose tasks drop the rows `deletes` kill, each snapshot dir read
-    * with its own `basePath` and the table's column defaults. No join and
-    * no broadcast — the tasks load the dead positions and equality keys
-    * themselves. `withPos` adds [[MorFileCol]] (the file's
-    * table-root-relative path) and [[MorPosCol]] (the row index). */
-  private def readMerged(db: String, table: String, schema: StructType,
-      files: Seq[String], deletes: Seq[DeleteFile], withPos: Boolean): DataFrame = {
+    * whose tasks drop the rows `snap`'s deletes kill, each snapshot dir
+    * read with its own `basePath` and the table's column defaults. No join
+    * and no broadcast — the tasks load the dead positions and equality
+    * keys themselves; clean files read with empty delete lists. `extra`
+    * names the derived columns the relation adds: [[MorFileCol]] (the
+    * file's table-root-relative path), [[MorPosCol]] (the row index), and
+    * the lineage columns `__rid`/`__rseq`, completed from each file's
+    * `first_row_id`/`added_snapshot_id`. `killedBy` switches to the rows
+    * alive under `snap` that the given delete files kill. */
+  private def readMerged(db: String, table: String, snap: Snapshot, files: Seq[String],
+      extra: Seq[StructField],
+      killedBy: Option[Seq[DeleteFile]] = None): DataFrame = {
     val root = tablePath(db, table).toAbsolutePath.normalize()
-    val readSchema = withDefaultMeta(db, table, schema)
+    val readSchema = withDefaultMeta(db, table, snap.schema)
     val groups = files.groupBy(f => f.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
       .map { case (snapDir, fs) =>
         (new org.apache.spark.sql.util.CaseInsensitiveStringMap(
           Map("basePath" -> root.resolve(snapDir).toString).asJava),
           fs.map(f => root.resolve(f).toString))
       }
-    val relSchema = if (!withPos) readSchema else StructType(readSchema.fields ++
-      StructType.fromDDL(s"$MorFileCol STRING NOT NULL, $MorPosCol BIGINT NOT NULL").fields)
-    new org.apache.spark.sql.GraftAssembledTable(s"$db.$table", relSchema,
+    val live = liveDeletesFor(snap, files)
+    def fileOf(rel: String): graft.catalog.spark.MorFile = {
+      val st = snap.fileStats.getOrElse(rel, Map.empty)
+      graft.catalog.spark.MorFile(live.filter(_.covers.contains(rel)),
+        killedBy.map(_.filter(_.covers.contains(rel))),
+        st.get("first_row_id").map(_.toLong), st.get("added_snapshot_id").map(_.toLong))
+    }
+    new org.apache.spark.sql.GraftAssembledTable(s"$db.$table",
+      StructType(readSchema.fields ++ extra),
       (pushed, required) => graft.catalog.spark.MorScanMerge.mergedScan(spark,
         s"$db.$table", groups, readSchema,
         pushed.filter(_.references.forall(a => readSchema.fieldNames.contains(a.name))),
-        required, required, root.toString + "/",
-        rel => deletes.filter(_.covers.contains(rel))))
+        required, required, root.toString + "/", fileOf))
       .frame(spark)
   }
 
@@ -1499,9 +1466,8 @@ final class SnapshotCatalog(
     * The physical column exists only in files a REWRITE produced (compact/
     * z-order/bin-pack write it so rewritten rows keep the identity their
     * original file assigned); everything else derives from the per-file
-    * `first_row_id` recorded at commit plus the row's position. The frid
-    * side is one METADATA-sized broadcast (file -> base id), never a
-    * shuffle of the data. */
+    * `first_row_id` recorded at commit plus the row's position, inside
+    * the reader ([[readMerged]]). */
   private def readVisibleWithRid(db: String, table: String, snap: Snapshot,
       files: Seq[String]): DataFrame =
     readVisibleWithPosAndRid(db, table, snap, files)
@@ -1523,40 +1489,17 @@ final class SnapshotCatalog(
     * the MoR UPDATE/MERGE writer's scan when lineage is on: the positions
     * feed the delete shard while `__rid` rides into the post-image so an
     * updated row KEEPS its identity (Iceberg-v3 semantics: update never
-    * re-mints). Also derives `__rseq`, each row's LAST-UPDATED snapshot
+    * re-mints). Also serves `__rseq`, each row's LAST-UPDATED snapshot
     * (Iceberg v3's `_last_updated_sequence_number` shape): physical
     * `__rseq` where a rewrite materialized it, else the containing
     * file's `added_snapshot_id` — a fresh file's rows were last touched
-    * by the commit that added it. Both defaults ride ONE metadata-sized
-    * broadcast (file -> (first_row_id, added_snapshot_id)). */
+    * by the commit that added it. The reader derives both per file; the
+    * plan has no join. */
   private def readVisibleWithPosAndRid(db: String, table: String, snap: Snapshot,
-      files: Seq[String]): DataFrame = {
-    val schemaPlus = StructType(snap.schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("__rid",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("__rseq",
-        org.apache.spark.sql.types.LongType, nullable = true)))
-    val merged = readVisibleScan(db, table, snap, schemaPlus, files, withPos = true)
-    val fridRows = files.flatMap { f =>
-      val st = snap.fileStats.getOrElse(f, Map.empty)
-      val frid = st.get("first_row_id").map(_.toLong)
-      val added = st.get("added_snapshot_id").map(_.toLong)
-      if (frid.isEmpty && added.isEmpty) None
-      else Some((f, frid.getOrElse(-1L), frid.isDefined,
-        added.getOrElse(-1L), added.isDefined))
-    }
-    val fridDf = spark.createDataFrame(fridRows)
-      .toDF("__frid_file", "__frid_base", "__frid_set", "__fadd", "__fadd_set")
-    merged.join(broadcast(fridDf),
-        merged(MorFileCol) === fridDf("__frid_file"), "left")
-      .withColumn("__rid", coalesce(col("`__rid`"),
-        when(col("__frid_set"), col("__frid_base") + col(MorPosCol))))
-      .withColumn("__rseq", coalesce(col("`__rseq`"),
-        when(col("__fadd_set"), col("__fadd"))))
-      .select((snap.schema.fieldNames.map(n => col(s"`$n`")) ++
-        Seq(col(MorFileCol), col(MorPosCol), col("`__rid`"), col("`__rseq`")))
-        .toIndexedSeq: _*)
-  }
+      files: Seq[String]): DataFrame =
+    readMerged(db, table, snap, files, IdentityFields ++ Seq(
+      StructField("__rid", LongType, nullable = true),
+      StructField("__rseq", LongType, nullable = true)))
 
   /** The current snapshot's visible rows plus `_row_id` — each row's
     * STABLE identity under `row.lineage=true`: assigned once when the row
@@ -2205,7 +2148,6 @@ final class SnapshotCatalog(
     val ins = Seq.newBuilder[DataFrame]
     val posShards = Seq.newBuilder[DeleteFile]
     val eqDels = Seq.newBuilder[DataFrame]
-    val root = tablePath(db, table)
     for (en <- inRange) {
       val snap = snapshotAt(db, table, en.snapshotId)
       if (snap.schemaDdl != prev.schemaDdl) return None // evolution: changelog aligns
@@ -2223,28 +2165,13 @@ final class SnapshotCatalog(
         val newShards = snap.deleteFiles.filterNot(d => prevShards(d.path))
         val (pos, eq) = newShards.partition(_.isPositional)
         posShards ++= pos
-        if (eq.nonEmpty) {
-          // EQUALITY-delete pre-images, exactly: rows VISIBLE at this
-          // commit's parent (`prev` — all earlier in-range deletes and
-          // adds applied) within the shard's pinned coverage, matching
-          // any key tuple null-safely. One merged scan of the covered
-          // files per eq commit — churn-sized, no changelog diff.
-          eq.groupBy(_.eqCols.toList).foreach { case (cols, shards) =>
-            val covered = shards.flatMap(_.covers.keys).distinct.sorted
-            if (covered.nonEmpty) {
-              val tupleSchema = StructType(cols.map(c => schema(c)).toArray)
-              val tuples = spark.read.schema(tupleSchema)
-                .parquet(shards.map(s => root.resolve(s.path).toString): _*)
-                .dropDuplicates(cols)
-                .select(cols.map(c => col(s"`$c`").as(s"__eq_$c")): _*)
-              val alive = readVisible(db, table, prev, covered)
-              val cond = cols.map(c => alive(s"`$c`") <=> tuples(s"`__eq_$c`"))
-                .reduce(_ && _)
-              eqDels += alive.join(tuples, cond, "left_semi")
-                .select(schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
-            }
-          }
-        }
+        // EQUALITY-delete pre-images, exactly: rows VISIBLE at this
+        // commit's parent (`prev` — all earlier in-range deletes and adds
+        // applied) that the commit's eq shards kill, each covered file
+        // matched against the shards covering it. One per-file read of
+        // the covered files per eq commit — churn-sized, no changelog diff.
+        val eqCovered = eq.flatMap(_.covers.keys).distinct.sorted
+        if (eqCovered.nonEmpty) eqDels += readMerged(db, table, prev, eqCovered, Nil, Some(eq))
         val added = snap.files.filterNot(prevFiles)
         if (added.nonEmpty) ins += readFiles(db, table, schema, added)
       }
@@ -2255,8 +2182,9 @@ final class SnapshotCatalog(
     // delete writer only ever kills VISIBLE rows, so in-range shards hold
     // disjoint positions and each targeted row was alive at `from` (or
     // lives in an in-range-added file `from`'s coverage cannot touch) —
-    // visibility at `from` plus one semi-join is exact, no per-commit
-    // walk of overlapping covered files
+    // the rows alive at `from` that the shards kill are exact, read in one
+    // per-file pass with no join and no per-commit walk of overlapping
+    // covered files
     val allPos = posShards.result()
     def unionAll(fs: Seq[DataFrame]): DataFrame = fs match {
       case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -2264,16 +2192,8 @@ final class SnapshotCatalog(
     }
     val posDels =
       if (allPos.isEmpty) Seq.empty[DataFrame]
-      else {
-        val covered = allPos.flatMap(_.covers.keys).distinct.sorted
-        val newDead = spark.read.schema(deleteFileSchema)
-          .parquet(allPos.map(d => root.resolve(d.path).toString): _*)
-        val alive = readVisibleWithPos(db, table, from, covered)
-        Seq(alive.join(newDead,
-          alive(MorFileCol) === newDead("_file") &&
-            alive(MorPosCol) === newDead("_pos"), "left_semi")
-          .select(schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
-      }
+      else Seq(readMerged(db, table, from, allPos.flatMap(_.covers.keys).distinct.sorted,
+        Nil, Some(allPos)))
     Some((unionAll(ins.result()), unionAll(posDels ++ eqDels.result())))
   }
 
@@ -8079,12 +7999,13 @@ final class SnapshotCatalog(
     }
 
   /** Convert EQUALITY delete shards into consolidated POSITIONAL deletes
-    * (Iceberg's `convert_equality_deletes` maintenance shape): per
-    * eq-column set, ONE scan of the union of the shards' covered LIVE
-    * files materializes the exact (file, pos) pairs the eq shards kill —
-    * keys tagged with their shard's coverage mask, the same per-file
-    * application rule as the read path — and the commit swaps the eq
-    * shards for a range-sharded positional set ([[writeDeadShards]]).
+    * (Iceberg's `convert_equality_deletes` maintenance shape): ONE scan
+    * of the shards' covered LIVE files, through the per-file reader in
+    * its `killedBy` mode ([[readMerged]]), materializes the exact (file,
+    * pos) pairs the eq shards kill and no positional shard already kills
+    * — each file matched against the eq shards that cover it, the same
+    * per-file rule as the read path — and the commit swaps the eq shards
+    * for a range-sharded positional set ([[writeDeadShards]]).
     * Coverage is intersected with the CURRENT snapshot's files first:
     * `carryDeleteShards` keeps a shard if ANY covered file survives a
     * partial rewrite, so covers can name rewritten-away files — scanning
@@ -8092,9 +8013,9 @@ final class SnapshotCatalog(
     * their positions would understate record_count. Data files untouched
     * (operation "compact": a row-preserving delete-maintenance rewrite,
     * like [[compactDeleteFiles]]). Reads get cheaper twice over: position
-    * anti-joins replace key-hash joins, and the per-shard coverage
-    * bookkeeping collapses. Rows also dead under other shards just
-    * re-record — the position anti-join is idempotent.
+    * lookups replace key-tuple probes, and the per-shard coverage
+    * bookkeeping collapses. Rows also dead under a carried eq shard just
+    * re-record — either kill suffices.
     *
     * `where` scopes the conversion: an eq shard is admitted iff it covers
     * ANY live file the predicate admits ([[pruneFiles]]); admitted shards
@@ -8121,60 +8042,23 @@ final class SnapshotCatalog(
       val newId = entries.last.snapshotId + 1
       val tag = attemptTag()
       val root = tablePath(db, table)
-      val deadFrames = eq.groupBy(_.eqCols).toSeq.sortBy(_._1.mkString(","))
-        .flatMap { case (cols, fs) =>
-          fs.grouped(64).flatMap { chunk =>
-            // only LIVE covered files participate (rewritten-away names
-            // are read-path inert and may no longer exist on disk)
-            val covered = chunk.flatMap(_.covers.keys).distinct
-              .filter(live).sorted
-            if (covered.isEmpty) None
-            else Some {
-              val scanned = readFilesWithPos(db, table, prev.schema, covered)
-              val keys = chunk.zipWithIndex.map { case (s, i) =>
-                spark.read.parquet(root.resolve(s.path).toString)
-                  .dropDuplicates(cols)
-                  .withColumn("__shard_bit", lit(1L << i))
-              }.reduce(_.unionByName(_))
-              val maskOf = scala.collection.mutable.HashMap.empty[String, Long]
-              chunk.zipWithIndex.foreach { case (s, i) =>
-                s.covers.keysIterator.filter(live).foreach { f =>
-                  maskOf(f) = maskOf.getOrElse(f, 0L) | (1L << i) }
-              }
-              val maskDf = broadcast(spark.createDataFrame(
-                maskOf.toSeq.sortBy(_._1)).toDF("__mask_file", "__mask"))
-              val tagged = scanned.join(maskDf,
-                scanned(MorFileCol) === maskDf("__mask_file"), "left")
-              val cond = cols.map(c => tagged(s"`$c`") <=> keys(s"`$c`")).reduce(_ && _) &&
-                coalesce(tagged("__mask"), lit(0L))
-                  .bitwiseAND(keys("__shard_bit")) =!= lit(0L)
-              tagged.join(keys, cond, "left_semi")
-                .select(col(MorFileCol).as("_file"), col(MorPosCol).as("_pos"))
-            }
-          }
-        }
+      // only LIVE covered files participate (rewritten-away names are
+      // read-path inert and may no longer exist on disk)
+      val covered = eq.flatMap(_.covers.keys).distinct.filter(live).sorted
       val delDirRel = s"deletes/s$newId$tag"
       val delDir = root.resolve("deletes").resolve(s"s$newId$tag")
-      // positions already dead under an existing POSITIONAL shard must
-      // not re-record: positional shards are pairwise disjoint by the
-      // delete-writer invariant, and keeping the converted shards
-      // disjoint too lets per-file dead COUNTS stay additive (exact
-      // metadata record_count below, [[deadRows]] arithmetic)
       val converted =
-        if (deadFrames.isEmpty) Seq.empty[DeleteFile] // no live coverage at all
+        if (covered.isEmpty) Seq.empty[DeleteFile] // no live coverage at all
         else {
-          val dead0 = deadFrames.reduce(_.unionByName(_))
-            .dropDuplicates("_file", "_pos")
-          val dead =
-            if (pos.isEmpty) dead0
-            else {
-              val already = spark.read.schema(deleteFileSchema)
-                .parquet(pos.map(d => root.resolve(d.path).toString): _*)
-                .select(col("_file").as("__af"), col("_pos").as("__ap"))
-              dead0.join(already,
-                dead0("_file") === col("__af") && dead0("_pos") === col("__ap"),
-                "left_anti")
-            }
+          // the rows each file's covering eq shards kill that no
+          // positional shard already kills, found inside the reader:
+          // positional shards are pairwise disjoint by the delete-writer
+          // invariant, and keeping the converted shards disjoint too lets
+          // per-file dead COUNTS stay additive (exact metadata
+          // record_count below, [[deadRows]] arithmetic)
+          val dead = readMerged(db, table, prev.copy(deleteFiles = pos), covered,
+              IdentityFields, killedBy = Some(eq))
+            .select(col(MorFileCol).as("_file"), col(MorPosCol).as("_pos"))
           // size the ranged write from the materialized dead set — one
           // cached pass, never a second scan of the covered files
           dead.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

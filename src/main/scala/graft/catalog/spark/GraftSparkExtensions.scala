@@ -248,7 +248,7 @@ class MorDeltaScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
               s"merged delta scan lacks column ${o.name}: has " +
                 merged.output.map(_.name).mkString(",")))
             // row-id attrs are declared non-nullable; the merged plan's
-            // expressions (substr over file_path, row_index) are provably
+            // columns (the reader's file and row index) are provably
             // non-null per row — assert it so the plan's nullability
             // matches the rewrite's projections
             val typed = if (!o.nullable && child.nullable) KnownNotNull(child) else child

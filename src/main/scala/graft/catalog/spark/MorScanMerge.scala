@@ -8,10 +8,10 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Expression, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.types.{DataType, Decimal, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
@@ -19,34 +19,46 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.{DeleteFile, SnapshotCatalog}
 
-/** READER-LEVEL merge-on-read (the Iceberg `DeleteFile` design,
-  * re-expressed for Spark's DSv2) — the ONE way graft applies deletes on
-  * read: the bucketed V2 scan, the streaming tail and the library's
-  * visible reads all build their delete-covered ("dirty") partitions with
-  * [[MorScanMerge.mergedScan]]. Deletes apply INSIDE each covered file's
-  * partition reader instead of by a join, so no delete set is broadcast,
-  * and the bucketed scan keeps reporting
+/** READER-LEVEL merge-on-read (Iceberg's `DeleteFilter`, re-expressed for
+  * Spark's DSv2) — the ONE way graft reads a delete-covered, change-tagged
+  * or lineage file: [[MorScanMerge.mergedScan]] plans every such scan and
+  * [[MorReaderFactory]] reads it. The callers are
+  *  - the bucketed V2 scan, the streaming append tail and the library's
+  *    visible reads (through `GraftAssembledTable`): the rows alive under
+  *    each file's deletes;
+  *  - the `.changes` CDC stream: a commit's added files tagged `insert`,
+  *    and the rows its NEW delete files kill tagged `delete`;
+  *  - `convertEqualityDeletes`: the `(file, pos)` of the rows its
+  *    equality deletes kill that no position delete already kills.
+  * Deletes apply INSIDE each file's partition reader instead of by a join,
+  * so no delete set is broadcast, and the bucketed scan keeps reporting
   * [[org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning]]
   * (storage-partitioned joins stay exchange-free over live deletes).
   *
   * Mechanics:
-  *  - covered data files are scanned through a sub-scan whose schema
-  *    carries Spark's magic parquet row-index column
-  *    ([[MorScanMerge.RowIdxCol]]) — both parquet read paths populate it
-  *    with the row's ABSOLUTE ordinal in its file, correct under file
-  *    splits and row-group skipping (so predicate pushdown stays on);
-  *  - each covered file's partitions are re-grouped one-file-per-partition
-  *    ([[MorFilePartition]]) so a task knows which file's deletes apply;
-  *    TASKS load the dead positions straight from the delete-shard parquet
-  *    (row-group + record skipping on the shard's `_file` column — shards
-  *    are written sorted by `(_file, _pos)`) and the equality keys through
-  *    a Spark parquet read planned on the driver ([[EqKeyFile]]);
-  *  - the columnar handoff survives live deletes: a merged partition
-  *    reads the inner vectorized batches and re-exposes each through a
-  *    SELECTION VECTOR — dead ordinals dropped, surviving ones remapped by
-  *    [[SelectedColumnVector]] with zero copying (batches with no dead
-  *    rows re-project the inner vectors directly). Equality-key columns
-  *    are force-included into the sub-scan and dropped from the output.
+  *  - files are scanned through a sub-scan whose schema carries Spark's
+  *    magic parquet row-index column ([[MorScanMerge.RowIdxCol]]) — both
+  *    parquet read paths populate it with the row's ABSOLUTE ordinal in
+  *    its file, correct under file splits and row-group skipping (so
+  *    predicate pushdown stays on);
+  *  - each file's partitions are re-grouped one-file-per-partition
+  *    ([[MorFilePartition]]) so a task knows which file's deletes and
+  *    lineage bases apply; TASKS load the dead positions straight from the
+  *    delete-shard parquet (row-group + record skipping on the shard's
+  *    `_file` column — shards are written sorted by `(_file, _pos)`) and
+  *    the equality keys through a Spark parquet read planned on the driver
+  *    ([[EqKeyFile]]);
+  *  - some output columns are derived, not read: the file
+  *    ([[SnapshotCatalog.MorFileCol]]), the row index (`MorPosCol`), a
+  *    constant change tag ([[MorScanMerge.ChangeTypeCol]]), and the
+  *    lineage columns `__rid` = coalesce(physical, first_row_id + row
+  *    index) and `__rseq` = coalesce(physical, added_snapshot_id);
+  *  - the columnar handoff survives live deletes: a partition reads the
+  *    inner vectorized batches and re-exposes each through a SELECTION
+  *    VECTOR — dropped ordinals skipped, kept ones remapped by
+  *    [[SelectedColumnVector]] with zero copying (batches that keep every
+  *    row re-project the inner vectors directly). Equality-key columns are
+  *    force-included into the sub-scan and dropped from the output.
   */
 object MorScanMerge {
   /** Spark's reserved temporary column name: a NULLABLE BIGINT field of
@@ -55,9 +67,17 @@ object MorScanMerge {
     * (`ParquetRowIndexUtil.findRowIndexColumnIndexInSchema`). */
   val RowIdxCol = "_tmp_metadata_row_index"
 
-  /** Row-identity columns a merged read may emit: the file as its
-    * table-root-relative path, the position as the row index. */
-  private val IdentityCols = Set(SnapshotCatalog.MorFileCol, SnapshotCatalog.MorPosCol)
+  /** The constant change-kind column of a CDC read. */
+  val ChangeTypeCol = "_change_type"
+
+  /** Row-lineage columns: physical in files a rewrite wrote, derived from
+    * the file's `first_row_id` / `added_snapshot_id` everywhere else. */
+  val RidCol = "__rid"
+  val RseqCol = "__rseq"
+
+  /** [[mergedScan]] builds so far — lets a spec count the builds of one
+    * executed library read. */
+  private[graft] val builds = new java.util.concurrent.atomic.AtomicLong()
 
   /** Projection of a row's key columns (ordinals `ords`, types `dts`) to
     * an [[UnsafeRow]], floats normalized the way Spark normalizes join
@@ -74,7 +94,7 @@ object MorScanMerge {
     * scan per key-column set), keyed by the file's table-root-relative
     * path. Tasks decode the keys exactly as the data scan decodes the
     * table's columns. */
-  def eqKeyFiles(spark: SparkSession, deletes: Seq[DeleteFile], schema: StructType,
+  private def eqKeyFiles(spark: SparkSession, deletes: Seq[DeleteFile], schema: StructType,
       rootPrefix: String): Map[String, EqKeyFile] =
     deletes.filterNot(_.isPositional).distinct.groupBy(_.eqCols).flatMap { case (cols, ds) =>
       val keySchema = StructType(cols.map(c => StructField(c, schema(c).dataType)))
@@ -91,26 +111,40 @@ object MorScanMerge {
       ds.map(d => d.path -> EqKeyFile(cols, factory, FilePartition(0, chunks(d.path).toArray)))
     }
 
-  /** The merged scan of delete-covered data files — the one dirty-partition
-    * builder. `groups` holds each snapshot dir's read options (its
-    * `basePath`) and absolute file paths; `covering(rel)` lists the delete
-    * files that apply to a table-root-relative data file. Each group reads
-    * through one row-indexed parquet sub-scan carrying `pushed` and the
-    * columns of `required` (plus any equality-key column the query
-    * pruned); its partitions regroup one file each and read through a
-    * [[MorMergingReaderFactory]] that emits `out`, which may name the
-    * identity columns [[SnapshotCatalog.MorFileCol]]/`MorPosCol`. */
+  /** The merged scan of data files — the one place per-file partitions
+    * are planned.
+    * `groups` holds each snapshot dir's read options (its `basePath`) and
+    * absolute file paths; `fileOf(rel)` says what to read of a
+    * table-root-relative data file ([[MorFile]]). Each group reads through
+    * one row-indexed parquet sub-scan carrying `pushed` and the columns of
+    * `required` (plus any equality-key column the query pruned, and the
+    * physical lineage columns `out` names); its partitions regroup one
+    * file each and read through a [[MorReaderFactory]] that emits `out`.
+    * `out` may name the derived columns; `changeType` is the value of
+    * [[ChangeTypeCol]], when `out` names it. */
   def mergedScan(spark: SparkSession, label: String,
       groups: Seq[(CaseInsensitiveStringMap, Seq[String])], schema: StructType,
       pushed: Seq[Expression], required: StructType, out: StructType,
-      rootPrefix: String, covering: String => Seq[DeleteFile]): MergedScan = {
-    val deletes = groups.flatMap(_._2).flatMap(f => covering(f.stripPrefix(rootPrefix))).distinct
+      rootPrefix: String, fileOf: String => MorFile,
+      changeType: Option[String] = None): MergedScan = {
+    builds.incrementAndGet()
+    val deletes = groups.flatMap(_._2).flatMap { f =>
+      val m = fileOf(f.stripPrefix(rootPrefix))
+      m.deletes ++ m.killedBy.getOrElse(Nil)
+    }.distinct
     val eqKeys = eqKeyFiles(spark, deletes, schema, rootPrefix)
+    def setOf(ds: Seq[DeleteFile]) = DeleteSet(
+      ds.filter(_.isPositional).map(rootPrefix + _.path),
+      ds.filterNot(_.isPositional).map(d => eqKeys(d.path)))
     val idxField = StructField(RowIdxCol, LongType, nullable = true)
-    val base = required.fields.filterNot(f => f.name == RowIdxCol || IdentityCols(f.name))
+    val derived = Set(RowIdxCol, SnapshotCatalog.MorFileCol, SnapshotCatalog.MorPosCol) ++
+      changeType.map(_ => ChangeTypeCol)
+    val lineage = out.fieldNames.filter(n => n == RidCol || n == RseqCol)
+      .map(StructField(_, LongType, nullable = true))
+    val base = (required.fields.filterNot(f => derived(f.name)) ++ lineage).distinctBy(_.name)
     val missingKeys = deletes.flatMap(_.eqCols).distinct
       .filterNot(c => base.exists(_.name == c)).map(c => schema(c))
-    val schemaIdx = StructType(schema.fields :+ idxField)
+    val schemaIdx = StructType((schema.fields ++ lineage).distinctBy(_.name) :+ idxField)
     val reqIdx = StructType((base ++ missingKeys) :+ idxField)
     val confMap = {
       import scala.jdk.CollectionConverters._
@@ -120,18 +154,19 @@ object MorScanMerge {
       val sub = org.apache.spark.sql.GraftScanUtils.parquetScanFor(spark, label, files,
         schemaIdx, opts, pushed, Some(reqIdx))
       val b = sub.toBatch
-      val f = new MorMergingReaderFactory(b.createReaderFactory(), sub.readSchema(),
-        out.fieldNames, confMap)
-      sub -> perFilePartitions(b.planInputPartitions(), rootPrefix,
-        rel => covering(rel).filter(_.isPositional).map(rootPrefix + _.path),
-        rel => covering(rel).filterNot(_.isPositional).map(d => eqKeys(d.path)))
-        .toSeq.map(p => CarriedFactoryPartition(p, f): InputPartition)
+      val f = new MorReaderFactory(b.createReaderFactory(), sub.readSchema(),
+        out.fieldNames, changeType, confMap)
+      sub -> perFilePartitions(b.planInputPartitions(), rootPrefix, { (rel, chunks) =>
+        val m = fileOf(rel)
+        MorFilePartition(rel, chunks, setOf(m.deletes), m.killedBy.map(setOf),
+          m.firstRowId, m.addedSnapshotId)
+      }).toSeq.map(p => CarriedFactoryPartition(p, f): InputPartition)
     })
   }
 
   /** Dead positions of one data file, read from its covering delete
     * shards — executor-side, bounded by that file's dead-row count. */
-  def deadPositions(shards: Seq[String], relFile: String,
+  private def deadPositions(shards: Seq[String], relFile: String,
       conf: Configuration): java.util.HashSet[java.lang.Long] = {
     val dead = new java.util.HashSet[java.lang.Long]()
     val pred = FilterCompat.get(
@@ -154,29 +189,16 @@ object MorScanMerge {
   }
 
   /** Re-group a parquet batch's partitions so each holds ONE file's
-    * chunks, tagged with the file's table-root-relative path and covering
-    * shards. Splits of a file may stay in separate partitions (row
-    * indexes are absolute). Files not in `shardsFor`'s domain keep flowing
-    * too (empty shard list = nothing dead). `eqShardsFor` lists the
-    * EQUALITY-delete files covering a file ([[eqKeyFiles]]) — composite
-    * keys supported, applied tuple-wise in the reader.
-    * `newEqShardsFor` carries a SECOND eq set per file, used only by the
-    * CDC pre-image reader ([[EqDeadRowsReaderFactory]]): the commit's NEW
-    * eq shards, matched positively while `eqShardsFor`'s prior coverage
-    * filters to rows still alive before the commit. */
-  def perFilePartitions(parts: Array[InputPartition], rootPrefix: String,
-      shardsFor: String => Seq[String],
-      eqShardsFor: String => Seq[EqKeyFile] = _ => Seq.empty,
-      newEqShardsFor: String => Seq[EqKeyFile] = _ => Seq.empty)
-      : Array[InputPartition] =
+    * chunks, made a [[MorFilePartition]] by `partitionOf` from the file's
+    * table-root-relative path — so a task knows which file's deletes and
+    * lineage bases apply. Splits of a file may stay in separate
+    * partitions (row indexes are absolute). */
+  private def perFilePartitions(parts: Array[InputPartition], rootPrefix: String,
+      partitionOf: (String, FilePartition) => MorFilePartition): Array[InputPartition] =
     parts.flatMap {
       case fp: FilePartition =>
         fp.files.groupBy(_.filePath.toPath.toUri.getPath).toSeq.sortBy(_._1)
-          .map { case (abs, fs) =>
-            val rel = abs.stripPrefix(rootPrefix)
-            MorFilePartition(rel, shardsFor(rel), FilePartition(fp.index, fs),
-              eqShardsFor(rel), newEqShardsFor(rel))
-          }
+          .map { case (abs, fs) => partitionOf(abs.stripPrefix(rootPrefix), FilePartition(fp.index, fs)) }
       case other =>
         throw new IllegalStateException(
           s"expected FilePartition from the parquet batch, got ${other.getClass}")
@@ -188,17 +210,16 @@ object MorScanMerge {
     * is REUSED across rows (single-threaded per partition reader;
     * `HashSet.contains` does not retain its argument), so the per-row cost
     * is one projection + one hash lookup, no allocation. */
-  final class EqMatcher(ords: Seq[Int], dts: Seq[DataType],
+  private final class EqMatcher(ords: Seq[Int], dts: Seq[DataType],
       keys: java.util.HashSet[UnsafeRow]) {
     private[this] val probe = keyProjection(ords, dts)
-    def deadRow(row: InternalRow): Boolean = keys.contains(probe(row))
-    def deadVec(b: ColumnarBatch, row: Int): Boolean = keys.contains(probe(b.getRow(row)))
+    def matches(row: InternalRow): Boolean = keys.contains(probe(row))
   }
 
-  /** Load the [[EqMatcher]]s for one file's covering eq files, resolving
-    * key ordinals/types against `schema` (the sub-scan's schema — key
-    * columns are force-included there by every caller). */
-  def eqMatchersFor(shards: Seq[EqKeyFile], schema: StructType): Seq[EqMatcher] =
+  /** Load the [[EqMatcher]]s for one file's eq files, resolving key
+    * ordinals/types against `schema` (the sub-scan's schema — key columns
+    * are force-included there). */
+  private def eqMatchersFor(shards: Seq[EqKeyFile], schema: StructType): Seq[EqMatcher] =
     shards.map { k =>
       val dts = k.cols.map(c => schema(c).dataType)
       val load = keyProjection(k.cols.indices, dts)
@@ -209,42 +230,53 @@ object MorScanMerge {
       new EqMatcher(k.cols.map(schema.fieldIndex), dts, keys)
     }
 
-  /** The stable row-id expression of one file's rows for a CDC reader:
-    * `coalesce(physical __rid, first_row_id + row_index)` — the same
-    * identity [[graft.catalog.SnapshotCatalog]]'s `readVisibleWithRid`
-    * serves, computed task-side from the file's frid base (metadata the
-    * driver resolved at planning). A file with neither a physical `__rid`
-    * column nor a recorded base yields null (identity degrades, never
-    * breaks). `dirtySchema` must carry both `__rid` and [[RowIdxCol]]. */
-  def ridExpr(dirtySchema: StructType, relFile: String,
-      frids: Map[String, Long]): org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions.{Add, Coalesce}
-    val idxOrd = dirtySchema.fieldIndex(RowIdxCol)
-    val physOrd = dirtySchema.fieldIndex("__rid")
-    val derived = frids.get(relFile) match {
-      case Some(b) =>
-        new Add(Literal(b, LongType), BoundReference(idxOrd, LongType, nullable = true))
-      case None => Literal(null, LongType)
-    }
-    Coalesce(Seq(BoundReference(physOrd, LongType, nullable = true), derived))
+  /** One delete set loaded task-side for one file: does it kill a row? */
+  private final class Killer(set: DeleteSet, relFile: String, schema: StructType,
+      conf: Configuration) {
+    private[this] val dead = deadPositions(set.positions, relFile, conf)
+    private[this] val eqs = eqMatchersFor(set.eqKeys, schema)
+    def kills(idx: Long, row: InternalRow): Boolean =
+      dead.contains(idx) || eqs.exists(_.matches(row))
+  }
+
+  /** The row filter of one [[MorFilePartition]]: a row is kept when its
+    * file's deletes leave it alive and, in the `killedBy` mode, the
+    * `killedBy` set kills it. */
+  private[spark] final class RowFilter(mp: MorFilePartition, schema: StructType,
+      conf: Configuration) {
+    private[this] val deletes = new Killer(mp.deletes, mp.relFile, schema, conf)
+    private[this] val killedBy = mp.killedBy.map(new Killer(_, mp.relFile, schema, conf))
+    def keep(idx: Long, row: InternalRow): Boolean =
+      !deletes.kills(idx, row) && killedBy.forall(_.kills(idx, row))
   }
 }
 
+/** What [[MorScanMerge.mergedScan]] reads of one data file: the rows alive
+  * under `deletes`, or — with `killedBy`, for CDC pre-images and the
+  * equality-to-position conversion — only those alive rows that the
+  * `killedBy` delete files kill; and the file's lineage bases. */
+final case class MorFile(deletes: Seq[DeleteFile],
+    killedBy: Option[Seq[DeleteFile]] = None,
+    firstRowId: Option[Long] = None,
+    addedSnapshotId: Option[Long] = None)
+
 /** One equality-delete file as a task reads it: its key columns and a
   * Spark parquet read of the file planned on the driver (the reader
-  * factory and the file's input partition — [[MorScanMerge.eqKeyFiles]]). */
+  * factory and the file's input partition). */
 final case class EqKeyFile(cols: Seq[String], factory: PartitionReaderFactory,
     part: InputPartition)
 
-/** One covered file's chunk(s): the delegate partition reads this file
-  * only, `shards` are the position-delete parquet files whose `covers`
-  * include it, and `eqShards` the covering equality-delete files —
-  * composite keys supported. `newEqShards` is the CDC pre-image reader's
-  * positive-match set (a commit's NEW eq shards); empty everywhere else. */
-final case class MorFilePartition(relFile: String, shards: Seq[String],
-    delegate: InputPartition,
-    eqShards: Seq[EqKeyFile] = Seq.empty,
-    newEqShards: Seq[EqKeyFile] = Seq.empty) extends InputPartition {
+/** Delete files as a task loads them: position-delete parquet paths and
+  * equality-delete key reads. */
+final case class DeleteSet(positions: Seq[String], eqKeys: Seq[EqKeyFile])
+
+/** One file's chunk(s) as a task reads them ([[MorFile]], resolved): the
+  * delegate partition reads this file only; `deletes` kill rows,
+  * `killedBy` (when set) selects the killed rows instead; the lineage
+  * bases feed `__rid` and `__rseq`. */
+final case class MorFilePartition(relFile: String, delegate: InputPartition,
+    deletes: DeleteSet, killedBy: Option[DeleteSet],
+    firstRowId: Option[Long], addedSnapshotId: Option[Long]) extends InputPartition {
   override def preferredLocations(): Array[String] = delegate.preferredLocations()
 }
 
@@ -274,60 +306,64 @@ final class MergedScan(label: String, out: StructType,
   override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = ()
 }
 
-/** Reader factory applying deletes in-task: reads the row-idx sub-scan,
-  * drops rows whose index is dead or whose key an equality delete names,
-  * and projects the output to `outNames` (sub-scan columns by name; the
-  * identity column [[SnapshotCatalog.MorPosCol]] is the row index and
-  * [[SnapshotCatalog.MorFileCol]] the partition's file). Columnar support
-  * mirrors the inner factory's: a columnar merged read filters each inner
+/** The per-file reader: reads the row-indexed sub-scan, keeps the rows
+  * its partition's [[MorScanMerge.RowFilter]] keeps, and emits `outNames`
+  * — sub-scan columns by name, and the derived columns: the file
+  * ([[SnapshotCatalog.MorFileCol]]), the row index (`MorPosCol`), the
+  * `changeType` tag ([[MorScanMerge.ChangeTypeCol]]) and the lineage
+  * columns ([[MorScanMerge.RidCol]], [[MorScanMerge.RseqCol]]). Columnar
+  * support mirrors the inner factory's: a columnar read filters each inner
   * ColumnarBatch through a selection vector ([[SelectedColumnVector]]);
   * the row path keeps the per-row skip. `confMap` rebuilds a hadoop
   * Configuration task-side (Configuration itself is not serializable). */
-final class MorMergingReaderFactory(
+final class MorReaderFactory(
     inner: PartitionReaderFactory,
     dirtySchema: StructType,
     outNames: Array[String],
+    changeType: Option[String],
     confMap: Map[String, String]) extends PartitionReaderFactory {
+  import MorScanMerge.{ChangeTypeCol, RidCol, RseqCol}
 
   private val idxOrd = dirtySchema.fieldIndex(MorScanMerge.RowIdxCol)
-  // output ordinal -> sub-scan ordinal; -1 marks the file column
-  private val perm = outNames.map {
-    case SnapshotCatalog.MorPosCol => idxOrd
-    case SnapshotCatalog.MorFileCol => -1
-    case n => dirtySchema.fieldIndex(n)
-  }
 
-  private def hadoopConf: Configuration = {
+  private def filterFor(mp: MorFilePartition): MorScanMerge.RowFilter = {
     val conf = new Configuration(false)
     confMap.foreach { case (k, v) => conf.set(k, v) }
-    conf
+    new MorScanMerge.RowFilter(mp, dirtySchema, conf)
   }
 
-  private def deadFor(mp: MorFilePartition): java.util.HashSet[java.lang.Long] =
-    MorScanMerge.deadPositions(mp.shards, mp.relFile, hadoopConf)
+  private def read(n: String): BoundReference = {
+    val i = dirtySchema.fieldIndex(n)
+    BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)
+  }
 
-  private def eqFor(mp: MorFilePartition): Seq[MorScanMerge.EqMatcher] =
-    MorScanMerge.eqMatchersFor(mp.eqShards, dirtySchema)
+  /** Output column `n` of `mp`'s rows over the sub-scan row. */
+  private def outExpr(mp: MorFilePartition, n: String): Expression = n match {
+    case SnapshotCatalog.MorFileCol => Literal(UTF8String.fromString(mp.relFile), StringType)
+    case SnapshotCatalog.MorPosCol => BoundReference(idxOrd, LongType, nullable = true)
+    case ChangeTypeCol if changeType.isDefined =>
+      Literal(UTF8String.fromString(changeType.get), StringType)
+    case RidCol => Coalesce(Seq(read(RidCol), mp.firstRowId.fold[Expression](
+      Literal(null, LongType))(b => new Add(Literal(b), BoundReference(idxOrd, LongType, nullable = true)))))
+    case RseqCol => Coalesce(Seq(read(RseqCol),
+      mp.addedSnapshotId.fold[Expression](Literal(null, LongType))(Literal(_))))
+    case _ => read(n)
+  }
 
   override def supportColumnarReads(p: InputPartition): Boolean =
     inner.supportColumnarReads(p.asInstanceOf[MorFilePartition].delegate)
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val mp = p.asInstanceOf[MorFilePartition]
-    val dead = deadFor(mp)
-    val eqs = eqFor(mp)
+    val keep = filterFor(mp)
     val r = inner.createReader(mp.delegate)
-    val proj = UnsafeProjection.create(perm.toSeq.map(i =>
-      if (i < 0) Literal(UTF8String.fromString(mp.relFile), StringType)
-      else BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)))
+    val proj = UnsafeProjection.create(outNames.toSeq.map(outExpr(mp, _)))
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean = {
         while (r.next()) {
           val row = r.get()
-          if (!dead.contains(row.getLong(idxOrd)) && !eqs.exists(_.deadRow(row))) {
-            cur = row; return true
-          }
+          if (keep.keep(row.getLong(idxOrd), row)) { cur = row; return true }
         }
         false
       }
@@ -336,12 +372,31 @@ final class MorMergingReaderFactory(
     }
   }
 
+  /** `coalesce(phys, base + offset)` into a fresh long vector of `k` rows
+    * — the columnar `__rid` (offset = the row index) and `__rseq` (no
+    * offset); without a base the physical value stands alone. */
+  private def lineageVector(phys: ColumnVector, offset: ColumnVector,
+      base: Option[Long], k: Int): ColumnVector = {
+    val v = new OnHeapColumnVector(k, LongType)
+    var i = 0
+    while (i < k) {
+      if (!phys.isNullAt(i)) v.putLong(i, phys.getLong(i))
+      else if (base.isEmpty) v.putNull(i)
+      else v.putLong(i, base.get + (if (offset == null) 0L else offset.getLong(i)))
+      i += 1
+    }
+    v
+  }
+
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val mp = p.asInstanceOf[MorFilePartition]
-    val dead = deadFor(mp)
-    val eqs = eqFor(mp)
-    val file = UTF8String.fromString(mp.relFile)
+    val keep = filterFor(mp)
     val r = inner.createColumnarReader(mp.delegate)
+    def constant(s: String, k: Int): ColumnVector = {
+      val v = new ConstantColumnVector(k, StringType)
+      v.setUtf8String(UTF8String.fromString(s))
+      v
+    }
     new PartitionReader[ColumnarBatch] {
       private var out: ColumnarBatch = _
       override def next(): Boolean = {
@@ -350,31 +405,34 @@ final class MorMergingReaderFactory(
           val n = b.numRows()
           val idx = b.column(idxOrd)
           // one pass over the row-index vector builds the selection; a
-          // batch with nothing dead re-projects the inner vectors with
+          // batch that keeps every row re-projects the inner vectors with
           // ZERO copying and zero per-access indirection (the common case
           // once most of a covered file's row groups are clean)
           val sel = new Array[Int](n)
           var k = 0
           var i = 0
           while (i < n) {
-            if (!dead.contains(idx.getLong(i)) &&
-                (eqs.isEmpty || !eqs.exists(_.deadVec(b, i)))) { sel(k) = i; k += 1 }
+            if (keep.keep(idx.getLong(i), b.getRow(i))) { sel(k) = i; k += 1 }
             i += 1
           }
           if (k > 0) {
             val s = if (k == n) null else java.util.Arrays.copyOf(sel, k)
-            val cols: Array[ColumnVector] = perm.map { o =>
-              if (o < 0) {
-                val v = new ConstantColumnVector(k, StringType)
-                v.setUtf8String(file)
-                v
-              } else if (s == null) b.column(o)
-              else new SelectedColumnVector(b.column(o), s)
+            def col(n: String): ColumnVector = {
+              val v = b.column(dirtySchema.fieldIndex(n))
+              if (s == null) v else new SelectedColumnVector(v, s)
+            }
+            val cols: Array[ColumnVector] = outNames.map {
+              case SnapshotCatalog.MorFileCol => constant(mp.relFile, k)
+              case SnapshotCatalog.MorPosCol => col(MorScanMerge.RowIdxCol)
+              case ChangeTypeCol if changeType.isDefined => constant(changeType.get, k)
+              case RidCol => lineageVector(col(RidCol), col(MorScanMerge.RowIdxCol), mp.firstRowId, k)
+              case RseqCol => lineageVector(col(RseqCol), null, mp.addedSnapshotId, k)
+              case name => col(name)
             }
             out = new ColumnarBatch(cols, k)
             return true
           }
-          // fully-dead batch: keep pulling
+          // nothing kept: keep pulling
         }
         false
       }
@@ -382,202 +440,6 @@ final class MorMergingReaderFactory(
       override def close(): Unit = r.close()
     }
   }
-}
-
-/** CDC delete-side reader: emits ONLY the rows a commit's NEW delete
-  * shards killed — the inverse of [[MorMergingReaderFactory]]'s filter —
-  * as pre-image rows tagged with a constant `_change_type` column. This
-  * is what makes a STREAMING changelog computable from per-file scans:
-  * a position-delete commit's retracted rows are exactly its shard
-  * positions read back from the (write-once) data file, no table diff
-  * needed. `out` is the pruned output schema; fields it names that are
-  * not in `dirtySchema` must be the tag column. Row-based by design —
-  * CDC streams are consumed row-wise. */
-final class DeadRowsReaderFactory(
-    inner: PartitionReaderFactory,
-    dirtySchema: StructType,
-    out: StructType,
-    tagCol: String,
-    tag: String,
-    confMap: Map[String, String],
-    ridCol: Option[String] = None,
-    frids: Map[String, Long] = Map.empty) extends PartitionReaderFactory {
-
-  private val idxOrd = dirtySchema.fieldIndex(MorScanMerge.RowIdxCol)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val mp = p.asInstanceOf[MorFilePartition]
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    val dead = MorScanMerge.deadPositions(mp.shards, mp.relFile, conf)
-    val r = inner.createReader(mp.delegate)
-    val proj = UnsafeProjection.create(out.fields.map { f =>
-      if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), StringType)
-      else if (ridCol.contains(f.name))
-        MorScanMerge.ridExpr(dirtySchema, mp.relFile, frids)
-      else {
-        val i = dirtySchema.fieldIndex(f.name)
-        BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)
-      }
-    }.toIndexedSeq)
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        while (r.next()) {
-          val row = r.get()
-          if (dead.contains(row.getLong(idxOrd))) { cur = row; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = proj(cur)
-      override def close(): Unit = r.close()
-    }
-  }
-
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    throw new UnsupportedOperationException("CDC delete partitions are row-based")
-}
-
-/** CDC pre-image reader for EQUALITY-delete commits (r8): emits the rows
-  * a commit's NEW eq-delete shards killed — rows of the covered
-  * (write-once) data files that were ALIVE at the commit's parent
-  * snapshot (not position-dead, not matched by a prior eq shard) and
-  * match one of the NEW shards' key tuples — tagged `delete`. This is
-  * what lets a `.changes` stream serve the commits the engine's own CDC
-  * apply sink writes ([[graft.streaming.EventStream.applyCdcEpoch]]'s
-  * zero-scan `deleteMoREq`), so a replica table can itself be a CDC
-  * source (cascaded replication). Coverage is exact because data files
-  * are write-once and eq coverage is pinned at commit time to the files
-  * present then — later appends are never covered. Work per partition is
-  * one covered-file scan + KB-bounded shard loads, the same posture as
-  * [[DeadRowsReaderFactory]]. */
-final class EqDeadRowsReaderFactory(
-    inner: PartitionReaderFactory,
-    dirtySchema: StructType,
-    out: StructType,
-    tagCol: String,
-    tag: String,
-    confMap: Map[String, String],
-    ridCol: Option[String] = None,
-    frids: Map[String, Long] = Map.empty) extends PartitionReaderFactory {
-
-  private val idxOrd = dirtySchema.fieldIndex(MorScanMerge.RowIdxCol)
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val mp = p.asInstanceOf[MorFilePartition]
-    val conf = new Configuration(false)
-    confMap.foreach { case (k, v) => conf.set(k, v) }
-    // prior coverage = alive-at-parent filter; new shards = positive match
-    val priorDead = MorScanMerge.deadPositions(mp.shards, mp.relFile, conf)
-    val priorEqs = MorScanMerge.eqMatchersFor(mp.eqShards, dirtySchema)
-    val newEqs = MorScanMerge.eqMatchersFor(mp.newEqShards, dirtySchema)
-    val r = inner.createReader(mp.delegate)
-    val proj = UnsafeProjection.create(out.fields.map { f =>
-      if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), StringType)
-      else if (ridCol.contains(f.name))
-        MorScanMerge.ridExpr(dirtySchema, mp.relFile, frids)
-      else {
-        val i = dirtySchema.fieldIndex(f.name)
-        BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)
-      }
-    }.toIndexedSeq)
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        while (r.next()) {
-          val row = r.get()
-          if (!priorDead.contains(row.getLong(idxOrd)) &&
-              !priorEqs.exists(_.deadRow(row)) &&
-              newEqs.exists(_.deadRow(row))) { cur = row; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = proj(cur)
-      override def close(): Unit = r.close()
-    }
-  }
-
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    throw new UnsupportedOperationException("CDC delete partitions are row-based")
-}
-
-/** CDC insert-side reader: passes the inner rows through, re-projected to
-  * `out` with the constant `_change_type` tag appended. */
-final class TaggingReaderFactory(
-    inner: PartitionReaderFactory,
-    dataSchema: StructType,
-    out: StructType,
-    tagCol: String,
-    tag: String) extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val r = inner.createReader(p)
-    val proj = UnsafeProjection.create(out.fields.map { f =>
-      if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), StringType)
-      else {
-        val i = dataSchema.fieldIndex(f.name)
-        BoundReference(i, dataSchema(i).dataType, dataSchema(i).nullable)
-      }
-    }.toIndexedSeq)
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = r.next()
-      override def get(): InternalRow = proj(r.get())
-      override def close(): Unit = r.close()
-    }
-  }
-
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    throw new UnsupportedOperationException("CDC insert partitions are row-based")
-}
-
-/** CDC insert-side reader for ROW-LINEAGE tables: like
-  * [[TaggingReaderFactory]] but fed one-file-per-partition
-  * ([[MorFilePartition]], empty shard lists) so each task can compute its
-  * rows' stable `_row_id` via [[MorScanMerge.ridExpr]] — the id a
-  * `readWithRowIds` of the committed snapshot would serve, emitted with
-  * the insert image so a CDC consumer keys on identity from day one. */
-final class RidTaggingReaderFactory(
-    inner: PartitionReaderFactory,
-    dirtySchema: StructType,
-    out: StructType,
-    tagCol: String,
-    tag: String,
-    ridCol: String,
-    frids: Map[String, Long]) extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = false
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val mp = p.asInstanceOf[MorFilePartition]
-    val r = inner.createReader(mp.delegate)
-    val proj = UnsafeProjection.create(out.fields.map { f =>
-      if (f.name == tagCol)
-        Literal(UTF8String.fromString(tag), StringType)
-      else if (f.name == ridCol)
-        MorScanMerge.ridExpr(dirtySchema, mp.relFile, frids)
-      else {
-        val i = dirtySchema.fieldIndex(f.name)
-        BoundReference(i, dirtySchema(i).dataType, dirtySchema(i).nullable)
-      }
-    }.toIndexedSeq)
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = r.next()
-      override def get(): InternalRow = proj(r.get())
-      override def close(): Unit = r.close()
-    }
-  }
-
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    throw new UnsupportedOperationException("CDC insert partitions are row-based")
 }
 
 /** A [[ColumnVector]] view through a selection vector: output ordinal `i`

@@ -1383,7 +1383,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
                   dirty.groupBy(dirOf).toSeq.sortBy(_._1).map { case (d, fs) => (dirOpts(d), fs) },
                   snapSchema, pushedExprs, requiredSchema.getOrElse(scan.readSchema()),
                   scan.readSchema(), rootPrefix,
-                  rel => morLive.filter(_.covers.contains(rel))).planInputPartitions().toSeq
+                  rel => MorFile(morLive.filter(_.covers.contains(rel)))).planInputPartitions().toSeq
                 val all = (cleanParts ++ dirtyParts).toArray
                 new org.apache.spark.sql.connector.read.Batch {
                   override def planInputPartitions(): Array[InputPartition] = all
@@ -1773,7 +1773,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
             MorScanMerge.mergedScan(spark, s"$db.$table stream mor",
               Seq((new CaseInsensitiveStringMap(opts.asJava), dirty.map(f => root.resolve(f).toString))),
               tableSchema.getOrElse(cat.entryLog(db, table).last.schema), Nil,
-              prunedSchema, prunedSchema, rootPrefix, covFor).planInputPartitions()
+              prunedSchema, prunedSchema, rootPrefix, rel => MorFile(covFor(rel))).planInputPartitions()
           }
         cleanParts ++ dirtyParts
       }.toArray
@@ -1784,30 +1784,25 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
 
   /** Micro-batch CDC tail (`spark.readStream.table("snapcat.db.t.changes")`):
     * emits each commit's ROW-LEVEL changes tagged `_change_type`, computed
-    * from per-file scans only — never a table diff:
+    * from per-file scans only — never a table diff. Every image reads
+    * through the one per-file reader ([[MorScanMerge.mergedScan]]):
     *  - append-family commits: added files read raw, tagged `insert`;
-    *  - MoR position-delete / delta UPDATE / MERGE commits: the commit's
-    *    NEW delete shards' positions read back from their (write-once)
-    *    covered data files as PRE-IMAGE rows tagged `delete`
-    *    ([[DeadRowsReaderFactory]] — an update emits its delete + insert
-    *    pair in one batch, the CDC contract), plus any delta files as
-    *    inserts;
+    *  - MoR delete / delta UPDATE / MERGE commits: PRE-IMAGE rows tagged
+    *    `delete` — the rows of the (write-once) covered data files that
+    *    were alive at the commit's parent and that the commit's NEW
+    *    position or equality delete files kill (an update emits its delete
+    *    + insert pair in one batch, the CDC contract). Equality coverage is
+    *    pinned at commit time, so these pre-images are enumerable for keys
+    *    of any type, and a replica table built by `applyCdcEpoch` can
+    *    itself serve a changes stream (cascaded replication);
     *  - compact / z-order: no-ops (moved rows cancel);
-    *  - EQUALITY-delete commits (r8 — what the engine's own CDC apply
-    *    sink writes): dead pre-images ARE enumerable because data files
-    *    are write-once and eq coverage is pinned at commit time — each
-    *    covered file is scanned once, rows alive at the parent snapshot
-    *    that match the NEW shards' key tuples emit tagged `delete`
-    *    ([[EqDeadRowsReaderFactory]]); so a replica table built by
-    *    `applyCdcEpoch` can itself serve a changes stream (cascaded
-    *    replication);
     *  - true rewrites (overwrite, CoW DML, rollback) refuse loudly —
     *    their retractions are not enumerable from per-file metadata;
     *    consumers use the batch `db.t.changes` diff.
     * Offsets advance ONE published commit per trigger
     * (SupportsAdmissionControl), so batch boundaries ARE commit
     * boundaries and consumers get commit-ordered changes without an
-    * ordinal column. Row-based by design (CDC is consumed row-wise). */
+    * ordinal column. */
   private final class SnapChangesStream(db: String, table: String,
       prunedSchema: StructType, visibleSchema: StructType, partitioned: Boolean,
       options: CaseInsensitiveStringMap, lineageRid: Boolean = false)
@@ -1819,7 +1814,6 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     private case class ChgOffset(id: Long) extends Offset {
       override def json(): String = id.toString
     }
-    private val TagCol = "_change_type"
     private def lineage = cat.mainLineage(db, table)
 
     override def initialOffset(): Offset =
@@ -1878,135 +1872,27 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       val root = java.nio.file.Paths.get(warehouse, db, table)
       val rootPrefix = root.toString + java.io.File.separator
       // ROW LINEAGE: when the table tracks it and the consumer kept the
-      // `_row_id` column, every image computes its stable id task-side
-      // (coalesce(physical __rid, first_row_id + row_index)); the frid
-      // bases resolve from per-file commit metadata at planning
+      // `_row_id` column, the reader derives each image's stable id
+      // (`__rid`, served under the stream's name) from the file's
+      // first_row_id, resolved from per-file commit metadata at planning
       val RidCol = "_row_id"
       val ridOn = lineageRid && prunedSchema.fieldNames.contains(RidCol)
-      val ridPhysField = StructField("__rid",
-        org.apache.spark.sql.types.LongType, nullable = true)
-      def fridsOf(snap: graft.catalog.Snapshot, files: Seq[String]): Map[String, Long] =
-        if (!ridOn) Map.empty
-        else files.flatMap(f => snap.fileStats.get(f)
-          .flatMap(_.get("first_row_id")).map(f -> _.toLong)).toMap
-      val dataCols = StructType(prunedSchema.fields.filterNot(f =>
-        f.name == TagCol || (ridOn && f.name == RidCol)))
-      lazy val confMap: Map[String, String] = {
-        val c = spark.sessionState.newHadoopConf()
-        c.iterator().asScala.map(en => en.getKey -> en.getValue).toMap
-      }
-      def byDir(files: Seq[String]): Seq[(Map[String, String], Seq[String])] =
-        (if (partitioned) files.groupBy(_.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
-         else Seq("" -> files)).map { case (dir, fs) =>
-          (if (partitioned) Map("basePath" -> root.resolve(dir).toString)
-           else Map.empty[String, String]) -> fs
-        }
-      def insertParts(added: Seq[String], frids: Map[String, Long]): Seq[InputPartition] =
-        byDir(added).flatMap { case (opts, fs) =>
-          val cism = new CaseInsensitiveStringMap(opts.asJava)
-          if (!ridOn) {
-            val builder = ParquetTable(s"$db.$table changes ins", spark, cism,
-              fs.map(f => root.resolve(f).toString), Some(visibleSchema),
-              classOf[ParquetFileFormat]).newScanBuilder(cism)
-            builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-              .pruneColumns(dataCols)
-            val scan = builder.build()
-            val b = scan.toBatch
-            val f = new TaggingReaderFactory(b.createReaderFactory(),
-              scan.readSchema(), prunedSchema, TagCol, "insert")
-            b.planInputPartitions().toSeq.map(p => CarriedFactoryPartition(p, f))
-          } else {
-            // lineage: per-file partitions (the rid base is per-file) over
-            // a sub-scan carrying the physical __rid + row-index columns
-            val idxField = StructField(MorScanMerge.RowIdxCol,
-              org.apache.spark.sql.types.LongType, nullable = true)
-            val schemaIdx = StructType(
-              (visibleSchema.fields :+ ridPhysField) :+ idxField)
-            val builder = ParquetTable(s"$db.$table changes ins", spark, cism,
-              fs.map(f => root.resolve(f).toString), Some(schemaIdx),
-              classOf[ParquetFileFormat]).newScanBuilder(cism)
-            builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-              .pruneColumns(StructType((dataCols.fields :+ ridPhysField) :+ idxField))
-            val scan = builder.build()
-            val b = scan.toBatch
-            val f = new RidTaggingReaderFactory(b.createReaderFactory(),
-              scan.readSchema(), prunedSchema, TagCol, "insert", RidCol, frids)
-            MorScanMerge.perFilePartitions(b.planInputPartitions(), rootPrefix,
-              _ => Seq.empty).toSeq.map(p => CarriedFactoryPartition(p, f))
-          }
-        }
-      def deleteParts(newShards: Seq[graft.catalog.DeleteFile],
-          frids: Map[String, Long]): Seq[InputPartition] = {
-        val covered = newShards.flatMap(_.covers.keys).distinct.sorted
-        def shardsFor(rel: String): Seq[String] =
-          newShards.filter(_.covers.contains(rel))
-            .map(d => root.resolve(d.path).toString)
-        val idxField = StructField(MorScanMerge.RowIdxCol,
-          org.apache.spark.sql.types.LongType, nullable = true)
-        byDir(covered).flatMap { case (opts, fs) =>
-          val cism = new CaseInsensitiveStringMap(opts.asJava)
-          val schemaIdx = StructType((visibleSchema.fields ++
-            (if (ridOn) Seq(ridPhysField) else Nil)) :+ idxField)
-          val builder = ParquetTable(s"$db.$table changes del", spark, cism,
-            fs.map(f => root.resolve(f).toString), Some(schemaIdx),
-            classOf[ParquetFileFormat]).newScanBuilder(cism)
-          builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-            .pruneColumns(StructType((dataCols.fields ++
-              (if (ridOn) Seq(ridPhysField) else Nil)) :+ idxField))
-          val scan = builder.build()
-          val b = scan.toBatch
-          val f = new DeadRowsReaderFactory(b.createReaderFactory(),
-            scan.readSchema(), prunedSchema, TagCol, "delete", confMap,
-            if (ridOn) Some(RidCol) else None, frids)
-          MorScanMerge.perFilePartitions(b.planInputPartitions(), rootPrefix, shardsFor)
-            .toSeq.map(p => CarriedFactoryPartition(p, f))
-        }
-      }
-      // pre-images of one commit's NEW equality-delete shards: scan the
-      // covered (write-once) files once, keep rows ALIVE at the commit's
-      // parent (not position-dead, not matched by a PRIOR eq shard) that
-      // match a NEW shard's key tuples. Prior + new key columns are
-      // force-included into the sub-scan (the projection may have pruned
-      // them); the output projection drops them again.
-      def eqDeleteParts(newEq: Seq[graft.catalog.DeleteFile],
-          prev: graft.catalog.Snapshot): Seq[InputPartition] = {
-        val covered = newEq.flatMap(_.covers.keys).distinct.sorted
-        val prevPos = prev.deleteFiles.filter(_.isPositional)
-        val prevEq = prev.deleteFiles.filterNot(_.isPositional)
-        def posShardsFor(rel: String): Seq[String] =
-          prevPos.filter(_.covers.contains(rel)).map(d => root.resolve(d.path).toString)
-        val eqKeys = MorScanMerge.eqKeyFiles(spark, newEq ++ prevEq, visibleSchema, rootPrefix)
-        def prevEqFor(rel: String): Seq[EqKeyFile] =
-          prevEq.filter(_.covers.contains(rel)).map(d => eqKeys(d.path))
-        def newEqFor(rel: String): Seq[EqKeyFile] =
-          newEq.filter(_.covers.contains(rel)).map(d => eqKeys(d.path))
-        val idxField = StructField(MorScanMerge.RowIdxCol,
-          org.apache.spark.sql.types.LongType, nullable = true)
-        val eqKeyCols = (newEq ++ prevEq).flatMap(_.eqCols).distinct
-        byDir(covered).flatMap { case (opts, fs) =>
-          val cism = new CaseInsensitiveStringMap(opts.asJava)
-          val schemaIdx = StructType((visibleSchema.fields ++
-            (if (ridOn) Seq(ridPhysField) else Nil)) :+ idxField)
-          val builder = ParquetTable(s"$db.$table changes eqdel", spark, cism,
-            fs.map(f => root.resolve(f).toString), Some(schemaIdx),
-            classOf[ParquetFileFormat]).newScanBuilder(cism)
-          val missingKeys = eqKeyCols
-            .filterNot(c => dataCols.fieldNames.contains(c))
-            .map(c => visibleSchema(c))
-          builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
-            .pruneColumns(StructType((dataCols.fields ++ missingKeys ++
-              (if (ridOn) Seq(ridPhysField) else Nil)) :+ idxField))
-          val scan = builder.build()
-          val b = scan.toBatch
-          val f = new EqDeadRowsReaderFactory(b.createReaderFactory(),
-            scan.readSchema(), prunedSchema, TagCol, "delete", confMap,
-            if (ridOn) Some(RidCol) else None,
-            fridsOf(prev, covered))
-          MorScanMerge.perFilePartitions(b.planInputPartitions(), rootPrefix,
-            posShardsFor, prevEqFor, newEqFor)
-            .toSeq.map(p => CarriedFactoryPartition(p, f))
-        }
-      }
+      val out = StructType(prunedSchema.fields.map(f =>
+        if (ridOn && f.name == RidCol) f.copy(name = MorScanMerge.RidCol) else f))
+      def fileOf(snap: graft.catalog.Snapshot, rel: String, deletes: Seq[graft.catalog.DeleteFile],
+          killedBy: Option[Seq[graft.catalog.DeleteFile]]): MorFile =
+        MorFile(deletes.filter(_.covers.contains(rel)), killedBy.map(_.filter(_.covers.contains(rel))),
+          firstRowId = snap.fileStats.get(rel).flatMap(_.get("first_row_id")).map(_.toLong))
+      // one per-file merged read per change kind, each snapshot dir with
+      // its own basePath on partitioned tables
+      def changeParts(files: Seq[String], tag: String, of: String => MorFile): Seq[InputPartition] =
+        if (files.isEmpty) Nil
+        else MorScanMerge.mergedScan(spark, s"$db.$table changes $tag",
+          (if (partitioned) files.groupBy(_.split("/").take(2).mkString("/")).toSeq.sortBy(_._1)
+           else Seq("" -> files)).map { case (dir, fs) =>
+            new CaseInsensitiveStringMap((if (partitioned) Map("basePath" -> root.resolve(dir).toString)
+              else Map.empty[String, String]).asJava) -> fs.map(f => root.resolve(f).toString)
+          }, visibleSchema, Nil, out, out, rootPrefix, of, Some(tag)).planInputPartitions().toSeq
       val inRange = lineage.filter(en => en.snapshotId > s && en.snapshotId <= e)
       var prevSnap = resolveStreamStart(db, table, s, "changes stream")
       var prevFiles = prevSnap.files.toSet
@@ -2023,30 +1909,16 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
               "and restart the stream from the current snapshot")
           // compact: moved rows cancel — nothing to emit
         } else if (snap.operation != "compact") {
+          // pre-images: the rows alive at the parent that the commit's NEW
+          // position or equality delete files kill, read back from their
+          // (write-once) covered files
           val prevShards = prevSnap.deleteFiles.map(_.path).toSet
           val newShards = snap.deleteFiles.filterNot(d => prevShards(d.path))
-          val (newPos, newEq) = newShards.partition(_.isPositional)
-          if (newEq.nonEmpty) {
-            // key tuples are enumerable for int/long/string key columns
-            // (the CDC key shapes); anything else refuses actionably
-            val bad = newEq.flatMap(_.eqCols).distinct.filterNot(c =>
-              visibleSchema.fieldNames.contains(c) &&
-                (visibleSchema(c).dataType match {
-                  case org.apache.spark.sql.types.IntegerType |
-                       org.apache.spark.sql.types.LongType |
-                       org.apache.spark.sql.types.StringType => true
-                  case _ => false
-                }))
-            require(bad.isEmpty,
-              s"changes stream of $db.$table: commit ${en.snapshotId} added " +
-                s"EQUALITY delete files over non-enumerable key column(s) " +
-                s"${bad.mkString(",")} - use the batch db.t.changes diff")
-            parts ++= eqDeleteParts(newEq, prevSnap)
-          }
-          parts ++= deleteParts(newPos,
-            fridsOf(prevSnap, newPos.flatMap(_.covers.keys).distinct))
-          val added = snap.files.filterNot(prevFiles)
-          parts ++= insertParts(added, fridsOf(snap, added))
+          val parent = prevSnap
+          parts ++= changeParts(newShards.flatMap(_.covers.keys).distinct.sorted, "delete",
+            rel => fileOf(parent, rel, parent.deleteFiles, Some(newShards)))
+          parts ++= changeParts(snap.files.filterNot(prevFiles), "insert",
+            rel => fileOf(snap, rel, Nil, None))
         }
         prevSnap = snap
         prevFiles = files

@@ -57,8 +57,8 @@ object GraftScanUtils {
 
 /** A read-only DSv2 table whose [[Scan]] is assembled per query from the
   * pushed filters and the pruned schema — how a library read puts a scan
-  * graft built itself (the merge-on-read scan of delete-covered files)
-  * into a DataFrame. Every pushed filter stays a post-scan residual, so
+  * graft built itself (the per-file merge-on-read scan) into a
+  * DataFrame. Every pushed filter stays a post-scan residual, so
   * Spark re-checks it, while `assemble` hands it to its parquet sub-scans
   * for partition and row-group skipping. The relation has no catalog, so
   * the rules that rewrite catalog relations pass it by. */

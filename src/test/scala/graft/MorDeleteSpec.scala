@@ -395,6 +395,23 @@ class MorDeleteSpec extends AnyFunSuite {
       s"compacted table still pays the merge:\n$phys2")
   }
 
+  /** Spark jobs `body` submits, counted by a listener. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("reads over live position and equality deletes run no more jobs than over a compacted copy (counter gate)") {
     val cat = freshCatalog()
     for (t <- Seq("live", "flat")) {
@@ -410,22 +427,11 @@ class MorDeleteSpec extends AnyFunSuite {
     // first read of the equality history backfills its exact count (a
     // commit of its own); the gate measures the reads after it
     assert(cat.readLatest("db", "live").count() == 18)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def jobsOf(read: String => org.apache.spark.sql.DataFrame, t: String): (Int, Seq[Int]) = {
+    def jobsOfRead(read: String => org.apache.spark.sql.DataFrame, t: String): (Int, Seq[Int]) = {
       val df = read(t)
-      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
-      jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val keys = df.select("n_nationkey").as[Int].collect().sorted.toSeq
-        org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
-        (jobs.get(), keys)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      var keys = Seq.empty[Int]
+      val n = jobsOf { keys = df.select("n_nationkey").as[Int].collect().sorted.toSeq }
+      (n, keys)
     }
     val reads: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
       "readLatest" -> (t => cat.readLatest("db", t)),
@@ -433,12 +439,41 @@ class MorDeleteSpec extends AnyFunSuite {
       "readWhere" -> (t => cat.readWhere("db", t, cat.currentSnapshot("db", t).snapshotId,
         col("n_nationkey") >= 3)))
     for ((name, read) <- reads) {
-      val (live, liveKeys) = jobsOf(read, "live")
-      val (flat, flatKeys) = jobsOf(read, "flat")
+      val (live, liveKeys) = jobsOfRead(read, "live")
+      val (flat, flatKeys) = jobsOfRead(read, "flat")
       info(s"$name: $live jobs over live deletes, $flat compacted")
       assert(liveKeys == flatKeys, name)
       assert(live <= flat, s"$name: $live jobs over live deletes vs $flat compacted")
     }
+  }
+
+  test("a library read over position and equality deletes builds its merged scan once per executed plan") {
+    val cat = freshCatalog()
+    withNation(cat)
+    cat.deleteMoR("db", "nation", col("n_nationkey") < 5)
+    cat.deleteMoREq("db", "nation", Seq(12, 17).toDF("n_nationkey"))
+    assert(cat.readLatest("db", "nation").count() == 18) // backfills the eq count first
+    val id = cat.currentSnapshot("db", "nation").snapshotId
+    val builds = graft.catalog.spark.MorScanMerge.builds
+    builds.set(0)
+    val df = cat.readWhere("db", "nation", id, col("n_nationkey") >= 3)
+    assert(builds.get() == 0, "building the frame plans no scan")
+    assert(df.collect().length == 18)
+    assert(builds.get() == 1, s"one executed plan built the merged scan ${builds.get()} times")
+    assert(df.count() == 18)
+    assert(builds.get() == 2, s"two executed plans built the merged scan ${builds.get()} times")
+  }
+
+  test("convert_equality_deletes submits no more Spark jobs than the mask-join conversion (15)") {
+    val cat = freshCatalog()
+    withNation(cat)
+    cat.deleteMoR("db", "nation", col("n_nationkey") === 20)
+    cat.deleteMoREq("db", "nation", Seq(3, 7, 20).toDF("n_nationkey"))
+    cat.append("db", "nation", nation.where(col("n_nationkey") === 3))
+    cat.deleteMoREq("db", "nation", Seq(9).toDF("n_nationkey"))
+    val jobs = jobsOf { assert(cat.convertEqualityDeletes("db", "nation").isDefined) }
+    info(s"convertEqualityDeletes: $jobs Spark jobs")
+    assert(jobs <= 15, s"$jobs jobs; the mask-join conversion took 15")
   }
 
   /** One key type of the equality-delete matrix: `data` (an `id` column
@@ -477,28 +512,80 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(q.as[Long].collect().sorted.toSeq == expect, s"$name: bucketed SQL scan")
   }
 
-  test("equality keys of every type match in the reader like a null-safe anti join") {
+  /** The equality-key type matrix: (name, data with an `id` column and
+    * the key columns, key columns, the rows whose keys delete). */
+  private def eqTypeMatrix: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String], String)] = {
     val base = spark.range(0, 40).withColumn("m", col("id") % 7)
     def typed(expr: String) = base.selectExpr("id", s"CASE WHEN m = 6 THEN NULL ELSE $expr END AS k")
-    eqTypeCase("date", typed("date_add(DATE'2020-02-27', cast(m AS INT))"), Seq("k"),
-      "m IN (1, 3)")
-    eqTypeCase("timestamp", typed("timestamp_seconds(m * 3600 + 1)"), Seq("k"), "m IN (0, 6)")
-    eqTypeCase("decimal(10,2)", typed("cast(m * 1.25 AS DECIMAL(10,2))"), Seq("k"), "m = 2")
-    eqTypeCase("decimal(38,6)",
-      typed("cast(concat(cast(m AS STRING), '2345678901234567890123.456789') AS DECIMAL(38,6))"),
-      Seq("k"), "m IN (4, 5)")
-    eqTypeCase("boolean", typed("m % 2 = 0"), Seq("k"), "m = 1")
-    eqTypeCase("binary", typed("cast(cast(m AS STRING) AS BINARY)"), Seq("k"), "m IN (0, 6)")
     // -0.0 and 0.0 are one key; NaN matches NaN (Spark's join-key
     // normalization — the <=> an equality delete means)
     val dbl = base.selectExpr("id", "CASE m WHEN 0 THEN 0.0D WHEN 1 THEN -0.0D " +
       "WHEN 2 THEN double('NaN') WHEN 3 THEN 1.5D WHEN 4 THEN -2.5D ELSE NULL END AS k")
-    eqTypeCase("double -0.0", dbl, Seq("k"), "m = 1")
-    eqTypeCase("double NaN", dbl, Seq("k"), "m = 2")
-    eqTypeCase("composite with nulls",
-      base.selectExpr("id", "CASE WHEN m < 2 THEN NULL ELSE cast(m % 3 AS INT) END AS a",
-        "CASE WHEN m IN (2, 5) THEN NULL ELSE concat('s', cast(m % 2 AS STRING)) END AS b"),
-      Seq("a", "b"), "m IN (0, 2, 4)")
+    Seq(
+      ("date", typed("date_add(DATE'2020-02-27', cast(m AS INT))"), Seq("k"), "m IN (1, 3)"),
+      ("timestamp", typed("timestamp_seconds(m * 3600 + 1)"), Seq("k"), "m IN (0, 6)"),
+      ("decimal(10,2)", typed("cast(m * 1.25 AS DECIMAL(10,2))"), Seq("k"), "m = 2"),
+      ("decimal(38,6)",
+        typed("cast(concat(cast(m AS STRING), '2345678901234567890123.456789') AS DECIMAL(38,6))"),
+        Seq("k"), "m IN (4, 5)"),
+      ("boolean", typed("m % 2 = 0"), Seq("k"), "m = 1"),
+      ("binary", typed("cast(cast(m AS STRING) AS BINARY)"), Seq("k"), "m IN (0, 6)"),
+      ("double -0.0", dbl, Seq("k"), "m = 1"),
+      ("double NaN", dbl, Seq("k"), "m = 2"),
+      ("composite with nulls",
+        base.selectExpr("id", "CASE WHEN m < 2 THEN NULL ELSE cast(m % 3 AS INT) END AS a",
+          "CASE WHEN m IN (2, 5) THEN NULL ELSE concat('s', cast(m % 2 AS STRING)) END AS b"),
+        Seq("a", "b"), "m IN (0, 2, 4)"))
+  }
+
+  test("equality keys of every type match in the reader like a null-safe anti join") {
+    for ((name, data, keyCols, keyWhere) <- eqTypeMatrix) eqTypeCase(name, data, keyCols, keyWhere)
+  }
+
+  test("convert_equality_deletes over every key type keeps the visible rows (null-safe anti join)") {
+    import scala.jdk.CollectionConverters._
+    for ((name, data, keyCols, keyWhere) <- eqTypeMatrix) {
+      val cat = new SnapshotCatalog(spark, Files.createTempDirectory("graft_eqconv_").toString)
+      val local = spark.createDataFrame(data.collect().toSeq.asJava, data.schema)
+      val keys = spark.createDataFrame(
+        data.where(keyWhere).select(keyCols.map(col): _*).collect().toSeq.asJava,
+        org.apache.spark.sql.types.StructType(keyCols.map(data.schema(_))))
+      cat.createTable("db", "p", data.schema)
+      cat.append("db", "p", local.repartition(2))
+      cat.deleteMoR("db", "p", col("id") === 5L) // a positional shard beside the eq one
+      cat.deleteMoREq("db", "p", keys)
+      val expect = local.where(col("id") =!= 5L)
+        .join(keys, keyCols.map(c => local(c) <=> keys(c)).reduce(_ && _), "left_anti")
+        .select("id").as[Long].collect().sorted.toSeq
+      def visible = cat.readLatest("db", "p").select("id").as[Long].collect().sorted.toSeq
+      assert(visible == expect, s"$name: before conversion")
+      val snap = cat.convertEqualityDeletes("db", "p").get
+      assert(snap.deleteFiles.forall(_.isPositional), s"$name: eq shards remain")
+      assert(visible == expect, s"$name: after conversion")
+      assert(snap.summary("record_count").toLong == expect.size, s"$name: record_count")
+    }
+  }
+
+  test("convert_equality_deletes applies every shard of a key set past 64 shards") {
+    val cat = freshCatalog()
+    val schema = Seq((0L, "x")).toDF("k", "v").schema
+    cat.createTable("db", "many", schema)
+    cat.append("db", "many", (0L until 100L).map(k => (k, s"a$k")).toDF("k", "v").coalesce(1))
+    cat.append("db", "many", (100L until 200L).map(k => (k, s"b$k")).toDF("k", "v").coalesce(1))
+    // 70 single-key equality commits on one key set: shards 65..70 sit
+    // past the old 64-shard chunk boundary
+    val dead = (0L until 70L).map(i => i * 3 % 200)
+    dead.foreach(k => cat.deleteMoREq("db", "many", Seq(k).toDF("k")))
+    assert(cat.currentSnapshot("db", "many").deleteFiles.count(!_.isPositional) == 70)
+    val expect = (0L until 200L).filterNot(dead.toSet)
+    def visible = cat.readLatest("db", "many").select("k").as[Long].collect().sorted.toSeq
+    assert(visible == expect)
+    val snap = cat.convertEqualityDeletes("db", "many").get
+    assert(snap.summary("converted_delete_files").toInt == 70)
+    assert(snap.deleteFiles.forall(_.isPositional))
+    assert(snap.deleteFiles.map(_.covers.values.sum).sum == 70)
+    assert(visible == expect)
+    assert(snap.summary("record_count").toLong == expect.size)
   }
 
   test("bucketed table: library MoR delete merges across __bucket dirs") {

@@ -138,6 +138,46 @@ class RowLineageSpec extends AnyFunSuite {
     assert(rows.map(_._2).distinct.size == rows.size, "global id uniqueness")
   }
 
+  test("lineage reads plan no join and no broadcast: readWithRowIds and the MoR update scan") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.QueryExecution
+    val (cat, _) = freshCat()
+    lineageTable(cat, "pj")
+    cat.append("db", "pj", (0L until 10L).map(k => (k, s"a$k")).toDF("k", "v")
+      .repartition(1).sortWithinPartitions("k"))
+    cat.append("db", "pj", (10L until 15L).map(k => (k, s"b$k")).toDF("k", "v")
+      .repartition(1).sortWithinPartitions("k"))
+    cat.deleteMoR("db", "pj", col("k") === 3L) // one covered file, one clean
+    // the ids derive inside the reader: no file -> first_row_id frame
+    // joined on, so neither the logical plan nor the physical one has a
+    // join or a broadcast
+    def joinFree(qe: QueryExecution, what: String): Unit = {
+      val opt = qe.optimizedPlan
+      assert(opt.collect { case j: Join => j }.isEmpty, s"$what joins:\n$opt")
+      val phys = qe.executedPlan.toString
+      assert(!phys.contains("BroadcastExchange"), s"$what broadcasts:\n$phys")
+    }
+    val rows = cat.readWithRowIds("db", "pj")
+    joinFree(rows.queryExecution, "readWithRowIds")
+    assert(ids(cat, "pj") == ((0L until 15L).filterNot(_ == 3L).map(k => k -> k).toMap))
+    // every query the lineage MoR update runs: its position-tagged,
+    // id-carrying scan included
+    val seen = scala.collection.mutable.Buffer.empty[(String, QueryExecution)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized { seen += f -> qe; () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      cat.updateMoR("db", "pj", col("k") === 7L, Map("v" -> lit("u")))
+      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
+    } finally spark.listenerManager.unregister(listener)
+    assert(seen.nonEmpty)
+    seen.foreach { case (f, qe) => joinFree(qe, s"updateMoR ($f)") }
+    assert(ids(cat, "pj")(7L) == 7L) // the update kept the row's identity
+  }
+
   test("changelog carries _row_id: deletes serve the dying id, updates keep it") {
     val (cat, wh) = freshCat()
     lineageTable(cat, "cl")

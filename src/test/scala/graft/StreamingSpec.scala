@@ -647,7 +647,7 @@ class StreamingSpec extends AnyFunSuite {
     // The r8 closure of the CDC loop: source --.changes--> applyCdcEpoch
     // replica --.changes--> second replica. The apply sink writes
     // EQUALITY-delete commits (zero-scan deleteMoREq) that the changes
-    // stream previously refused; EqDeadRowsReaderFactory enumerates
+    // stream previously refused; the per-file reader enumerates
     // their pre-images from the write-once covered files, so replication
     // cascades to depth 2 and the replica's feed replays the source's
     // row-for-row.
@@ -711,6 +711,60 @@ class StreamingSpec extends AnyFunSuite {
     assert(srcFeed == Seq(("delete", 1L, "a"), ("insert", 1L, "a"),
       ("delete", 2L, "b"), ("insert", 2L, "B"), ("insert", 2L, "b"),
       ("insert", 3L, "c")), srcFeed.toString)
+  }
+
+  test("cascaded CDC keyed on date and decimal(10,2): the replica's stream emits the batch diff's pre-images") {
+    // the apply sink turns each keyed source delete into an EQUALITY
+    // delete on the replica; the replica's .changes stream enumerates
+    // those pre-images for key columns of any type
+    import java.time.Instant
+    import graft.catalog.SnapshotCatalog
+    val wh = Files.createTempDirectory("graft_cdckt_").toString
+    var tick = 0L
+    val cat = new SnapshotCatalog(spark, wh,
+      clock = () => { tick += 1; Instant.parse("2026-05-01T00:00:00Z").plusSeconds(tick * 60) })
+    def typed(rows: (String, String, String)*) = rows.toDF("d", "m", "v")
+      .selectExpr("cast(d AS DATE) AS d", "cast(m AS DECIMAL(10,2)) AS m", "v")
+    val df0 = typed(("2024-01-01", "1.25", "a"), ("2024-01-01", "2.50", "b"),
+      ("2024-02-29", "1.25", "c"), ("2024-02-29", "7.00", "d"))
+    cat.createTable("db", "ks", df0.schema)
+    cat.append("db", "ks", df0)
+    cat.createTable("db", "kd", df0.schema)
+    spark.conf.set("spark.sql.catalog.snapkt", "graft.catalog.spark.SnapCatalogPlugin")
+    spark.conf.set("spark.sql.catalog.snapkt.warehouse", wh)
+    val ckpt = Files.createTempDirectory("graft_cdckt_ck_").toString
+    def drain(): Unit = {
+      val q = spark.readStream.option("starting-snapshot-id", "1")
+        .table("snapkt.db.ks.changes")
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(graft.streaming.EventStream.applyCdcEpoch(
+          cat, "db", "kd", keys = Seq("d", "m")) _)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    drain()
+    val from = cat.currentSnapshotId("db", "kd")
+    cat.deleteMoR("db", "ks", col("v") === "a") // key (2024-01-01, 1.25); c shares m
+    cat.deleteMoR("db", "ks", col("v") === "d") // key (2024-02-29, 7.00)
+    cat.append("db", "ks", typed(("2024-03-01", "1.25", "e")))
+    drain()
+    val to = cat.currentSnapshotId("db", "kd")
+    assert(cat.currentSnapshot("db", "kd").deleteFiles.count(!_.isPositional) == 2,
+      "expected two equality-delete commits on the replica")
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String, String)] =
+      df.selectExpr("_change_type", "cast(d AS STRING)", "cast(m AS STRING)", "v")
+        .as[(String, String, String, String)].collect().sorted.toSeq
+    val q = spark.readStream.option("starting-snapshot-id", from.toString)
+      .table("snapkt.db.kd.changes")
+      .writeStream.format("memory").queryName("cdckt_feed").outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val streamed = sorted(spark.table("cdckt_feed"))
+    val batch = sorted(spark.read.option("from-snapshot-id", from.toString)
+      .option("to-snapshot-id", to.toString).table("snapkt.db.kd.changes"))
+    assert(streamed == batch, s"stream $streamed != batch diff $batch")
+    assert(streamed == Seq(("delete", "2024-01-01", "1.25", "a"),
+      ("delete", "2024-02-29", "7.00", "d"), ("insert", "2024-03-01", "1.25", "e")),
+      streamed.toString)
   }
 
   test("native writeStream.toTable appends one epoch-tagged snapshot per batch") {
