@@ -37,38 +37,6 @@ final case class Snapshot(
 
   def schema: StructType = StructType.fromDDL(schemaDdl)
   def recordCount: Long = summary.get("record_count").map(_.toLong).getOrElse(-1L)
-
-  def toJson: JObj = Json.obj(
-    (Vector(
-      "snapshot_id"  -> (Json.num(snapshotId): JValue),
-      "committed_at" -> (Json.str(committedAt): JValue),
-      "operation"    -> (Json.str(operation): JValue),
-      "summary"      -> (Json.fromStrMap(summary): JValue),
-      "schema_ddl"   -> (Json.str(schemaDdl): JValue),
-      "files"        -> (JArr(files.toVector.map(JStr)): JValue),
-      "file_stats"   -> (JObj(fileStats.toVector.sortBy(_._1)
-        .map { case (f, m) => f -> (Json.fromStrMap(m): JValue) }): JValue)) ++
-      (if (deleteFiles.isEmpty) Vector.empty
-       else Vector("delete_files" ->
-         (JArr(deleteFiles.toVector.map(_.toJson: JValue)): JValue)))): _*)
-}
-
-object Snapshot {
-  def fromJson(o: JObj): Snapshot = Snapshot(
-    snapshotId = o.long("snapshot_id"),
-    committedAt = o.str("committed_at"),
-    operation = o.str("operation"),
-    summary = o.strMap("summary"),
-    schemaDdl = o.str("schema_ddl"),
-    files = o.arr("files").collect { case JStr(s) => s },
-    fileStats = o.get("file_stats") match {
-      case Some(fs: JObj) => fs.fields.map { case (f, _) => f -> fs.strMap(f) }.toMap
-      case _ => Map.empty
-    },
-    deleteFiles = o.get("delete_files") match {
-      case Some(JArr(vs)) => vs.map(v => DeleteFile.fromJson(v.asInstanceOf[JObj]))
-      case _ => Seq.empty
-    })
 }
 
 /** One DELETE file (Iceberg v2 merge-on-read), either flavor:
@@ -203,6 +171,37 @@ object SnapshotEntry {
       case _ => Seq.empty
     })
 }
+
+/** What one published commit did to the main lineage, as
+  * [[SnapshotCatalog.commitRange]] classifies it. */
+private[graft] sealed trait CommitKind
+private[graft] object CommitKind {
+  /** Added data files and delete files only: appends, WAP publish,
+    * fastForward and the merge-on-read DML family. */
+  case object Additive extends CommitKind
+  /** A row-preserving rewrite (compact / z-order / bin-pack / delete
+    * maintenance, all operation "compact"): its outputs re-home rows
+    * already accounted for. */
+  case object Compact extends CommitKind
+  /** A commit whose effect on EXISTING rows per-file metadata cannot
+    * enumerate: a non-compact commit that removed data files, a rollback,
+    * or a commit that dropped a live delete file (both resurrect rows). */
+  final case class NotEnumerable(reason: String) extends CommitKind
+}
+
+/** One published commit of a [[SnapshotCatalog.commitRange]] walk.
+  * `parent` and `snap` are the lazy [[Snapshot]] views of the commit's
+  * parent and of the commit itself (nothing parses until a caller walks
+  * their files); `added`/`removed` are the data files the commit added and
+  * removed, `newDeletes` the delete files it added. */
+private[graft] final case class CommitStep(
+    entry: SnapshotEntry,
+    parent: Snapshot,
+    snap: Snapshot,
+    added: Seq[String],
+    removed: Seq[String],
+    newDeletes: Seq[DeleteFile],
+    kind: CommitKind)
 
 /** Table-level metadata (everything that is not per-snapshot). Shape follows
   * the reference's `TableInfo` dataclass
@@ -712,7 +711,7 @@ final class SnapshotCatalog(
 
   // ---- snapshot log (format v2: pointer entries + manifest shards) ----
 
-  import SnapshotCatalog.{LegacyLog, LogRepr, V2Log}
+  import SnapshotCatalog.PointerLog
 
   /** Key of a table's pointer log in the [[PointerLogStore]] (absolute
     * normalized path string — the one spelling two catalog instances over
@@ -721,7 +720,7 @@ final class SnapshotCatalog(
     logPath(db, table).toAbsolutePath.normalize().toString
 
   /** Canonical mutex key of a table — the same spelling [[withTableLock]]
-    * registers in [[SnapshotCatalog.heldLocks]], so [[loadRepr]] can tell
+    * registers in [[SnapshotCatalog.heldLocks]], so [[loadLog]] can tell
     * "am I inside a commit body for THIS table" (the etag-pinning rule). */
   private def lockKeyOf(db: String, table: String): String =
     tablePath(db, table).resolve("_snapshots").resolve("LOCK")
@@ -740,8 +739,9 @@ final class SnapshotCatalog(
     if (!log.conditional) ""
     else "-" + java.util.UUID.randomUUID().toString.take(8)
 
-  private def loadRepr(db: String, table: String): LogRepr = {
+  private def loadLog(db: String, table: String): PointerLog = {
     val key = logKey(db, table)
+    SnapshotCatalog.logReads.incrementAndGet()
     log.read(key) match {
       case None =>
         // self-healing etag bookkeeping: a drop/recreate must not leave a
@@ -771,30 +771,22 @@ final class SnapshotCatalog(
           pinned.add(key)
         } // else: mid-body refresh — keep the etag the body derives from
         Json.parse(txt) match {
-          case JArr(vs) => LegacyLog(vs.map(v => Snapshot.fromJson(v.asInstanceOf[JObj])))
-          case o: JObj  => V2Log(
+          case o: JObj => PointerLog(
             o.arr("entries").map(v => SnapshotEntry.fromJson(v.asInstanceOf[JObj])),
             o.get("shard_summaries") match {
               case Some(s: JObj) => s.fields.map { case (name, v) =>
                 name -> ShardSummary.fromJson(v.asInstanceOf[JObj]) }.toMap
               case _ => Map.empty
             })
-          case other    => throw new IllegalStateException(s"bad snapshot log: $other")
+          case other => throw new IllegalStateException(s"bad snapshot log: $other")
         }
     }
   }
 
   /** O(pointer log) metadata view of every snapshot — NEVER opens a
-    * manifest. For a legacy log the `manifests` field is synthesized empty
-    * and must not be interpreted (materialize via [[snapshotAt]] instead);
-    * every caller here consumes only id/timestamp/operation/summary/schema.
-    */
+    * manifest. */
   private def entryMeta(db: String, table: String): Seq[SnapshotEntry] =
-    loadRepr(db, table) match {
-      case V2Log(es, _) => es
-      case LegacyLog(snaps) => snaps.map(s => SnapshotEntry(
-        s.snapshotId, s.committedAt, s.operation, s.summary, s.schemaDdl, Seq.empty))
-    }
+    loadLog(db, table).entries
 
   /** POINTER-LOG view of the snapshot history: id / timestamp / operation /
     * summary / schema, without materializing any manifest shard — the
@@ -802,7 +794,6 @@ final class SnapshotCatalog(
     * tables, the streaming tail's append-only check). */
   def entryLog(db: String, table: String): Seq[SnapshotEntry] = entryMeta(db, table)
 
-  private def manifestName(id: Long): String = s"m$id.json"
   private def manifestPath(db: String, table: String, name: String): Path =
     tablePath(db, table).resolve("_snapshots").resolve(name)
 
@@ -873,7 +864,7 @@ final class SnapshotCatalog(
 
   /** Resolve a pointer entry to the full [[Snapshot]] view: concatenate its
     * manifest shards (file order is manifest order — an append's files come
-    * after every carried file, exactly the monolithic log's order). */
+    * after every carried file). */
   private def materialize(db: String, table: String, e: SnapshotEntry): Snapshot = {
     // LAZY (r15, two-level sweep): the inventory parses only when a caller
     // actually walks files/stats/deletes. Schema- and summary-only callers
@@ -898,11 +889,10 @@ final class SnapshotCatalog(
     * `total_files` arithmetic O(1). */
   private def entryFileCount(db: String, table: String, e: SnapshotEntry): Long =
     e.summary.get("total_files").map(_.toLong).getOrElse {
-      loadRepr(db, table) match {
-        case V2Log(_, sums) if e.manifests.forall(sums.contains) =>
-          e.manifests.iterator.map(sums(_).fileCount.toLong).sum
-        case _ => materialize(db, table, e).files.size.toLong
-      }
+      val sums = loadLog(db, table).summaries
+      if (e.manifests.forall(sums.contains))
+        e.manifests.iterator.map(sums(_).fileCount.toLong).sum
+      else materialize(db, table, e).files.size.toLong
     }
 
   /** Which of `probe` are NOT data files of entry `e` — the membership
@@ -916,52 +906,42 @@ final class SnapshotCatalog(
     if (probe.isEmpty) Seq.empty
     else {
       val dirs = probe.map(_.split("/").take(2).mkString("/")).toSet
-      val shards = loadRepr(db, table) match {
-        case V2Log(_, sums) =>
-          e.manifests.filter(n => sums.get(n).flatMap(_.dirs) match {
-            case Some(ds) => ds.exists(dirs.contains)
-            case None => true
-          })
-        case _ => e.manifests
-      }
+      val sums = loadLog(db, table).summaries
+      val shards = e.manifests.filter(n => sums.get(n).flatMap(_.dirs) match {
+        case Some(ds) => ds.exists(dirs.contains)
+        case None => true
+      })
       val known = shards.iterator
         .flatMap(n => loadManifest(db, table, n).files).toSet
       probe.filterNot(known)
     }
 
   def snapshotList(db: String, table: String): Seq[Snapshot] =
-    loadRepr(db, table) match {
-      case LegacyLog(snaps) => snaps
-      case V2Log(es, _)     => es.map(materialize(db, table, _))
-    }
+    entryMeta(db, table).map(materialize(db, table, _))
 
   /** Per-shard manifest inventory (the `manifests` metadata table): one row
     * per live shard with its file count, row count (when every file in the
     * shard recorded a footer row count), the id of the first snapshot
     * referencing it, and how many log entries reference it — the shard-reuse
     * accounting that makes append metadata O(added files). Opens each live
-    * shard once (cache-served after the first read); a legacy v1 log has no
-    * shards and reports empty. */
-  def manifestInventory(db: String, table: String): Seq[ManifestInfo] =
-    loadRepr(db, table) match {
-      case LegacyLog(_) => Seq.empty
-      case V2Log(es, _) =>
-        val firstRef = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-        val refCount = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-        es.foreach { e =>
-          e.manifests.foreach { m =>
-            if (!firstRef.contains(m)) firstRef(m) = e.snapshotId
-            refCount(m) += 1
-          }
-        }
-        firstRef.toSeq.map { case (name, addedBy) =>
-          val m = loadManifest(db, table, name)
-          val rows = m.files.map(f => m.fileStats.get(f).flatMap(_.get("rows")).map(_.toLong))
-          ManifestInfo(name, m.files.size,
-            if (rows.nonEmpty && rows.forall(_.isDefined)) Some(rows.flatten.sum) else None,
-            addedBy, refCount(name))
-        }
+    * shard once (cache-served after the first read). */
+  def manifestInventory(db: String, table: String): Seq[ManifestInfo] = {
+    val firstRef = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val refCount = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    entryMeta(db, table).foreach { e =>
+      e.manifests.foreach { m =>
+        if (!firstRef.contains(m)) firstRef(m) = e.snapshotId
+        refCount(m) += 1
+      }
     }
+    firstRef.toSeq.map { case (name, addedBy) =>
+      val m = loadManifest(db, table, name)
+      val rows = m.files.map(f => m.fileStats.get(f).flatMap(_.get("rows")).map(_.toLong))
+      ManifestInfo(name, m.files.size,
+        if (rows.nonEmpty && rows.forall(_.isDefined)) Some(rows.flatten.sum) else None,
+        addedBy, refCount(name))
+    }
+  }
 
   // ---- write-audit-publish visibility ----
 
@@ -998,45 +978,19 @@ final class SnapshotCatalog(
     * head, in commit order — staged entries (their files surface at their
     * `publish` commit) and branch commits (they reach main only through
     * fastForward) excluded. This is the sequence whose consecutive
-    * file-list diffs define "what each commit did to main" — the
-    * streaming tail walks it to classify in-range commits. Pointer-log
+    * file-list diffs define "what each commit did to main" —
+    * [[commitRange]] walks it to classify in-range commits. Pointer-log
     * only; no manifest is opened. */
   def mainLineage(db: String, table: String): Seq[SnapshotEntry] =
     entryMeta(db, table).filter(e => !isStagedEntry(e) && !isBranchEntry(e))
 
   def currentSnapshot(db: String, table: String): Snapshot =
-    loadRepr(db, table) match {
-      case LegacyLog(snaps) => snaps.last // legacy logs predate staging
-      case V2Log(es, _)     => materialize(db, table, publishedEntry(es))
-    }
+    materialize(db, table, publishedEntry(entryMeta(db, table)))
 
   def snapshotAt(db: String, table: String, snapshotId: Long): Snapshot =
-    loadRepr(db, table) match {
-      case LegacyLog(snaps) => snaps.find(_.snapshotId == snapshotId).getOrElse(
-        throw new NoSuchElementException(s"snapshot $snapshotId not found for $db.$table"))
-      case V2Log(es, _) => es.find(_.snapshotId == snapshotId)
-        .map(materialize(db, table, _)).getOrElse(
-          throw new NoSuchElementException(s"snapshot $snapshotId not found for $db.$table"))
-    }
+    materialize(db, table, entryAt(db, table, snapshotId))
 
   // ---- snapshot-log write helpers (call only under the table lock) ----
-
-  /** The v2 entries of a table, migrating a legacy monolithic log in place
-    * first (one full-state shard per legacy snapshot — a one-time O(total)
-    * cost that every later commit's O(new files) write pays back). */
-  private def entriesForWrite(db: String, table: String): Seq[SnapshotEntry] =
-    loadRepr(db, table) match {
-      case V2Log(es, _) => es
-      case LegacyLog(snaps) =>
-        val entries = snaps.map { s =>
-          val name = manifestName(s.snapshotId)
-          if (s.files.nonEmpty) writeManifest(db, table, name, Manifest(s.files, s.fileStats))
-          SnapshotEntry(s.snapshotId, s.committedAt, s.operation, s.summary,
-            s.schemaDdl, if (s.files.nonEmpty) Seq(name) else Seq.empty)
-        }
-        writeEntries(db, table, entries)
-        entries
-    }
 
   private def writeManifest(db: String, table: String, name: String, m: Manifest): Unit = {
     val p = manifestPath(db, table, name)
@@ -1079,10 +1033,8 @@ final class SnapshotCatalog(
   private def fillShardSummaries(db: String, table: String,
       entries: Seq[SnapshotEntry]): Map[String, ShardSummary] = {
     val prev: Map[String, ShardSummary] =
-      try loadRepr(db, table) match {
-        case V2Log(_, s) => s
-        case _ => Map.empty
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+      try loadLog(db, table).summaries
+      catch { case scala.util.control.NonFatal(_) => Map.empty }
     val pcols =
       try meta(db, table).partitionCols
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
@@ -1633,34 +1585,29 @@ final class SnapshotCatalog(
     * shard accounting for spec gates. */
   private[graft] final case class ScanResolution(snap: Snapshot, kept: Seq[String],
       shardsTotal: Int, shardsOpened: Int,
-      // names of the shards that were opened (empty for a legacy log,
-      // where there are no shard names) — the write path's carry planner
-      // diffs these against the entry's manifests to reuse skipped shards
-      // BY NAME without ever parsing them
-      openedNames: Seq[String] = Seq.empty)
+      // names of the shards that were opened — the write path's carry
+      // planner diffs these against the entry's manifests to reuse
+      // skipped shards BY NAME without ever parsing them
+      openedNames: Seq[String])
+
+  /** A pointer entry by id out of an already-read log. */
+  private def entryIn(log: PointerLog, db: String, table: String,
+      snapshotId: Long): SnapshotEntry =
+    log.entries.find(_.snapshotId == snapshotId).getOrElse(
+      throw new NoSuchElementException(s"snapshot $snapshotId not found for $db.$table"))
 
   private[graft] def resolveWhere(db: String, table: String, snapshotId: Long,
-      cond: Column): ScanResolution = loadRepr(db, table) match {
-    case SnapshotCatalog.LegacyLog(_) =>
-      val snap = snapshotAt(db, table, snapshotId)
-      val kept = pruneFiles(db, table, snapshotId, cond)._1
-      ScanResolution(snap, kept, 1, 1)
-    case SnapshotCatalog.V2Log(es, sums) =>
-      val e = es.find(_.snapshotId == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"snapshot $snapshotId not found for $db.$table"))
-      val schema = e.schema
-      val ctx = pruneCtx(db, table, schema, cond)
-      val open = e.manifests.filter(name => sums.get(name).forall(s =>
-        ShardSummary.mayMatch(s, schema, ctx.preds, ctx.buckets, ctx.ptToken)))
-      val ms = open.map(loadManifest(db, table, _))
-      val files = ms.flatMap(_.files)
-      val stats = ms.foldLeft(Map.empty[String, Map[String, String]])(_ ++ _.fileStats)
-      val snap = Snapshot(e.snapshotId, e.committedAt, e.operation, e.summary,
-        e.schemaDdl, files, stats, e.deletes.flatMap(loadDeleteShard(db, table, _)))
-      val kept = files.filter(f =>
-        fileMayMatch(db, table, ctx, f, stats.getOrElse(f, Map.empty)))
-      ScanResolution(snap, kept, e.manifests.size, open.size, open)
+      cond: Column): ScanResolution = {
+    val log = loadLog(db, table)
+    val e = entryIn(log, db, table, snapshotId)
+    val schema = e.schema
+    val ctx = pruneCtx(db, table, schema, cond)
+    val open = e.manifests.filter(name => log.summaries.get(name).forall(s =>
+      ShardSummary.mayMatch(s, schema, ctx.preds, ctx.buckets, ctx.ptToken)))
+    val snap = materializePartial(db, table, e, open)
+    val kept = snap.files.filter(f =>
+      fileMayMatch(db, table, ctx, f, snap.fileStats.getOrElse(f, Map.empty)))
+    ScanResolution(snap, kept, e.manifests.size, open.size, open)
   }
 
   /** Shard-tier-only resolution for the SQL SCAN path: given the scan's
@@ -1668,26 +1615,17 @@ final class SnapshotCatalog(
     * shards the predicate may touch — skipped shards' inventories are
     * never parsed. File-tier skipping stays with the caller (the scan
     * builder runs it with bloom sidecars and runtime filters folded in).
-    * Legacy logs and shards without summaries load in full — degrade,
-    * never break. */
+    * Shards without summaries load in full — degrade, never break. */
   private[graft] def resolveScanShards(db: String, table: String, snapshotId: Long,
-      preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Snapshot =
-    loadRepr(db, table) match {
-      case SnapshotCatalog.LegacyLog(_) => snapshotAt(db, table, snapshotId)
-      case SnapshotCatalog.V2Log(es, sums) =>
-        val e = es.find(_.snapshotId == snapshotId).getOrElse(
-          throw new NoSuchElementException(
-            s"snapshot $snapshotId not found for $db.$table"))
-        val schema = e.schema
-        val ctx = pruneCtxOf(db, table, schema, preds)
-        val open = e.manifests.filter(name => sums.get(name).forall(s =>
-          ShardSummary.mayMatch(s, schema, ctx.preds, ctx.buckets, ctx.ptToken)))
-        val ms = open.map(loadManifest(db, table, _))
-        Snapshot(e.snapshotId, e.committedAt, e.operation, e.summary,
-          e.schemaDdl, ms.flatMap(_.files),
-          ms.foldLeft(Map.empty[String, Map[String, String]])(_ ++ _.fileStats),
-          e.deletes.flatMap(loadDeleteShard(db, table, _)))
-    }
+      preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Snapshot = {
+    val log = loadLog(db, table)
+    val e = entryIn(log, db, table, snapshotId)
+    val schema = e.schema
+    val ctx = pruneCtxOf(db, table, schema, preds)
+    materializePartial(db, table, e, e.manifests.filter(name =>
+      log.summaries.get(name).forall(s =>
+        ShardSummary.mayMatch(s, schema, ctx.preds, ctx.buckets, ctx.ptToken))))
+  }
 
   /** Shard-tier LIMIT resolution: the shortest manifest PREFIX whose
     * recorded row counts provably cover `limit` rows — an unfiltered
@@ -1698,25 +1636,22 @@ final class SnapshotCatalog(
     * everything loads). Armed by the caller only with NO live deletes
     * (footer counts must be visible counts — the file tier's own rule). */
   private[graft] def resolveScanLimitShards(db: String, table: String,
-      snapshotId: Long, limit: Int): Snapshot = loadRepr(db, table) match {
-    case SnapshotCatalog.LegacyLog(_) => snapshotAt(db, table, snapshotId)
-    case SnapshotCatalog.V2Log(es, sums) =>
-      val e = es.find(_.snapshotId == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"snapshot $snapshotId not found for $db.$table"))
-      var acc = 0L
-      var covered = false
-      val open = Seq.newBuilder[String]
-      e.manifests.foreach { name =>
-        if (!covered) {
-          open += name
-          sums.get(name).flatMap(_.stats.get("rows")).foreach { r =>
-            acc += r.toLong
-            if (acc >= limit) covered = true
-          }
+      snapshotId: Long, limit: Int): Snapshot = {
+    val log = loadLog(db, table)
+    val e = entryIn(log, db, table, snapshotId)
+    var acc = 0L
+    var covered = false
+    val open = Seq.newBuilder[String]
+    e.manifests.foreach { name =>
+      if (!covered) {
+        open += name
+        log.summaries.get(name).flatMap(_.stats.get("rows")).foreach { r =>
+          acc += r.toLong
+          if (acc >= limit) covered = true
         }
       }
-      materializePartial(db, table, e, open.result())
+    }
+    materializePartial(db, table, e, open.result())
   }
 
   /** Shard-tier TOP-N resolution: the shared box-bound walk
@@ -1729,21 +1664,18 @@ final class SnapshotCatalog(
     * degrade, never break). */
   private[graft] def resolveScanTopNShards(db: String, table: String,
       snapshotId: Long, cols: Seq[(String, Boolean, Boolean)],
-      limit: Int): Snapshot = loadRepr(db, table) match {
-    case SnapshotCatalog.LegacyLog(_) => snapshotAt(db, table, snapshotId)
-    case SnapshotCatalog.V2Log(es, sums) =>
-      val e = es.find(_.snapshotId == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"snapshot $snapshotId not found for $db.$table"))
-      val schema = e.schema
-      def gtOf(c: String): Option[(String, String) => Boolean] =
-        schema.fields.find(_.name == c).map(_.dataType)
-          .filter(ColumnStats.statable)
-          .map(dt => (a: String, b: String) => ColumnStats.gt(dt, a, b))
-      val items = e.manifests.map(name =>
-        name -> sums.get(name).map(_.stats).getOrElse(Map.empty[String, String]))
-      val keep = TopNPruning.prune(items, cols, limit, gtOf).toSet
-      materializePartial(db, table, e, e.manifests.filter(keep))
+      limit: Int): Snapshot = {
+    val log = loadLog(db, table)
+    val e = entryIn(log, db, table, snapshotId)
+    val schema = e.schema
+    def gtOf(c: String): Option[(String, String) => Boolean] =
+      schema.fields.find(_.name == c).map(_.dataType)
+        .filter(ColumnStats.statable)
+        .map(dt => (a: String, b: String) => ColumnStats.gt(dt, a, b))
+    val items = e.manifests.map(name =>
+      name -> log.summaries.get(name).map(_.stats).getOrElse(Map.empty[String, String]))
+    val keep = TopNPruning.prune(items, cols, limit, gtOf).toSet
+    materializePartial(db, table, e, e.manifests.filter(keep))
   }
 
   /** Partial materialization: the entry's view restricted to `open`
@@ -1758,35 +1690,9 @@ final class SnapshotCatalog(
       e.deletes.flatMap(loadDeleteShard(db, table, _)))
   }
 
-  /** Files a commit ADDED when the pointer log PROVES it pure-additive —
-    * `prev`'s shards all reused by `e` means the commit only added files,
-    * and they are exactly the extra shards' (shards within an entry are
-    * disjoint, and prev's shards being present in e means the extras
-    * cannot overlap them). Parses ONLY the extra shards. None for legacy
-    * logs (no shard names to compare) and shard-removing commits
-    * (rewrites/consolidation — callers take their file-granular lanes).
-    * The streaming tail's per-commit walk and [[readIncremental]] ride
-    * this: a trigger over a 10^6-file table parses the trigger's shards,
-    * never the inventory. */
-  private[graft] def addedFilesIfAdditive(db: String, table: String,
-      prevE: SnapshotEntry, e: SnapshotEntry): Option[Seq[String]] =
-    loadRepr(db, table) match {
-      case SnapshotCatalog.V2Log(_, _) =>
-        val prevSet = prevE.manifests.toSet
-        if (prevSet.subsetOf(e.manifests.toSet))
-          Some(e.manifests.filterNot(prevSet)
-            .flatMap(loadManifest(db, table, _).files))
-        else None
-      case _ => None
-    }
-
-  /** Pointer-log entry by id — O(log) metadata, no manifest opened. For a
-    * legacy log the synthesized entry has no manifests (callers that need
-    * files materialize via [[snapshotAt]]). */
+  /** Pointer-log entry by id — O(log) metadata, no manifest opened. */
   private[graft] def entryAt(db: String, table: String, snapshotId: Long): SnapshotEntry =
-    entryMeta(db, table).find(_.snapshotId == snapshotId).getOrElse(
-      throw new NoSuchElementException(
-        s"snapshot $snapshotId not found for $db.$table"))
+    entryIn(loadLog(db, table), db, table, snapshotId)
 
   /** Current PUBLISHED pointer-log entry — the metadata-only form of
     * [[currentSnapshot]]. */
@@ -1866,15 +1772,14 @@ final class SnapshotCatalog(
   /** Incremental (changes-between-snapshots) read: the rows ADDED in
     * `(fromId, toId]` that are still visible at `toId` — Iceberg's
     * incremental-append scan, extended across merge-on-read commits.
-    * Resolution is pure METADATA: the added files are the file-list
-    * difference of the two endpoint log entries (data files are
-    * write-once, so a file of `fromId` missing at `toId` proves a rewrite
-    * happened in between, and conversely `from ⊆ to` proves every
-    * in-range commit only ADDED files: appends, WAP publishes, and the
-    * whole MoR family — position/equality deletes, delta UPDATE/MERGE —
-    * whose "changes" are new delta files plus delete metadata). A
-    * CDC-style consumer pays for the new data only, never a table scan —
-    * at 100 TB that is the difference between reading a day's increment
+    * Resolution is pure METADATA: [[commitRange]] walks the published
+    * lineage and [[appendDelta]] folds it into the files the in-range
+    * append-family commits added (appends, WAP publishes, and the whole
+    * MoR family — position/equality deletes, delta UPDATE/MERGE — whose
+    * "changes" are new delta files plus delete metadata). A pure-append
+    * range parses only the commits' own manifest shards, never an
+    * endpoint's inventory: a CDC-style consumer pays for the new data
+    * only — at 100 TB the difference between reading a day's increment
     * and re-reading the lake.
     *
     * Semantics across MoR commits: added files read MERGED under `toId`'s
@@ -1884,122 +1789,141 @@ final class SnapshotCatalog(
     * representable in an append delta — consumers that need them use
     * [[readChangelog]], which emits tagged delete rows.
     *
-    * Ranges containing a REWRITE no longer refuse: production tables
-    * compact on a schedule, and a CDC consumer whose range happens to
-    * span one must not error. Two tiers:
+    * Ranges containing a REWRITE do not refuse: production tables compact
+    * on a schedule, and a CDC consumer whose range happens to span one
+    * must not error. Two tiers:
     *
     *  - ROW-PRESERVING rewrites in range (compact / z-order / bin-pack,
-    *    all op "compact") resolve by a PURE-METADATA walk of the
-    *    published lineage, the same shape as the streaming tail: each
-    *    append-family commit's added files serve from their ORIGINAL
-    *    write-once parquet (even when a later compact swallowed them),
-    *    with delete coverage frozen at the pre-compact snapshot — the
-    *    exact dead set the compact materialized. Cost stays the
-    *    increment, never the rewrite: a 100-TB compact between two
-    *    appends adds zero read cost to the appends' delta.
-    *  - TRUE rewrites (overwrite, CoW DELETE/UPDATE, rollback) — and the
-    *    one compact corner the walk cannot prove exact (a delete-file
-    *    commit landing AFTER a compact that swallowed in-range appends:
-    *    its positions target the re-homed copies) — degrade to the
-    *    changelog's INSERT side: rows visible at `toId` but not at
-    *    `fromId`, one `exceptAll` over the CHANGED files only. Cost is
-    *    churn-sized; note the multiset consequence there: a range that
-    *    both deletes a pre-range row and appends an IDENTICAL row nets
-    *    to zero served copies (the changelog view is the exact-diff
-    *    tool). */
+    *    all op "compact") stay on the walk: each append-family commit's
+    *    added files serve from their ORIGINAL write-once parquet (even
+    *    when a later compact swallowed them), with delete coverage frozen
+    *    at the pre-compact snapshot — the exact dead set the compact
+    *    materialized. Cost stays the increment, never the rewrite.
+    *  - commits the walk cannot enumerate (overwrite, CoW DELETE/UPDATE,
+    *    rollback, a dropped delete file) — and the one compact corner it
+    *    cannot prove exact (a delete file landing on the output of a
+    *    compact that swallowed in-range appends: its positions target
+    *    the re-homed copies) — degrade to the changelog's INSERT side:
+    *    rows visible at `toId` but not at `fromId`, one `exceptAll` over
+    *    the CHANGED files only. Cost is churn-sized; note the multiset
+    *    consequence there: a range that both deletes a pre-range row and
+    *    appends an IDENTICAL row nets to zero served copies (the
+    *    changelog view is the exact-diff tool). */
   def readIncremental(db: String, table: String, fromId: Long, toId: Long): DataFrame = {
     require(fromId <= toId, s"fromId $fromId > toId $toId")
-    // SHARD-DIFF fast path: write-once shards make the pointer log prove
-    // a pure-append range by NAME — `from`'s manifests all reused by `to`
-    // means every in-range commit only added files, and the added files
-    // are exactly the EXTRA shards' (shards within an entry are disjoint,
-    // and from's shards being present in to means the extras cannot
-    // overlap them). Only the extra shards' inventories are parsed: a
-    // day's increment on a 10^6-file table costs the day's metadata,
-    // never the lake's. Anything else (rewrites, consolidation) takes
-    // the full-materialize lanes below, unchanged.
-    loadRepr(db, table) match {
-      case SnapshotCatalog.V2Log(es, _) =>
-        val feo = es.find(_.snapshotId == fromId)
-        val teo = es.find(_.snapshotId == toId)
-        (feo, teo) match {
-          case (Some(fe), Some(te)) if fe.manifests.forall(te.manifests.toSet) =>
-            val fset = fe.manifests.toSet
-            val part = materializePartial(db, table, te,
-              te.manifests.filterNot(fset))
-            return readVisible(db, table, part, part.files)
-          case _ => ()
-        }
-      case _ => ()
-    }
-    val from = snapshotAt(db, table, fromId)
-    val to = snapshotAt(db, table, toId)
-    val fromFiles = from.files.toSet
-    val toFiles = to.files.toSet
-    if (fromFiles.diff(toFiles).isEmpty)
-      readVisible(db, table, to, to.files.filterNot(fromFiles))
-    else appendDeltaAcrossCompacts(db, table, fromId, toId, to).getOrElse {
-      val fromAligned = alignEndpoints(db, table, "incremental read", from, to)
-      val (removed, added) = changedFileSets(from, to)
-      readVisible(db, table, to, added)
-        .exceptAll(readVisible(db, table, fromAligned, removed))
+    val fromE = entryAt(db, table, fromId)
+    val steps = commitRange(db, table, fromE, toId)
+    val end = steps.lastOption.fold(materialize(db, table, fromE))(_.snap)
+    appendDelta(steps) match {
+      // `end` is not `toId` when `toId` is off the published lineage
+      // (a staged or branch snapshot)
+      case Right((files, deletes)) if end.snapshotId == toId =>
+        readVisible(db, table,
+          end.copy(files = files, fileStats = Map.empty, deleteFiles = deletes), files)
+      case _ =>
+        val from = snapshotAt(db, table, fromId)
+        val to = snapshotAt(db, table, toId)
+        val (removed, added) = changedFileSets(from, to)
+        readVisible(db, table, to, added).exceptAll(readVisible(db, table,
+          alignEndpoints(db, table, "incremental read", from, to), removed))
     }
   }
 
-  /** Metadata-only append-delta across row-preserving rewrites: walk the
-    * published lineage over `(fromId, toId]`, emit the files each
-    * append-family commit added, treat "compact" commits as no-ops (their
-    * outputs only re-home rows already accounted for), and read emitted
-    * files under delete coverage frozen at their last pre-compact
-    * snapshot. Returns None — caller falls back to the exact row diff —
-    * when the range contains a non-row-preserving rewrite, or a
-    * delete-file commit after a compact that swallowed emitted files
-    * (those positions target re-homed copies the walk reads from the
-    * originals). Mirrors [[graft.catalog.spark.SnapCatalogPlugin]]'s
-    * streaming walk; the batch form adds the delete-after-compact
-    * exactness guard a one-shot read can afford. */
-  private def appendDeltaAcrossCompacts(db: String, table: String,
-      fromId: Long, toId: Long, to: Snapshot): Option[DataFrame] = {
-    val inRange = mainLineage(db, table)
-      .filter(e => e.snapshotId > fromId && e.snapshotId <= toId)
-    var prev = snapshotAt(db, table, fromId)
-    var prevFiles = prev.files.toSet
+  /** The ONE commit-range walk: the published commits in
+    * `(from, toId]`, one [[CommitStep]] each, from a single pointer-log
+    * read. Every incremental surface — [[readIncremental]], the append
+    * and `.changes` stream tails, and [[changeSetsAcrossRange]] (every
+    * MV and index refresh) — folds these steps, so what a commit did to
+    * main is decided here and nowhere else.
+    *
+    * A commit that reuses all of its parent's manifest shards added
+    * exactly the files of its extra shards (shards are write-once and
+    * disjoint within an entry): only those shards are parsed and neither
+    * side's inventory is materialized — every append-family commit's
+    * shape. Other commits (rewrites, manifest consolidation) diff the two
+    * file lists. Delete files are compared by path. */
+  private[graft] def commitRange(db: String, table: String, from: SnapshotEntry,
+      toId: Long): Seq[CommitStep] = {
+    var parentE = from
+    var parent = materialize(db, table, from)
+    mainLineage(db, table)
+      .filter(e => e.snapshotId > from.snapshotId && e.snapshotId <= toId)
+      .map { e =>
+        val snap = materialize(db, table, e)
+        val reused = parentE.manifests.toSet
+        val (added, removed) =
+          if (reused.subsetOf(e.manifests.toSet))
+            (e.manifests.filterNot(reused).flatMap(loadManifest(db, table, _).files),
+              Seq.empty[String])
+          else {
+            val (pf, sf) = (parent.files.toSet, snap.files.toSet)
+            (snap.files.filterNot(pf), parent.files.filterNot(sf))
+          }
+        val (pd, sd) = (parent.deleteFiles.map(_.path).toSet, snap.deleteFiles.map(_.path).toSet)
+        val what = s"commit ${e.snapshotId} (${e.operation})"
+        val kind =
+          if (e.operation == "rollback")
+            CommitKind.NotEnumerable(s"$what restored snapshot " +
+              s"${e.summary.getOrElse("rolled_back_to", "?")}, resurrecting rows")
+          else if (e.operation == "compact") CommitKind.Compact
+          else if (removed.nonEmpty)
+            CommitKind.NotEnumerable(s"$what rewrote existing rows (${removed.size} " +
+              s"file(s) gone, e.g. ${removed.take(2).mkString(", ")})")
+          else if (pd.exists(!sd(_)))
+            CommitKind.NotEnumerable(s"$what dropped delete files, resurrecting rows")
+          else CommitKind.Additive
+        val step = CommitStep(e, parent, snap, added, removed,
+          snap.deleteFiles.filterNot(d => pd(d.path)), kind)
+        parentE = e
+        parent = snap
+        step
+      }
+  }
+
+  /** The append delta of a [[commitRange]] walk: the files the additive
+    * commits added, and the delete files to read them under — `toId`'s,
+    * except for files an in-range compact swallowed, whose coverage is
+    * frozen at the pre-compact snapshot (the exact dead set the compact
+    * materialized). Compacts are otherwise no-ops: their outputs re-home
+    * rows already accounted for. A delete file in the union never
+    * misapplies: it reaches a non-frozen file only if it survived to
+    * `toId` covering it, and a frozen file's delete file covering a live
+    * file survives there too (shard carry keeps shards whose covered
+    * files carry).
+    *
+    * `Left(reason)` when a commit is not enumerable, or when a delete
+    * file lands on a TAINTED file — the output of an in-range compact
+    * that swallowed emitted (or tainted) files: frozen coverage cannot
+    * see it, so a row appended and deleted inside the range would be
+    * served. Deletes of live originals or of other compact outputs stay
+    * exact and keep the walk. */
+  private[graft] def appendDelta(steps: Seq[CommitStep])
+      : Either[String, (Seq[String], Seq[DeleteFile])] = {
     val emit = scala.collection.mutable.ArrayBuffer.empty[String]
     val emitSet = scala.collection.mutable.HashSet.empty[String]
     val frozen = scala.collection.mutable.HashMap.empty[String, Seq[DeleteFile]]
-    var swallowedEmitted = false
-    for (en <- inRange) {
-      val snap = snapshotAt(db, table, en.snapshotId)
-      val files = snap.files.toSet
-      val removed = prevFiles.diff(files)
-      if (removed.nonEmpty) {
-        if (snap.operation != "compact") return None
-        for (f <- removed if emitSet(f))
-          frozen(f) = prev.deleteFiles.filter(_.covers.contains(f))
-        if (removed.exists(emitSet)) swallowedEmitted = true
-      } else if (snap.operation != "compact") {
-        val added = snap.files.filterNot(prevFiles)
-        emit ++= added
-        emitSet ++= added
+    val tainted = scala.collection.mutable.HashSet.empty[String]
+    for (st <- steps) {
+      st.kind match {
+        case CommitKind.NotEnumerable(reason) => return Left(reason)
+        case CommitKind.Compact =>
+          for (f <- st.removed if emitSet(f))
+            frozen(f) = st.parent.deleteFiles.filter(_.covers.contains(f))
+          if (st.removed.exists(f => emitSet(f) || tainted(f))) tainted ++= st.added
+        case CommitKind.Additive =>
+          emit ++= st.added
+          emitSet ++= st.added
       }
-      if (swallowedEmitted && {
-        val prevShards = prev.deleteFiles.map(_.path).toSet
-        snap.deleteFiles.exists(d => !prevShards(d.path))
-      }) return None
-      prev = snap
-      prevFiles = files
+      if (st.newDeletes.exists(_.covers.keysIterator.exists(tainted)))
+        return Left(s"commit ${st.entry.snapshotId} added delete files after an " +
+          "in-range compact swallowed emitted appends - frozen coverage cannot " +
+          "prove those rows' visibility")
     }
-    // one synthetic snapshot view: emitted files under their per-file
-    // coverage (frozen for swallowed files, `to`'s otherwise). A delete
-    // file in the union never misapplies: it reaches a non-frozen emitted
-    // file only if it survived to `to` covering it, and a frozen file's
-    // shard covering a still-live file survives at `to` too (shard carry
-    // keeps shards whose covered files carry).
-    val covUnion = emit.toSeq
-      .flatMap(f => frozen.getOrElse(f, to.deleteFiles.filter(_.covers.contains(f))))
-      .groupBy(_.path).map(_._2.head).toSeq
-    Some(readVisible(db, table,
-      to.copy(files = emit.toSeq, deleteFiles = covUnion), emit.toSeq))
+    val end = steps.lastOption.map(_.snap.deleteFiles).getOrElse(Seq.empty)
+    val files = emit.toSeq
+    Right((files, files
+      .flatMap(f => frozen.getOrElse(f, end.filter(_.covers.contains(f))))
+      .groupBy(_.path).map(_._2.head).toSeq))
   }
 
   /** Can rows written under `from` be SERVED under `to` by the
@@ -2129,72 +2053,47 @@ final class SnapshotCatalog(
     * read back from their (write-once) covered files, equality tuples
     * evaluated against the rows VISIBLE at the eq commit's parent — cost
     * is the churn (plus one covered-file visibility scan per eq commit),
-    * never a two-sided multiset diff. Returns None — caller falls back
-    * to the changelog — when the range contains a true rewrite
-    * (overwrite / CoW DML), a ROLLBACK (detected as removed data files
-    * OR removed delete shards: rolling back a MoR-delete-only commit
-    * keeps the file set identical while resurrecting rows), or a schema
-    * change. A row appended then deleted inside the range appears in
+    * never a two-sided multiset diff. A fold over [[commitRange]]:
+    * returns None — caller falls back to the changelog — when the range
+    * contains a commit the walk classifies as not enumerable (a true
+    * rewrite, a rollback, a dropped delete file) or a schema change. A
+    * row appended then deleted inside the range appears in
     * BOTH sets (exact per-commit semantics, not a net diff) — consumers
     * folding `+ins −del` cancel it, matching `Q(old) + Q(ins) − Q(del)`. */
   private[graft] def changeSetsAcrossRange(db: String, table: String,
       fromId: Long, toId: Long): Option[(DataFrame, DataFrame)] = {
-    val from = snapshotAt(db, table, fromId)
-    val schema = from.schema
-    val inRange = mainLineage(db, table)
-      .filter(e => e.snapshotId > fromId && e.snapshotId <= toId)
-    var prev = from
-    var prevFiles = prev.files.toSet
-    val ins = Seq.newBuilder[DataFrame]
-    val posShards = Seq.newBuilder[DeleteFile]
-    val eqDels = Seq.newBuilder[DataFrame]
-    for (en <- inRange) {
-      val snap = snapshotAt(db, table, en.snapshotId)
-      if (snap.schemaDdl != prev.schemaDdl) return None // evolution: changelog aligns
-      if (snap.operation == "rollback") return None // resurrections not enumerable
-      val files = snap.files.toSet
-      if (prevFiles.diff(files).nonEmpty && snap.operation != "compact")
-        return None // true rewrite: retractions are not enumerable
-      if (snap.operation != "compact") {
-        val snapShards = snap.deleteFiles.map(_.path).toSet
-        // a non-compact commit that DROPS a delete shard (rollback of a
-        // MoR-delete-only commit re-pointing at the parent's shard list)
-        // resurrects rows the insert set cannot represent — decline
-        if (prev.deleteFiles.exists(d => !snapShards(d.path))) return None
-        val prevShards = prev.deleteFiles.map(_.path).toSet
-        val newShards = snap.deleteFiles.filterNot(d => prevShards(d.path))
-        val (pos, eq) = newShards.partition(_.isPositional)
-        posShards ++= pos
-        // EQUALITY-delete pre-images, exactly: rows VISIBLE at this
-        // commit's parent (`prev` — all earlier in-range deletes and adds
-        // applied) that the commit's eq shards kill, each covered file
-        // matched against the shards covering it. One per-file read of
-        // the covered files per eq commit — churn-sized, no changelog diff.
-        val eqCovered = eq.flatMap(_.covers.keys).distinct.sorted
-        if (eqCovered.nonEmpty) eqDels += readMerged(db, table, prev, eqCovered, Nil, Some(eq))
-        val added = snap.files.filterNot(prevFiles)
-        if (added.nonEmpty) ins += readFiles(db, table, schema, added)
-      }
-      prev = snap
-      prevFiles = files
+    val fromE = entryAt(db, table, fromId)
+    val steps = commitRange(db, table, fromE, toId)
+    if (steps.exists(st => st.kind.isInstanceOf[CommitKind.NotEnumerable] ||
+        st.entry.schemaDdl != st.parent.schemaDdl)) return None // changelog aligns
+    val changes = steps.filter(_.kind == CommitKind.Additive)
+    val schema = fromE.schema
+    // EQUALITY-delete pre-images, exactly: rows VISIBLE at the eq commit's
+    // parent (all earlier in-range deletes and adds applied) that its eq
+    // files kill, each covered file matched against the files covering
+    // it. One per-file read of the covered files per eq commit —
+    // churn-sized, no changelog diff.
+    val eqDels = changes.flatMap { st =>
+      val eq = st.newDeletes.filterNot(_.isPositional)
+      val covered = eq.flatMap(_.covers.keys).distinct.sorted
+      if (covered.isEmpty) None
+      else Some(readMerged(db, table, st.parent, covered, Nil, Some(eq)))
     }
-    // pre-images of EVERY in-range positional shard in ONE scan: the
-    // delete writer only ever kills VISIBLE rows, so in-range shards hold
+    // pre-images of EVERY in-range positional delete file in ONE scan: the
+    // delete writer only ever kills VISIBLE rows, so in-range files hold
     // disjoint positions and each targeted row was alive at `from` (or
     // lives in an in-range-added file `from`'s coverage cannot touch) —
-    // the rows alive at `from` that the shards kill are exact, read in one
+    // the rows alive at `from` that they kill are exact, read in one
     // per-file pass with no join and no per-commit walk of overlapping
     // covered files
-    val allPos = posShards.result()
-    def unionAll(fs: Seq[DataFrame]): DataFrame = fs match {
-      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case some  => some.reduce(_.unionByName(_))
-    }
+    val allPos = changes.flatMap(_.newDeletes.filter(_.isPositional))
     val posDels =
-      if (allPos.isEmpty) Seq.empty[DataFrame]
-      else Seq(readMerged(db, table, from, allPos.flatMap(_.covers.keys).distinct.sorted,
-        Nil, Some(allPos)))
-    Some((unionAll(ins.result()), unionAll(posDels ++ eqDels.result())))
+      if (allPos.isEmpty) None
+      else Some(readMerged(db, table, materialize(db, table, fromE),
+        allPos.flatMap(_.covers.keys).distinct.sorted, Nil, Some(allPos)))
+    val dels = posDels.toSeq ++ eqDels
+    Some((readFiles(db, table, schema, changes.flatMap(_.added)),
+      if (dels.isEmpty) readFiles(db, table, schema, Nil) else dels.reduce(_.unionByName(_))))
   }
 
   /** Latest snapshot with committed_at <= ts, i.e. the reference's stage-2
@@ -2339,7 +2238,7 @@ final class SnapshotCatalog(
       s"clone target $dstDb.$dstTable already exists")
     require(!viewExists(dstDb, dstTable),
       s"clone target $dstDb.$dstTable collides with a view")
-    val entries = entriesForWrite(srcDb, srcTable)
+    val entries = entryMeta(srcDb, srcTable)
     // asOfSnapshotId clones a HISTORICAL state ("reproduce yesterday's
     // training set as a live table") — any retained main-lineage snapshot,
     // staged/branch entries excluded like every published read
@@ -2523,7 +2422,7 @@ final class SnapshotCatalog(
     val tm = meta(db, table)
     require(tm.bucketSpec.isEmpty,
       s"dynamic overwrite of $db.$table refuses bucketed layouts")
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     // TWO-LEVEL classification below: shards whose recorded summary proves
@@ -2630,7 +2529,7 @@ final class SnapshotCatalog(
       operation: String = "append"): Snapshot = withTableLock(db, table) {
     require(operation == "append" || operation == "overwrite",
       s"adoptFiles operation must be append|overwrite, got '$operation'")
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     // pointer-level: the previous inventory resolves lazily (only the
@@ -2809,7 +2708,7 @@ final class SnapshotCatalog(
       base: Option[SnapshotEntry] = None,
       ridMixed: Boolean = false): Snapshot = withTableLock(db, table) {
     val tm = meta(db, table)
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     // `base` re-bases the commit on a BRANCH HEAD instead of the published
     // head (appendBranch); the log TAIL may be a branch commit, which must
@@ -2824,35 +2723,8 @@ final class SnapshotCatalog(
     lazy val prev = materialize(db, table, prevEntry)
     val prevSummary = prevEntry.summary
     val prevRecordCount = prevSummary.get("record_count").map(_.toLong).getOrElse(-1L)
-    // ---- carry-shard admission (two-level partial rewrites) ----
-    // `carryShards` names shards the caller PROVED fully carried (no file
-    // in them was a rewrite candidate). They stay pointer-level — reused
-    // by name, never parsed — when (a) every one has a recorded summary
-    // with a summed row count (the bound/row/count arithmetic below runs
-    // off the fold) and (b) the table has no live delete shards (exact
-    // dead-row accounting intersects file-level covers). Otherwise they
-    // fold into the file-granular carry: identical semantics, the
-    // pre-summary cost.
     val (cf, cs, cshards, cshardSums) =
-      if (carryShards.isEmpty)
-        (carryFiles, carryStats, Seq.empty[String], Map.empty[String, ShardSummary])
-      else {
-        val sumsOpt = loadRepr(db, table) match {
-          case V2Log(_, sums)
-            if carryShards.forall(n => sums.get(n).exists(_.stats.contains("rows"))) =>
-            Some(carryShards.map(n => n -> sums(n)).toMap)
-          case _ => None
-        }
-        sumsOpt match {
-          case Some(ss) if prevEntry.deletes.isEmpty =>
-            (carryFiles, carryStats, carryShards, ss)
-          case _ =>
-            val ms = carryShards.map(n => loadManifest(db, table, n))
-            (carryFiles ++ ms.flatMap(_.files),
-              carryStats ++ ms.iterator.flatMap(_.fileStats).toMap,
-              Seq.empty[String], Map.empty[String, ShardSummary])
-        }
-      }
+      admitCarryShards(db, table, prevEntry, carryFiles, carryStats, carryShards)
     val newId = entries.last.snapshotId + 1
     val tag = attemptTag()
     val snapDirRel = s"data/s$newId$tag"
@@ -3285,7 +3157,7 @@ final class SnapshotCatalog(
     * (`/root/reference/5_migrate_tables_data.py:80-83`); semantics follow
     * Iceberg v2 merge-on-read. */
   def deleteMoR(db: String, table: String, cond: Column): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     deleteMoRFrom(db, table, entries, publishedEntry(entries), cond, Map.empty)
   }
@@ -3300,7 +3172,7 @@ final class SnapshotCatalog(
       cond: Column): Snapshot = withTableLock(db, table) {
     val headId = resolveBranch(db, table, name).getOrElse(
       throw new NoSuchElementException(s"no such branch '$name' on $db.$table"))
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     val baseEntry = entries.find(_.snapshotId == headId).getOrElse(
       throw new IllegalStateException(
         s"branch '$name' points at expired snapshot $headId of $db.$table"))
@@ -3373,7 +3245,7 @@ final class SnapshotCatalog(
     * affordable — it keeps every metadata answer exact. */
   def deleteMoREq(db: String, table: String, keys: DataFrame,
       extraSummary: Map[String, String] = Map.empty): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     // pointer-level like every MoR commit: the inventory materializes only
@@ -3637,7 +3509,7 @@ final class SnapshotCatalog(
     * and commits the same position-delta shape. */
   def updateMoR(db: String, table: String, cond: Column,
       set: Map[String, Column]): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val prevSummary = prevEntry.summary
@@ -3800,7 +3672,7 @@ final class SnapshotCatalog(
       explicitRids: Boolean = false,
       nullSafeKeys: Boolean = false,
       alsoDeleteKeys: Option[DataFrame] = None): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val prevSummary = prevEntry.summary
@@ -4049,7 +3921,7 @@ final class SnapshotCatalog(
       dataDirName: String, dataFiles: Seq[String],
       deleteDirName: String, deleteFiles: Seq[String],
       expectSnapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val prevSummary = prevEntry.summary
@@ -4234,7 +4106,7 @@ final class SnapshotCatalog(
       carryStats: Map[String, Map[String, String]] = Map.empty,
       expectSnapshotId: Option[Long] = None,
       carryShards: Seq[String] = Seq.empty): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     expectSnapshotId.foreach(id => require(prevEntry.snapshotId == id,
@@ -4279,7 +4151,7 @@ final class SnapshotCatalog(
       sinkId: String, epochId: Long): Option[Snapshot] = withTableLock(db, table) {
     require(operation == "append" || operation == "overwrite",
       s"streaming adoption must be append or overwrite, got $operation")
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val key = s"stream-epoch.$sinkId"
@@ -4305,6 +4177,32 @@ final class SnapshotCatalog(
     }
   }
 
+  /** Carry-shard admission (two-level partial rewrites), shared by
+    * [[commit]] and [[adoptDir]]: `carryShards` names shards the caller
+    * PROVED fully carried (no file in them was a rewrite candidate). They
+    * stay pointer-level — reused by name, never parsed — when (a) every
+    * one has a recorded summary with a summed row count (the bound/row/
+    * count arithmetic runs off the fold) and (b) the table has no live
+    * delete shards (exact dead-row accounting intersects file-level
+    * covers). Otherwise they fold into the file-granular carry: identical
+    * semantics, the pre-summary cost. Returns the carried files and
+    * stats, the admitted shard names and their summaries. */
+  private def admitCarryShards(db: String, table: String, prevEntry: SnapshotEntry,
+      carryFiles: Seq[String], carryStats: Map[String, Map[String, String]],
+      carryShards: Seq[String]): (Seq[String], Map[String, Map[String, String]],
+        Seq[String], Map[String, ShardSummary]) = {
+    lazy val sums = loadLog(db, table).summaries
+    if (carryShards.isEmpty) (carryFiles, carryStats, Seq.empty, Map.empty)
+    else if (prevEntry.deletes.isEmpty &&
+        carryShards.forall(n => sums.get(n).exists(_.stats.contains("rows"))))
+      (carryFiles, carryStats, carryShards, carryShards.map(n => n -> sums(n)).toMap)
+    else {
+      val ms = carryShards.map(n => loadManifest(db, table, n))
+      (carryFiles ++ ms.flatMap(_.files),
+        carryStats ++ ms.iterator.flatMap(_.fileStats).toMap, Seq.empty, Map.empty)
+    }
+  }
+
   /** Shared adoption core (lock already held): list the external writer's
     * files, fold footer stats with the carried files', commit one log
     * entry. `carryShards` names shards the caller proved fully carried —
@@ -4325,25 +4223,7 @@ final class SnapshotCatalog(
     val snapDir = root.resolve("data").resolve(dataDirName)
     val schema = prevEntry.schema
     val (cf, cs, cshards, cshardSums) =
-      if (carryShards.isEmpty)
-        (carryFiles, carryStats, Seq.empty[String], Map.empty[String, ShardSummary])
-      else {
-        val sumsOpt = loadRepr(db, table) match {
-          case V2Log(_, sums)
-            if carryShards.forall(n => sums.get(n).exists(_.stats.contains("rows"))) =>
-            Some(carryShards.map(n => n -> sums(n)).toMap)
-          case _ => None
-        }
-        sumsOpt match {
-          case Some(ss) if prevEntry.deletes.isEmpty =>
-            (carryFiles, carryStats, carryShards, ss)
-          case _ =>
-            val ms = carryShards.map(n => loadManifest(db, table, n))
-            (carryFiles ++ ms.flatMap(_.files),
-              carryStats ++ ms.iterator.flatMap(_.fileStats).toMap,
-              Seq.empty[String], Map.empty[String, ShardSummary])
-        }
-      }
+      admitCarryShards(db, table, prevEntry, carryFiles, carryStats, carryShards)
     val newFiles = listParquetFiles(snapDir).map(p =>
       snapDirRel + "/" + snapDir.relativize(p).toString.replace('\\', '/'))
     val conf = spark.sessionState.newHadoopConf()
@@ -4404,7 +4284,7 @@ final class SnapshotCatalog(
     * itself rollback-able. Pure metadata; no data moves. */
   def rollback(db: String, table: String,
       toSnapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val targetEntry = entries.find(_.snapshotId == toSnapshotId).getOrElse(
       throw new NoSuchElementException(
@@ -4453,7 +4333,7 @@ final class SnapshotCatalog(
       .filterNot(tm.partitionCols.contains)
     require(cols.nonEmpty,
       s"rebuildBlooms($db.$table): set ${BloomStats.PropCols} first")
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val prev = materialize(db, table, prevEntry)
@@ -4494,7 +4374,7 @@ final class SnapshotCatalog(
   def analyzeNdv(db: String, table: String,
       columns: Seq[String] = Seq.empty): Option[Snapshot] = withTableLock(db, table) {
     val tm = meta(db, table)
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val prev = materialize(db, table, prevEntry)
@@ -4555,7 +4435,7 @@ final class SnapshotCatalog(
     withTableLock(db, table) {
     require(bins >= 2 && bins <= 1024, s"bins must be in [2,1024], got $bins")
     val tm = meta(db, table)
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     val prev = materialize(db, table, prevEntry)
@@ -7122,7 +7002,7 @@ final class SnapshotCatalog(
     * reclaims shards no surviving snapshot references. Returns None when
     * the current sharding already equals the target (idempotent). */
   def rewriteManifests(db: String, table: String): Option[Snapshot] = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     if (prevEntry.manifests.size <= 1) return None
@@ -7241,7 +7121,7 @@ final class SnapshotCatalog(
     * multi-table transactions stage ([[Transaction.deleteMoR]]). */
   def stageDeleteMoR(db: String, table: String, cond: Column): Snapshot =
     withTableLock(db, table) {
-      val entries = entriesForWrite(db, table)
+      val entries = entryMeta(db, table)
       requireNoPendingStage(db, table, entries)
       deleteMoRFrom(db, table, entries, publishedEntry(entries), cond,
         Map("wap.staged" -> "true"))
@@ -7252,7 +7132,7 @@ final class SnapshotCatalog(
     * size, the property that makes audit-then-publish free at 100 TB. */
   def publishStaged(db: String, table: String,
       snapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     val staged = entries.last
     require(isStagedEntry(staged) && staged.snapshotId == snapshotId,
       s"snapshot $snapshotId is not the pending staged snapshot of $db.$table" +
@@ -7323,7 +7203,7 @@ final class SnapshotCatalog(
     * them. */
   def discardStaged(db: String, table: String,
       snapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     val staged = entries.last
     require(isStagedEntry(staged) && staged.snapshotId == snapshotId,
       s"snapshot $snapshotId is not the pending staged snapshot of $db.$table" +
@@ -7354,7 +7234,7 @@ final class SnapshotCatalog(
     * stores its own DDL. */
   def evolveSchema(db: String, table: String, newSchema: StructType,
       allowDrop: Boolean = false): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val prevEntry = publishedEntry(entries)
     // pointer-level DDL: schema arithmetic runs off the log entry; the
@@ -7747,7 +7627,7 @@ final class SnapshotCatalog(
       fromSnapshotId: Option[Long] = None): Unit = withTableLock(db, table) {
     require(name.nonEmpty && !name.forall(_.isDigit),
       s"branch name '$name' must not be empty or all-numeric (ambiguous with snapshot ids)")
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     val from = fromSnapshotId.getOrElse(publishedEntry(entries).snapshotId)
     require(entries.exists(_.snapshotId == from),
       s"snapshot $from not found for $db.$table")
@@ -7779,7 +7659,7 @@ final class SnapshotCatalog(
       extraSummary: Map[String, String] = Map.empty): Snapshot = withTableLock(db, table) {
     val headId = resolveBranch(db, table, name).getOrElse(
       throw new NoSuchElementException(s"no such branch '$name' on $db.$table"))
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     val baseEntry = entries.find(_.snapshotId == headId).getOrElse(
       throw new IllegalStateException(
         s"branch '$name' points at expired snapshot $headId of $db.$table"))
@@ -7809,7 +7689,7 @@ final class SnapshotCatalog(
     * commits — fail loudly instead (merge by hand, or re-branch). The
     * branch ref itself stays where it is, like a published WAP stage. */
   def fastForward(db: String, table: String, name: String): Snapshot = withTableLock(db, table) {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     requireNoPendingStage(db, table, entries)
     val headId = resolveBranch(db, table, name).getOrElse(
       throw new NoSuchElementException(s"no such branch '$name' on $db.$table"))
@@ -7949,7 +7829,7 @@ final class SnapshotCatalog(
   def compactDeleteFiles(db: String, table: String,
       where: Option[Column] = None): Option[Snapshot] =
     withTableLock(db, table) {
-      val entries = entriesForWrite(db, table)
+      val entries = entryMeta(db, table)
       requireNoPendingStage(db, table, entries)
       val prevEntry = publishedEntry(entries)
       val prev = materialize(db, table, prevEntry)
@@ -8026,7 +7906,7 @@ final class SnapshotCatalog(
   def convertEqualityDeletes(db: String, table: String,
       where: Option[Column] = None): Option[Snapshot] =
     withTableLock(db, table) {
-      val entries = entriesForWrite(db, table)
+      val entries = entryMeta(db, table)
       requireNoPendingStage(db, table, entries)
       val prevEntry = publishedEntry(entries)
       val prev = materialize(db, table, prevEntry)
@@ -8280,7 +8160,7 @@ final class SnapshotCatalog(
     * entries pointing at deleted files. */
   private def expireOldest(db: String, table: String,
       keepOldest: Seq[SnapshotEntry] => Int): Int = {
-    val entries = entriesForWrite(db, table)
+    val entries = entryMeta(db, table)
     // an expire that kept ONLY a staged tail would leave a table with no
     // published state; resolve the pending audit first
     requireNoPendingStage(db, table, entries)
@@ -8329,10 +8209,7 @@ final class SnapshotCatalog(
     val doomedShardFiles = doomedManifests
       .flatMap(loadManifest(db, table, _).files).distinct
     val doomedDirs = doomedShardFiles.map(_.split("/").take(2).mkString("/")).toSet
-    val sums: Map[String, ShardSummary] = loadRepr(db, table) match {
-      case V2Log(_, s) => s
-      case _ => Map.empty
-    }
+    val sums = loadLog(db, table).summaries
     val overlappingKept =
       if (doomedDirs.isEmpty) Seq.empty // nothing doomed: nothing to subtract
       else keptManifests.toSeq.filter(n =>
@@ -8481,7 +8358,7 @@ final class SnapshotCatalog(
       // fresh etag derivation per body ATTEMPT: this closure re-runs on a
       // CasCommitMutex conflict retry, and the retry's top read must
       // re-pin against the winner's log (a stale pin would conflict
-      // forever); see the pinning rule in loadRepr
+      // forever); see the pinning rule in loadLog
       SnapshotCatalog.pinnedEtagKeys.get().remove(logKey(db, table))
       try body finally {
         SnapshotCatalog.heldLocks.get().remove(key)
@@ -8541,23 +8418,23 @@ object SnapshotCatalog {
   /** Value column of a DISTINCT-aggregate copy-count sidecar. */
   private[graft] val MvDvValue = "__mv_v"
 
-  /** The two on-disk log formats. v1 (a bare JSON array of full snapshots,
-    * rounds 1-3) is read transparently and migrated to v2 on the first
-    * write; v2 is the sharded format described in the class doc. */
-  private sealed trait LogRepr
-  private final case class LegacyLog(snaps: Seq[Snapshot]) extends LogRepr
-  /** v2 log: pointer entries plus the table-level `shard_summaries` map
-    * (one [[ShardSummary]] per live shard NAME — stored once at log level,
-    * not per entry, so shard reuse across entries costs nothing). Absent
-    * summaries (older logs) simply never skip. */
-  private final case class V2Log(entries: Seq[SnapshotEntry],
-      summaries: Map[String, ShardSummary] = Map.empty) extends LogRepr
+  /** The pointer log (`format_version` 2, the sharded format described in
+    * the class doc): pointer entries plus the table-level
+    * `shard_summaries` map (one [[ShardSummary]] per live shard NAME —
+    * stored once at log level, not per entry, so shard reuse across
+    * entries costs nothing). Absent summaries (older logs) simply never
+    * skip. */
+  private final case class PointerLog(entries: Seq[SnapshotEntry],
+      summaries: Map[String, ShardSummary] = Map.empty)
 
   /** Planning instrumentation: total [[loadManifest]] calls ("opens") and
     * cache-miss JSON parses — the two-level planner's spec gates assert a
     * pinned-partition plan opens only the matching shards. Test-visible,
     * never consulted by product logic. */
   private[graft] val manifestOpens = new java.util.concurrent.atomic.AtomicLong
+  /** Pointer-log reads ([[loadLog]] calls), JVM-wide: the stream-drain
+    * gate asserts they stay flat in the number of commits drained. */
+  private[graft] val logReads = new java.util.concurrent.atomic.AtomicLong
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
   /** Drop the JVM-wide parse cache (spec-only): cold-cache parse counts
     * are how the shard-skip gates prove skipped shards were never read. */
@@ -8581,7 +8458,7 @@ object SnapshotCatalog {
     ThreadLocal.withInitial(() => new java.util.HashMap[String, java.lang.Long]())
 
   /** Log keys whose observed etag is PINNED for the duration of the
-    * current commit-body attempt (see loadRepr): the first in-body read
+    * current commit-body attempt (see loadLog): the first in-body read
     * pins; mid-body refreshes must not advance the etag past a racer's
     * publish, or the If-Match precondition would mask a lost update.
     * Cleared per body attempt by withTableLock (so CAS retries re-pin

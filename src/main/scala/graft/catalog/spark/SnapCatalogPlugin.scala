@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.catalog.{SchemaEvolve, Snapshot, SnapshotCatalog, SnapshotEntry, TableMeta}
+import graft.catalog.{CommitKind, SchemaEvolve, Snapshot, SnapshotCatalog, SnapshotEntry, TableMeta}
 
 /** Spark V2 `TableCatalog` over [[graft.catalog.SnapshotCatalog]] — gives
   * the engine the reference's exact SQL operating surface without an
@@ -1487,32 +1487,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     override def hashCode(): Int = delegate.hashCode()
   }
 
-  /** Resolve a STREAM's checkpointed start offset to its snapshot,
+  /** Resolve a STREAM's checkpointed start offset to its pointer entry,
     * surfacing expiry actionably (r8): `expireSnapshots` may have removed
     * the snapshot a resumed checkpoint's high-water points at, and the
     * raw not-found error gives an operator nothing to act on. The message
     * names the earliest retained snapshot and both recovery paths. */
-  /** [[resolveStreamStart]], pointer-entry form — the append tail's walk
-    * never needs the start snapshot's file inventory. */
-  private def resolveStreamStartEntry(db: String, table: String, id: Long,
+  private def resolveStreamStart(db: String, table: String, id: Long,
       what: String): SnapshotEntry =
     try cat.entryAt(db, table, id)
-    catch {
-      case _: NoSuchElementException =>
-        val retained = cat.entryLog(db, table).map(_.snapshotId)
-        throw new IllegalStateException(
-          s"$what of $db.$table: checkpointed offset points at snapshot $id, " +
-            s"which has been EXPIRED (earliest retained: " +
-            s"${retained.headOption.getOrElse(-1L)}, current head: " +
-            s"${retained.lastOption.getOrElse(-1L)}). Restart the stream " +
-            "from the current snapshot with a FRESH checkpoint, or full-" +
-            "backfill first (batch-read the table, then stream from the " +
-            "snapshot that read served)")
-    }
-
-  private def resolveStreamStart(db: String, table: String, id: Long,
-      what: String): Snapshot =
-    try cat.snapshotAt(db, table, id)
     catch {
       case _: NoSuchElementException =>
         val retained = cat.entryLog(db, table).map(_.snapshotId)
@@ -1529,14 +1511,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
   /** Micro-batch tail of a table's APPEND commits: offsets are snapshot
     * ids, and a batch (start, end] reads exactly the files those appends
     * added — the streaming face of [[SnapshotCatalog.readIncremental]],
-    * resolved from pure metadata (per-commit file-list diffs over the
-    * published lineage; at 100 TB a trigger costs the day's increment,
-    * never a table scan). Row-preserving rewrites in range — compact,
-    * z-order, bin-pack — are NO-OPS to the stream: their outputs are
-    * skipped and swallowed in-range appends serve from their original
-    * write-once files, so a table that compacts on a schedule never
-    * breaks its consumers. True rewrites (overwrite, CoW DELETE/UPDATE,
-    * rollback) still fail the stream loudly: they change visibility of
+    * resolved from pure metadata (the same commit-range walk and append
+    * delta; at 100 TB a trigger costs the day's increment, never a table
+    * scan). Row-preserving rewrites in range — compact, z-order, bin-pack
+    * — are NO-OPS to the stream: their outputs are skipped and swallowed
+    * in-range appends serve from their original write-once files, so a
+    * table that compacts on a schedule never breaks its consumers. True
+    * rewrites (overwrite, CoW DELETE/UPDATE), rollbacks and dropped
+    * delete files fail the stream loudly: they change visibility of
     * EXISTING rows, which an append stream cannot represent.
     *
     * Starts from the CURRENT snapshot by default (tail semantics);
@@ -1618,11 +1600,11 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     override def stop(): Unit = ()
 
     /** Pruned-schema batch over an explicit absolute-file list. */
-    private def batchFor(opts: Map[String, String], files: Seq[String]): Batch = {
+    private def batchFor(opts: Map[String, String], files: Seq[String],
+        schema: StructType): Batch = {
       val cism = new CaseInsensitiveStringMap(opts.asJava)
       val builder = ParquetTable(s"$db.$table stream", spark, cism, files,
-        Some(tableSchema.getOrElse(cat.entryLog(db, table).last.schema)),
-        classOf[ParquetFileFormat])
+        Some(schema), classOf[ParquetFileFormat])
         .newScanBuilder(cism)
       builder.asInstanceOf[org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns]
         .pruneColumns(prunedSchema)
@@ -1633,115 +1615,40 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       val s = start.asInstanceOf[SnapOffset].id
       val e = end.asInstanceOf[SnapOffset].id
       if (s >= e) return Array.empty
-      // The batch walks the PUBLISHED lineage commit by commit and emits
-      // the files each APPEND-family commit added: appends, WAP publish
-      // (the staged files surface there), fastForward, and the MoR family
-      // — position deletes and delta UPDATE/MERGE, whose churn is new
-      // delta files plus delete metadata. Commits that REMOVE files split
-      // two ways:
-      //  - "compact" (compact / z-order / bin-pack — the row-preserving
-      //    rewrites): treated as a NO-OP. Its outputs only re-home rows
-      //    already accounted for, so they are never emitted; in-range
-      //    appends it swallowed still serve from their ORIGINAL files
-      //    (data files are write-once and survive on disk until
-      //    expireSnapshots, which refuses to collect a range a live
-      //    stream could still need only by the retention the operator
-      //    chose), with delete coverage FROZEN at the pre-compact
-      //    snapshot — exactly the dead set the compact materialized away.
-      //    A mid-stream compaction is therefore invisible to consumers.
-      //  - anything else (overwrite, CoW DELETE/UPDATE, rollback): refuse
-      //    loudly — those change visibility of rows already emitted, which
-      //    an append tail cannot retract (readChangelog's job).
-      // Emitted files otherwise merge under the END snapshot's deletes: a
-      // row appended and deleted inside ONE batch range is never emitted;
-      // a delete landing in a LATER range (or after an in-range compact
-      // re-homed the row) is skipped — the row was already served. The
-      // walk resolves each commit from the POINTER LOG where it can: a
-      // pure-additive commit (prev's shards all reused — every
-      // append-family commit's shape) emits exactly its extra shards'
-      // files, parsing only those inventories; shard-removing commits
-      // (the compact/rewrite lanes) and legacy logs take the
-      // file-granular lane below. Delete coverage is pointer-level
-      // throughout, so a trigger over a 10^6-file table parses the
-      // trigger's shards, never the inventory.
-      val toDeletes = cat.entryDeleteFiles(db, table, cat.entryAt(db, table, e))
-      val inRange = cat.mainLineage(db, table)
-        .filter(en => en.snapshotId > s && en.snapshotId <= e)
-      var prevEntry = resolveStreamStartEntry(db, table, s, "streaming read")
-      var prevDeletes = cat.entryDeleteFiles(db, table, prevEntry)
-      val emit = scala.collection.mutable.ArrayBuffer.empty[String]
-      val emitSet = scala.collection.mutable.HashSet.empty[String]
-      val frozenCov = scala.collection.mutable.HashMap
-        .empty[String, Seq[graft.catalog.DeleteFile]]
-      // outputs of in-range compacts that re-homed EMITTED rows: a later
-      // delete covering one of these is invisible to the frozen-coverage
-      // reads of the originals — the one exactness hole the walk has
-      val tainted = scala.collection.mutable.HashSet.empty[String]
-      for (en <- inRange) {
-        val enDeletes = cat.entryDeleteFiles(db, table, en)
-        cat.addedFilesIfAdditive(db, table, prevEntry, en) match {
-          case Some(addedHere) =>
-            // pure-additive by shard reuse: nothing gone, the extras are
-            // the commit's added files (compact outputs never emit)
-            if (en.operation != "compact") {
-              emit ++= addedHere
-              emitSet ++= addedHere
-            }
-          case None =>
-            // file-granular lane: rewrites/consolidation (and legacy
-            // logs) — materialize both endpoints (cache-served)
-            val snap = cat.snapshotAt(db, table, en.snapshotId)
-            val files = snap.files.toSet
-            val prevFiles = cat.snapshotAt(db, table, prevEntry.snapshotId).files.toSet
-            val goneHere = prevFiles.diff(files)
-            if (goneHere.nonEmpty) {
-              require(snap.operation == "compact",
-                s"streaming read of $db.$table ($s, $e]: commit ${en.snapshotId} " +
-                  s"(${snap.operation}) rewrote existing rows (${goneHere.size} " +
-                  s"file(s) gone, e.g. ${goneHere.take(2).mkString(", ")}) - an " +
-                  "append tail cannot represent rewritten visibility; restart " +
-                  "the stream from the current snapshot")
-              for (f <- goneHere if emitSet.contains(f))
-                frozenCov(f) = prevDeletes.filter(_.covers.contains(f))
-              if (goneHere.exists(f => emitSet.contains(f) || tainted.contains(f)))
-                tainted ++= files.diff(prevFiles) // this compact's outputs
-            } else if (snap.operation != "compact") {
-              val addedHere = snap.files.filterNot(prevFiles)
-              emit ++= addedHere
-              emitSet ++= addedHere
-            }
-        }
-        // delete-after-compact guard (the stream face of the batch
-        // appendDeltaAcrossCompacts exactness rule, r8): a delete commit
-        // whose NEW shards cover a tainted compact output kills rows this
-        // stream serves from their ORIGINAL files under coverage frozen
-        // BEFORE the delete — a row appended and deleted inside this
-        // range would be emitted, violating the never-emitted guarantee.
-        // Deletes covering live originals (frozen later or covered at
-        // `e`) and deletes of purely pre-range compact outputs stay
-        // exact and keep flowing. The batch path silently falls back to
-        // the exact row diff; a stream cannot, so fail loudly.
-        if (tainted.nonEmpty) {
-          val prevShards = prevDeletes.map(_.path).toSet
-          val newShards = enDeletes.filterNot(d => prevShards(d.path))
-          if (newShards.exists(_.covers.keysIterator.exists(tainted)))
-            throw new IllegalStateException(
-              s"streaming read of $db.$table ($s, $e]: commit ${en.snapshotId} " +
-                "added delete files after an in-range compact swallowed " +
-                "emitted appends - frozen coverage cannot prove those rows' " +
-                "visibility; restart the stream from the current snapshot " +
-                "(or consume the batch db.t.changes diff for this range)")
-        }
-        prevEntry = en
-        prevDeletes = enDeletes
-      }
-      val added = emit.toSeq
-      // deletes covering emitted files merge READER-LEVEL (MorScanMerge);
-      // coverage comes from the END snapshot unless a compact froze it
-      // earlier
+      // The batch is the append delta of the commit-range walk
+      // (SnapshotCatalog.commitRange + appendDelta, the same fold
+      // readIncremental serves): the files each APPEND-family commit
+      // added — appends, WAP publish (the staged files surface there),
+      // fastForward, and the MoR family, whose churn is new delta files
+      // plus delete metadata. Row-preserving rewrites ("compact": compact
+      // / z-order / bin-pack) are NO-OPS: their outputs only re-home rows
+      // already accounted for, and in-range appends they swallowed still
+      // serve from their ORIGINAL write-once files (they survive on disk
+      // until expireSnapshots) under delete coverage FROZEN at the
+      // pre-compact snapshot — a mid-stream compaction is invisible to
+      // consumers. Emitted files otherwise merge under the END snapshot's
+      // deletes: a row appended and deleted inside ONE batch range is
+      // never emitted; a delete landing in a LATER range (or after an
+      // in-range compact re-homed the row) is skipped — the row was
+      // already served. The stream refuses loudly where the batch read
+      // falls back to the exact row diff: a commit that changes the
+      // visibility of EXISTING rows (overwrite, CoW DELETE/UPDATE,
+      // rollback, a dropped delete file) — an append tail cannot retract
+      // rows it already emitted — and a delete landing on the output of
+      // an in-range compact that swallowed emitted appends (frozen
+      // coverage cannot see it). A pure-append trigger parses only its
+      // commits' own manifest shards, never the inventory.
+      val (added, deletes) = cat.appendDelta(cat.commitRange(db, table,
+        resolveStreamStart(db, table, s, "streaming read"), e)).fold(
+        why => throw new IllegalStateException(
+          s"streaming read of $db.$table ($s, $e]: $why; restart the stream " +
+            "from the current snapshot (or consume the batch db.t.changes " +
+            "diff for this range)"),
+        identity)
       def covFor(rel: String): Seq[graft.catalog.DeleteFile] =
-        frozenCov.getOrElse(rel, toDeletes.filter(_.covers.contains(rel)))
+        deletes.filter(_.covers.contains(rel))
       val coveredRel = added.filter(f => covFor(f).nonEmpty).toSet
+      lazy val schema = tableSchema.getOrElse(cat.entryLog(db, table).last.schema)
       val root = java.nio.file.Paths.get(warehouse, db, table)
       val rootPrefix = root.toString + java.io.File.separator
       // PARTITIONED tables: each appended snapshot dir is hive-laid, so the
@@ -1760,7 +1667,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         val cleanParts: Array[InputPartition] =
           if (clean.isEmpty) Array.empty
           else {
-            val b = batchFor(opts, clean.map(f => root.resolve(f).toString))
+            val b = batchFor(opts, clean.map(f => root.resolve(f).toString), schema)
             // merged partitions stay columnar via selection vectors (r7),
             // so clean partitions keep the stock factory untouched and
             // columnar support is uniform either way
@@ -1772,7 +1679,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
           else {
             MorScanMerge.mergedScan(spark, s"$db.$table stream mor",
               Seq((new CaseInsensitiveStringMap(opts.asJava), dirty.map(f => root.resolve(f).toString))),
-              tableSchema.getOrElse(cat.entryLog(db, table).last.schema), Nil,
+              schema, Nil,
               prunedSchema, prunedSchema, rootPrefix, rel => MorFile(covFor(rel))).planInputPartitions()
           }
         cleanParts ++ dirtyParts
@@ -1796,9 +1703,13 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     *    of any type, and a replica table built by `applyCdcEpoch` can
     *    itself serve a changes stream (cascaded replication);
     *  - compact / z-order: no-ops (moved rows cancel);
-    *  - true rewrites (overwrite, CoW DML, rollback) refuse loudly —
-    *    their retractions are not enumerable from per-file metadata;
+    *  - commits the walk cannot enumerate (overwrite, CoW DML, rollback, a
+    *    dropped delete file) refuse loudly — their retractions and
+    *    resurrections are not enumerable from per-file metadata;
     *    consumers use the batch `db.t.changes` diff.
+    * The commits come from the one commit-range walk
+    * ([[SnapshotCatalog.commitRange]]), the same steps
+    * `changeSetsAcrossRange` folds for MV and index refreshes.
     * Offsets advance ONE published commit per trigger
     * (SupportsAdmissionControl), so batch boundaries ARE commit
     * boundaries and consumers get commit-ordered changes without an
@@ -1814,7 +1725,6 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     private case class ChgOffset(id: Long) extends Offset {
       override def json(): String = id.toString
     }
-    private def lineage = cat.mainLineage(db, table)
 
     override def initialOffset(): Offset =
       ChgOffset(Option(options.get("starting-snapshot-id")) match {
@@ -1853,7 +1763,8 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       val s = start.asInstanceOf[ChgOffset].id
       val trueHead = cat.currentSnapshotId(db, table)
       val head = availableNowCap.fold(trueHead)(c => math.min(trueHead, c))
-      val inRange = lineage.filter(e => e.snapshotId > s && e.snapshotId <= head)
+      val inRange = cat.mainLineage(db, table)
+        .filter(e => e.snapshotId > s && e.snapshotId <= head)
       if (inRange.isEmpty) start
       else ChgOffset(inRange.take(maxCommitsPerTrigger).last.snapshotId)
     }
@@ -1893,37 +1804,23 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
             new CaseInsensitiveStringMap((if (partitioned) Map("basePath" -> root.resolve(dir).toString)
               else Map.empty[String, String]).asJava) -> fs.map(f => root.resolve(f).toString)
           }, visibleSchema, Nil, out, out, rootPrefix, of, Some(tag)).planInputPartitions().toSeq
-      val inRange = lineage.filter(en => en.snapshotId > s && en.snapshotId <= e)
-      var prevSnap = resolveStreamStart(db, table, s, "changes stream")
-      var prevFiles = prevSnap.files.toSet
-      val parts = Seq.newBuilder[InputPartition]
-      for (en <- inRange) {
-        val snap = cat.snapshotAt(db, table, en.snapshotId)
-        val files = snap.files.toSet
-        val removed = prevFiles.diff(files)
-        if (removed.nonEmpty) {
-          require(snap.operation == "compact",
-            s"changes stream of $db.$table: commit ${en.snapshotId} " +
-              s"(${snap.operation}) rewrote existing rows - its retractions " +
-              "are not enumerable per-file; use the batch db.t.changes diff " +
-              "and restart the stream from the current snapshot")
-          // compact: moved rows cancel — nothing to emit
-        } else if (snap.operation != "compact") {
-          // pre-images: the rows alive at the parent that the commit's NEW
-          // position or equality delete files kill, read back from their
-          // (write-once) covered files
-          val prevShards = prevSnap.deleteFiles.map(_.path).toSet
-          val newShards = snap.deleteFiles.filterNot(d => prevShards(d.path))
-          val parent = prevSnap
-          parts ++= changeParts(newShards.flatMap(_.covers.keys).distinct.sorted, "delete",
-            rel => fileOf(parent, rel, parent.deleteFiles, Some(newShards)))
-          parts ++= changeParts(snap.files.filterNot(prevFiles), "insert",
-            rel => fileOf(snap, rel, Nil, None))
-        }
-        prevSnap = snap
-        prevFiles = files
-      }
-      parts.result().toArray
+      cat.commitRange(db, table, resolveStreamStart(db, table, s, "changes stream"), e)
+        .flatMap { st =>
+          st.kind match {
+            case CommitKind.NotEnumerable(why) =>
+              throw new IllegalStateException(s"changes stream of $db.$table: $why - " +
+                "its retractions are not enumerable per-file; use the batch " +
+                "db.t.changes diff and restart the stream from the current snapshot")
+            case CommitKind.Compact => Nil // moved rows cancel
+            case CommitKind.Additive =>
+              // pre-images: the rows alive at the parent that the commit's
+              // NEW position or equality delete files kill, read back from
+              // their (write-once) covered files
+              changeParts(st.newDeletes.flatMap(_.covers.keys).distinct.sorted, "delete",
+                rel => fileOf(st.parent, rel, st.parent.deleteFiles, Some(st.newDeletes))) ++
+                changeParts(st.added, "insert", rel => fileOf(st.snap, rel, Nil, None))
+          }
+        }.toArray
     }
 
     override def createReaderFactory(): PartitionReaderFactory = CarryingReaderFactory

@@ -9,8 +9,7 @@ import graft.catalog._
 /** The sharded snapshot log (format v2): pointer entries + per-snapshot
   * manifest shards. These tests pin the 100-TB commit-cost contract — an
   * append writes ONE shard holding exactly its added files and never
-  * rewrites history; rollback/evolve write no shard at all — plus the
-  * legacy (v1 monolithic) migration path.
+  * rewrites history; rollback/evolve write no shard at all.
   */
 class ManifestLogSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -84,38 +83,6 @@ class ManifestLogSpec extends AnyFunSuite {
     assert(ms(2) == Seq("m3.json"))
     assert(manifestFiles(cat, "db", "t", "m3.json") == s3.files)
     assert(cat.readAsOf("db", "t", 2L).count() == 1L) // history still readable
-  }
-
-  test("legacy v1 monolithic log reads transparently and migrates on first write") {
-    val cat = newCat()
-    // build a real table, then rewrite its log in the v1 shape (a bare
-    // array of full snapshots) exactly as rounds 1-3 persisted it
-    cat.createTable("db", "t", Seq((1L, "a")).toDF("id", "v").schema)
-    cat.append("db", "t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    cat.append("db", "t", Seq((3L, "c")).toDF("id", "v"))
-    val snaps = cat.snapshotList("db", "t")
-    val logP = snapDir(cat, "db", "t").resolve("log.json")
-    Files.writeString(logP, Json.writePretty(JArr(snaps.toVector.map(_.toJson))))
-    Files.list(snapDir(cat, "db", "t")).forEach { p =>
-      if (p.getFileName.toString.startsWith("m")) Files.delete(p)
-    }
-    SnapshotCatalog.purgeManifestCache(Paths.get(cat.warehouse))
-
-    // v1 reads work untouched
-    assert(cat.currentSnapshot("db", "t").files == snaps.last.files)
-    assert(cat.readAsOf("db", "t", 2L).count() == 2L)
-    assert(cat.snapshots("db", "t").count() == 3L)
-
-    // first write migrates: v2 log + one full shard per legacy snapshot
-    val s4 = cat.append("db", "t", Seq((4L, "d")).toDF("id", "v"))
-    val o = logObj(cat, "db", "t")
-    assert(o.long("format_version") == 2L)
-    val ms = entryManifests(o)
-    assert(ms(1) == Seq("m2.json") && ms(2) == Seq("m3.json"))
-    assert(ms(3) == Seq("m3.json", "m4.json")) // append reuses the migrated full shard
-    assert(manifestFiles(cat, "db", "t", "m3.json") == snaps.last.files)
-    assert(cat.currentSnapshot("db", "t").files == s4.files)
-    assert(cat.readAsOf("db", "t", 2L).count() == 2L)
   }
 
   test("expireSnapshots deletes shards no kept entry references") {

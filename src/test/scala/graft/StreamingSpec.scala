@@ -605,6 +605,85 @@ class StreamingSpec extends AnyFunSuite {
     assert(msg.contains("restart the stream"), msg)
   }
 
+  /** append {1,2} (2), MoR-delete 2 (3) and, once `beforeRollback` ran,
+    * roll back to 2 (4): the rollback resurrects row 2 without touching a
+    * data file. The table is `db.t` of catalog `name`. */
+  private def rollbackFixture(name: String)(beforeRollback: String => Unit): Unit = {
+    import graft.catalog.SnapshotCatalog
+    val wh = Files.createTempDirectory(s"graft_${name}_").toString
+    val cat = new SnapshotCatalog(spark, wh)
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    cat.createTable("db", "t", df.schema)
+    cat.append("db", "t", df)                     // 2
+    cat.deleteMoR("db", "t", col("id") === 2L)    // 3
+    spark.conf.set(s"spark.sql.catalog.$name", "graft.catalog.spark.SnapCatalogPlugin")
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)
+    beforeRollback(name)
+    cat.rollback("db", "t", 2L)                   // 4
+  }
+
+  test("append tail refuses a range that contains a rollback") {
+    val ckpt = Files.createTempDirectory("graft_rbt_ck_").toString
+    val out = Files.createTempDirectory("graft_rbt_out_").toString
+    var catName = ""
+    def drain(): Unit = {
+      val q = spark.readStream.option("starting-snapshot-id", "1")
+        .table(s"$catName.db.t")
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt).option("path", out)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    rollbackFixture("snaprbt") { n =>
+      catName = n
+      drain() // (1,3]: row 2 was deleted in range, never emitted
+      assert(spark.read.parquet(out).select("id").as[Long].collect().toSeq == Seq(1L))
+    }
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] { drain() }
+    val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
+    assert(msg.contains("rollback"), msg)
+    assert(msg.contains("restart the stream"), msg)
+  }
+
+  test("CDC stream refuses a range that contains a rollback and names the batch diff") {
+    rollbackFixture("snaprbc")(_ => ())
+    val q = spark.readStream.option("starting-snapshot-id", "3")
+      .table("snaprbc.db.t.changes")
+      .writeStream.format("memory").queryName("rbc_cdc").outputMode("append").start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try { q.processAllAvailable(); q.awaitTermination(10000) } finally q.stop()
+    }
+    val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
+    assert(msg.contains("rollback"), msg)
+    assert(msg.contains("db.t.changes"), msg)
+  }
+
+  test("an append-stream drain reads the pointer log a constant number of times in its commit count") {
+    import graft.catalog.SnapshotCatalog
+    import org.apache.spark.sql.streaming.Trigger
+    def readsFor(k: Int): Long = {
+      val wh = Files.createTempDirectory("graft_drainreads_").toString
+      val cat = new SnapshotCatalog(spark, wh)
+      cat.createTable("db", "g", Seq(0L).toDF("id").schema)
+      (1 to k).foreach(i => cat.append("db", "g", Seq(i.toLong).toDF("id")))
+      spark.conf.set(s"spark.sql.catalog.snapdr$k", "graft.catalog.spark.SnapCatalogPlugin")
+      spark.conf.set(s"spark.sql.catalog.snapdr$k.warehouse", wh)
+      val before = SnapshotCatalog.logReads.get()
+      val q = spark.readStream.option("starting-snapshot-id", "1")
+        .table(s"snapdr$k.db.g")
+        .writeStream.format("memory").queryName(s"drain_reads_$k")
+        .trigger(Trigger.AvailableNow()).outputMode("append").start()
+      try assert(q.awaitTermination(120000), "AvailableNow query did not self-terminate")
+      finally q.stop()
+      val n = SnapshotCatalog.logReads.get() - before
+      assert(spark.table(s"drain_reads_$k").count() == k)
+      info(s"k=$k: $n pointer-log reads")
+      n
+    }
+    val (r4, r16) = (readsFor(4), readsFor(16))
+    assert(r16 <= r4, s"log reads grew with the commit count: k=4 -> $r4, k=16 -> $r16")
+  }
+
   test("resume from an expired snapshot surfaces an actionable error; re-checkpoint recovers") {
     import graft.catalog.SnapshotCatalog
     val wh = Files.createTempDirectory("graft_exp_").toString
