@@ -37,6 +37,7 @@ final case class Snapshot(
 
   def schema: StructType = StructType.fromDDL(schemaDdl)
   def recordCount: Long = summary.get("record_count").map(_.toLong).getOrElse(-1L)
+  def addedRecords: Long = summary.get("added_records").map(_.toLong).getOrElse(-1L)
 }
 
 /** One DELETE file (Iceberg v2 merge-on-read), either flavor:
@@ -4706,13 +4707,6 @@ final class SnapshotCatalog(
     }))
   }
 
-  /** Parser-level harvest of the base TABLES a view body references in
-    * THIS catalog: (db, table) pairs that exist as tables here —
-    * INCLUDING relations inside subquery expressions
-    * (`collectWithSubqueries`), so `WHERE x > (SELECT max(y) FROM u)`
-    * pins `u` too. A referenced graft VIEW disqualifies nothing at
-    * creation but forces full refresh (its own bases are invisible to
-    * the high-water map). */
   /** Identifier key of a body relation reference, db-defaulted. */
   private def relKeyOf(db: String,
       u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation)
@@ -4731,15 +4725,87 @@ final class SnapshotCatalog(
       throw new NoSuchElementException(s"no such view: $db.$name"))
     require(docMeta.properties.contains("materialized"),
       s"$db.$name is not a materialized view")
-    baseTablesOf(db, docMeta.currentVersion.sql)
+    baseTablesOf(db, spark.sessionState.sqlParser.parsePlan(docMeta.currentVersion.sql))
   }
 
-  private def baseTablesOf(db: String, sql: String): Seq[(String, String)] = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sql)
+  /** Parser-level harvest of the base TABLES a view body references in
+    * THIS catalog: (db, table) pairs that exist as tables here —
+    * INCLUDING relations inside subquery expressions
+    * (`collectWithSubqueries`), so `WHERE x > (SELECT max(y) FROM u)`
+    * pins `u` too. A referenced graft VIEW disqualifies nothing at
+    * creation but forces full refresh (its own bases are invisible to
+    * the high-water map). */
+  private def baseTablesOf(db: String,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[(String, String)] =
     plan.collectWithSubqueries {
       case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
         relKeyOf(db, u)
     }.flatten.distinct.filter { case (d, t) => tableExists(d, t) }
+
+  /** `p` without a top-level ORDER BY (tables are unordered; every
+    * materialization and refresh path discards it). */
+  private def stripSort(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = p match {
+    case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s.child
+    case other => other
+  }
+
+  /** Is `p` built of projections, filters and aliases over one bare
+    * relation only? (Node types only: aggregate/window EXPRESSIONS are
+    * the callers' check.) */
+  private def projectFilterOnly(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, SubqueryAlias}
+    !p.exists {
+      case _: Project | _: Filter | _: SubqueryAlias | _: UnresolvedRelation => false
+      case _ => true
+    }
+  }
+
+  /** The base a project/filter-only `p` reads ([[projectFilterOnly]]: its
+    * one leaf is the relation). */
+  private def projectFilterBase(db: String,
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[(String, String)] =
+    if (!projectFilterOnly(p)) None
+    else p.collectFirst {
+      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation => relKeyOf(db, u)
+    }.flatten
+
+  /** `q` under its projections, filters and aliases. */
+  private def peelProjectFilter(q: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, SubqueryAlias}
+    q match {
+      case Filter(_, c) => peelProjectFilter(c)
+      case Project(_, c) => peelProjectFilter(c)
+      case SubqueryAlias(_, c) => peelProjectFilter(c)
+      case other => other
+    }
+  }
+
+  /** A join side: aliases over exactly one base relation, with the
+    * attribute qualifiers it accepts (the alias chain plus the table
+    * name). */
+  private def joinSide(db: String, q: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[((String, String), Set[String])] = q match {
+    case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(ident, c) =>
+      joinSide(db, c).map { case (k, qs) => (k, qs + ident.name) }
+    case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
+      relKeyOf(db, u).map(k => (k, Set(k._2)))
+    case _ => None
+  }
+
+  /** A base's current column names (empty if it cannot be read). */
+  private def columnsOf(k: (String, String)): Set[String] =
+    scala.util.Try(currentSnapshot(k._1, k._2).schema.fieldNames.toSet)
+      .getOrElse(Set.empty)
+
+  /** The conjuncts of an ON clause. */
+  private def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
   }
 
   /** Is `p` a project/filter tree over exactly ONE INNER join of exactly
@@ -4793,23 +4859,10 @@ final class SnapshotCatalog(
   private def outerJoinShape(db: String,
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Option[((String, String), (String, String), Seq[(String, String)], Boolean)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.EqualTo
     import org.apache.spark.sql.catalyst.plans.LeftOuter
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, SubqueryAlias}
-    def peel(q: LogicalPlan): LogicalPlan = q match {
-      case Filter(_, c) => peel(c)
-      case Project(_, c) => peel(c)
-      case SubqueryAlias(_, c) => peel(c)
-      case other => other
-    }
-    // a side: aliases over exactly one base relation; the accepted
-    // attribute qualifiers are the alias chain plus the table name
-    def side(q: LogicalPlan): Option[((String, String), Set[String])] = q match {
-      case SubqueryAlias(ident, c) => side(c).map { case (k, qs) => (k, qs + ident.name) }
-      case u: UnresolvedRelation => relKeyOf(db, u).map(k => (k, Set(k._2)))
-      case _ => None
-    }
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     // RIGHT OUTER is the same relational expression with sides swapped —
     // normalize so `dim RIGHT JOIN fact` bodies refresh like LEFT ones.
     // FULL OUTER is symmetric (no normalization needed). LEFT SEMI and
@@ -4819,7 +4872,7 @@ final class SnapshotCatalog(
     // rows only within the churn's key set — exactly the affected-key
     // bracket. Null-keyed left rows never match, so an ANTI keeps them
     // always and a SEMI never, both constant under any right churn.
-    val (leftPlan, rightPlan, condOpt, isFull) = peel(p) match {
+    val (leftPlan, rightPlan, condOpt, isFull) = peelProjectFilter(p) match {
       case j: Join if j.joinType == LeftOuter ||
           j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi ||
           j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti =>
@@ -4834,15 +4887,12 @@ final class SnapshotCatalog(
     }
     {
         for {
-          (lk, lq) <- side(leftPlan)
-          (rk, rq) <- side(rightPlan)
+          (lk, lq) <- joinSide(db, leftPlan)
+          (rk, rq) <- joinSide(db, rightPlan)
           if lk != rk && (lq & rq).isEmpty
           cond <- condOpt
           pairs <- {
-            def colsOf(k: (String, String)): Set[String] =
-              scala.util.Try(currentSnapshot(k._1, k._2).schema.fieldNames.toSet)
-                .getOrElse(Set.empty)
-            val (lCols, rCols) = (colsOf(lk), colsOf(rk))
+            val (lCols, rCols) = (columnsOf(lk), columnsOf(rk))
             // true = left side; unqualified names resolve by unambiguous
             // schema membership
             def sideOf(a: UnresolvedAttribute): Option[Boolean] = a.nameParts match {
@@ -4856,11 +4906,7 @@ final class SnapshotCatalog(
                 }
               case _ => None
             }
-            def conj(e: Expression): Seq[Expression] = e match {
-              case org.apache.spark.sql.catalyst.expressions.And(l, r) => conj(l) ++ conj(r)
-              case other => Seq(other)
-            }
-            val ps = conj(cond).map {
+            val ps = conjuncts(cond).map {
               case EqualTo(x: UnresolvedAttribute, y: UnresolvedAttribute) =>
                 (sideOf(x), sideOf(y)) match {
                   case (Some(true), Some(false)) =>
@@ -4897,21 +4943,10 @@ final class SnapshotCatalog(
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : Option[(Seq[(String, String)],
           Seq[((String, String), Seq[(String, String)])])] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression}
     import org.apache.spark.sql.catalyst.plans.LeftOuter
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project, SubqueryAlias}
-    def peel(q: LogicalPlan): LogicalPlan = q match {
-      case Filter(_, c) => peel(c)
-      case Project(_, c) => peel(c)
-      case SubqueryAlias(_, c) => peel(c)
-      case other => other
-    }
-    def side(q: LogicalPlan): Option[((String, String), Set[String])] = q match {
-      case SubqueryAlias(ident, c) => side(c).map { case (k, qs) => (k, qs + ident.name) }
-      case u: UnresolvedRelation => relKeyOf(db, u).map(k => (k, Set(k._2)))
-      case _ => None
-    }
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     // walk the left spine, collecting (dim side, ON cond) outermost-first.
     // INNER joins are admitted alongside LEFT (r13: the mixed star —
     // `fact JOIN dim1 LEFT JOIN dim2`): the per-dim bracket's
@@ -4927,12 +4962,12 @@ final class SnapshotCatalog(
         if (j.joinType == LeftOuter) sawOuter = true
         for {
           (head, inner) <- spine(j.left)
-          d <- side(j.right)
+          d <- joinSide(db, j.right)
           c <- j.condition
         } yield (head, inner :+ (d, c))
-      case other => side(other).map(s => (s, Nil))
+      case other => joinSide(db, other).map(s => (s, Nil))
     }
-    val (head, joins) = spine(peel(p)).getOrElse(return None)
+    val (head, joins) = spine(peelProjectFilter(p)).getOrElse(return None)
     if (joins.length < 2) return None // 2-base stays in outerJoinShape's lane
     if (!sawOuter) return None // pure-inner: the multilinear telescope's lane
     val sides: Seq[((String, String), Set[String])] = head +: joins.map(_._1)
@@ -4940,29 +4975,22 @@ final class SnapshotCatalog(
     if (bases.length > 8 || bases.distinct.length != bases.length) return None
     if (sides.map(_._2).reduce(_ ++ _).size != sides.map(_._2.size).sum)
       return None // ambiguous qualifiers across sides
-    def colsOf(k: (String, String)): Set[String] =
-      scala.util.Try(currentSnapshot(k._1, k._2).schema.fieldNames.toSet)
-        .getOrElse(Set.empty)
-    def conj(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) => conj(l) ++ conj(r)
-      case other => Seq(other)
-    }
     val dims = joins.zipWithIndex.map { case (((dimKey, dimQs), cond), i) =>
       // resolution universe for join i: the head plus dims 0..i
       val earlier = sides.take(i + 1)
       def ownerOf(a: UnresolvedAttribute): Option[(String, String)] = a.nameParts match {
         case Seq(q, _) => earlier.find(_._2(q)).map(_._1)
         case Seq(c) =>
-          val owners = earlier.filter(s => colsOf(s._1)(c)).map(_._1)
-          if (owners.length == 1 && !colsOf(dimKey)(c)) Some(owners.head) else None
+          val owners = earlier.filter(s => columnsOf(s._1)(c)).map(_._1)
+          if (owners.length == 1 && !columnsOf(dimKey)(c)) Some(owners.head) else None
         case _ => None
       }
       def isDim(a: UnresolvedAttribute): Boolean = a.nameParts match {
         case Seq(q, _) => dimQs(q)
-        case Seq(c) => colsOf(dimKey)(c) && !earlier.exists(s => colsOf(s._1)(c))
+        case Seq(c) => columnsOf(dimKey)(c) && !earlier.exists(s => columnsOf(s._1)(c))
         case _ => false
       }
-      val ps = conj(cond).map {
+      val ps = conjuncts(cond).map {
         case EqualTo(x: UnresolvedAttribute, y: UnresolvedAttribute) =>
           if (isDim(y)) ownerOf(x).map(o => (o, (x.nameParts.last, y.nameParts.last)))
           else if (isDim(x)) ownerOf(y).map(o => (o, (y.nameParts.last, x.nameParts.last)))
@@ -4984,24 +5012,13 @@ final class SnapshotCatalog(
     * substitute simultaneously and the partial machinery folds them. */
   private def unionPfShape(db: String,
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, Union}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, Union}
     def strip(q: LogicalPlan): LogicalPlan = q match {
       case SubqueryAlias(_, c) => strip(c)
       case other => other
     }
-    def pfSingle(q: LogicalPlan): Boolean = {
-      val ok = q.collect {
-        case n => n match {
-          case _: Project | _: Filter | _: SubqueryAlias | _: UnresolvedRelation => true
-          case _ => false
-        }
-      }.forall(identity)
-      ok && q.collect { case u: UnresolvedRelation => relKeyOf(db, u) }
-        .flatten.length == 1
-    }
     strip(p) match {
-      case u: Union => u.children.forall(pfSingle)
+      case u: Union => u.children.forall(projectFilterBase(db, _).isDefined)
       case _ => false
     }
   }
@@ -5011,10 +5028,6 @@ final class SnapshotCatalog(
     * match the SQL surface) — materialization and refresh both run
     * against exactly the snapshots the high-water map records, so a
     * commit racing the refresh query can never be half-seen. */
-  private def pinnedBody(db: String, sql: String,
-      pins: Map[(String, String), Long]): org.apache.spark.sql.DataFrame =
-    pinnedBodyPlan(db, spark.sessionState.sqlParser.parsePlan(sql), pins)
-
   private def pinnedBodyPlan(db: String,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       pins: Map[(String, String), Long]): org.apache.spark.sql.DataFrame = {
@@ -5025,12 +5038,7 @@ final class SnapshotCatalog(
     // refresh could be half-seen through the subquery (ADVICE r8)
     val swapped = plan.transformUpWithSubqueries {
       case u: UnresolvedRelation =>
-        val dt = u.multipartIdentifier match {
-          case Seq(d, n) => Some((d, n))
-          case Seq(_, d, n) => Some((d, n))
-          case Seq(n) => Some((db, n))
-          case _ => None
-        }
+        val dt = relKeyOf(db, u)
         dt.flatMap(k => pins.get(k)) match {
           case Some(pin) =>
             val (d, t) = dt.get
@@ -5054,7 +5062,8 @@ final class SnapshotCatalog(
   def createMaterializedView(db: String, name: String, sql: String,
       replace: Boolean = false,
       partitionBy: Seq[String] = Seq.empty): ViewMeta = withViewLock(db, name) {
-    val bases = baseTablesOf(db, sql)
+    val body = spark.sessionState.sqlParser.parsePlan(sql)
+    val bases = baseTablesOf(db, body)
     require(bases.nonEmpty,
       s"materialized view $db.$name references no table of this catalog")
     val pins = bases.map { case (d, t) => (d, t) -> currentSnapshotId(d, t) }.toMap
@@ -5065,16 +5074,16 @@ final class SnapshotCatalog(
     // incrementally refreshable ([[augmentedAggPlan]]); the view's
     // recorded schema (and every SQL read through the redirect) stays
     // the visible outputs only
-    val shapeOpt = aggIncrementalShape(db, sql).filter(_.retractable)
+    val shapeOpt = aggIncrementalShape(db, body).filter(_.retractable)
     val out0 = shapeOpt match {
-      case Some(sh) => pinnedBodyPlan(db, augmentedAggPlan(sql, sh), pins)
-      case None => pinnedBody(db, sql, pins)
+      case Some(sh) => pinnedBodyPlan(db, augmentedAggPlan(body, sh), pins)
+      case None => pinnedBodyPlan(db, body, pins)
     }
     // a body whose own outputs collide with the partial namespace cannot
     // augment — fall back to the plain materialization (full refreshes)
     val augOk = shapeOpt.isDefined &&
       out0.schema.fieldNames.distinct.length == out0.schema.fieldNames.length
-    val out = if (shapeOpt.isDefined && !augOk) pinnedBody(db, sql, pins) else out0
+    val out = if (shapeOpt.isDefined && !augOk) pinnedBodyPlan(db, body, pins) else out0
     val partials = out.schema.fieldNames.filter(_.startsWith("__mv_")).toSeq
     val visibleOut = if (partials.isEmpty) out else out.drop(partials: _*)
     // PARTITIONED BACKING: hive-lay the backing by visible output
@@ -5106,7 +5115,7 @@ final class SnapshotCatalog(
           .values.flatMap { ps =>
             val lead = ps.map(_._1).min
             val t = mvDvTableName(name, lead)
-            val frame = pinnedBodyPlan(db, distinctSidecarPlan(sql, sh, lead), pins)
+            val frame = pinnedBodyPlan(db, distinctSidecarPlan(body, sh, lead), pins)
             // a group key colliding with the sidecar's own columns makes
             // the state unaddressable — skip (refreshes stay full)
             if (frame.schema.fieldNames.distinct.length !=
@@ -5121,7 +5130,7 @@ final class SnapshotCatalog(
     }
     val props = Map("materialized" -> mvT) ++ dvProps ++
       pins.map { case ((d, t), id) => s"mv.base.$d.$t" -> id.toString }
-    // analysis already happened through pinnedBody (pinned form);
+    // analysis already happened through pinnedBodyPlan (pinned form);
     // createView records its derived schema and does the cycle walk
     createView(db, name, sql, Seq.empty, props, replace,
       presetSchema = Some(visibleOut.schema))
@@ -5177,7 +5186,7 @@ final class SnapshotCatalog(
     * self-maintainable under deletes: merged sums go NULL exactly when
     * the merged non-null count hits zero, avg recomputes as s/c, and a
     * group whose `__mv_n` reaches zero is deleted from the backing. */
-  private def augmentedAggPlan(sql: String, shape: AggShape)
+  private def augmentedAggPlan(parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, shape: AggShape)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, NamedExpression}
@@ -5211,7 +5220,7 @@ final class SnapshotCatalog(
       case s: Sort => s.copy(child = aug(s.child))
       case other => other
     }
-    aug(spark.sessionState.sqlParser.parsePlan(sql))
+    aug(parsed)
   }
 
   /** Sidecar table name for the DISTINCT aggregate at output position
@@ -5230,18 +5239,15 @@ final class SnapshotCatalog(
     * `avg(DISTINCT x)` = avg(value). Sidecar size is O(distinct
     * (group, value) pairs) — the irreducible auxiliary state for exact
     * distinct maintenance; deltas fold in churn-sized. */
-  private def distinctSidecarPlan(sql: String, shape: AggShape, pos: Int)
+  private def distinctSidecarPlan(parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, shape: AggShape, pos: Int)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     import org.apache.spark.sql.catalyst.expressions.{Alias, IsNotNull, Literal, NamedExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Project, Sort}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Project}
     val arg = shape.aggFns(pos).arguments.head
     val cnt = Alias(UnresolvedFunction(Seq("count"), Seq(Literal(1)),
       isDistinct = false), MvPartialRows)()
-    (spark.sessionState.sqlParser.parsePlan(sql) match {
-      case s: Sort => s.child
-      case p => p
-    }) match {
+    stripSort(parsed) match {
       case a: Aggregate =>
         val keyOuts: Seq[NamedExpression] =
           shape.keyPos.map(i => a.aggregateExpressions(i))
@@ -5267,19 +5273,12 @@ final class SnapshotCatalog(
     * `avg` et al. refuse — they are not self-maintainable without
     * decomposition, and `full` stays correct). A top-level ORDER BY is
     * ignored (tables are unordered; the full path discards it too). */
-  private def aggIncrementalShape(db: String, sql: String): Option[AggShape] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
+  private def aggIncrementalShape(db: String, parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[AggShape] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction}
     import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, NamedExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, LogicalPlan, Project, Sort, SubqueryAlias}
-    val parsed = spark.sessionState.sqlParser.parsePlan(sql)
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Project}
     if (hasSubqueryExpr(parsed)) return None
-    def pfOnly(p: LogicalPlan): Boolean = p.collect {
-      case n => n match {
-        case _: Project | _: Filter | _: SubqueryAlias | _: UnresolvedRelation => true
-        case _ => false
-      }
-    }.forall(identity)
-    val top = parsed match { case s: Sort => s.child; case p => p }
+    val top = stripSort(parsed)
     // count/sum/min/max merge directly; avg joins via the sum+count
     // partial decomposition ([[augmentedAggPlan]])
     val mergeable = Set("count", "sum", "min", "max", "avg")
@@ -5293,14 +5292,14 @@ final class SnapshotCatalog(
       // (the single-base family) or over one INNER join of two bases
       // (the fact-dim rollup — its delta is the join delta, merged by
       // the identical partial machinery). The CHILD must additionally be
-      // free of aggregate/window EXPRESSIONS: pfOnly checks node types
+      // free of aggregate/window EXPRESSIONS: projectFilterOnly checks node types
       // only, and a window function inside a FROM-subquery's Project (no
       // Window node until analysis) makes the body non-row-local —
       // Q(delta) is not the delta of Q, so an incremental merge answers
       // WRONG (found by the windowed-body reproducer; every agg mode
       // gates on this shape, so one refusal here covers them all)
       case Aggregate(groupExprs, aggExprs, child, _)
-          if (pfOnly(child) || innerJoinShape(db, child).isDefined ||
+          if (projectFilterOnly(child) || innerJoinShape(db, child).isDefined ||
             unionPfShape(db, child) || outerJoinShape(db, child).isDefined ||
             outerChainShape(db, child).isDefined) &&
             !hasAggOrWindowExpr(child) =>
@@ -5345,7 +5344,7 @@ final class SnapshotCatalog(
         // upsert key), and there must be something to merge
         if (shape.keyPos.size == keyNameSeq.length && shape.aggPos.nonEmpty) Some(shape)
         else None
-      case Distinct(child) if pfOnly(child) =>
+      case Distinct(child) if projectFilterOnly(child) =>
         // SELECT DISTINCT …: every column is a key, nothing merges — the
         // delta's distinct rows upsert keyed on ALL columns (idempotent)
         child match {
@@ -5354,7 +5353,7 @@ final class SnapshotCatalog(
             Some(AggShape((0 until ps.length).toList, Seq.empty, Map.empty))
           case _ => None // star width is unknowable pre-analysis
         }
-      case Project(ps, child) if pfOnly(child) && ps.nonEmpty =>
+      case Project(ps, child) if projectFilterOnly(child) && ps.nonEmpty =>
         // GLOBAL aggregate: `SELECT count(*), sum(v) FROM t` parses as a
         // Project of aggregate functions (the analyzer inserts the
         // Aggregate). Every output must be a mergeable aggregate; the
@@ -5420,13 +5419,12 @@ final class SnapshotCatalog(
     * in the visible output, `row_number` (ties under a non-total ORDER
     * BY are arbitrary-but-valid, exactly as in SQL), a literal rank
     * bound. Anything else stays full. */
-  private def topKShape(db: String, sql: String): Option[TopKShape] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
+  private def topKShape(parsed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[TopKShape] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
     import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Expression, LessThan, LessThanOrEqual, Literal, NamedExpression, NullsFirst, SortOrder, WindowExpression, WindowSpecDefinition}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort, SubqueryAlias}
-    val parsed = spark.sessionState.sqlParser.parsePlan(sql)
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
     if (hasSubqueryExpr(parsed)) return None
-    val top = parsed match { case s: Sort => s.child; case p => p }
+    val top = stripSort(parsed)
     // outer projection over the rank filter over the windowed subquery
     val (outerList, cond, sub) = top match {
       case Project(ps, Filter(c, s)) => (Some(ps), c, s)
@@ -5442,14 +5440,7 @@ final class SnapshotCatalog(
       case _ => return None
     }
     // the base: project/filter over exactly one relation
-    val pfOk = innerChild.collect {
-      case n => n match {
-        case _: Project | _: Filter | _: SubqueryAlias | _: UnresolvedRelation => true
-        case _ => false
-      }
-    }.forall(identity)
-    if (!pfOk || innerChild.collect { case u: UnresolvedRelation => u }.length != 1)
-      return None
+    if (!projectFilterOnly(innerChild)) return None
     if (hasAggOrWindowExpr(innerChild)) return None
     // exactly one window entry: row_number() OVER (PARTITION BY keys
     // ORDER BY sorts) AS rn; every other inner entry a plain attr/alias
@@ -5562,6 +5553,8 @@ final class SnapshotCatalog(
     * Either way the backing table lands snapshot-consistent with the new
     * high-waters (bases pinned during the query). */
   def refreshMaterializedView(db: String, name: String): (String, Long) = withViewLock(db, name) {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, Union}
     // the WHOLE refresh holds the view lock: two concurrent refreshes
     // would otherwise both read the same high-water and double-append
     // the same incremental delta
@@ -5570,178 +5563,141 @@ final class SnapshotCatalog(
     val mvT = docMeta.properties.getOrElse("materialized",
       throw new IllegalArgumentException(s"$db.$name is not a materialized view"))
     val sql = docMeta.currentVersion.sql
-    val bases = baseTablesOf(db, sql)
+    val body = spark.sessionState.sqlParser.parsePlan(sql)
+    val top = stripSort(body)
+    val bases = baseTablesOf(db, body)
     val from = bases.map { case (d, t) =>
       (d, t) -> docMeta.properties.get(s"mv.base.$d.$t").map(_.toLong) }.toMap
     val cur = bases.map { case (d, t) => (d, t) -> currentSnapshotId(d, t) }.toMap
     if (bases.forall(b => from(b).contains(cur(b)))) return ("fresh", 0L)
 
-    def projectFilterOnly: Boolean = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-      import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, SubqueryAlias}
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      // a subquery expression disqualifies incremental outright: the
-      // delta-substitution identity `Q(old ∪ delta) = Q(old) ∪ Q(delta)`
-      // only holds for row-local bodies, and a subquery's result can
-      // change when ONLY its own base moved (ADVICE r8 — force full).
-      // So does an aggregate/window EXPRESSION: a global aggregate or a
-      // windowed select parses as a plain Project (no Aggregate/Window
-      // node until analysis), and appending its delta result would be
-      // wrong — those route to incremental_agg or full
-      !hasSubqueryExpr(plan) && !hasAggOrWindowExpr(plan) && plan.collect {
-        case p => p match {
-          case _: Project | _: Filter | _: SubqueryAlias | _: UnresolvedRelation => true
-          case _ => false
-        }
-      }.forall(identity)
+    type Base = (String, String)
+    /** `x` at snapshot `id`, layout columns hidden (the SQL surface). */
+    def at(x: Base, id: Long): DataFrame =
+      readAsOf(x._1, x._2, id).drop(meta(x._1, x._2).hiddenCols.toSeq: _*)
+    /** `x`'s rows added across the refresh range ([[readIncremental]]). */
+    def increment(x: Base): DataFrame =
+      readIncremental(x._1, x._2, from(x).get, cur(x))
+        .drop(meta(x._1, x._2).hiddenCols.toSeq: _*)
+
+    // a subquery expression disqualifies incremental outright: the
+    // delta-substitution identity `Q(old ∪ delta) = Q(old) ∪ Q(delta)`
+    // only holds for row-local bodies, and a subquery's result can
+    // change when ONLY its own base moved (ADVICE r8 — force full).
+    // So does an aggregate/window EXPRESSION: a global aggregate or a
+    // windowed select parses as a plain Project (no Aggregate/Window
+    // node until analysis), and appending its delta result would be
+    // wrong — those route to incremental_agg or full
+    val noSubquery = !hasSubqueryExpr(body)
+    val rowLocal = noSubquery && !hasAggOrWindowExpr(body)
+    val pfBody = rowLocal && projectFilterOnly(body)
+    // the input of a GROUP BY body: the multi-base aggregate modes
+    // classify it
+    val aggChild = if (!noSubquery) None else top match {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => Some(a.child)
+      case _ => None
     }
+    // AGGREGATE-over-UNION-ALL body ([[unionPfShape]] under the Aggregate)
+    val unionAggBody = aggChild.exists(unionPfShape(db, _))
     val appendOnlyOps = Set("append", "compact", "rewrite_manifests",
       "rebuild_blooms", "analyze_ndv", "analyze_histogram")
-    def appendOnlyRange(d: String, t: String, lo: Long, hi: Long): Boolean =
-      mainLineage(d, t).filter(e => e.snapshotId > lo && e.snapshotId <= hi)
-        .forall(e => appendOnlyOps(e.operation))
+    // each base's range is classified ONCE per refresh: the mode gates
+    // and the delta extraction all ask, and each answer walks the
+    // pointer log
+    val appendOnlyMemo = scala.collection.mutable.Map.empty[Base, Boolean]
+    def appendOnlyRange(x: Base): Boolean = appendOnlyMemo.getOrElseUpdate(x,
+      mainLineage(x._1, x._2).filter(e => e.snapshotId > from(x).get && e.snapshotId <= cur(x))
+        .forall(e => appendOnlyOps(e.operation)))
 
     /** UNION ALL of project/filter arms, each over exactly ONE base
       * relation (bases may repeat across arms) — the multi-source
       * ingestion shape. Row-local per arm, so the body distributes over
       * each arm's delta: `Q(∪ armᵢ(Aᵢ + ΔAᵢ)) = Q(old) ∪ (∪ armᵢ(ΔAᵢ))`
-      * under append-only ranges. Returns each arm with its base key. */
-    def unionArms: Option[Seq[((String, String),
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]] = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-      import org.apache.spark.sql.catalyst.plans.logical.{Distinct, Filter, LogicalPlan, Project, Sort, SubqueryAlias, Union}
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      if (hasSubqueryExpr(plan) || hasAggOrWindowExpr(plan)) return None
-      def armOf(p: LogicalPlan): Option[((String, String), LogicalPlan)] = {
-        val ok = p.collect {
-          case n => n match {
-            case _: Project | _: Filter | _: SubqueryAlias | _: UnresolvedRelation => true
-            case _ => false
-          }
-        }.forall(identity)
-        val rels = p.collect {
-          case u: UnresolvedRelation => relKeyOf(db, u)
-        }.flatten
-        if (ok && rels.length == 1) Some((rels.head, p)) else None
-      }
-      (plan match { case s: Sort => s.child; case p => p }) match {
-        // UNION DISTINCT parses as Distinct(Union) — dedup across arms
-        // is NOT row-local (a delta row may already exist), stays full
-        case _: Distinct => None
-        case u: Union =>
-          val arms = u.children.map(armOf)
-          if (arms.forall(_.isDefined)) Some(arms.map(_.get)) else None
-        case _ => None
-      }
+      * under append-only ranges. Returns each arm with its base key.
+      * (UNION DISTINCT parses as Distinct(Union) — dedup across arms is
+      * NOT row-local, a delta row may already exist — and stays full.) */
+    def unionArms: Option[Seq[(Base, LogicalPlan)]] = top match {
+      case u: Union if rowLocal =>
+        val arms = u.children.map(a => projectFilterBase(db, a).map(_ -> a))
+        if (arms.forall(_.isDefined)) Some(arms.flatten) else None
+      case _ => None
     }
 
-    /** The body (or an augmented plan) with each listed base relation
-      * swapped for its replacement frame — shared by every incremental
-      * mode (single-base modes pass one entry; the join mode passes
-      * both sides). */
-    def bodyOverBases(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        repl: Map[(String, String), DataFrame]): DataFrame = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-      import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
-      // WithSubqueries for defense in depth — every incremental mode
-      // refuses subquery bodies, so this never fires on one
-      val swapped = plan.transformUpWithSubqueries {
-        // only the BASE relations swap (a temp view or function table
-        // reference elsewhere in the body must stay what it is)
+    /** `plan` with each listed base relation swapped for its frame — the
+      * one substitution every incremental mode evaluates through. Only
+      * the BASE relations swap (a temp view or function table reference
+      * elsewhere in the body must stay what it is); WithSubqueries for
+      * defense in depth — every incremental mode refuses subquery
+      * bodies, so it never fires on one. */
+    def substBases(plan: LogicalPlan, repl: Map[Base, DataFrame]): LogicalPlan =
+      plan.transformUpWithSubqueries {
         case u: UnresolvedRelation if relKeyOf(db, u).exists(repl.contains) =>
           val k = relKeyOf(db, u).get
           SubqueryAlias(Seq(k._1, k._2), repl(k).queryExecution.analyzed)
       }
-      org.apache.spark.sql.GraftColumnBridge.ofRows(spark, swapped)
-    }
-    def bodyOver(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        rows: DataFrame): DataFrame = bodyOverBases(plan, Map(bases.head -> rows))
-
-    /** N-BASE INNER-JOIN body shape (no aggregates/windows/subqueries)
-      * — see [[innerJoinShape]]. */
-    def joinBodyBases: Option[Seq[(String, String)]] = {
-      import org.apache.spark.sql.catalyst.plans.logical.Sort
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      if (hasSubqueryExpr(plan) || hasAggOrWindowExpr(plan)) return None
-      innerJoinShape(db, plan match { case s: Sort => s.child; case p => p })
-    }
-
-    /** AGGREGATE-over-INNER-JOIN body: `GROUP BY` over one inner-join
-      * FOREST of the N distinct bases — the star rollup MV. The
-      * aggregate's INPUT delta is the join delta (the N-term telescope
-      * of [[joinAggOver]]), so the partial-merge machinery applies
-      * unchanged. */
-    def joinAggBodyOk: Boolean = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Sort}
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      if (hasSubqueryExpr(plan)) return false
-      (plan match { case s: Sort => s.child; case p => p }) match {
-        case Aggregate(_, _, child, _) =>
-          innerJoinShape(db, child).exists(_.toSet == bases.toSet)
-        case _ => false
-      }
+    def bodyOverBases(plan: LogicalPlan, repl: Map[Base, DataFrame]): DataFrame =
+      org.apache.spark.sql.GraftColumnBridge.ofRows(spark, substBases(plan, repl))
+    def bodyOver(plan: LogicalPlan, rows: DataFrame): DataFrame =
+      bodyOverBases(plan, Map(bases.head -> rows))
+    // null-safe OR of one conjunction per key row: a literal predicate
+    // that pushes into the scans and rides their footer-stat file skipping
+    def keyPredicate(cols: Seq[String], rows: Array[Row]): Column =
+      rows.map(r => cols.indices.map(j => col(s"`${cols(j)}`") <=> lit(r.get(j)))
+        .reduce(_ && _)).reduce(_ || _)
+    /** The single base at `cur`, restricted to the rows whose `keyCols`
+      * null-safely match a row of `keys`; `few` is `keys`' first 65 rows.
+      * A few keys (at most 64, the common shape) ride the exact key
+      * predicate, more a semi-join (one pass, still key-bounded rows). */
+    def baseAtKeys(keyCols: Seq[String], keys: DataFrame, few: Array[Row]): DataFrame = {
+      val (d, t) = bases.head
+      (if (few.length > 64 || few.isEmpty) None
+      else scala.util.Try(readWhere(d, t, cur(bases.head), keyPredicate(keyCols, few))).toOption)
+        .getOrElse {
+          val aff = keys.toDF(keyCols.map(k => s"__a_$k"): _*)
+          val base0 = readAsOf(d, t, cur(bases.head))
+          base0.join(aff, keyCols.map(k =>
+            base0(s"`$k`") <=> aff(s"`__a_$k`")).reduce(_ && _), "left_semi")
+        }.drop(meta(d, t).hiddenCols.toSeq: _*)
     }
 
-    /** The AUGMENTED aggregate evaluated over JOIN-DELTA terms — the
-      * MULTILINEAR telescope (r13, generalizing the two-base bilinear
-      * identity): with bases ordered b_1..b_n,
-      *   Q(cur_1..cur_n) − Q(from_1..from_n)
-      *     = Σ_i Q(from_1,..,from_{i-1}, Δ_i, cur_{i+1},..,cur_n)
-      * — exact for multisets (each term flips exactly one base from its
-      * `from` to its `cur` pinning, and inner joins are linear in every
-      * input). `rows(i) = None` contributes no term (that base's delta
-      * lane is empty). The aggregate node's child is replaced by the
-      * UNION of the substituted terms, so ONE aggregation computes the
-      * partials over the whole delta and the group-wise merge below
-      * applies untouched. Every term is churn ⋈ (n−1) pinned sides —
-      * AQE broadcasts the delta side when it fits — never a
-      * corpus-by-corpus rebuild. */
-    def joinAggOver(aggPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        rows: Seq[Option[DataFrame]]): Option[DataFrame] = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Sort, SubqueryAlias, Union}
-      val agg = (aggPlan match {
-        case s: Sort => s.child
-        case p => p
-      }).asInstanceOf[Aggregate]
-      def hid(x: (String, String)) = meta(x._1, x._2).hiddenCols.toSeq
-      def subst(child: LogicalPlan,
-          repl: Map[(String, String), DataFrame]): LogicalPlan =
-        child.transformUpWithSubqueries {
-          case u: UnresolvedRelation if relKeyOf(db, u).exists(repl.contains) =>
-            val k = relKeyOf(db, u).get
-            SubqueryAlias(Seq(k._1, k._2), repl(k).queryExecution.analyzed)
-        }
-      val parts = bases.zipWithIndex.flatMap { case (_, i) =>
-        rows(i).map { ri =>
-          val repl = bases.zipWithIndex.map { case (bj, j) =>
-            bj -> (
-              if (j == i) ri
-              else if (j < i) readAsOf(bj._1, bj._2, from(bj).get).drop(hid(bj): _*)
-              else readAsOf(bj._1, bj._2, cur(bj)).drop(hid(bj): _*))
-          }.toMap
-          subst(agg.child, repl)
-        }
-      }
-      if (parts.isEmpty) None
-      else Some(org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-        agg.copy(child = parts.reduceLeft(Union(_, _)))))
+    // ONE checkpoint scope for the whole refresh: every frame a mode
+    // materializes registers here, and the dispatch below releases them
+    // all in one `finally` — an exception mid-merge (a failed probe job,
+    // an analysis error) must not leak them for the session.
+    // localCheckpoint, not cache (r15, guide §5): the checkpointed frames
+    // are churn-/touched-group-sized but their LINEAGE is the whole
+    // delta-resolution tree — every downstream action (scoping agg,
+    // position-delete pass, delta write, per-sidecar merges) re-analyzes
+    // that tree when the frame is merely cached. Checkpointing truncates
+    // the plan to an in-memory leaf: one eager materialization each,
+    // then every consumer plans against a leaf. Fault tolerance of the
+    // intermediates is not needed (a failed refresh re-runs whole).
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def checkpoint(f: DataFrame): DataFrame = {
+      val c = f.localCheckpoint(); checkpoints += c; c
     }
+    // `Dataset.unpersist` only reaches the cache manager: a local
+    // checkpoint's blocks belong to the RDD under its plan, released here
+    // (else they stay registered until the context cleaner collects them)
+    def releaseCheckpoints(): Unit = checkpoints.foreach(_.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    })
 
     /** Per-base (insert, delete) row sets across the refresh range —
       * append-only sides read the cheap incremental tail; MoR-family
-      * churn resolves from per-commit metadata; anything else falls to
-      * the changelog value diff. `None` = un-diffable (caller → full).
-      * An UNCHANGED side returns (None, None): it contributes no delta
+      * churn resolves from per-commit metadata (exact per-commit sets,
+      * no two-sided multiset diff); anything else (true rewrites,
+      * rollbacks, evolution) falls to the changelog value diff. `None` =
+      * un-diffable, e.g. an expired range endpoint (caller → full). An
+      * UNCHANGED side returns (None, None): it contributes no delta
       * terms at all. */
-    def baseDeltas(x: (String, String))
-        : Option[(Option[DataFrame], Option[DataFrame])] = {
+    def baseDeltas(x: Base): Option[(Option[DataFrame], Option[DataFrame])] = {
       val (d, t) = x
       val (lo, hi) = (from(x).get, cur(x))
       val hidden = meta(d, t).hiddenCols.toSeq
       if (lo == hi) Some((None, None))
-      else if (appendOnlyRange(d, t, lo, hi))
-        Some((Some(readIncremental(d, t, lo, hi).drop(hidden: _*)), None))
+      else if (appendOnlyRange(x)) Some((Some(increment(x)), None))
       else (try changeSetsAcrossRange(d, t, lo, hi) catch {
         case scala.util.control.NonFatal(_) => None
       }) match {
@@ -5755,73 +5711,95 @@ final class SnapshotCatalog(
           } catch { case scala.util.control.NonFatal(_) => None }
       }
     }
-
-    /** The (plus, minus) pre-aggregated partial frames for a join-agg
-      * body across ANY diffable range — the multilinear telescope of
-      * [[joinAggOver]], applied once with every base's insert lane and
-      * once with every delete lane. Every term is churn ⋈ the pinned
-      * sides — AQE broadcasts the delta when it fits. */
-    def joinDeltaLanes(): Option[Seq[(Option[DataFrame], Option[DataFrame])]] = {
+    /** Every base's lanes, or None when any base is un-diffable. */
+    def allDeltas(): Option[Seq[(Option[DataFrame], Option[DataFrame])]] = {
       val ds = bases.map(baseDeltas)
-      if (ds.exists(_.isEmpty)) None else Some(ds.map(_.get))
+      if (ds.exists(_.isEmpty)) None else Some(ds.flatten)
     }
-    def joinAggDeltas(aggPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        m: Seq[(Option[DataFrame], Option[DataFrame])])
-        : Option[(DataFrame, Option[DataFrame])] = {
-      val a = bases.head
-      val minus = joinAggOver(aggPlan, m.map(_._2))
-      // a delete-only range has no insert terms: aggregate over an
-      // empty head-delta so the merge still gets a (zero-group) plus frame
-      val plus = joinAggOver(aggPlan, m.map(_._1)).orElse(if (minus.isEmpty) None
-        else joinAggOver(aggPlan,
-          Some(readAsOf(a._1, a._2, from(a).get)
-            .drop(meta(a._1, a._2).hiddenCols.toSeq: _*).limit(0)) +:
-            Seq.fill(bases.size - 1)(Option.empty[DataFrame])))
-      plus.map(p => (p, minus))
+    // checkpoint each base's churn lanes for the telescope's scope (r15,
+    // guide §5): the same ins/del frames feed the main augmented
+    // aggregate AND every distinct sidecar's re-aggregation — each
+    // evaluation re-read the churn files otherwise
+    def checkpointed(ds: Seq[(Option[DataFrame], Option[DataFrame])])
+        : Seq[(Option[DataFrame], Option[DataFrame])] =
+      ds.map { case (i, d) => (i.map(checkpoint), d.map(checkpoint)) }
+
+    /** A refresh range's change to a multi-base body as a TELESCOPE — a
+      * sum of body evaluations,
+      *   Q(cur) − Q(from) = Σ Q(plus term) − Σ Q(minus term),
+      * each term swapping every base for a pinned or churn frame. The
+      * terms stay SUBSTITUTION MAPS, not pre-substituted plans, so the
+      * same terms evaluate the main augmented aggregate AND each distinct
+      * sidecar's plan ([[lanes]]). `emptyPlus` stands in for the plus
+      * side of a delete-only range, so the merge still gets a
+      * (zero-group) plus frame. */
+    case class Telescope(plus: Seq[Map[Base, DataFrame]],
+        minus: Seq[Map[Base, DataFrame]], emptyPlus: () => Map[Base, DataFrame])
+
+    /** The telescope evaluated under `plan`: an aggregate's child is
+      * replaced by the UNION of the substituted terms, so ONE aggregation
+      * per lane computes the partials over the whole range (and the
+      * group-wise merge applies untouched); a non-aggregate body unions
+      * its per-term evaluations. Returns the (plus, minus) frames. */
+    def lanes(t: Telescope, plan: LogicalPlan): (DataFrame, Option[DataFrame]) = {
+      def over(terms: Seq[Map[Base, DataFrame]]): DataFrame =
+        org.apache.spark.sql.GraftColumnBridge.ofRows(spark, stripSort(plan) match {
+          case ag: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+            ag.copy(child = terms.map(substBases(ag.child, _)).reduceLeft(Union(_, _)))
+          case p => terms.map(substBases(p, _)).reduceLeft(Union(_, _))
+        })
+      (over(if (t.plus.nonEmpty) t.plus else Seq(t.emptyPlus())),
+        if (t.minus.isEmpty) None else Some(over(t.minus)))
     }
 
-    /** AGGREGATE-over-UNION-ALL body ([[unionPfShape]] under the
+    /** INNER-JOIN terms — the MULTILINEAR telescope (r13, generalizing
+      * the two-base bilinear identity): with bases ordered b_1..b_n,
+      *   Q(cur_1..cur_n) − Q(from_1..from_n)
+      *     = Σ_i Q(from_1,..,from_{i-1}, Δ_i, cur_{i+1},..,cur_n)
+      * — exact for multisets (each term flips exactly one base from its
+      * `from` to its `cur` pinning, and inner joins are linear in every
+      * input), applied once with every base's insert lane (plus) and
+      * once with every delete lane (minus). A base with an empty lane
+      * contributes no term. Every term is churn ⋈ (n−1) pinned sides —
+      * AQE broadcasts the delta side when it fits — never a
+      * corpus-by-corpus rebuild. */
+    def innerJoinTerms(ds: Seq[(Option[DataFrame], Option[DataFrame])]): Telescope = {
+      def terms(lane: Int => Option[DataFrame]): Seq[Map[Base, DataFrame]] =
+        bases.indices.flatMap(i => lane(i).map(ri => bases.zipWithIndex.map { case (bj, j) =>
+          bj -> (if (j == i) ri else if (j < i) at(bj, from(bj).get) else at(bj, cur(bj)))
+        }.toMap))
+      Telescope(terms(ds(_)._1), terms(ds(_)._2), () =>
+        bases.tail.map(b => b -> at(b, cur(b))).toMap +
+          (bases.head -> at(bases.head, from(bases.head).get).limit(0)))
+    }
+
+    /** AGGREGATE-over-UNION-ALL terms ([[unionPfShape]] under the
       * Aggregate): every arm is row-local and single-base, so the body is
-      * LINEAR in each base — the plus/minus partial frames are ONE
-      * evaluation each of the augmented aggregate with EVERY base
+      * LINEAR in each base — one term per lane with EVERY base
       * simultaneously replaced by its insert (resp. delete) set; an
       * unchanged or delete-free side substitutes an empty frame. */
-    def unionAggBody: Boolean = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Sort}
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      !hasSubqueryExpr(plan) &&
-        ((plan match { case s: Sort => s.child; case p => p }) match {
-          case Aggregate(_, _, child, _) => unionPfShape(db, child)
-          case _ => false
-        })
-    }
-    def unionAggLanes(): Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
-        Option[(DataFrame, Option[DataFrame])], () => Unit)] = {
-      def emptyOf(b: (String, String)) = readAsOf(b._1, b._2, from(b).get)
-        .drop(meta(b._1, b._2).hiddenCols.toSeq: _*).limit(0)
-      val ds = bases.map(b => b -> baseDeltas(b))
-      if (ds.exists(_._2.isEmpty)) return None
-      // cache the churn lanes for the evaluator's scope (r15, guide §5):
-      // the main augmented aggregate AND every distinct sidecar's
-      // re-aggregation substitute the same frames — each evaluation
-      // re-read the churn files otherwise. Empty placeholders stay
-      // uncached (nothing to materialize).
-      val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // localCheckpoint, not cache (r15, guide §5): see mergePartials
-      def cachedHere(f: DataFrame): DataFrame = { val c = f.localCheckpoint(); caches += c; c }
-      val m = ds.map { case (b, d) => b -> d.get }.toMap
-      val plusMap = bases.map(b =>
-        b -> m(b)._1.map(cachedHere).getOrElse(emptyOf(b))).toMap
-      val minusMap =
-        if (!m.values.exists(_._2.isDefined)) None
-        else Some(bases.map(b =>
-          b -> m(b)._2.map(cachedHere).getOrElse(emptyOf(b))).toMap)
-      Some((p => Some((bodyOverBases(p, plusMap),
-        minusMap.map(bodyOverBases(p, _)))),
-        () => { caches.foreach(_.unpersist()); () }))
+    def unionTerms(ds: Seq[(Option[DataFrame], Option[DataFrame])]): Telescope = {
+      def lane(pick: ((Option[DataFrame], Option[DataFrame])) => Option[DataFrame]) =
+        bases.zip(ds).map { case (b, d) =>
+          b -> pick(d).getOrElse(at(b, from(b).get).limit(0)) }.toMap
+      val plus = lane(_._1)
+      Telescope(Seq(plus), if (ds.exists(_._2.isDefined)) Seq(lane(_._2)) else Nil,
+        () => plus)
     }
 
-    /** AGGREGATE-over-LEFT-OUTER-JOIN deltas (r13). A left outer join is
+    // distinct non-null key tuples of a churn side
+    def churnKeys(d: (Option[DataFrame], Option[DataFrame]),
+        cols: Seq[String]): Option[DataFrame] =
+      (d._1.toSeq ++ d._2.toSeq).map(_.select(cols.map(c => col(s"`$c`")): _*))
+        .reduceOption(_ unionByName _).map(_.na.drop("any").distinct())
+    def semiKeys(frame: DataFrame, frameCols: Seq[String], keys: DataFrame,
+        keyCols: Seq[String]): DataFrame = {
+      val cond = frameCols.zip(keyCols).map { case (fc, kc) =>
+        frame(s"`$fc`") === keys(s"`$kc`") }.reduce(_ && _)
+      frame.join(keys, cond, "left_semi")
+    }
+
+    /** AGGREGATE-over-LEFT-OUTER-JOIN terms (r13). A left outer join is
       * linear in its LEFT input only — a dim-side insert can RETRACT a
       * null-extended fact row — so the telescope splits into two brackets
       * (Larson & Zhou's outer-join view maintenance, ICDE 2007):
@@ -5840,59 +5818,29 @@ final class SnapshotCatalog(
       * churn did not actually affect contributes equal ± partials that
       * cancel in the group-wise merge. Every term substitutes frames
       * into the AUGMENTED body itself, so filters above the join and the
-      * null-extension arithmetic carry over verbatim, and ONE aggregation
-      * per lane computes the partials. Fact-only churn never touches
-      * bracket 2 (the common CDC case stays churn-sized); dim churn costs
-      * one fact semi-scan at `cur` — the irreducible price of maintaining
-      * non-linear joins, paid only when the dim actually moved. */
-    def outerJoinAggDeltas(shape: AggShape,
-        oj: ((String, String), (String, String), Seq[(String, String)], Boolean))
-        : Option[((DataFrame, Option[DataFrame]),
-            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
-              Option[(DataFrame, Option[DataFrame])],
-            () => Unit)] = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Sort, SubqueryAlias, Union}
+      * null-extension arithmetic carry over verbatim. Fact-only churn
+      * never touches bracket 2 (the common CDC case stays churn-sized);
+      * dim churn costs one fact semi-scan at `cur` — the irreducible
+      * price of maintaining non-linear joins, paid only when the dim
+      * actually moved. The affected-key slices are checkpointed across
+      * their brackets' terms. */
+    def outerJoinTerms(
+        oj: (Base, Base, Seq[(String, String)], Boolean)): Option[Telescope] = {
       val (a, b, keyPairs, isFull) = oj
-      def hid(x: (String, String)) = meta(x._1, x._2).hiddenCols.toSeq
       val da = baseDeltas(a).getOrElse(return None)
       val dbx = baseDeltas(b).getOrElse(return None)
-      def aAt(id: Long) = readAsOf(a._1, a._2, id).drop(hid(a): _*)
-      def bAt(id: Long) = readAsOf(b._1, b._2, id).drop(hid(b): _*)
       val (lCols, rCols) = (keyPairs.map(_._1), keyPairs.map(_._2))
       // a row whose join key has ANY null component never equals anything
       def nullKey(df: DataFrame, cols: Seq[String]): Column =
         cols.map(c => df(s"`$c`").isNull).reduce(_ || _)
-      // distinct non-null key tuples of a churn side
-      def churnKeys(d: (Option[DataFrame], Option[DataFrame]),
-          cols: Seq[String]): Option[DataFrame] =
-        (d._1.toSeq ++ d._2.toSeq).map(_.select(cols.map(c => col(s"`$c`")): _*))
-          .reduceOption(_ unionByName _).map(_.na.drop("any").distinct())
-      def semiKeys(frame: DataFrame, frameCols: Seq[String], keys: DataFrame,
-          keyCols: Seq[String]): DataFrame = {
-        val cond = frameCols.zip(keyCols).map { case (fc, kc) =>
-          frame(s"`$fc`") === keys(s"`$kc`") }.reduce(_ && _)
-        frame.join(keys, cond, "left_semi")
-      }
-      // terms collect as SUBSTITUTION MAPS (base → pinned/churn frame),
-      // not pre-substituted plans: the same maps then evaluate the main
-      // augmented aggregate AND (r13) each distinct sidecar's plan —
-      // one telescope, every consumer
-      val plusTerms =
-        scala.collection.mutable.ArrayBuffer.empty[Map[(String, String), DataFrame]]
-      val minusTerms =
-        scala.collection.mutable.ArrayBuffer.empty[Map[(String, String), DataFrame]]
-      val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // localCheckpoint, not cache (r15, guide §5): see mergePartials
-      def cachedHere(f: DataFrame): DataFrame = { val c = f.localCheckpoint(); caches += c; c }
-      val release: () => Unit = () => { caches.foreach(_.unpersist()); () }
-      def bailOut: None.type = { release(); None }
+      val plusTerms = scala.collection.mutable.ArrayBuffer.empty[Map[Base, DataFrame]]
+      val minusTerms = scala.collection.mutable.ArrayBuffer.empty[Map[Base, DataFrame]]
       // ---- bracket 1: left churn, right side pinned at FROM ----
       if (!isFull) {
         // LEFT OUTER is linear in its left input: the bracket is exactly
         // the churn rows' own body evaluations
-        da._1.foreach(ins => plusTerms += Map(a -> ins, b -> bAt(from(b).get)))
-        da._2.foreach(del => minusTerms += Map(a -> del, b -> bAt(from(b).get)))
+        da._1.foreach(ins => plusTerms += Map(a -> ins, b -> at(b, from(b).get)))
+        da._2.foreach(del => minusTerms += Map(a -> del, b -> at(b, from(b).get)))
       } else if (from(a).get != cur(a)) {
         // FULL OUTER is linear in NEITHER side (a new left row retracts a
         // right row's null-extension), so bracket 1 uses the same
@@ -5902,14 +5850,13 @@ final class SnapshotCatalog(
         // terms — the restriction only bounds term volume). Null-keyed
         // left churn never matches anything: its contribution is the body
         // over (Δ_null, empty right), added directly.
-        val kA = churnKeys(da, lCols).getOrElse(return bailOut)
-        val kAc = cachedHere(kA)
-        val bFromK = semiKeys(bAt(from(b).get), rCols, kAc, lCols)
-        plusTerms += Map(a -> semiKeys(aAt(cur(a)), lCols, kAc, lCols),
+        val kAc = checkpoint(churnKeys(da, lCols).getOrElse(return None))
+        val bFromK = semiKeys(at(b, from(b).get), rCols, kAc, lCols)
+        plusTerms += Map(a -> semiKeys(at(a, cur(a)), lCols, kAc, lCols),
           b -> bFromK)
-        minusTerms += Map(a -> semiKeys(aAt(from(a).get), lCols, kAc, lCols),
+        minusTerms += Map(a -> semiKeys(at(a, from(a).get), lCols, kAc, lCols),
           b -> bFromK)
-        val bEmpty = bAt(from(b).get).limit(0)
+        val bEmpty = at(b, from(b).get).limit(0)
         da._1.foreach(ins => plusTerms +=
           Map(a -> ins.where(nullKey(ins, lCols)), b -> bEmpty))
         da._2.foreach(del => minusTerms +=
@@ -5917,21 +5864,21 @@ final class SnapshotCatalog(
       }
       // ---- bracket 2: right churn, left side pinned at CUR ----
       if (from(b).get != cur(b)) {
-        val keys = churnKeys(dbx, rCols).getOrElse(return bailOut)
-        val aCur = aAt(cur(a))
-        val aK = cachedHere(semiKeys(aCur, lCols, keys, rCols))
+        val keys = churnKeys(dbx, rCols).getOrElse(return None)
+        val aCur = at(a, cur(a))
+        val aK = checkpoint(semiKeys(aCur, lCols, keys, rCols))
         if (!isFull) {
-          plusTerms += Map(a -> aK, b -> bAt(cur(b)))
-          minusTerms += Map(a -> aK, b -> bAt(from(b).get))
+          plusTerms += Map(a -> aK, b -> at(b, cur(b)))
+          minusTerms += Map(a -> aK, b -> at(b, from(b).get))
         } else {
           // restrict the right side to K_B as well: under FULL OUTER the
           // unrestricted remainder would emit (cancelling but dim-sized)
           // null-extension rows into both frames
-          val kBc = cachedHere(keys)
+          val kBc = checkpoint(keys)
           plusTerms += Map(a -> aK,
-            b -> semiKeys(bAt(cur(b)), rCols, kBc, rCols))
+            b -> semiKeys(at(b, cur(b)), rCols, kBc, rCols))
           minusTerms += Map(a -> aK,
-            b -> semiKeys(bAt(from(b).get), rCols, kBc, rCols))
+            b -> semiKeys(at(b, from(b).get), rCols, kBc, rCols))
           // null-keyed right churn rows only ever null-extend themselves
           val aEmpty = aCur.limit(0)
           dbx._1.foreach(ins => plusTerms +=
@@ -5940,37 +5887,12 @@ final class SnapshotCatalog(
             Map(a -> aEmpty, b -> del.where(nullKey(del, rCols))))
         }
       }
-      if (plusTerms.isEmpty && minusTerms.isEmpty) return bailOut
-      def aggOver(aggPlan: LogicalPlan,
-          terms: Seq[Map[(String, String), DataFrame]]): DataFrame = {
-        val ag = (aggPlan match {
-          case s: Sort => s.child
-          case p => p
-        }).asInstanceOf[Aggregate]
-        val parts = terms.map(repl => ag.child.transformUpWithSubqueries {
-          case u: UnresolvedRelation if relKeyOf(db, u).exists(repl.contains) =>
-            val k = relKeyOf(db, u).get
-            SubqueryAlias(Seq(k._1, k._2), repl(k).queryExecution.analyzed)
-        })
-        org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-          ag.copy(child = parts.reduceLeft(Union(_, _))))
-      }
-      // a delete-only range still hands the merge a (zero-group) plus frame
-      val emptyPlus = Map(
-        a -> readAsOf(a._1, a._2, from(a).get).drop(hid(a): _*).limit(0),
-        b -> bAt(from(b).get))
-      def lanes(aggPlan: LogicalPlan): Option[(DataFrame, Option[DataFrame])] = {
-        val plus = aggOver(aggPlan,
-          if (plusTerms.nonEmpty) plusTerms.toSeq else Seq(emptyPlus))
-        val minus = if (minusTerms.isEmpty) None
-          else Some(aggOver(aggPlan, minusTerms.toSeq))
-        Some((plus, minus))
-      }
-      lanes(augmentedAggPlan(sql, shape)).map(pm => (pm, lanes _, release))
+      Some(Telescope(plusTerms.toSeq, minusTerms.toSeq,
+        () => Map(a -> at(a, from(a).get).limit(0), b -> at(b, from(b).get))))
     }
 
-    /** AGGREGATE-over-LEFT-JOIN-CHAIN deltas (r13): the N-way form of
-      * [[outerJoinAggDeltas]]'s LEFT lane. With the chain A LJ B_1 .. LJ
+    /** AGGREGATE-over-LEFT-JOIN-CHAIN terms (r13): the N-way form of
+      * [[outerJoinTerms]]'s LEFT lane. With the chain A LJ B_1 .. LJ
       * B_m, the telescope flips one relation per bracket:
       *
       *   Q(A',B_1'..B_m') − Q(A,B_1..B_m)
@@ -5992,40 +5914,15 @@ final class SnapshotCatalog(
       * Fact-only churn costs the fact bracket alone; each moved dim
       * costs one owner semi-scan at cur — the same price the 2-base
       * lane pays, per dimension that actually moved. */
-    def outerChainAggDeltas(shape: AggShape,
-        chain: (Seq[(String, String)],
-            Seq[((String, String), Seq[(String, String)])]))
-        : Option[((DataFrame, Option[DataFrame]),
-            org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
-              Option[(DataFrame, Option[DataFrame])],
-            () => Unit)] = {
-      import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Sort, SubqueryAlias, Union}
+    def outerChainTerms(chain: (Seq[Base], Seq[(Base, Seq[(String, String)])]))
+        : Option[Telescope] = {
       val (bs, dims) = chain
       val a = bs.head
-      def hid(x: (String, String)) = meta(x._1, x._2).hiddenCols.toSeq
-      def at(x: (String, String), id: Long) = readAsOf(x._1, x._2, id).drop(hid(x): _*)
       val deltas = bs.map(b => baseDeltas(b).getOrElse(return None))
-      def churnKeys(d: (Option[DataFrame], Option[DataFrame]),
-          cols: Seq[String]): Option[DataFrame] =
-        (d._1.toSeq ++ d._2.toSeq).map(_.select(cols.map(c => col(s"`$c`")): _*))
-          .reduceOption(_ unionByName _).map(_.na.drop("any").distinct())
-      def semiKeys(frame: DataFrame, frameCols: Seq[String], keys: DataFrame,
-          keyCols: Seq[String]): DataFrame = {
-        val cond = frameCols.zip(keyCols).map { case (fc, kc) =>
-          frame(s"`$fc`") === keys(s"`$kc`") }.reduce(_ && _)
-        frame.join(keys, cond, "left_semi")
-      }
-      val plusTerms =
-        scala.collection.mutable.ArrayBuffer.empty[Map[(String, String), DataFrame]]
-      val minusTerms =
-        scala.collection.mutable.ArrayBuffer.empty[Map[(String, String), DataFrame]]
-      val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // localCheckpoint, not cache (r15, guide §5): see mergePartials
-      def cachedHere(f: DataFrame): DataFrame = { val c = f.localCheckpoint(); caches += c; c }
-      val release: () => Unit = () => { caches.foreach(_.unpersist()); () }
+      val plusTerms = scala.collection.mutable.ArrayBuffer.empty[Map[Base, DataFrame]]
+      val minusTerms = scala.collection.mutable.ArrayBuffer.empty[Map[Base, DataFrame]]
       // ---- fact bracket: ΔA±, every dim pinned at FROM ----
-      val dimsAtFrom: Map[(String, String), DataFrame] =
+      val dimsAtFrom: Map[Base, DataFrame] =
         bs.tail.map(b => b -> at(b, from(b).get)).toMap
       deltas.head._1.foreach(ins => plusTerms += (dimsAtFrom + (a -> ins)))
       deltas.head._2.foreach(del => minusTerms += (dimsAtFrom + (a -> del)))
@@ -6035,15 +5932,12 @@ final class SnapshotCatalog(
         if (from(dimBase).get != cur(dimBase)) {
           val (owner, pairs) = dims(i)
           val (ownCols, dimCols) = (pairs.map(_._1), pairs.map(_._2))
-          val kI = churnKeys(deltas(i + 1), dimCols) match {
-            case Some(k) => cachedHere(k)
-            case None => release(); return None
-          }
-          def frameFor(b: (String, String), id: Long): DataFrame = {
+          val kI = checkpoint(churnKeys(deltas(i + 1), dimCols).getOrElse(return None))
+          def frameFor(b: Base, id: Long): DataFrame = {
             val f = at(b, id)
             if (b == owner) semiKeys(f, ownCols, kI, dimCols) else f
           }
-          def termMap(dimId: Long): Map[(String, String), DataFrame] =
+          def termMap(dimId: Long): Map[Base, DataFrame] =
             bs.zipWithIndex.map { case (b, j) =>
               b -> (
                 if (j == i + 1) at(b, dimId)
@@ -6054,45 +5948,17 @@ final class SnapshotCatalog(
           minusTerms += termMap(from(dimBase).get)
         }
       }
-      if (plusTerms.isEmpty && minusTerms.isEmpty) { release(); return None }
-      def aggOver(aggPlan: LogicalPlan,
-          terms: Seq[Map[(String, String), DataFrame]]): DataFrame = {
-        val ag = (aggPlan match {
-          case s: Sort => s.child
-          case p => p
-        }).asInstanceOf[Aggregate]
-        val parts = terms.map(repl => ag.child.transformUpWithSubqueries {
-          case u: UnresolvedRelation if relKeyOf(db, u).exists(repl.contains) =>
-            val k = relKeyOf(db, u).get
-            SubqueryAlias(Seq(k._1, k._2), repl(k).queryExecution.analyzed)
-        })
-        org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-          ag.copy(child = parts.reduceLeft(Union(_, _))))
-      }
-      val emptyPlus = dimsAtFrom + (a -> at(a, from(a).get).limit(0))
-      def lanes(aggPlan: LogicalPlan): Option[(DataFrame, Option[DataFrame])] = {
-        val plus = aggOver(aggPlan,
-          if (plusTerms.nonEmpty) plusTerms.toSeq else Seq(emptyPlus))
-        val minus = if (minusTerms.isEmpty) None
-          else Some(aggOver(aggPlan, minusTerms.toSeq))
-        Some((plus, minus))
-      }
-      lanes(augmentedAggPlan(sql, shape)).map(pm => (pm, lanes _, release))
+      Some(Telescope(plusTerms.toSeq, minusTerms.toSeq,
+        () => dimsAtFrom + (a -> at(a, from(a).get).limit(0))))
     }
 
-    def incrementalDelta(): DataFrame = {
-      val (d, t) = bases.head
-      readIncremental(d, t, from((d, t)).get, cur((d, t)))
-        .drop(meta(d, t).hiddenCols.toSeq: _*)
-    }
-    def bodyOverDelta(): DataFrame =
-      bodyOver(spark.sessionState.sqlParser.parsePlan(sql), incrementalDelta())
-
-    val shapeOpt = aggIncrementalShape(db, sql)
+    val shapeOpt = aggIncrementalShape(db, body)
     // an AUGMENTED backing (created from a retractable count/sum/avg/
     // keyed-min/max body) carries the partial columns that make the
-    // merge exact under deletes; pre-augmentation MVs keep the legacy
-    // append-only merge
+    // merge exact under deletes (SELECT DISTINCT included: `__mv_n` is
+    // its copy count); a backing without partials — global min/max,
+    // outputs colliding with the partial columns, a backing written
+    // before augmentation — keeps the append-only merge
     val backingHasPartials = tableExists(db, mvT) &&
       currentSnapshot(db, mvT).schema.fieldNames.contains(MvPartialRows)
     // DISTINCT-aggregate sidecars recorded at create time (per output
@@ -6111,7 +5977,7 @@ final class SnapshotCatalog(
         sh.distinctPos.groupBy(p => dvTables.get(p._1)).foreach {
           case (Some(t), ps) =>
             val lead = ps.map(_._1).min
-            val frame = pinnedBodyPlan(db, distinctSidecarPlan(sql, sh, lead), pins)
+            val frame = pinnedBodyPlan(db, distinctSidecarPlan(body, sh, lead), pins)
             if (!tableExists(db, t)) createTable(db, t, frame.schema)
             overwrite(db, t, frame)
           case (None, _) => ()
@@ -6120,11 +5986,10 @@ final class SnapshotCatalog(
     def runFull(): Long = {
       val out = shapeOpt.filter(_.retractable) match {
         case Some(sh) if backingHasPartials =>
-          pinnedBodyPlan(db, augmentedAggPlan(sql, sh), cur)
-        case _ => pinnedBody(db, sql, cur)
+          pinnedBodyPlan(db, augmentedAggPlan(body, sh), cur)
+        case _ => pinnedBodyPlan(db, body, cur)
       }
-      val n = overwrite(db, mvT, out)
-        .summary.get("added_records").map(_.toLong).getOrElse(-1L)
+      val n = overwrite(db, mvT, out).addedRecords
       // the sidecars must land at the same pins as the backing — a full
       // refresh that skipped them would leave the NEXT merge folding
       // deltas into stale value counts
@@ -6133,8 +5998,7 @@ final class SnapshotCatalog(
     }
 
     val singleBase = bases.size == 1 && from(bases.head).isDefined
-    val appendOnly = singleBase && appendOnlyRange(bases.head._1, bases.head._2,
-      from(bases.head).get, cur(bases.head))
+    val appendOnly = singleBase && appendOnlyRange(bases.head)
 
     /** Partial-backed merge of the retractable family (count/sum/avg,
       * plus keyed min/max via the extremum-death probe): insert AND
@@ -6148,80 +6012,32 @@ final class SnapshotCatalog(
       * count hits zero, avg recomputes as s/c, and groups whose row
       * count reaches zero are DELETED from the backing. Returns None on
       * the edges the merge cannot serve (null group keys in the delta;
-      * an un-diffable range) — the caller falls back to full. */
+      * an un-diffable range) — the caller falls back to full.
+      *
+      * `under` evaluates a plan over the range's (plus, minus) delta:
+      * multi-base callers hand their telescope's [[lanes]]; a single-base
+      * refresh evaluates the body over the base's own ins/del rows. The
+      * distinct sidecars re-aggregate the SAME delta under their own
+      * plans — exact because a sidecar is a row-local-filtered count,
+      * additive over the telescope's multiset-union of terms. */
     def mergePartials(shape: AggShape,
-        preAgg: Option[(DataFrame, Option[DataFrame])] = None,
-        preAggUnder: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =>
-          Option[(DataFrame, Option[DataFrame])]] = None): Option[Long] = {
-      val augPlan = augmentedAggPlan(sql, shape)
-      val plusOnly = preAgg.map(_._1)
-      val minusPre = preAgg.flatMap(_._2)
-      // single-base deltas extract here; the join-agg caller hands
-      // PRE-AGGREGATED plus/minus frames (the augmented aggregate over
-      // the join-delta terms — [[joinAggDeltas]])
-      val (insRowsOpt, delRowsOpt): (Option[DataFrame], Option[DataFrame]) =
-        if (plusOnly.isDefined) (None, None)
-        else {
-        val (d, t) = bases.head
-        val (lo, hi) = (from((d, t)).get, cur((d, t)))
-        val hidden = meta(d, t).hiddenCols.toSeq
-        if (appendOnly) (Some(incrementalDelta()), None)
-        else (try changeSetsAcrossRange(d, t, lo, hi) catch {
-          // an expired range endpoint (or any unreadable history) is the
-          // changelog fallback's problem — and if that throws too, the
-          // refresh falls to full below
-          case scala.util.control.NonFatal(_) => None
-        }) match {
-          // MoR-family range (positional AND equality deletes): exact
-          // per-commit sets from metadata — the cost is the churn, no
-          // two-sided multiset diff
-          case Some((i, dl)) =>
-            (Some(i.drop(hidden: _*)), Some(dl.drop(hidden: _*)))
-          // true rewrites / rollbacks / evolution: the changelog's
-          // value diff handles every operation
-          case None =>
-            val chg = try readChangelog(d, t, lo, hi) catch {
-              case scala.util.control.NonFatal(_) => return None // un-diffable range
-            }
-            val clean = chg.drop(hidden: _*).drop("_row_id")
-            (Some(clean.where(col("_change_type") === "insert").drop("_change_type")),
-              Some(clean.where(col("_change_type") === "delete").drop("_change_type")))
-        }
-        }
+        under: Option[LogicalPlan => (DataFrame, Option[DataFrame])] = None): Option[Long] = {
+      val augPlan = augmentedAggPlan(body, shape)
+      val dv = shape.distinctPos
+      val eval = under.getOrElse {
+        val (ins, del) = baseDeltas(bases.head).getOrElse(return None)
+        // distinct aggregates re-read the ins/del ROW sets for the
+        // sidecar deltas — checkpoint them once so the main partials and
+        // every sidecar share the same churn-sized scan
+        def shared(f: DataFrame) = if (dv.nonEmpty) checkpoint(f) else f
+        val (insRows, delRows) = (shared(ins.get), del.map(shared))
+        (p: LogicalPlan) => (bodyOver(p, insRows), delRows.map(bodyOver(p, _)))
+      }
+      val (plus0, minus0) = eval(augPlan)
       // the aggregated partials are GROUP-sized (touched groups only) but
       // their plans re-execute for the null-key probe, the net join, and
-      // the merge materialization — cache them for the refresh's scope.
-      // EVERYTHING past the cache() calls runs under one try/finally: an
-      // exception mid-merge (a failed probe job, an analysis error) must
-      // not leak the cached frames for the session.
-      val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // localCheckpoint, not cache (r15, guide §5): the merge frames are
-      // churn-/touched-group-sized but their LINEAGE is the whole
-      // delta-resolution tree — every downstream action (scoping agg,
-      // position-delete pass, delta write, per-sidecar merges) re-analyzes
-      // that tree when the frame is merely cached. Checkpointing truncates
-      // the plan to an in-memory leaf: one eager materialization each,
-      // then every consumer plans against a leaf. Fault tolerance of the
-      // intermediates is not needed (a failed refresh re-runs whole);
-      // blocks release via the context cleaner after the refresh drops
-      // its references.
-      def cached(f: DataFrame): DataFrame = { val c = f.localCheckpoint(); caches += c; c }
-      def releasePartials(): Unit = { caches.foreach(_.unpersist()); () }
-      try {
-      // distinct aggregates re-read the ins/del ROW sets for the sidecar
-      // deltas — cache them once so the main partials and every sidecar
-      // share the same churn-sized scan. Multi-base callers (join/outer/
-      // union telescopes, r13) hand PRE-AGGREGATED frames instead; their
-      // sidecar deltas come from re-aggregating the SAME delta terms
-      // under the sidecar's own plan via `preAggUnder` — exact because
-      // the sidecar is a row-local-filtered count, additive over the
-      // telescope's multiset-union of terms. A pre-agg caller without
-      // that evaluator falls to full honestly.
-      val dv = shape.distinctPos
-      if (dv.nonEmpty && plusOnly.isDefined && preAggUnder.isEmpty) return None
-      val insRows = insRowsOpt.map(f => if (dv.nonEmpty) cached(f) else f)
-      val delRows = delRowsOpt.map(f => if (dv.nonEmpty) cached(f) else f)
-      val plus = cached(plusOnly.getOrElse(bodyOver(augPlan, insRows.get)))
+      // the merge materialization
+      val plus = checkpoint(plus0)
       val names = plus.schema.fieldNames
       val keyNames = shape.keyPos.map(names)
       val aggKind = shape.aggPos.toMap
@@ -6237,8 +6053,7 @@ final class SnapshotCatalog(
       // matching — a null group is a real group SQL produces, and it
       // must replace its stored row, not duplicate it or force a full
       // refresh
-      val minusOpt = minusPre.map(cached)
-        .orElse(delRows.map(f => cached(bodyOver(augPlan, f))))
+      val minusOpt = minus0.map(checkpoint)
       // NET per-group contribution: plus full-outer minus, every
       // aggregate/partial column as (p - m) with 0-coalescing; avg
       // outputs carry a placeholder (recomputed from partials below);
@@ -6272,7 +6087,7 @@ final class SnapshotCatalog(
       }
       // the net re-executes for the touched-group restriction of every
       // sidecar — cache it alongside the partials when distinct is live
-      val net = if (dv.isEmpty) net0 else cached(net0)
+      val net = if (dv.isEmpty) net0 else checkpoint(net0)
       // ---- DISTINCT-aggregate sidecar maintenance ----
       // Fold the delta's per-(group, value) copy counts into each
       // sidecar's stored state and re-derive the distinct outputs for
@@ -6291,15 +6106,8 @@ final class SnapshotCatalog(
           else net.select(keyNames.map(k => col(s"`$k`")).toIndexedSeq: _*).distinct()
         val sKeys = keyNames :+ MvDvValue
         dv.groupBy(p => dvTables(p._1)).toSeq.sortBy(_._1).map { case (tbl, ps) =>
-          val dvPlan = distinctSidecarPlan(sql, shape, ps.map(_._1).min)
-          // single-base: the sidecar plan runs over the cached ins/del
-          // row sets; pre-agg callers re-aggregate their delta terms
-          // under the sidecar plan instead (same telescope, same pins)
-          val (plusS, minusSOpt): (DataFrame, Option[DataFrame]) =
-            if (plusOnly.isDefined)
-              preAggUnder.get(dvPlan).getOrElse(return None)
-            else (bodyOver(dvPlan, insRows.get),
-              delRows.map(f => bodyOver(dvPlan, f)))
+          val (plusS, minusSOpt) =
+            eval(distinctSidecarPlan(body, shape, ps.map(_._1).min))
           // not cached: netS feeds exactly one consumer now (the postAll
           // full-outer below, itself cached) — caching it would only add
           // a materialization pass
@@ -6346,7 +6154,7 @@ final class SnapshotCatalog(
               col(MvPartialRows).as("__p_n")).toIndexedSeq: _*)
           val condP = sKeys.map(k =>
             col(s"`__s_$k`") <=> col(s"`__p_$k`")).reduce(_ && _)
-          val postAll = cached(sT.join(nS, condP, "full_outer")
+          val postAll = checkpoint(sT.join(nS, condP, "full_outer")
             .select((sKeys.map(k =>
               coalesce(col(s"`__p_$k`"), col(s"`__s_$k`")).as(k)) :+
               (coalesce(col("`__s_n`"), lit(0L)) +
@@ -6425,12 +6233,13 @@ final class SnapshotCatalog(
         if (mm.isEmpty) merged0
         else if (minusOpt.isEmpty) merged0.drop(needNames: _*)
         else {
-          val m0 = cached(merged0)
+          val m0 = checkpoint(merged0)
           val needAny = needNames.map(col).reduce(_ || _)
           val affected = m0.where(needAny && col(MvPartialRows) > 0)
             .select(keyNames.map(k => col(s"`$k`")).toIndexedSeq: _*)
           if (affected.isEmpty) m0.drop(needNames: _*)
           else {
+            val few = affected.limit(65).collect()
             val rec = if (bases.size >= 2 || unionAggBody) {
               // MULTI-BASE (join/union) body: recompute the affected
               // groups by running the body at cur with a LITERAL
@@ -6439,37 +6248,10 @@ final class SnapshotCatalog(
               // scan, so each side reads only the affected keys' files.
               // Bounded at 64 dead extrema per refresh; beyond that the
               // full refresh is the honest cost
-              val few = affected.limit(65).collect()
               if (few.length > 64) return None
-              val pred = few.map(r => keyNames.indices.map(j =>
-                col(s"`${keyNames(j)}`") <=> lit(r.get(j))).reduce(_ && _))
-                .reduce(_ || _)
-              pinnedBodyPlan(db, augPlan, cur).where(pred)
-            } else {
-            val (d2, t2) = bases.head
-            val hi = cur((d2, t2))
-            val hidden = meta(d2, t2).hiddenCols.toSeq
-            val baseKeyNames = shape.keyPos.map(i =>
-              shape.keyBase.getOrElse(i, names(i)))
-            // few affected groups (the common shape): an exact key
-            // predicate rides the footer-stat file skipping; otherwise a
-            // semi-join restriction (one pass, still group-bounded rows)
-            val few = affected.limit(65).collect()
-            val restricted = (if (few.length <= 64 && few.nonEmpty) {
-              try {
-                val pred = few.map(r => baseKeyNames.indices.map(j =>
-                  col(s"`${baseKeyNames(j)}`") <=> lit(r.get(j))).reduce(_ && _))
-                  .reduce(_ || _)
-                Some(readWhere(d2, t2, hi, pred))
-              } catch { case scala.util.control.NonFatal(_) => None }
-            } else None).getOrElse {
-              val aff = affected.toDF(baseKeyNames.map(k => s"__a_$k"): _*)
-              val base0 = readAsOf(d2, t2, hi)
-              base0.join(aff, baseKeyNames.map(k =>
-                base0(s"`$k`") <=> aff(s"`__a_$k`")).reduce(_ && _), "left_semi")
-            }.drop(hidden: _*)
-            bodyOver(augPlan, restricted)
-            }
+              pinnedBodyPlan(db, augPlan, cur).where(keyPredicate(keyNames, few))
+            } else bodyOver(augPlan, baseAtKeys(shape.keyPos.map(i =>
+              shape.keyBase.getOrElse(i, names(i))), affected, few))
             val recSel = rec.select((keyNames.map(k =>
               col(s"`$k`").as(s"__r_$k")) ++ mm.map { case (i, _) =>
               col(s"`${names(i)}`").as(s"__r_v$i") }).toIndexedSeq: _*)
@@ -6528,36 +6310,33 @@ final class SnapshotCatalog(
       SnapshotCatalog.timed(s"refresh.backing.merge $db.$name") {
       if (keyNames.isEmpty) {
         // global aggregate: exactly one row, always present
-        Some(overwrite(db, mvT, mergedFinal)
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L))
+        Some(overwrite(db, mvT, mergedFinal).addedRecords)
       } else {
         // group death: a merged row count of zero means SQL would not
         // produce the group — those keys ride the upsert's own
         // position-delete pass (r15: one commit for death + merge, and no
         // emptiness probe — an empty dead frame adds nothing to the scan)
-        val mergedC = cached(mergedFinal)
+        val mergedC = checkpoint(mergedFinal)
         val dead = mergedC.where(col(MvPartialRows) <= 0)
           .select(keyNames.map(k => col(s"`$k`")): _*)
         val alive = mergedC.where(col(MvPartialRows) > 0)
         Some(upsertMoR(db, mvT, alive, keyNames, nullSafeKeys = true,
-          alsoDeleteKeys = if (minusOpt.isDefined) Some(dead) else None)
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L))
+          alsoDeleteKeys = if (minusOpt.isDefined) Some(dead) else None).addedRecords)
       }
       }
-      } finally releasePartials()
     }
 
     // N-base inner-join bodies over append-only ranges on ALL sides
     // maintain incrementally via the multilinear telescope (see the
     // mode case; 2-base reads as ΔA ⋈ B' ∪ A ⋈ ΔB)
     val allAppendOnly = bases.size >= 2 &&
-      bases.forall(b => from(b).isDefined) &&
-      bases.forall(b => appendOnlyRange(b._1, b._2, from(b).get, cur(b)))
-    val joinIncremental = allAppendOnly &&
-      joinBodyBases.exists(ks => ks.toSet == bases.toSet)
-    // GROUP BY over the join: the aggregate's input delta is the join
+      bases.forall(b => from(b).isDefined) && bases.forall(appendOnlyRange)
+    val joinIncremental = allAppendOnly && rowLocal &&
+      innerJoinShape(db, top).exists(_.toSet == bases.toSet)
+    // GROUP BY over the join (an inner-join FOREST of the N distinct
+    // bases — the star rollup): the aggregate's input delta is the join
     // delta; the partial-merge machinery applies unchanged. Since r11
-    // deletes/updates RETRACT too ([[joinAggDeltas]] — any range every
+    // deletes/updates RETRACT too ([[innerJoinTerms]] — any range every
     // side can diff), so the gate is diffability, not append-only; since
     // r13 the body may be an N-way star, not just fact-dim, and DISTINCT
     // aggregates maintain too (the sidecar's per-(group, value) counts
@@ -6565,24 +6344,15 @@ final class SnapshotCatalog(
     val joinAggIncremental = bases.size >= 2 &&
       bases.forall(b => from(b).isDefined) && !joinIncremental &&
       shapeOpt.exists(_.retractable) && backingHasPartials && distinctReady &&
-      joinAggBodyOk
+      aggChild.exists(c => innerJoinShape(db, c).exists(_.toSet == bases.toSet))
 
     // GROUP BY over fact LEFT JOIN dim (r13): the two-bracket outer
-    // telescope of [[outerJoinAggDeltas]] — left-linearity for fact
+    // telescope of [[outerJoinTerms]] — left-linearity for fact
     // churn, affected-key recompute for dim churn. Distinct aggregates
     // ride the same brackets through the sidecar re-aggregation.
-    lazy val outerJoinAggInfo
-        : Option[((String, String), (String, String), Seq[(String, String)], Boolean)] = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Sort}
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      if (hasSubqueryExpr(plan)) None
-      else (plan match { case s: Sort => s.child; case p => p }) match {
-        case Aggregate(_, _, child, _) if !hasAggOrWindowExpr(child) =>
-          outerJoinShape(db, child)
-            .filter { case (l, r, _, _) => Set(l, r) == bases.toSet }
-        case _ => None
-      }
-    }
+    lazy val outerJoinAggInfo = aggChild.filterNot(hasAggOrWindowExpr)
+      .flatMap(outerJoinShape(db, _))
+      .filter { case (l, r, _, _) => Set(l, r) == bases.toSet }
     val outerJoinAggIncremental = bases.size == 2 &&
       bases.forall(b => from(b).isDefined) && !joinIncremental &&
       !joinAggIncremental && shapeOpt.exists(_.retractable) &&
@@ -6591,17 +6361,8 @@ final class SnapshotCatalog(
     // GROUP BY over a LEFT-JOIN CHAIN of N >= 3 bases (r13): the fact
     // bracket rides left-linearity, each moved dim its own affected-key
     // bracket — the star-with-optional-dimensions rollup
-    lazy val outerChainAggInfo: Option[(Seq[(String, String)],
-        Seq[((String, String), Seq[(String, String)])])] = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Sort}
-      val plan = spark.sessionState.sqlParser.parsePlan(sql)
-      if (hasSubqueryExpr(plan)) None
-      else (plan match { case s: Sort => s.child; case p => p }) match {
-        case Aggregate(_, _, child, _) if !hasAggOrWindowExpr(child) =>
-          outerChainShape(db, child).filter(_._1.toSet == bases.toSet)
-        case _ => None
-      }
-    }
+    lazy val outerChainAggInfo = aggChild.filterNot(hasAggOrWindowExpr)
+      .flatMap(outerChainShape(db, _)).filter(_._1.toSet == bases.toSet)
     val outerChainAggIncremental = bases.size >= 3 &&
       bases.forall(b => from(b).isDefined) && !joinIncremental &&
       !joinAggIncremental && shapeOpt.exists(_.retractable) &&
@@ -6610,7 +6371,7 @@ final class SnapshotCatalog(
     // UNION ALL of row-local arms: every base append-only over its range
     // → the delta is the union of each arm over its base's increment
     lazy val unionIncremental = bases.forall(b => from(b).isDefined &&
-      appendOnlyRange(b._1, b._2, from(b).get, cur(b))) &&
+      appendOnlyRange(b)) &&
       bases.exists(b => from(b).get != cur(b)) && unionArms.isDefined
 
     // aggregate over UNION ALL: linear in every base → ins/del deltas
@@ -6621,7 +6382,7 @@ final class SnapshotCatalog(
 
     // RANKED top-k views carry their own maintenance algebra — the one
     // window shape with an exact incremental story (see [[topKShape]])
-    lazy val topKShapeOpt = topKShape(db, sql)
+    lazy val topKShapeOpt = topKShape(body)
     val topKIncremental = singleBase && tableExists(db, mvT) &&
       topKShapeOpt.isDefined
 
@@ -6631,19 +6392,20 @@ final class SnapshotCatalog(
       else if (outerJoinAggIncremental || outerChainAggIncremental)
         "incremental_outer_agg"
       else if (unionAggIncremental) "incremental_union_agg"
-      else if ((!singleBase || !projectFilterOnly) && unionIncremental)
+      else if ((!singleBase || !pfBody) && unionIncremental)
         "incremental_union"
       else if (!singleBase) "full"
       else if (topKIncremental) "incremental_topk"
-      else if (appendOnly && projectFilterOnly) "incremental"
+      else if (appendOnly && pfBody) "incremental"
       // partial-backed count/sum/avg family: maintainable under ANY
       // range the changelog can diff (deletes/updates retract); distinct
       // aggregates additionally need every sidecar present
       else if (shapeOpt.exists(_.retractable) && backingHasPartials &&
         distinctReady) "incremental_agg"
-      // legacy merge (min/max shapes, SELECT DISTINCT, pre-augmentation
-      // backings): append-only ranges, no avg, no distinct aggregates
-      // (their arithmetic does not fold without the sidecar)
+      // append-only merge (backings without partials: global min/max,
+      // outputs colliding with the partial columns, backings written
+      // before augmentation): append-only ranges, no avg, no distinct
+      // aggregates (their arithmetic does not fold without the sidecar)
       else if (appendOnly && shapeOpt.isDefined && !hasDistinct &&
         !shapeOpt.get.aggPos.exists(_._2 == "avg")) "incremental_agg"
       else "full"
@@ -6670,13 +6432,11 @@ final class SnapshotCatalog(
       }
     }
     def topKMerge(tk: TopKShape): Option[Long] = {
-      val (d2, t2) = bases.head
       val (insOpt, delOpt) = baseDeltas(bases.head).getOrElse(return None)
       val visNR = tk.visibleMinusRank
       def visSel(f: DataFrame) = f.select(visNR.map(n => col(s"`$n`")).toIndexedSeq: _*)
-      val emptyRows = readAsOf(d2, t2, from(bases.head).get)
-        .drop(meta(d2, t2).hiddenCols.toSeq: _*).limit(0)
-      val ins0 = visSel(bodyOver(tk.rowPlan, insOpt.getOrElse(emptyRows)))
+      val ins0 = visSel(bodyOver(tk.rowPlan,
+        insOpt.getOrElse(at(bases.head, from(bases.head).get).limit(0))))
       val del0 = delOpt.map(f => visSel(bodyOver(tk.rowPlan, f)))
       val backing = readLatest(db, mvT)
       // groups whose stored rows were hit (null-safe value match)
@@ -6701,97 +6461,78 @@ final class SnapshotCatalog(
           case None => merged.drop("__tkr")
         }
         return Some(overwrite(db, mvT,
-          out.select(backing.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L))
+          out.select(backing.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)).addedRecords)
       }
-      val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      // localCheckpoint, not cache (r15, guide §5): truncates the frames'
-      // delta-resolution lineage so every downstream action plans against
-      // an in-memory leaf — see mergePartials for the measurement
-      def cached(f: DataFrame): DataFrame = { val c = f.localCheckpoint(); caches += c; c }
-      try {
-        val rKeys = cached(deadKeys.getOrElse(ins0.limit(0)
-          .select(tk.keyOut.map(n => col(s"`$n`")).toIndexedSeq: _*)))
-        def keyedAnti(f: DataFrame): DataFrame = {
-          val r2 = rKeys.select(tk.keyOut.map(n => col(s"`$n`").as(s"__r_$n")).toIndexedSeq: _*)
-          f.join(r2, tk.keyOut.map(n => f(s"`$n`") <=> r2(s"`__r_$n`")).reduce(_ && _),
-            "left_anti")
+      val rKeys = checkpoint(deadKeys.getOrElse(ins0.limit(0)
+        .select(tk.keyOut.map(n => col(s"`$n`")).toIndexedSeq: _*)))
+      def keyedAnti(f: DataFrame): DataFrame = {
+        val r2 = rKeys.select(tk.keyOut.map(n => col(s"`$n`").as(s"__r_$n")).toIndexedSeq: _*)
+        f.join(r2, tk.keyOut.map(n => f(s"`$n`") <=> r2(s"`__r_$n`")).reduce(_ && _),
+          "left_anti")
+      }
+      def keyedSemi(f: DataFrame, keys: DataFrame): DataFrame = {
+        val r2 = keys.select(tk.keyOut.map(n => col(s"`$n`").as(s"__s_$n")).toIndexedSeq: _*)
+        f.join(r2, tk.keyOut.map(n => f(s"`$n`") <=> r2(s"`__s_$n`")).reduce(_ && _),
+          "left_semi")
+      }
+      // merge groups: insert-touched, minus the recompute set
+      val iKeys = checkpoint(keyedAnti(
+        ins0.select(tk.keyOut.map(n => col(s"`$n`")).toIndexedSeq: _*).distinct()))
+      val insI = keyedSemi(ins0, iKeys)
+      val netInsI = del0.map(dl => insI.exceptAll(keyedSemi(dl, iKeys)))
+        .getOrElse(insI)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(tk.keyOut.map(n => col(s"`$n`")).toIndexedSeq: _*)
+        .orderBy(sortCols(tk): _*)
+      val mergedI = keyedSemi(visSel(backing), iKeys).unionByName(netInsI)
+        .withColumn("__tkr", row_number().over(w))
+        .where(col("__tkr") <= tk.k)
+      val mergedOut = tk.rankOut match {
+        case Some(rn) => mergedI.withColumnRenamed("__tkr", rn)
+        case None => mergedI.drop("__tkr")
+      }
+      // recompute groups: the body over the base restricted to exactly
+      // those keys (literal predicate when few — file skipping — else
+      // a null-safe semi-join)
+      val recompOut: Option[DataFrame] =
+        if (deadKeys.isEmpty) None
+        else {
+          val few = rKeys.limit(65).collect()
+          if (few.isEmpty) None else Some(bodyOver(tk.fullPlan, baseAtKeys(tk.keyBase, rKeys, few)))
         }
-        def keyedSemi(f: DataFrame, keys: DataFrame): DataFrame = {
-          val r2 = keys.select(tk.keyOut.map(n => col(s"`$n`").as(s"__s_$n")).toIndexedSeq: _*)
-          f.join(r2, tk.keyOut.map(n => f(s"`$n`") <=> r2(s"`__s_$n`")).reduce(_ && _),
-            "left_semi")
-        }
-        // merge groups: insert-touched, minus the recompute set
-        val iKeys = cached(keyedAnti(
-          ins0.select(tk.keyOut.map(n => col(s"`$n`")).toIndexedSeq: _*).distinct()))
-        val insI = keyedSemi(ins0, iKeys)
-        val netInsI = del0.map(dl => insI.exceptAll(keyedSemi(dl, iKeys)))
-          .getOrElse(insI)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(tk.keyOut.map(n => col(s"`$n`")).toIndexedSeq: _*)
-          .orderBy(sortCols(tk): _*)
-        val mergedI = keyedSemi(visSel(backing), iKeys).unionByName(netInsI)
-          .withColumn("__tkr", row_number().over(w))
-          .where(col("__tkr") <= tk.k)
-        val mergedOut = tk.rankOut match {
-          case Some(rn) => mergedI.withColumnRenamed("__tkr", rn)
-          case None => mergedI.drop("__tkr")
-        }
-        // recompute groups: the body over the base restricted to exactly
-        // those keys (literal predicate when few — file skipping — else
-        // a null-safe semi-join)
-        val recompOut: Option[DataFrame] =
-          if (deadKeys.isEmpty) None
-          else {
-            val few = rKeys.limit(65).collect()
-            if (few.isEmpty) None
-            else {
-              val hi = cur(bases.head)
-              val hidden = meta(d2, t2).hiddenCols.toSeq
-              val restricted = (if (few.length <= 64) {
-                try {
-                  val pred = few.map(r => tk.keyBase.indices.map(j =>
-                    col(s"`${tk.keyBase(j)}`") <=> lit(r.get(j))).reduce(_ && _))
-                    .reduce(_ || _)
-                  Some(readWhere(d2, t2, hi, pred))
-                } catch { case scala.util.control.NonFatal(_) => None }
-              } else None).getOrElse {
-                val aff = rKeys.toDF(tk.keyBase.map(n => s"__a_$n"): _*)
-                val base0 = readAsOf(d2, t2, hi)
-                base0.join(aff, tk.keyBase.map(n =>
-                  base0(s"`$n`") <=> aff(s"`__a_$n`")).reduce(_ && _), "left_semi")
-              }.drop(hidden: _*)
-              Some(bodyOver(tk.fullPlan, restricted))
-            }
-          }
-        val newRows = recompOut match {
-          case Some(r) => mergedOut.unionByName(
-            r.select(mergedOut.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
-          case None => mergedOut
-        }
-        val touched = iKeys.unionByName(rKeys).distinct()
-        if (touched.isEmpty) return Some(0L)
-        // ONE commit (r15, guide §6): every touched group's stored rows
-        // die through the upsert's position-delete pass (alsoDeleteKeys
-        // covers groups whose recompute produced no rows) and the merged/
-        // recomputed rows land in the same snapshot — previously an
-        // equality-delete commit followed by an append commit. The merged
-        // frame caches first: the upsert evaluates its source for key
-        // scoping, the position semi-join AND the delta write, and the
-        // window+recompute plan must not re-run per consumer (§5).
-        val newRowsC = cached(newRows
-          .select(backing.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
-        Some(upsertMoR(db, mvT, newRowsC,
-          tk.keyOut, nullSafeKeys = true, alsoDeleteKeys = Some(touched))
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L))
-      } finally caches.foreach(_.unpersist())
+      val newRows = recompOut match {
+        case Some(r) => mergedOut.unionByName(
+          r.select(mergedOut.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
+        case None => mergedOut
+      }
+      val touched = iKeys.unionByName(rKeys).distinct()
+      if (touched.isEmpty) return Some(0L)
+      // ONE commit (r15, guide §6): every touched group's stored rows
+      // die through the upsert's position-delete pass (alsoDeleteKeys
+      // covers groups whose recompute produced no rows) and the merged/
+      // recomputed rows land in the same snapshot — previously an
+      // equality-delete commit followed by an append commit. The merged
+      // frame caches first: the upsert evaluates its source for key
+      // scoping, the position semi-join AND the delta write, and the
+      // window+recompute plan must not re-run per consumer (§5).
+      val newRowsC = checkpoint(newRows
+        .select(backing.schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*))
+      Some(upsertMoR(db, mvT, newRowsC,
+        tk.keyOut, nullSafeKeys = true, alsoDeleteKeys = Some(touched)).addedRecords)
     }
 
-    val added = mode match {
+    /** The range's telescope for the multi-base aggregate modes (None:
+      * an un-diffable base or no term at all — the caller falls to full). */
+    def aggTelescope(): Option[Telescope] = (mode match {
+      case "incremental_join_agg" => allDeltas().map(ds => innerJoinTerms(checkpointed(ds)))
+      case "incremental_union_agg" => allDeltas().map(ds => unionTerms(checkpointed(ds)))
+      case _ if bases.size == 2 => outerJoinTerms(outerJoinAggInfo.get)
+      case _ => outerChainTerms(outerChainAggInfo.get)
+    }).filter(t => t.plus.nonEmpty || t.minus.nonEmpty)
+
+    val added = try mode match {
       case "incremental" =>
-        append(db, mvT, bodyOverDelta())
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L)
+        append(db, mvT, bodyOver(body, increment(bases.head))).addedRecords
       case "incremental_topk" =>
         topKMerge(topKShapeOpt.get) match {
           case Some(n) => n
@@ -6804,96 +6545,30 @@ final class SnapshotCatalog(
         // backing's columns for the append
         val parts = unionArms.get.flatMap { case (key, arm) =>
           if (from(key).get == cur(key)) None
-          else {
-            val delta = readIncremental(key._1, key._2, from(key).get, cur(key))
-              .drop(meta(key._1, key._2).hiddenCols.toSeq: _*)
-            Some(bodyOverBases(arm, Map(key -> delta)))
-          }
+          else Some(bodyOverBases(arm, Map(key -> increment(key))))
         }
         val names = currentSnapshot(db, mvT).schema.fieldNames.toIndexedSeq
-        append(db, mvT, parts.reduce(_ union _).toDF(names: _*))
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L)
+        append(db, mvT, parts.reduce(_ union _).toDF(names: _*)).addedRecords
       case "incremental_join" =>
         // the inner-join maintenance identity under insert-only deltas —
-        // the multilinear telescope (2-base: Q(A+ΔA, B+ΔB) = Q(A,B) +
-        // Q(ΔA, B+ΔB) + Q(A, ΔB)): term i substitutes base i's delta
-        // with earlier bases pinned at `from` and later ones at `cur` —
-        // multiset-exact because projections/filters are row-local and
-        // joins are linear in every input. Each term joins a CHURN-sized
-        // delta against the pinned sides (the irreducible cost of
-        // incremental join maintenance; AQE broadcasts the delta side
-        // when it fits), and the result APPENDS — refresh cost is the
-        // day's increments, never Π|bases|.
-        val plan = spark.sessionState.sqlParser.parsePlan(sql)
-        def hid(x: (String, String)) = meta(x._1, x._2).hiddenCols.toSeq
-        def deltaOf(x: (String, String)) =
-          readIncremental(x._1, x._2, from(x).get, cur(x)).drop(hid(x): _*)
-        val parts = bases.zipWithIndex.flatMap { case (bi, i) =>
-          if (from(bi).get == cur(bi)) None
-          else Some(bodyOverBases(plan, bases.zipWithIndex.map { case (bj, j) =>
-            bj -> (
-              if (j == i) deltaOf(bi)
-              else if (j < i) readAsOf(bj._1, bj._2, from(bj).get).drop(hid(bj): _*)
-              else readAsOf(bj._1, bj._2, cur(bj)).drop(hid(bj): _*))
-          }.toMap))
-        }
-        // not fresh, so at least one side moved
-        append(db, mvT, parts.reduce(_.unionByName(_)))
-          .summary.get("added_records").map(_.toLong).getOrElse(-1L)
-      case "incremental_join_agg" =>
-        // fact-dim rollup: the augmented aggregate runs over the UNION
-        // of the join-delta terms — insert terms AND (r11) delete terms,
-        // by the bilinear identity in [[joinAggDeltas]] — then the
-        // per-group partials merge into the backing exactly like the
-        // single-base path (group death, extremum-death recompute and
-        // all). DISTINCT aggregates (r13) ride the same lanes: the
-        // sidecar's per-(group, value) counts re-aggregate the identical
-        // delta terms under the sidecar plan via preAggUnder.
-        joinDeltaLanes().flatMap { m0 =>
-          // checkpoint each base's churn lanes for the telescope's scope
-          // (r15, guide §5): the same ins/del frames feed the main
-          // augmented aggregate AND every distinct sidecar's
-          // re-aggregation — each evaluation re-read the churn files
-          // otherwise, and the truncated lineage keeps every downstream
-          // plan leaf-sized
-          val m = m0.map { case (i, d) =>
-            (i.map(_.localCheckpoint()), d.map(_.localCheckpoint())) }
-          try joinAggDeltas(augmentedAggPlan(sql, shapeOpt.get), m).flatMap(pm =>
-            mergePartials(shapeOpt.get, preAgg = Some(pm),
-              preAggUnder = Some(p => joinAggDeltas(p, m))))
-          finally m.foreach { case (i, d) =>
-            i.foreach(_.unpersist()); d.foreach(_.unpersist()) }
-        } match {
-          case Some(n) => n
-          case None => mode = "full"; runFull()
-        }
-      case "incremental_outer_agg" =>
-        // fact LEFT JOIN dim rollup: the two-bracket outer telescope
-        // hands the merge pre-aggregated ± partial frames like the
-        // inner-join path; the affected-key slices are cached across
-        // their brackets' terms and released after the merge. N-base
-        // chains ride their per-dim bracket generalization.
-        (if (bases.size == 2)
-          outerJoinAggDeltas(shapeOpt.get, outerJoinAggInfo.get)
-        else outerChainAggDeltas(shapeOpt.get, outerChainAggInfo.get)) match {
-          case Some((pm, under, release)) =>
-            try mergePartials(shapeOpt.get, preAgg = Some(pm),
-              preAggUnder = Some(under)) match {
-              case Some(n) => n
-              case None => mode = "full"; runFull()
-            } finally release()
-          case None => mode = "full"; runFull()
-        }
-      case "incremental_union_agg" =>
-        // multi-source rollup: ONE evaluation of the augmented aggregate
-        // per delta side (all bases substituted at once — linearity),
-        // then the identical group-wise partial merge
-        unionAggLanes().flatMap { case (under, release) =>
-          try under(augmentedAggPlan(sql, shapeOpt.get)).flatMap(pm =>
-            mergePartials(shapeOpt.get, preAgg = Some(pm),
-              preAggUnder = Some(under)))
-          finally release()
-        } match {
+        // the multilinear telescope's plus terms (2-base: Q(A+ΔA, B+ΔB)
+        // = Q(A,B) + Q(ΔA, B+ΔB) + Q(A, ΔB)), multiset-exact because
+        // projections/filters are row-local and joins are linear in
+        // every input. Each term joins a CHURN-sized delta against the
+        // pinned sides (the irreducible cost of incremental join
+        // maintenance; AQE broadcasts the delta side when it fits), and
+        // the result APPENDS — refresh cost is the day's increments,
+        // never Π|bases|. Not fresh, so at least one side moved.
+        append(db, mvT, lanes(innerJoinTerms(allDeltas().get), body)._1).addedRecords
+      case "incremental_join_agg" | "incremental_outer_agg" | "incremental_union_agg" =>
+        // multi-base rollups: the augmented aggregate runs over the
+        // UNION of the telescope's terms — insert terms AND delete terms
+        // — then the per-group partials merge into the backing exactly
+        // like the single-base path (group death, extremum-death
+        // recompute and all). DISTINCT aggregates ride the same terms:
+        // the sidecar's per-(group, value) counts re-aggregate them
+        // under the sidecar plan.
+        aggTelescope().flatMap(t => mergePartials(shapeOpt.get, Some(lanes(t, _)))) match {
           case Some(n) => n
           case None => mode = "full"; runFull()
         }
@@ -6904,7 +6579,7 @@ final class SnapshotCatalog(
         }
       case "incremental_agg" =>
         val shape = shapeOpt.get
-        val deltaAgg = bodyOverDelta()
+        val deltaAgg = bodyOver(body, increment(bases.head))
         val names = deltaAgg.schema.fieldNames
         val keyNames = shape.keyPos.map(names)
         // null group keys merge like any other value (r13): the stored-
@@ -6913,8 +6588,7 @@ final class SnapshotCatalog(
         // stored row instead of duplicating
         if (shape.aggPos.isEmpty) {
           // DISTINCT body: delta rows upsert keyed on every column
-          upsertMoR(db, mvT, deltaAgg, keyNames, nullSafeKeys = true)
-            .summary.get("added_records").map(_.toLong).getOrElse(-1L)
+          upsertMoR(db, mvT, deltaAgg, keyNames, nullSafeKeys = true).addedRecords
         } else {
           // merge each delta group against its stored partial: count/sum
           // add (sum stays NULL only if both sides are), min/max fold via
@@ -6936,14 +6610,12 @@ final class SnapshotCatalog(
           }
           val merged = joined.select(outCols.toSeq: _*)
           if (keyNames.isEmpty) // global aggregate: one row, overwrite
-            overwrite(db, mvT, merged)
-              .summary.get("added_records").map(_.toLong).getOrElse(-1L)
+            overwrite(db, mvT, merged).addedRecords
           else
-            upsertMoR(db, mvT, merged, keyNames, nullSafeKeys = true)
-              .summary.get("added_records").map(_.toLong).getOrElse(-1L)
+            upsertMoR(db, mvT, merged, keyNames, nullSafeKeys = true).addedRecords
         }
       case _ => runFull()
-    }
+    } finally releaseCheckpoints()
     setViewProperties(db, name,
       cur.map { case ((d, t), id) => s"mv.base.$d.$t" -> id.toString }, Seq.empty)
     (mode, added)
@@ -6958,13 +6630,7 @@ final class SnapshotCatalog(
       // collectWithSubqueries: a cycle routed through a scalar/IN/EXISTS
       // subquery is still a cycle
       plan.collectWithSubqueries {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-          u.multipartIdentifier match {
-            case Seq(d, n) => Some((d, n))
-            case Seq(_, d, n) => Some((d, n))
-            case Seq(n) => Some((db, n))
-            case _ => None
-          }
+        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation => relKeyOf(db, u)
       }.flatten
     }
     val seen = scala.collection.mutable.Set.empty[(String, String)]

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -199,23 +197,14 @@ class IndexMaintainerSpec extends AnyFunSuite {
       "repair, no touched id survives" -> Map("tix" -> 5, "dix" -> 5, "vix" -> 5),
       "full" -> Map("tix" -> 2, "dix" -> 1, "vix" -> 4))
     val cat = setup(col("doc_id") < 60)
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
     for ((lane, change) <- lanes) {
       change(cat)
       for ((name, kind) <- indexes) {
         val k = kind(cat, "im", name)
-        GraftColumnBridge.waitListenerBus(spark, 10000)
-        jobs.set(0)
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          IndexMaintainer.refreshTo(cat, "im", name, k, head(cat))
-          GraftColumnBridge.waitListenerBus(spark, 10000)
-        } finally spark.sparkContext.removeSparkListener(listener)
-        info(s"$lane, $name: ${jobs.get()} jobs")
-        assert(jobs.get() <= most(lane)(name), s"$name, $lane lane: ${jobs.get()} jobs")
+        val (_, jobs) = SparkJobs.counted(spark)(
+          IndexMaintainer.refreshTo(cat, "im", name, k, head(cat)))
+        info(s"$lane, $name: $jobs jobs")
+        assert(jobs <= most(lane)(name), s"$name, $lane lane: $jobs jobs")
       }
       assertBuiltAt(cat, head(cat))
     }

@@ -395,22 +395,8 @@ class MorDeleteSpec extends AnyFunSuite {
       s"compacted table still pays the merge:\n$phys2")
   }
 
-  /** Spark jobs `body` submits, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Spark jobs `body` submits. */
+  private def jobsOf(body: => Unit): Int = SparkJobs.counted(spark)(body)._2
 
   test("reads over live position and equality deletes run no more jobs than over a compacted copy (counter gate)") {
     val cat = freshCatalog()

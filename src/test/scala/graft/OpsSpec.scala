@@ -172,24 +172,11 @@ class OpsSpec extends AnyFunSuite {
     // SECOND invocation over the same parquet corpus: the cached
     // centroids serve — zero training collects, listener-asserted (no
     // Spark job may start during plan CONSTRUCTION)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    // drain events still queued from the first invocation — they would
-    // otherwise deliver to the new listener and read as fresh jobs
-    org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
-    spark.sparkContext.addSparkListener(listener)
-    val df2 =
-      try {
-        val d = run(corpus)
-        org.apache.spark.sql.GraftColumnBridge.waitListenerBus(spark, 10000)
-        assert(jobs.get() == 0,
-          s"second invocation must run ZERO jobs at construction, ran ${jobs.get()}")
-        d
-      } finally spark.sparkContext.removeSparkListener(listener)
+    // (the counter drains events still queued from the first invocation —
+    // they would otherwise read as fresh jobs)
+    val (df2, jobs) = SparkJobs.counted(spark)(run(corpus))
+    assert(jobs == 0,
+      s"second invocation must run ZERO jobs at construction, ran $jobs")
     assert(Similarity.ivfTrainingCount == t0 + 1, "second invocation reuses centroids")
     assert(df2.as[(Long, Long, Long)].collect().sorted.toSeq == r1, "identical results")
     // a DIFFERENT (filtered) corpus identity must retrain, never serve

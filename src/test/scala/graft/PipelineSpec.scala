@@ -2,10 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -225,25 +222,18 @@ class PipelineSpec extends AnyFunSuite {
     val dst = newCat()
     val info = morSource(src)
     assert(TableCreator.createOne(dst, info).status == "success")
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    GraftColumnBridge.waitListenerBus(spark, 10000)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = SparkJobs.counted(spark) {
       assert(Migrator.migrateOne(src, dst, info).status == "success")
       val v = IntegrityVerifier.verifyOne(src, dst, info)
       assert(v.ok && v.sourceDigest == "recorded", v)
-      GraftColumnBridge.waitListenerBus(spark, 10000)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // Before the source digest rode the migrate write: 7 jobs. Migrate ran
     // 2 (the position-delete broadcast and the write); verify ran 5, 3 of
     // them a second source read (delete broadcast, partial and final
     // aggregate) and 2 for the target. Then 4: the same 2 for migrate, and
     // only the target's 2 for verify. Now the source read drops its dead
     // rows inside the parquet readers, so migrate is the write alone.
-    assert(jobs.get() == 3, s"jobs: ${jobs.get()}")
+    assert(jobs == 3, s"jobs: $jobs")
   }
 
   test("schema verifier reports missing and extra columns") {

@@ -35,6 +35,21 @@ class ViewSpec extends AnyFunSuite {
     try body finally spark.conf.set("spark.graft.mv.rewrite.enabled", "true")
   }
 
+  /** One refresh of `db.<view>`, gated: it starts at most `maxJobs` Spark
+    * jobs, and every frame it checkpointed is released by the time it
+    * returns (no RDD it persisted is still registered). Returns the mode. */
+  private def gatedRefresh(cat: SnapshotCatalog, view: String,
+      maxJobs: Int = Int.MaxValue): String = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ((mode, _), jobs) =
+      SparkJobs.counted(spark)(cat.refreshMaterializedView("db", view))
+    info(s"$view refresh ($mode): $jobs jobs")
+    assert(jobs <= maxJobs, s"$view refresh ($mode) ran $jobs Spark jobs, gate $maxJobs")
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.isEmpty, s"$view refresh ($mode) left RDDs persisted: $held")
+    mode
+  }
+
   test("create, SELECT through plain SQL, late binding, version history, restore") {
     val (cat, wh) = freshCat()
     register(wh, "vcat")
@@ -713,7 +728,7 @@ class ViewSpec extends AnyFunSuite {
     // exactly once (ΔA joins B', A_old joins ΔB)
     cat.append("db", "cust", Seq((5L, "eve")).toDF("k", "name"))
     cat.append("db", "ord", Seq((5L, 50L), (1L, 60L), (9L, 90L)).toDF("k", "v"))
-    val (m3, _) = cat.refreshMaterializedView("db", "jv")
+    val m3 = gatedRefresh(cat, "jv", maxJobs = 3)
     assert(m3 == "incremental_join", m3)
     assert(got() == expect())
 
@@ -769,7 +784,13 @@ class ViewSpec extends AnyFunSuite {
     // forced a full refresh instead)
     cat.append("db", "t", Seq((5L, Option.empty[String], 7L),
       (6L, Option("a"), 1L)).toDF("id", "g", "v"))
+    // the refresh classifies the base's range once: the pointer-log reads
+    // of one single-base aggregate refresh are gated
+    val reads0 = SnapshotCatalog.logReads.get()
     val (m1, _) = cat.refreshMaterializedView("db", "nkv")
+    val reads = SnapshotCatalog.logReads.get() - reads0
+    info(s"incremental_agg refresh: $reads pointer-log reads")
+    assert(reads <= 13, s"incremental_agg refresh read the pointer log $reads times")
     assert(m1 == "incremental_agg", m1)
     assert(got() == expect())
     assert(got().count(_._1.isEmpty) == 1, got().toString)
@@ -841,7 +862,7 @@ class ViewSpec extends AnyFunSuite {
     cat.append("db", "cust", Seq((4L, "s2")).toDF("ck", "seg"))
     cat.append("db", "prod", Seq((30L, "pc")).toDF("pk", "cat")) // picks up (1,30,50)
     cat.append("db", "fact", Seq((4L, 30L, 6L), (3L, 20L, 8L)).toDF("ck", "pk", "v"))
-    val (m3, _) = cat.refreshMaterializedView("db", "star")
+    val m3 = gatedRefresh(cat, "star", maxJobs = 19)
     assert(m3 == "incremental_join_agg", m3)
     assert(got() == expect())
 
@@ -1022,7 +1043,7 @@ class ViewSpec extends AnyFunSuite {
     cat.append("db", "prod", Seq((99L, "pz"), (10L, "pa2")).toDF("pk", "cat"))
     cat.deleteMoR("db", "fact", col("v") === 5L)
     cat.append("db", "fact", Seq((9L, 20L, 2L)).toDF("ck", "pk", "v"))
-    val (m4, _) = cat.refreshMaterializedView("db", "chain")
+    val m4 = gatedRefresh(cat, "chain", maxJobs = 41)
     assert(m4 == "incremental_outer_agg", m4)
     assert(got() == expect())
 
@@ -1162,7 +1183,7 @@ class ViewSpec extends AnyFunSuite {
     cat.append("db", "dim", Seq((8L, "s2")).toDF("k", "seg"))
     cat.updateMoR("db", "fact", col("k") === 3L, Map("v" -> lit(31L)))
     cat.append("db", "fact", Seq((8L, 31L)).toDF("k", "v"))
-    val (m6, _) = cat.refreshMaterializedView("db", "djr")
+    val m6 = gatedRefresh(cat, "djr", maxJobs = 53)
     assert(m6 == "incremental_join_agg", m6)
     assert(got() == expect())
   }
@@ -1200,7 +1221,7 @@ class ViewSpec extends AnyFunSuite {
     // dim churn COVERS a null-extended key: k=9 moves from the NULL
     // group into s9 — both groups' distinct sets move through bracket 2
     cat.append("db", "dim", Seq((9L, "s9")).toDF("k", "seg"))
-    val (mo2, _) = cat.refreshMaterializedView("db", "odr")
+    val mo2 = gatedRefresh(cat, "odr", maxJobs = 48)
     assert(mo2 == "incremental_outer_agg", mo2)
     assert(gotO() == expectO())
     assert(!gotO().exists(_._1.isEmpty), gotO().toString)
@@ -1220,7 +1241,7 @@ class ViewSpec extends AnyFunSuite {
     assert(gotU() == expectU())
     cat.deleteMoR("db", "fact", col("v") === 20L)
     cat.append("db", "fact", Seq((4L, 11L)).toDF("k", "v")) // duplicate value 11
-    val (mu1, _) = cat.refreshMaterializedView("db", "udr")
+    val mu1 = gatedRefresh(cat, "udr", maxJobs = 42)
     assert(mu1 == "incremental_union_agg", mu1)
     assert(gotU() == expectU())
     cat.deleteMoR("db", "dim", col("k") === 2L)
@@ -1302,7 +1323,7 @@ class ViewSpec extends AnyFunSuite {
     cat.updateMoR("db", "fact", col("k") === 1L && col("v") === 10L,
       Map("v" -> lit(12L)))
     cat.append("db", "fact", Seq((8L, 2L)).toDF("k", "v"))
-    val (m7, _) = cat.refreshMaterializedView("db", "rollup")
+    val m7 = gatedRefresh(cat, "rollup", maxJobs = 23)
     assert(m7 == "incremental_join_agg", m7)
     assert(got() == expect())
   }
@@ -1724,8 +1745,8 @@ class ViewSpec extends AnyFunSuite {
       "SELECT d.seg, count(*) AS n, sum(f.v) AS sv, avg(f.v) AS av, max(f.v) AS mx " +
         "FROM ocat.db.fact f LEFT JOIN ocat.db.dim d ON f.ck = d.ck " +
         "GROUP BY d.seg ORDER BY d.seg").collect().toSeq)
-    def check(label: String): Unit = {
-      val (mode, _) = cat.refreshMaterializedView("db", "omv")
+    def check(label: String, maxJobs: Int = Int.MaxValue): Unit = {
+      val mode = gatedRefresh(cat, "omv", maxJobs)
       assert(mode == "incremental_outer_agg", s"$label took '$mode'")
       val got = spark.sql("SELECT * FROM ocat.db.omv ORDER BY seg").collect().toSeq
       assert(got == truth, s"$label: $got vs $truth")
@@ -1748,7 +1769,7 @@ class ViewSpec extends AnyFunSuite {
     cat.deleteMoR("db", "fact", col("id") % 13 === 1)
     cat.append("db", "dim", Seq((1001L, "sNEW2")).toDF("ck", "seg"))
     cat.deleteMoR("db", "dim", col("ck") === 4)
-    check("both sides")
+    check("both sides", maxJobs = 35)
     // 5. a fresh view is a no-op
     assert(cat.refreshMaterializedView("db", "omv")._1 == "fresh")
     // 6. a filtered JOIN SIDE declines to full (its delta is not the raw
@@ -1801,8 +1822,8 @@ class ViewSpec extends AnyFunSuite {
       "SELECT a.k AS ka, b.k AS kb, count(*) AS n, sum(a.va) AS sa, sum(b.vb) AS sb " +
         "FROM focat.db.fa a FULL JOIN focat.db.fb b ON a.k = b.k " +
         "GROUP BY a.k, b.k ORDER BY ka, kb").collect().toSeq)
-    def check(label: String): Unit = {
-      val (mode, _) = cat.refreshMaterializedView("db", "fomv")
+    def check(label: String, maxJobs: Int = Int.MaxValue): Unit = {
+      val mode = gatedRefresh(cat, "fomv", maxJobs)
       assert(mode == "incremental_outer_agg", s"$label took '$mode'")
       val got = spark.sql("SELECT * FROM focat.db.fomv ORDER BY ka, kb")
         .collect().toSeq
@@ -1824,7 +1845,7 @@ class ViewSpec extends AnyFunSuite {
     cat.deleteMoR("db", "fa", col("k") === 5)
     cat.append("db", "fb", feedB(191L to 210L))
     cat.deleteMoR("db", "fb", col("idb") % 10 === 6)
-    check("both sides")
+    check("both sides", maxJobs = 38)
     assert(cat.refreshMaterializedView("db", "fomv")._1 == "fresh")
   }
 
@@ -1847,8 +1868,8 @@ class ViewSpec extends AnyFunSuite {
       "SELECT d.lang, count(*) AS n FROM bcat.db.docs d " +
         "LEFT ANTI JOIN bcat.db.block b ON d.h = b.h " +
         "GROUP BY d.lang ORDER BY d.lang").collect().toSeq)
-    def check(label: String): Unit = {
-      val (mode, _) = cat.refreshMaterializedView("db", "clean_counts")
+    def check(label: String, maxJobs: Int = Int.MaxValue): Unit = {
+      val mode = gatedRefresh(cat, "clean_counts", maxJobs)
       assert(mode == "incremental_outer_agg", s"$label took '$mode'")
       assert(spark.sql("SELECT * FROM bcat.db.clean_counts ORDER BY lang")
         .collect().toSeq == truth, s"$label diverged")
@@ -1862,7 +1883,7 @@ class ViewSpec extends AnyFunSuite {
     check("blocklist growth")
     // blocklist SHRINKS: h3 docs re-admit
     cat.deleteMoR("db", "block", col("h") === "h3")
-    check("blocklist shrink")
+    check("blocklist shrink", maxJobs = 21)
     // the SEMI twin: docs ON the blocklist, same machinery
     cat.createMaterializedView("db", "dirty_counts",
       "SELECT d.lang, count(*) AS n FROM db.docs d " +
