@@ -363,6 +363,15 @@ final class SnapshotCatalog(
     mutex: CommitMutex = FileLockCommitMutex,
     log: PointerLogStore = FilePointerLogStore) {
 
+  GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+
+  /** `dir` as the path of a Spark write: through [[GraftLocalFileSystem]],
+    * which sets file modes without spawning a process. Reads stay on
+    * plain paths. */
+  private def writeUri(dir: Path): String =
+    new org.apache.hadoop.fs.Path(GraftLocalFileSystem.Scheme, null,
+      dir.toAbsolutePath.toString).toString
+
   private def whPath: Path = Paths.get(warehouse)
   private def dbPath(db: String): Path = whPath.resolve(db)
   private def tablePath(db: String, table: String): Path = dbPath(db).resolve(table)
@@ -629,7 +638,7 @@ final class SnapshotCatalog(
         else derived
     }
     laid.write.mode("overwrite").partitionBy(tm.partitionCols: _*)
-      .parquet(outDir.toString)
+      .parquet(writeUri(outDir))
     deleteRecursively(flatDir)
     outName
   }
@@ -2397,7 +2406,7 @@ final class SnapshotCatalog(
       case Some(n) => clustered.write.mode("overwrite").option("maxRecordsPerFile", n.toLong)
       case None => clustered.write.mode("overwrite")
     }
-    w.partitionBy(tm.partitionCols: _*).parquet(outDir.toString)
+    w.partitionBy(tm.partitionCols: _*).parquet(writeUri(outDir))
     adoptDynamicOverwrite(db, table, dirName)
   }
 
@@ -2445,8 +2454,7 @@ final class SnapshotCatalog(
           "the table first")
       s
     }
-    val newFiles = listParquetFiles(snapDir).map(p =>
-      s"data/$dataDirName/" + snapDir.relativize(p).toString.replace('\\', '/'))
+    val newFiles = listParquetFiles(snapDir).map(relPath(snapDir, s"data/$dataDirName", _))
     // expect.mode=commit gates the INCOMING rows, like append/overwrite
     // (carried partitions predate the batch and never re-validate). One
     // read-back of only the new files; a refusal deletes the staged dir —
@@ -2588,7 +2596,7 @@ final class SnapshotCatalog(
     // (stats-after-move left the only copy stranded in an unreferenced
     // data/s<id> dir on failure)
     val relBySrc = src.map(p =>
-      p -> (snapDirRel + "/" + srcDir.relativize(p).toString.replace('\\', '/'))).toMap
+      p -> relPath(srcDir, snapDirRel, p)).toMap
     val newFileStats = FileStats.fromFooters(src,
       (p: java.nio.file.Path) => p, snapSchema, conf)
       .map { case (p, st) => relBySrc(p) -> st }
@@ -2919,7 +2927,7 @@ final class SnapshotCatalog(
     val partitioned =
       if (tm.partitionCols.nonEmpty) writer.partitionBy(tm.partitionCols: _*) else writer
     SnapshotCatalog.timed(s"commit.write $db.$table#$newId") {
-      partitioned.parquet(snapDir.toString)
+      partitioned.parquet(writeUri(snapDir))
     }
     val metrics = obs.get
     val rows = metrics("rows").asInstanceOf[Long]
@@ -2954,8 +2962,7 @@ final class SnapshotCatalog(
       case _ => freshStats
     }
 
-    val newFiles = listParquetFiles(snapDir).map(p =>
-      snapDirRel + "/" + snapDir.relativize(p).toString.replace('\\', '/'))
+    val newFiles = listParquetFiles(snapDir).map(relPath(snapDir, snapDirRel, _))
     // Per-FILE stats from the freshly written footers (metadata-only reads,
     // one per NEW file — the Iceberg-manifest data-skipping layer; see
     // [[FileStats]]). Appends and partial rewrites carry the retained
@@ -3332,13 +3339,12 @@ final class SnapshotCatalog(
     val delDir = tablePath(db, table).resolve("deletes").resolve(s"s$newId$tag")
     local.fold(keys.dropDuplicates(eqCols))(rows =>
       spark.createDataFrame(rows.toSeq.asJava, keys.schema)).coalesce(1)
-      .write.mode("overwrite").parquet(delDir.toString)
+      .write.mode("overwrite").parquet(writeUri(delDir))
     val conf = spark.sessionState.newHadoopConf()
     val root = tablePath(db, table)
     val written = listParquetFiles(delDir)
     val fileEntries = written.map { p =>
-      val rel = delDirRel + "/" + delDir.relativize(p).toString.replace('\\', '/')
-      DeleteFile(rel, covers.map(_ -> 0L).toMap, eqCols,
+      DeleteFile(relPath(delDir, delDirRel, p), covers.map(_ -> 0L).toMap, eqCols,
         FileStats.rowCountFromFooter(new org.apache.hadoop.fs.Path(p.toUri), conf))
     }.filter(_.eqTuples > 0)
     if (fileEntries.isEmpty) {
@@ -3462,29 +3468,50 @@ final class SnapshotCatalog(
       // narrow write: filter+project of the scan, no shuffle; within-task
       // sort gives the positions run-length-friendly parquet layout
       .sortWithinPartitions("_file", "_pos")
-      .write.mode("overwrite").parquet(delDir.toString)
+      .write.mode("overwrite").parquet(writeUri(delDir))
     val written = listParquetFiles(delDir)
-    val relOf = written.map(p => p.getFileName.toString ->
-      (delDirRel + "/" + delDir.relativize(p).toString.replace('\\', '/'))).toMap
-    val counts =
-      if (written.isEmpty) Array.empty[Row]
-      else spark.read.schema(deleteFileSchema).parquet(delDir.toString)
-        .groupBy(col("_metadata.file_path").as("__dpath"), col("_file"))
-        .count().collect()
-    val fileEntries = counts.groupBy(_.getString(0)).toSeq.map { case (dpath, rs) =>
-      val name = dpath.substring(dpath.lastIndexOf('/') + 1)
-      DeleteFile(relOf(name), rs.map(r => r.getString(1) -> r.getLong(2)).toMap)
-    }.sortBy(_.path)
+    val fileEntries = deleteCoverage(delDir, delDirRel, written)
     if (fileEntries.isEmpty) deleteRecursively(delDir)
     else {
       // empty part files (tasks that matched nothing) hold no positions —
       // sweep them rather than carrying pointerless entries forever
       val live = fileEntries.map(_.path).toSet
-      written.filterNot(p => live(relOf(p.getFileName.toString))).foreach(Files.delete)
+      written.filterNot(p => live(relPath(delDir, delDirRel, p))).foreach(Files.delete)
       writeDeleteShard(db, table, deleteShardName(newId, tag), fileEntries)
     }
     fileEntries
   }
+
+  /** `p` (a file under `dir`) as a table-relative path, `dirRel` being
+    * `dir`'s own. */
+  private def relPath(dir: Path, dirRel: String, p: Path): String =
+    dirRel + "/" + dir.relativize(p).toString.replace('\\', '/')
+
+  /** The delete files just `written` under `delDir` (`delDirRel`
+    * table-relative), each with its exact per-data-file position count,
+    * read back in one job and no shuffle: every task folds its rows'
+    * (delete file, data file) counts, and the driver merges them. Files
+    * holding no position get no entry. */
+  private def deleteCoverage(delDir: Path, delDirRel: String,
+      written: Seq[Path]): Seq[DeleteFile] =
+    if (written.isEmpty) Seq.empty
+    else {
+      val relOf = written.map(p => p.getFileName.toString -> relPath(delDir, delDirRel, p)).toMap
+      val perTask = spark.read.schema(deleteFileSchema).parquet(delDir.toString)
+        .select(col("_metadata.file_path"), col("_file")).rdd
+        .mapPartitions { rows =>
+          val n = scala.collection.mutable.HashMap.empty[(String, String), Long]
+          rows.foreach { r =>
+            val k = (r.getString(0), r.getString(1)); n(k) = n.getOrElse(k, 0L) + 1
+          }
+          Iterator.single(n.toMap)
+        }.collect()
+      perTask.flatten.groupMapReduce(_._1)(_._2)(_ + _).toSeq
+        .groupBy { case ((dpath, _), _) => dpath }.toSeq.map { case (dpath, cs) =>
+          DeleteFile(relOf(dpath.substring(dpath.lastIndexOf('/') + 1)),
+            cs.map { case ((_, file), n) => file -> n }.toMap)
+        }.sortBy(_.path)
+    }
 
   /** MERGE-ON-READ UPDATE: matched rows die as POSITIONS and their updated
     * copies append as new data files — ONE snapshot carrying both a delete
@@ -3575,11 +3602,10 @@ final class SnapshotCatalog(
       updated0.drop(tm.hiddenCols.toSeq: _*))
     val writer = updated.write.mode("overwrite")
     (if (tm.partitionCols.nonEmpty) writer.partitionBy(tm.partitionCols: _*) else writer)
-      .parquet(snapDir.toString)
+      .parquet(writeUri(snapDir))
     val conf = spark.sessionState.newHadoopConf()
     val root = tablePath(db, table)
-    val newFiles = listParquetFiles(snapDir).map(p =>
-      snapDirRel + "/" + snapDir.relativize(p).toString.replace('\\', '/'))
+    val newFiles = listParquetFiles(snapDir).map(relPath(snapDir, snapDirRel, _))
     // lineage: every post-image row carries its original id in the
     // physical __rid column — mark the files so the commit funnel never
     // re-mints (the same contract as compact's rewrite outputs)
@@ -3819,12 +3845,11 @@ final class SnapshotCatalog(
     SnapshotCatalog.timed(s"upsert.delta $db.$table#$newId") {
       val writer = delta.write.mode("overwrite")
       (if (tm.partitionCols.nonEmpty) writer.partitionBy(tm.partitionCols: _*) else writer)
-        .parquet(snapDir.toString)
+        .parquet(writeUri(snapDir))
     }
     val conf = spark.sessionState.newHadoopConf()
     val root = tablePath(db, table)
-    val newFiles = listParquetFiles(snapDir).map(p =>
-      snapDirRel + "/" + snapDir.relativize(p).toString.replace('\\', '/'))
+    val newFiles = listParquetFiles(snapDir).map(relPath(snapDir, snapDirRel, _))
     val ridMark: Map[String, String] =
       if (explicitRids) Map("rid_materialized" -> "true") else Map.empty
     val newFileStats = SnapshotCatalog.timed(s"upsert.footers $db.$table#$newId") {
@@ -3954,8 +3979,7 @@ final class SnapshotCatalog(
         relayoutLaid(db, table, dataDirName)
       else dataDirName
     val dataDir = root.resolve("data").resolve(laidDataDir)
-    val newFiles = listParquetFiles(dataDir).map(p =>
-      s"data/$laidDataDir/" + dataDir.relativize(p).toString.replace('\\', '/'))
+    val newFiles = listParquetFiles(dataDir).map(relPath(dataDir, s"data/$laidDataDir", _))
       .sorted
     if (newFiles.isEmpty) deleteRecursively(dataDir)
     val newFileStats = withBloomStats(db, table,
@@ -3971,15 +3995,7 @@ final class SnapshotCatalog(
     val fileEntries =
       if (written.isEmpty) { deleteRecursively(delDir); Seq.empty[DeleteFile] }
       else {
-        val relOf = written.map(p => p.getFileName.toString ->
-          (s"deletes/$deleteDirName/" + delDir.relativize(p).toString.replace('\\', '/'))).toMap
-        val counts = spark.read.schema(deleteFileSchema).parquet(delDir.toString)
-          .groupBy(col("_metadata.file_path").as("__dpath"), col("_file"))
-          .count().collect()
-        val es = counts.groupBy(_.getString(0)).toSeq.map { case (dpath, rs) =>
-          val name = dpath.substring(dpath.lastIndexOf('/') + 1)
-          DeleteFile(relOf(name), rs.map(r => r.getString(1) -> r.getLong(2)).toMap)
-        }.sortBy(_.path)
+        val es = deleteCoverage(delDir, s"deletes/$deleteDirName", written)
         if (es.isEmpty) deleteRecursively(delDir)
         else writeDeleteShard(db, table, deleteShardName(newId, tag), es)
         es
@@ -4225,8 +4241,7 @@ final class SnapshotCatalog(
     val schema = prevEntry.schema
     val (cf, cs, cshards, cshardSums) =
       admitCarryShards(db, table, prevEntry, carryFiles, carryStats, carryShards)
-    val newFiles = listParquetFiles(snapDir).map(p =>
-      snapDirRel + "/" + snapDir.relativize(p).toString.replace('\\', '/'))
+    val newFiles = listParquetFiles(snapDir).map(relPath(snapDir, snapDirRel, _))
     val conf = spark.sessionState.newHadoopConf()
     val newFileStats = withBloomStats(db, table,
       FileStats.fromFooters(newFiles, (f: String) => root.resolve(f),
@@ -5676,13 +5691,7 @@ final class SnapshotCatalog(
     def checkpoint(f: DataFrame): DataFrame = {
       val c = f.localCheckpoint(); checkpoints += c; c
     }
-    // `Dataset.unpersist` only reaches the cache manager: a local
-    // checkpoint's blocks belong to the RDD under its plan, released here
-    // (else they stay registered until the context cleaner collects them)
-    def releaseCheckpoints(): Unit = checkpoints.foreach(_.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    })
+    def releaseCheckpoints(): Unit = checkpoints.foreach(SnapshotCatalog.releaseCheckpoint)
 
     /** Per-base (insert, delete) row sets across the refresh range —
       * append-only sides read the cheap incremental tail; MoR-family
@@ -7452,19 +7461,8 @@ final class SnapshotCatalog(
       if (n == 1) dead.repartition(1)
       else dead.repartitionByRange(n, col("_file"), col("_pos"))
     laid.sortWithinPartitions("_file", "_pos")
-      .write.mode("overwrite").parquet(delDir.toString)
-    val written = listParquetFiles(delDir)
-    val relOf = written.map(p => p.getFileName.toString ->
-      (delDirRel + "/" + delDir.relativize(p).toString.replace('\\', '/'))).toMap
-    // per-(shard, data-file) coverage rows — metadata-sized collect, the
-    // same discipline as the commit path's footer-stat harvest
-    val counts = spark.read.schema(deleteFileSchema).parquet(delDir.toString)
-      .groupBy(col("_metadata.file_path").as("__dpath"), col("_file"))
-      .count().collect()
-    counts.groupBy(_.getString(0)).toSeq.map { case (dpath, rs) =>
-      val name = dpath.substring(dpath.lastIndexOf('/') + 1)
-      DeleteFile(relOf(name), rs.map(r => r.getString(1) -> r.getLong(2)).toMap)
-    }.sortBy(_.path)
+      .write.mode("overwrite").parquet(writeUri(delDir))
+    deleteCoverage(delDir, delDirRel, listParquetFiles(delDir))
   }
 
   /** Consolidate POSITION-delete files without touching data (Iceberg
@@ -8057,6 +8055,17 @@ object SnapshotCatalog {
     * `_file`/`_pos` equivalent). */
   val MorFileCol = "__graft_mor_file"
   val MorPosCol = "__graft_mor_pos"
+
+  /** Frees the blocks of a `localCheckpoint`ed frame. `Dataset.unpersist`
+    * only reaches the cache manager; a local checkpoint's blocks belong to
+    * the RDD under its plan, and stay registered until the context cleaner
+    * collects them unless that RDD is unpersisted. A frame with no
+    * checkpoint under it is left as it is. */
+  private[graft] def releaseCheckpoint(f: DataFrame): Unit =
+    f.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 
   /** Wall-clock phase timing for the commit path, gated on
     * `-Dgraft.debug.timing=true` — measurement scaffolding (guide §1:

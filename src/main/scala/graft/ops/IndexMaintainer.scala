@@ -162,11 +162,11 @@ object IndexMaintainer {
                 .localCheckpoint()
               try {
                 if (observed(found)("n") > 0) cat.append(db, name, derive(fresh))
-              } finally fresh.unpersist()
-            } finally keys.unpersist()
+              } finally SnapshotCatalog.releaseCheckpoint(fresh)
+            } finally SnapshotCatalog.releaseCheckpoint(keys)
           }
           ("incremental", counters.keys.map(k => k -> (p(k).toLong + m(k))).toMap)
-        } finally churn.unpersist()
+        } finally SnapshotCatalog.releaseCheckpoint(churn)
       case None =>
         val base = project(cat.readAsOf(baseDb, baseTable, target))
         val (obs, aggs) = (Observation(), counterSums(kind, lit(1L)))

@@ -211,8 +211,8 @@ object EventStream {
         if (!bandsMark.exists(epochId <= _))
           cat.append(db, bandsTable, survBands, Map(tagKey -> epochId.toString))
         cat.append(db, corpus, survivors, Map(tagKey -> epochId.toString))
-      } finally survivors.unpersist()
-    } finally batchU.unpersist()
+      } finally graft.catalog.SnapshotCatalog.releaseCheckpoint(survivors)
+    } finally graft.catalog.SnapshotCatalog.releaseCheckpoint(batchU)
     ()
   }
 

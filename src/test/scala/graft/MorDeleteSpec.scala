@@ -17,8 +17,10 @@ class MorDeleteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // the warehouse path holds a space: every write and read of this spec
+  // parses it, through the graft write scheme and plain read paths alike
   private def freshCatalog(): SnapshotCatalog = {
-    val dir = Files.createTempDirectory("graft_mor_").toString
+    val dir = Files.createTempDirectory("graft mor ").toString
     var tick = 0L
     new SnapshotCatalog(spark, dir,
       clock = () => { tick += 1; Instant.parse("2026-05-01T00:00:00Z").plusSeconds(tick * 3600) })
@@ -784,6 +786,54 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(ins.summary("deleted_records") == "0")
     assert(ins.summary("max.n_nationkey") == "500", s"got ${ins.summary.get("max.n_nationkey")}")
     assert(cat.readLatest("db", "nation").count() == 29)
+  }
+
+  /** Bytes Hadoop has counted as written through `scheme`, every thread. */
+  @annotation.nowarn("cat=deprecation")
+  private def bytesWritten(scheme: String): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == scheme).map(_.getBytesWritten).sum
+  }
+
+  test("the graft write scheme lays out files, .crc sidecars and modes like file:") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import scala.jdk.CollectionConverters._
+    freshCatalog() // a catalog registers the scheme
+    val conf = spark.sparkContext.hadoopConfiguration
+    def layout(fs: FileSystem): Seq[(String, String)] = {
+      val dir = Files.createTempDirectory("graft fs ")
+      val out = fs.create(new HPath(fs.getUri.getScheme, null, dir.resolve("a/b/f").toString))
+      out.write(Array[Byte](1, 2, 3)); out.close()
+      assert(fs.mkdirs(new HPath(fs.getUri.getScheme, null, dir.resolve("d/e").toString)))
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(_ != dir).map(p => dir.relativize(p).toString ->
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+        .toSeq.sorted
+      finally walk.close()
+    }
+    val graftFs = FileSystem.get(java.net.URI.create(s"${GraftLocalFileSystem.Scheme}:///"), conf)
+    assert(graftFs.isInstanceOf[GraftLocalFileSystem])
+    val stock = layout(FileSystem.getLocal(conf))
+    assert(stock.map(_._1).contains("a/b/.f.crc"), s"stock layout: $stock")
+    assert(layout(graftFs) == stock)
+  }
+
+  test("graft's Spark writes go through its scheme, none through file:") {
+    val cat = freshCatalog()
+    val (file0, graft0) = (bytesWritten("file"), bytesWritten(GraftLocalFileSystem.Scheme))
+    withNation(cat) // keys 0..24
+    cat.upsertMoR("db", "nation", nation.where(col("n_nationkey") >= 20)
+      .withColumn("n_name", lit("UPD")), keys = Seq("n_nationkey"))
+    cat.deleteMoR("db", "nation", col("n_nationkey") < 5)
+    cat.compact("db", "nation", 1)
+    assert(bytesWritten("file") == file0, "a Spark write went through file:")
+    assert(bytesWritten(GraftLocalFileSystem.Scheme) > graft0)
+    // and the warehouse, whose path holds a space, reads back
+    val rows = cat.readLatest("db", "nation").select("n_nationkey", "n_name")
+      .as[(Int, String)].collect()
+    assert(rows.map(_._1).sorted.toSeq == (5 to 24))
+    assert(rows.count(_._2 == "UPD") == 5)
   }
 
   test("equality delete: zero-corpus-scan commit, appends-after untouched, honest unknowns") {
