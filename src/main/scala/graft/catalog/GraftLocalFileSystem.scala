@@ -51,6 +51,12 @@ object GraftLocalFileSystem {
     }
   }
 
+  /** `dir` as the path of a Spark write: through [[GraftLocalFileSystem]],
+    * which sets file modes without spawning a process. Reads stay on
+    * plain paths. */
+  def writeUri(dir: java.nio.file.Path): String =
+    new Path(Scheme, null, dir.toAbsolutePath.toString).toString
+
   /** Registers the scheme on `conf`; a no-op once it is there. */
   def register(conf: Configuration): Unit = {
     val key = s"fs.$Scheme.impl"

@@ -13,6 +13,8 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.functions.OnePass
+
 /** One committed snapshot of a table: a full table state addressed by id.
   *
   * Mirrors the Iceberg snapshot surface the reference consumes — fields
@@ -364,13 +366,7 @@ final class SnapshotCatalog(
     log: PointerLogStore = FilePointerLogStore) {
 
   GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
-
-  /** `dir` as the path of a Spark write: through [[GraftLocalFileSystem]],
-    * which sets file modes without spawning a process. Reads stay on
-    * plain paths. */
-  private def writeUri(dir: Path): String =
-    new org.apache.hadoop.fs.Path(GraftLocalFileSystem.Scheme, null,
-      dir.toAbsolutePath.toString).toString
+  import GraftLocalFileSystem.writeUri
 
   private def whPath: Path = Paths.get(warehouse)
   private def dbPath(db: String): Path = whPath.resolve(db)
@@ -2929,7 +2925,7 @@ final class SnapshotCatalog(
     SnapshotCatalog.timed(s"commit.write $db.$table#$newId") {
       partitioned.parquet(writeUri(snapDir))
     }
-    val metrics = obs.get
+    val metrics = OnePass.values(OnePass.result(obs))
     val rows = metrics("rows").asInstanceOf[Long]
     // append/compact snapshots still contain the previous files, so their
     // stats merge with the previous snapshot's (absent on either side ->
@@ -3288,8 +3284,8 @@ final class SnapshotCatalog(
       case _ => None
     }
     // candidate coverage: footer-stat range scoping over the KEY frame
-    // only (one tiny agg — the corpus stays untouched); multi-column keys
-    // cover every current file
+    // only (one observed pass, one job — the corpus stays untouched);
+    // multi-column keys cover every current file
     val covers = eqCols match {
       case _ if local.exists(_.isEmpty) => Seq.empty // empty key frame: nothing dies
       case Seq(k) if ColumnStats.statable(schema(k).dataType) =>
@@ -3303,8 +3299,8 @@ final class SnapshotCatalog(
             (rows.length.toLong, vs.length.toLong,
               vs.minOption(ord).orNull, vs.maxOption(ord).orNull)
           case None =>
-            val mm = keys.agg(min(col(s"`$k`")), max(col(s"`$k`")),
-              count(lit(1)), count(col(s"`$k`"))).head()
+            val mm = OnePass.aggregate(keys, Seq(min(col(s"`$k`")), max(col(s"`$k`")),
+              count(lit(1)), count(col(s"`$k`"))))
             (mm.getLong(2), mm.getLong(3), mm.get(0), mm.get(1))
         }
         if (n == 0) Seq.empty // empty key frame: nothing dies
@@ -3411,7 +3407,8 @@ final class SnapshotCatalog(
       .map(f => snap.fileStats(f)("rows").toLong).sum - posDead
     val scanned =
       if (scanFiles0.isEmpty) 0L
-      else readVisibleRaw(db, table, snap, scanFiles0).count()
+      else OnePass.aggregate(readVisibleRaw(db, table, snap, scanFiles0),
+        Seq(count(lit(1)))).getLong(0)
     val exact = metaCount + scanned
     withTableLock(db, table) {
       val entries = entryMeta(db, table)
@@ -3686,7 +3683,7 @@ final class SnapshotCatalog(
     * steady-state keyed-ingest path.
     *
     * The matched-position scan is scoped two ways: footer-stat pruning on
-    * the SOURCE key range for a single-column key (one tiny agg over the
+    * the SOURCE key range for a single-column key (one Spark job over the
     * source — files whose [min,max] cannot contain any source key are
     * never read), then a semi-join against the distinct source keys (AQE
     * broadcasts the small side). Existing deletes apply first, so chained
@@ -3759,11 +3756,11 @@ final class SnapshotCatalog(
     require(!(nullSafeKeys && lineage),
       s"null-safe upsert keys are not supported with row lineage on $db.$table")
     // candidate scope: for a single statable key, the source's [min,max]
-    // (one tiny agg) bounds which target files can possibly match — and
-    // the resolution is TWO-LEVEL: shards the range provably excludes are
-    // never parsed. Multi-column keys (and null-safe sources carrying null
-    // keys) must semi-join every file anyway, so the full materialization
-    // is proportionate to the scan they already pay.
+    // (one observed pass, one job) bounds which target files can possibly
+    // match — and the resolution is TWO-LEVEL: shards the range provably
+    // excludes are never parsed. Multi-column keys (and null-safe sources
+    // carrying null keys) must semi-join every file anyway, so the full
+    // materialization is proportionate to the scan they already pay.
     // the key frame driving the position-delete pass: the source's keys
     // plus any caller-supplied delete-only keys — both families' rows die
     // in the same shard, so the scoping below must cover both ranges
@@ -3775,8 +3772,8 @@ final class SnapshotCatalog(
     val (scanSnap, cands) = keys match {
       case Seq(k) if ColumnStats.statable(schema(k).dataType) =>
         val mm = SnapshotCatalog.timed(s"upsert.scope $db.$table") {
-          allKeys.agg(min(col(s"`$k`")).as("mn"), max(col(s"`$k`")).as("mx"),
-            max(col(s"`$k`").isNull.cast("int")).as("hasNull")).head()
+          OnePass.aggregate(allKeys, Seq(min(col(s"`$k`")).as("mn"), max(col(s"`$k`")).as("mx"),
+            max(col(s"`$k`").isNull.cast("int")).as("hasNull")))
         }
         val srcHasNull = nullSafeKeys && !mm.isNullAt(2) && mm.getInt(2) == 1
         // footer [min,max] ranges say nothing about null-keyed rows: a
@@ -3865,10 +3862,10 @@ final class SnapshotCatalog(
       if (fileEntries.isEmpty) prevEntry.deletes
       else prevEntry.deletes :+ deleteShardName(newId, tag)
     // explicit ids: advance the replica's id high-water past the largest
-    // replicated id (one tiny agg over the source, the CDC batch)
+    // replicated id (one Spark job over the source, the CDC batch)
     val floorSummary: Map[String, String] =
       if (!explicitRids) Map.empty
-      else source.agg(max(col("`__rid`"))).head() match {
+      else OnePass.aggregate(source, Seq(max(col("`__rid`")))) match {
         case r if r.isNullAt(0) => Map.empty
         case r => Map("lineage.id-floor" -> (r.getLong(0) + 1L).toString)
       }
@@ -4411,8 +4408,7 @@ final class SnapshotCatalog(
     if (cols.isEmpty) return None
     val lgK = NdvStats.lgKOf(tm.properties)
     val aggs = cols.map(c => expr(s"hll_sketch_agg(`$c`, $lgK)").as(c))
-    val row = readAsOf(db, table, prev.snapshotId)
-      .agg(aggs.head, aggs.tail: _*).head()
+    val row = OnePass.aggregate(readAsOf(db, table, prev.snapshotId), aggs)
     val sketches = cols.zipWithIndex.map { case (c, i) =>
       c -> Option(row.get(i)).map(_.asInstanceOf[Array[Byte]])
         .getOrElse(NdvStats.emptySketch(lgK))
@@ -4476,7 +4472,7 @@ final class SnapshotCatalog(
     val pcts = (0 to bins).map(i => i.toDouble / bins)
     val pctAggs = cols.map(c => expr(
       s"percentile_approx(CAST(`$c` AS DOUBLE), array(${pcts.mkString(",")}), 10000)").as(c))
-    val bRow = df.agg(pctAggs.head, pctAggs.tail: _*).head()
+    val bRow = OnePass.aggregate(df, pctAggs)
     val histJson = cols.zipWithIndex.flatMap { case (c, i) =>
       if (bRow.isNullAt(i)) None // all-null column: no histogram
       else {
@@ -6854,7 +6850,7 @@ final class SnapshotCatalog(
       exps: Seq[(String, String)]): Seq[(String, Long)] = {
     val aggs = exps.map { case (n, sql) =>
       sum(when(!coalesce(expr(sql), lit(false)), 1L).otherwise(0L)).as(n) }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val row = OnePass.aggregate(df, aggs)
     exps.zipWithIndex.map { case ((n, _), i) =>
       n -> (if (row.isNullAt(i)) 0L else row.getLong(i)) }
   }
@@ -7607,7 +7603,8 @@ final class SnapshotCatalog(
           // cached pass, never a second scan of the covered files
           dead.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val shards = writeDeadShards(dead, delDir, delDirRel, dead.count())
+            val shards = writeDeadShards(dead, delDir, delDirRel,
+              OnePass.aggregate(dead, Seq(count(lit(1)))).getLong(0))
             if (shards.isEmpty) deleteRecursively(delDir) // eq shards killed nothing
             shards
           } finally dead.unpersist()

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.catalog.SnapshotCatalog
+import graft.catalog.{GraftLocalFileSystem, SnapshotCatalog}
 
 /** Marker + hook consumed by [[MorDeltaScanRule]]: a row-level operation
   * whose candidate scan must be the library's MERGED position-tagged read
@@ -144,6 +144,7 @@ private final class SnapDeltaWrite(
     private def writeConf(schema: StructType): SerializableConfiguration = {
       val sqlc = spark.sessionState.conf
       val hc = spark.sessionState.newHadoopConf()
+      GraftLocalFileSystem.register(hc)
       hc.set(ParquetOutputFormat.WRITE_SUPPORT_CLASS, classOf[ParquetWriteSupport].getName)
       ParquetWriteSupport.setSchema(schema, hc)
       hc.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
@@ -215,7 +216,8 @@ private final case class SnapDeltaWriterFactory(
   * writers (Spark's own [[ParquetOutputWriter]] — vectorized-write-support
   * encoding, no committer). File names carry (partition, task) so retried
   * attempts never collide; a task that receives no rows of a kind never
-  * creates that file. `id` rows arrive projected in
+  * creates that file; files open through [[GraftLocalFileSystem]] (no
+  * `chmod` process each). `id` rows arrive projected in
   * [[SnapDeltaOperation.rowId]] order — exactly the (`_file`, `_pos`)
   * layout of the delete parquet. */
 private final class SnapDeltaWriter(
@@ -252,7 +254,7 @@ private final class SnapDeltaWriter(
       (taskId % Int.MaxValue).toInt)
     val ctx = new TaskAttemptContextImpl(hc, attempt)
     val name = f"part-$partitionId%05d-$taskId$suffix.parquet"
-    (new ParquetOutputWriter(new org.apache.hadoop.fs.Path(dir, name).toString, ctx), name)
+    (new ParquetOutputWriter(GraftLocalFileSystem.writeUri(Paths.get(dir, name)), ctx), name)
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {

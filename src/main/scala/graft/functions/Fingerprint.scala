@@ -13,8 +13,10 @@ import org.apache.spark.sql.types._
   *     billions of rows collides far too easily at 100 TB scale.
   *   - count and checksum computed in ONE aggregation = one scan per side;
   *     the reference scans each side twice (count at `6:74-76`, checksum at
-  *     `6:79-81`). Both aggregates are partial+final (map-side combined), so
-  *     the shuffle moves exactly one row per partition.
+  *     `6:79-81`). Both aggregates are combinable per task, so [[digest]]
+  *     runs them as one observed pass ([[OnePass.aggregate]]): one Spark
+  *     job, no shuffle; a write can carry them with no job at all
+  *     ([[observed]]).
   *
   * Map columns are hashed via `sort_array(map_entries(...))` because Spark
   * (correctly) refuses to hash raw maps — their entry order is undefined,
@@ -71,16 +73,14 @@ object Fingerprint {
     count(lit(1)).as("cnt"),
     sum(rowHash(df).cast(DecimalType(38, 0))).as("chk"))
 
-  /** One-pass count + order-insensitive checksum. */
-  def digest(df: DataFrame): TableDigest = {
-    val aggs = aggregates(df)
-    TableDigest.fromRow(df.agg(aggs.head, aggs.tail: _*).head())
-  }
+  /** One-pass count + order-insensitive checksum, in one Spark job. */
+  def digest(df: DataFrame): TableDigest =
+    TableDigest.fromRow(OnePass.aggregate(df, aggregates(df)))
 
   /** `df` with its digest attached as an [[Observation]]: the first action
     * over the returned frame (a write, typically) computes the digest in
-    * its own pass, with no extra job. Read it afterwards from the
-    * observation's row with [[TableDigest.fromRow]]. */
+    * its own pass, with no extra job. Read it afterwards with
+    * [[OnePass.result]] and [[TableDigest.fromRow]]. */
   def observed(df: DataFrame): (DataFrame, Observation) = {
     val obs = Observation()
     val aggs = aggregates(df)

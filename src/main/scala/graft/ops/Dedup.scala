@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OnePass
+
 /** Deduplication operators for LLM-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard (north-star surface; public algorithms —
   * Broder's MinHash/shingling, Charikar's SimHash — composed from built-in
@@ -282,7 +284,7 @@ object Dedup {
           col("label").as("_old"))
         .observe(obs, sum(when(col("label") =!= col("_old"), 1L).otherwise(0L)).as("changed")),
         s"cc-labels-${round % 2}") // ping-pong: round N reads N-1's file, never its own
-      changed = obs.get("changed") match {
+      changed = OnePass.result(obs).get(0) match {
         case n: Long => n
         case _ => 0L // null metric (empty frame): no rows changed
       }

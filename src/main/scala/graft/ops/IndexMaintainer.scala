@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.catalog.SnapshotCatalog
+import graft.functions.OnePass
 
 /** ONE MAINTAINER FOR THE PERSISTENT INDEXES — [[TextIndex]] (BM25
   * postings), [[DedupIndex]] (MinHash bands) and [[VectorIndex]] (IVF
@@ -208,7 +209,8 @@ object IndexMaintainer {
     cat.spark.conf.getOption(MaxInlineProbesKey).map(_.toInt).getOrElse(1024)
 
   /** An observation's Long metrics; a null (an empty frame's sum) reads 0. */
-  private def observed(obs: Observation): Map[String, Long] = longs(obs.get)
+  private def observed(obs: Observation): Map[String, Long] =
+    longs(OnePass.values(OnePass.result(obs)))
 
   private def longs(m: Map[String, Any]): Map[String, Long] =
     m.map { case (k, v) => k -> (if (v == null) 0L else v.asInstanceOf[Long]) }
@@ -217,12 +219,9 @@ object IndexMaintainer {
   private def counterSums(kind: Kind, sign: Column): Seq[Column] =
     kind.counters.toSeq.map { case (k, c) => sum(c * sign).as(k) }
 
-  /** Each counter summed over `rows` (no job when the kind has none). */
+  /** Each counter summed over `rows`: one job, none when the kind has no
+    * counters. */
   private def sums(kind: Kind, rows: DataFrame): Map[String, Long] =
     if (kind.counters.isEmpty) Map.empty
-    else {
-      val aggs = counterSums(kind, lit(1L))
-      val r = rows.agg(aggs.head, aggs.tail: _*).head()
-      longs(r.getValuesMap[Any](r.schema.fieldNames.toIndexedSeq))
-    }
+    else longs(OnePass.values(OnePass.aggregate(rows, counterSums(kind, lit(1L)))))
 }

@@ -3,8 +3,6 @@ package graft.stages
 import java.nio.file.Paths
 import java.time.Instant
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, Observation}
@@ -13,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.catalog.{JObj, JStr, Json, SnapshotCatalog}
-import graft.functions.Fingerprint
+import graft.functions.{Fingerprint, OnePass}
 import graft.functions.Fingerprint.TableDigest
 
 /** Stage 1 — snapshot collection (`/root/reference/1_collect_src_snapshots.py`).
@@ -277,7 +275,7 @@ object SourceDigest {
     * with a `write.sort-order` range-samples it first. */
   def record(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo,
       targetSnapshotId: Long, obs: Observation, records: Long): Unit =
-    Try(Await.result(obs.future, 30.seconds)).toOption.map(TableDigest.fromRow)
+    Try(OnePass.result(obs)).toOption.map(TableDigest.fromRow)
       .filter(_.count == records)
       .foreach { d =>
         val fields = binding(src, info, targetSnapshotId) ++
@@ -303,12 +301,12 @@ object SourceDigest {
   * order-insensitive checksums equal. `sample_match` is derived from the
   * other two, exactly like the reference's argument at `6:83-87`.
   * The target is always read back in full, in ONE fused scan (count +
-  * checksum in a single agg) vs the reference's two; see
-  * [[graft.functions.Fingerprint]]. The source side is the digest the
-  * migrate write recorded ([[SourceDigest]]) when its binding matches the
-  * target's current snapshot — the source is then scanned once across
-  * stages 5 and 6 — and otherwise one fused scan of the source, as of the
-  * migrated snapshot. `sourceDigest` in the result says which.
+  * checksum in one observed pass: one Spark job, no shuffle) vs the
+  * reference's two; see [[graft.functions.Fingerprint]]. The source side
+  * is the digest the migrate write recorded ([[SourceDigest]]) when its
+  * binding matches the target's current snapshot — the source is then
+  * scanned once across stages 5 and 6 — and otherwise one more such scan
+  * of the source, as of the migrated snapshot. `sourceDigest` says which.
   */
 object IntegrityVerifier {
 

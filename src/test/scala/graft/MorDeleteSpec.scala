@@ -836,6 +836,47 @@ class MorDeleteSpec extends AnyFunSuite {
     assert(rows.count(_._2 == "UPD") == 5)
   }
 
+  test("SQL UPDATE, DELETE and MERGE on a merge-on-read table write nothing through file:") {
+    val cat = freshCatalog()
+    withNation(cat) // keys 0..24
+    cat.deleteMoR("db", "nation", col("n_nationkey") < 3) // live deletes: SQL DML writes deltas
+    spark.conf.set("spark.sql.catalog.mordml", "graft.catalog.spark.SnapCatalogPlugin")
+    spark.conf.set("spark.sql.catalog.mordml.warehouse", cat.warehouse)
+    val (file0, graft0) = (bytesWritten("file"), bytesWritten(GraftLocalFileSystem.Scheme))
+    val live = cat.currentSnapshot("db", "nation").files
+    def committed(op: String): Unit = {
+      val s = cat.currentSnapshot("db", "nation")
+      // a position delta: no data file rewritten
+      assert(s.operation == op && live.forall(s.files.contains), s"${s.operation}: ${s.files}")
+    }
+    spark.sql("UPDATE mordml.db.nation SET n_name = lower(n_name) WHERE n_nationkey % 4 = 1")
+    committed("update")
+    spark.sql("DELETE FROM mordml.db.nation WHERE n_name RLIKE '^[AEe]'")
+    committed("delete")
+    spark.sql(
+      """MERGE INTO mordml.db.nation t
+        |USING (SELECT * FROM VALUES (6, 'SIX', 0), (2, 'TWO', 1), (99, 'NEW', 2)
+        |  AS s(n_nationkey, n_name, n_regionkey)) s
+        |ON t.n_nationkey = s.n_nationkey
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    committed("merge")
+    assert(bytesWritten("file") == file0, "a SQL delta write went through file:")
+    assert(bytesWritten(GraftLocalFileSystem.Scheme) > graft0)
+    // plain-Spark oracle of the three statements
+    val updated = nation.where(col("n_nationkey") >= 3).withColumn("n_name",
+      when(col("n_nationkey") % 4 === 1, lower(col("n_name"))).otherwise(col("n_name")))
+    val deleted = updated.where(!col("n_name").rlike("^[AEe]"))
+    val src = Seq((6, "SIX", 0), (2, "TWO", 1), (99, "NEW", 2))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    val want = deleted.join(src.select("n_nationkey"), Seq("n_nationkey"), "left_anti")
+      .unionByName(src)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("n_nationkey", "n_name", "n_regionkey").as[(Int, String, Int)].collect().sorted.toSeq
+    assert(sorted(cat.readLatest("db", "nation")) == sorted(want))
+    assert(sorted(spark.table("mordml.db.nation")) == sorted(want))
+  }
+
   test("equality delete: zero-corpus-scan commit, appends-after untouched, honest unknowns") {
     val cat = freshCatalog()
     withNation(cat) // keys 0..24

@@ -217,7 +217,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(v.ok && v.sourceDigest == "recorded", v)
   }
 
-  test("migrate + verify of one MoR table run 3 Spark jobs (counter gate)") {
+  test("migrate + verify of one MoR table run 2 Spark jobs (counter gate)") {
     val src = newCat()
     val dst = newCat()
     val info = morSource(src)
@@ -232,8 +232,22 @@ class PipelineSpec extends AnyFunSuite {
     // them a second source read (delete broadcast, partial and final
     // aggregate) and 2 for the target. Then 4: the same 2 for migrate, and
     // only the target's 2 for verify. Now the source read drops its dead
-    // rows inside the parquet readers, so migrate is the write alone.
-    assert(jobs == 3, s"jobs: $jobs")
+    // rows inside the parquet readers, so migrate is the write alone (3).
+    // Now the target's digest is one observed pass with no shuffle: 1 job.
+    assert(jobs == 2, s"jobs: $jobs")
+  }
+
+  test("verify with no recorded source digest runs 2 Spark jobs (counter gate)") {
+    val src = newCat()
+    val dst = newCat()
+    val info = morSource(src)
+    assert(Migrator.migrateOne(src, dst, info).status == "success")
+    dst.setProperty("db", "t", SourceDigest.Property, None)
+    val (v, jobs) = SparkJobs.counted(spark)(IntegrityVerifier.verifyOne(src, dst, info))
+    assert(v.ok && v.sourceDigest == "scanned", v)
+    // one observed pass per side; each was a partial and a final
+    // aggregate job before (4)
+    assert(jobs == 2, s"jobs: $jobs")
   }
 
   test("schema verifier reports missing and extra columns") {

@@ -1183,7 +1183,7 @@ class ViewSpec extends AnyFunSuite {
     cat.append("db", "dim", Seq((8L, "s2")).toDF("k", "seg"))
     cat.updateMoR("db", "fact", col("k") === 3L, Map("v" -> lit(31L)))
     cat.append("db", "fact", Seq((8L, 31L)).toDF("k", "v"))
-    val m6 = gatedRefresh(cat, "djr", maxJobs = 51)
+    val m6 = gatedRefresh(cat, "djr", maxJobs = 50)
     assert(m6 == "incremental_join_agg", m6)
     assert(got() == expect())
   }
@@ -1241,7 +1241,7 @@ class ViewSpec extends AnyFunSuite {
     assert(gotU() == expectU())
     cat.deleteMoR("db", "fact", col("v") === 20L)
     cat.append("db", "fact", Seq((4L, 11L)).toDF("k", "v")) // duplicate value 11
-    val mu1 = gatedRefresh(cat, "udr", maxJobs = 40)
+    val mu1 = gatedRefresh(cat, "udr", maxJobs = 39)
     assert(mu1 == "incremental_union_agg", mu1)
     assert(gotU() == expectU())
     cat.deleteMoR("db", "dim", col("k") === 2L)
@@ -1323,7 +1323,7 @@ class ViewSpec extends AnyFunSuite {
     cat.updateMoR("db", "fact", col("k") === 1L && col("v") === 10L,
       Map("v" -> lit(12L)))
     cat.append("db", "fact", Seq((8L, 2L)).toDF("k", "v"))
-    val m7 = gatedRefresh(cat, "rollup", maxJobs = 22)
+    val m7 = gatedRefresh(cat, "rollup", maxJobs = 21)
     assert(m7 == "incremental_join_agg", m7)
     assert(got() == expect())
   }
@@ -1769,7 +1769,7 @@ class ViewSpec extends AnyFunSuite {
     cat.deleteMoR("db", "fact", col("id") % 13 === 1)
     cat.append("db", "dim", Seq((1001L, "sNEW2")).toDF("ck", "seg"))
     cat.deleteMoR("db", "dim", col("ck") === 4)
-    check("both sides", maxJobs = 34)
+    check("both sides", maxJobs = 33)
     // 5. a fresh view is a no-op
     assert(cat.refreshMaterializedView("db", "omv")._1 == "fresh")
     // 6. a filtered JOIN SIDE declines to full (its delta is not the raw
@@ -1883,7 +1883,7 @@ class ViewSpec extends AnyFunSuite {
     check("blocklist growth")
     // blocklist SHRINKS: h3 docs re-admit
     cat.deleteMoR("db", "block", col("h") === "h3")
-    check("blocklist shrink", maxJobs = 20)
+    check("blocklist shrink", maxJobs = 19)
     // the SEMI twin: docs ON the blocklist, same machinery
     cat.createMaterializedView("db", "dirty_counts",
       "SELECT d.lang, count(*) AS n FROM db.docs d " +
