@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.OnePass
 import graft.ops.{Dedup, Multimodal, Similarity, Skew, TextOps}
 
 /** Driver contract — the engine's query surface (SURVEY §2 inventory) with
@@ -522,7 +523,7 @@ object SparkEntry {
       import s.implicits._
       val fx = WarehouseFixture.forDir(s, dir)
       val remaining = fx.src.snapshotList("maint", "exp")
-      val cnt = fx.src.readLatest("maint", "exp").count()
+      val cnt = OnePass.aggregate(fx.src.readLatest("maint", "exp"), Seq(count(lit(1)))).getLong(0)
       Seq((remaining.size.toLong, remaining.head.snapshotId,
         cnt, fx.expiredFileCount.toLong))
         .toDF("n_snapshots", "surviving_id", "record_count", "deleted_files")
@@ -1105,8 +1106,8 @@ object SparkEntry {
       cat.createMaterializedView("maint", "mmstats",
         "SELECT o_orderstatus, min(cents) AS min_cents, max(cents) AS max_cents, " +
           "count(*) AS n FROM maint.mvmm_orders GROUP BY o_orderstatus")
-      val maxCents = cat.readLatest("maint", "mvmm_orders")
-        .agg(max("cents")).head.getLong(0)
+      val maxCents = OnePass.aggregate(cat.readLatest("maint", "mvmm_orders"),
+        Seq(max("cents"))).getLong(0)
       cat.deleteMoR("maint", "mvmm_orders",
         col("cents") === maxCents || col("o_orderkey") % 10 === 4)
       val (mode, _) = cat.refreshMaterializedView("maint", "mmstats")

@@ -3274,15 +3274,9 @@ final class SnapshotCatalog(
       s"equality-delete type mismatch: " + retyped.map(c =>
         s"$c: table=${schema(c).dataType.sql} keys=${keys.schema(c).dataType.sql}")
         .mkString(", "))
-    // a LOCAL key frame (a LocalRelation, e.g. an index refresh's touched
-    // ids) dedupes and scopes in this JVM: its only job is the write
-    val local = keys.queryExecution.optimizedPlan match {
-      case _: LocalRelation => Some(keys.collect().distinctBy(_.toSeq.map {
-        case b: Array[Byte] => b.toSeq
-        case v => v
-      }))
-      case _ => None
-    }
+    // a small LOCAL key frame (a LocalRelation, e.g. an index refresh's
+    // touched ids) dedupes and scopes in this JVM: its only job is the write
+    val local = SnapshotCatalog.smallKeySet(Seq(keys), localOnly = true)
     // candidate coverage: footer-stat range scoping over the KEY frame
     // only (one observed pass, one job — the corpus stays untouched);
     // multi-column keys cover every current file
@@ -3292,12 +3286,10 @@ final class SnapshotCatalog(
         // (rows, non-null keys, min, max)
         val (n, nk, mn, mx) = local match {
           case Some(rows) =>
-            val dt = schema(k).dataType
-            val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-            val ord = TypeUtils.getInterpretedOrdering(dt).on(toCatalyst)
-            val vs = rows.map(_.get(0)).filter(_ != null)
-            (rows.length.toLong, vs.length.toLong,
-              vs.minOption(ord).orNull, vs.maxOption(ord).orNull)
+            val vs = rows.map(_.get(0))
+            val range = SnapshotCatalog.keyRange(schema(k).dataType, vs)
+            (rows.length.toLong, vs.count(_ != null).toLong,
+              range.map(_._1).orNull, range.map(_._2).orNull)
           case None =>
             val mm = OnePass.aggregate(keys, Seq(min(col(s"`$k`")), max(col(s"`$k`")),
               count(lit(1)), count(col(s"`$k`"))))
@@ -3449,13 +3441,14 @@ final class SnapshotCatalog(
 
   /** Write the position-delete files for one MoR commit: `matched` must be
     * a position-tagged frame (carries [[MorFileCol]]/[[MorPosCol]]) of the
-    * rows to kill. Writes `deletes/s<newId>/`, reads EXACT per-(delete
-    * file, data file) position counts back from the just-written set (MB
-    * at most — the delete set is the operation's output, already paid
-    * for; exact coverage is what keeps record_count and every later carry
-    * computation metadata-only), sweeps empty part files, and persists the
-    * `d<newId>.json` shard. Returns the shard's entries (empty = nothing
-    * matched; the dir is removed and no shard is written). */
+    * rows to kill. Writes `deletes/s<newId>/`, takes EXACT per-(delete
+    * file, data file) position counts from the written files
+    * ([[deleteCoverage]]: their footers, since each task of a narrow write
+    * covers one data file; exact coverage is what keeps record_count and
+    * every later carry computation metadata-only), sweeps empty part
+    * files, and persists the `d<newId>.json` shard. Returns the shard's
+    * entries (empty = nothing matched; the dir is removed and no shard is
+    * written). */
   private def writePositionDeletes(db: String, table: String, newId: Long,
       matched: DataFrame, tag: String): Seq[DeleteFile] = {
     val delDirRel = s"deletes/s$newId$tag"
@@ -3485,16 +3478,39 @@ final class SnapshotCatalog(
     dirRel + "/" + dir.relativize(p).toString.replace('\\', '/')
 
   /** The delete files just `written` under `delDir` (`delDirRel`
-    * table-relative), each with its exact per-data-file position count,
-    * read back in one job and no shuffle: every task folds its rows'
-    * (delete file, data file) counts, and the driver merges them. Files
-    * holding no position get no entry. */
+    * table-relative), each with its exact per-data-file position count.
+    * The footers answer first, read in parallel: a file whose `_file`
+    * min equals its max (and holds no null) covers that one data file
+    * with its footer row count, and a file of zero rows holds no
+    * position. Each merged-scan task reads one data file, so a narrow
+    * delete write needs nothing more. Only the files that span several
+    * data files, or lack `_file` stats, are read back, in one job and no
+    * shuffle: every task folds its rows' (delete file, data file)
+    * counts, and the driver merges them. Files holding no position get
+    * no entry. */
   private def deleteCoverage(delDir: Path, delDirRel: String,
+      written: Seq[Path]): Seq[DeleteFile] = {
+    val footers = FileStats.fromFooters(written, identity[Path], deleteFileSchema,
+      spark.sessionState.newHadoopConf())
+    val (decided, spanning) = written.partition { p =>
+      val st = footers(p)
+      st("rows") == "0" || (st.get("nulls._file").contains("0") &&
+        st.get("min._file").exists(st.get("max._file").contains))
+    }
+    val single = decided.filter(footers(_)("rows") != "0").map { p =>
+      val st = footers(p)
+      DeleteFile(relPath(delDir, delDirRel, p), Map(st("min._file") -> st("rows").toLong))
+    }
+    (single ++ readBackCoverage(delDir, delDirRel, spanning)).sortBy(_.path)
+  }
+
+  /** [[deleteCoverage]] for the delete files the footers cannot decide. */
+  private def readBackCoverage(delDir: Path, delDirRel: String,
       written: Seq[Path]): Seq[DeleteFile] =
     if (written.isEmpty) Seq.empty
     else {
       val relOf = written.map(p => p.getFileName.toString -> relPath(delDir, delDirRel, p)).toMap
-      val perTask = spark.read.schema(deleteFileSchema).parquet(delDir.toString)
+      val perTask = spark.read.schema(deleteFileSchema).parquet(written.map(_.toString): _*)
         .select(col("_metadata.file_path"), col("_file")).rdd
         .mapPartitions { rows =>
           val n = scala.collection.mutable.HashMap.empty[(String, String), Long]
@@ -3507,7 +3523,7 @@ final class SnapshotCatalog(
         .groupBy { case ((dpath, _), _) => dpath }.toSeq.map { case (dpath, cs) =>
           DeleteFile(relOf(dpath.substring(dpath.lastIndexOf('/') + 1)),
             cs.map { case ((_, file), n) => file -> n }.toMap)
-        }.sortBy(_.path)
+        }
     }
 
   /** MERGE-ON-READ UPDATE: matched rows die as POSITIONS and their updated
@@ -3682,11 +3698,16 @@ final class SnapshotCatalog(
     * at 100 TB makes a 100-row CDC upsert cost the lake — this is the
     * steady-state keyed-ingest path.
     *
-    * The matched-position scan is scoped two ways: footer-stat pruning on
-    * the SOURCE key range for a single-column key (one Spark job over the
-    * source — files whose [min,max] cannot contain any source key are
-    * never read), then a semi-join against the distinct source keys (AQE
-    * broadcasts the small side). Existing deletes apply first, so chained
+    * The matched-position scan is scoped two ways for a single-column
+    * key: footer-stat pruning on the key range (files whose [min,max]
+    * cannot contain any key are never read), then the key match. While
+    * the distinct keys number at most [[SnapshotCatalog.InlineKeyBound]]
+    * they are learned on the driver (no job for a local source, one
+    * otherwise), give the range there, and match as an inline `IN` on
+    * the scan: the position-delete write is then one job with no
+    * `Exchange`. Larger key sets take the range from one observed pass
+    * and semi-join the distinct keys; multi-column keys semi-join every
+    * file. Existing deletes apply first, so chained
     * MoR operations never double-kill. Source must carry exactly the
     * table's columns (same gate as [[upsert]]); bucketed tables derive
     * `__bucket` for the delta so the layout invariant survives. */
@@ -3755,55 +3776,77 @@ final class SnapshotCatalog(
     val lineage = rowLineageEnabled(db, table)
     require(!(nullSafeKeys && lineage),
       s"null-safe upsert keys are not supported with row lineage on $db.$table")
-    // candidate scope: for a single statable key, the source's [min,max]
-    // (one observed pass, one job) bounds which target files can possibly
-    // match — and the resolution is TWO-LEVEL: shards the range provably
-    // excludes are never parsed. Multi-column keys (and null-safe sources
-    // carrying null keys) must semi-join every file anyway, so the full
-    // materialization is proportionate to the scan they already pay.
-    // the key frame driving the position-delete pass: the source's keys
+    // the key frames driving the position-delete pass: the source's keys
     // plus any caller-supplied delete-only keys — both families' rows die
     // in the same shard, so the scoping below must cover both ranges
-    val allKeys = {
-      val sk = srcVisible.select(keys.map(k => col(s"`$k`")): _*)
-      alsoDeleteKeys.fold(sk)(dk =>
-        sk.unionByName(dk.select(keys.map(k => col(s"`$k`")): _*)))
+    val keyFrames = (srcVisible +: alsoDeleteKeys.toSeq).map(_.select(keys.map(k => col(s"`$k`")): _*))
+    val allKeys = keyFrames.reduce(_.unionByName(_))
+    // a single-column key set of at most InlineKeyBound values is learned
+    // on the driver (no job for a local source, else one) and matched as
+    // an inline IN; larger sets and multi-column keys semi-join
+    val small = keys match {
+      case Seq(k) if SnapshotCatalog.inlineMatchable(schema(k).dataType) =>
+        SnapshotCatalog.timed(s"upsert.keys $db.$table") {
+          SnapshotCatalog.smallKeySet(keyFrames, localOnly = false)
+        }.map(_.map(_.get(0)))
+      case _ => None
     }
+    // candidate scope: for a single key, the key set's [min,max] bounds
+    // which target files can possibly match — and the resolution is
+    // TWO-LEVEL: shards the range provably excludes are never parsed.
+    // Multi-column keys (and null-safe key sets carrying a null) must
+    // match every file anyway, so the full materialization is
+    // proportionate to the scan they already pay.
     val (scanSnap, cands) = keys match {
-      case Seq(k) if ColumnStats.statable(schema(k).dataType) =>
-        val mm = SnapshotCatalog.timed(s"upsert.scope $db.$table") {
-          OnePass.aggregate(allKeys, Seq(min(col(s"`$k`")).as("mn"), max(col(s"`$k`")).as("mx"),
-            max(col(s"`$k`").isNull.cast("int")).as("hasNull")))
+      case Seq(k) if small.isDefined || ColumnStats.statable(schema(k).dataType) =>
+        // (least, greatest) non-null key, and whether a null key is present
+        val (range, hasNull) = small match {
+          case Some(vs) => (SnapshotCatalog.keyRange(schema(k).dataType, vs), vs.contains(null))
+          case None =>
+            val mm = SnapshotCatalog.timed(s"upsert.scope $db.$table") {
+              OnePass.aggregate(allKeys, Seq(min(col(s"`$k`")).as("mn"), max(col(s"`$k`")).as("mx"),
+                max(col(s"`$k`").isNull.cast("int")).as("hasNull")))
+            }
+            (Option.when(!mm.isNullAt(0))((mm.get(0), mm.get(1))),
+              !mm.isNullAt(2) && mm.getInt(2) == 1)
         }
-        val srcHasNull = nullSafeKeys && !mm.isNullAt(2) && mm.getInt(2) == 1
         // footer [min,max] ranges say nothing about null-keyed rows: a
         // null-safe source carrying null keys scans every file (the rare
         // null-group-churn refresh; range pruning resumes when it's absent)
-        if (srcHasNull) { val p = materialize(db, table, prevEntry); (p, p.files) }
-        else if (mm.isNullAt(0)) // empty/all-null source matches nothing
-          (materializePartial(db, table, prevEntry, Seq.empty), Seq.empty[String])
-        else {
-          val res = resolveWhere(db, table, prevEntry.snapshotId,
-            col(s"`$k`") >= lit(mm.get(0)) && col(s"`$k`") <= lit(mm.get(1)))
-          (res.snap, res.kept)
+        if (nullSafeKeys && hasNull) { val p = materialize(db, table, prevEntry); (p, p.files) }
+        else range match {
+          case None => // empty/all-null source matches nothing
+            (materializePartial(db, table, prevEntry, Seq.empty), Seq.empty[String])
+          case Some((mn, mx)) =>
+            val res = resolveWhere(db, table, prevEntry.snapshotId,
+              col(s"`$k`") >= lit(mn) && col(s"`$k`") <= lit(mx))
+            (res.snap, res.kept)
         }
       case _ => val p = materialize(db, table, prevEntry); (p, p.files)
     }
     val prevDeletes = scanSnap.deleteFiles // delete shards always load in full
     // pass 1: positions of target rows whose key appears in the source
     // (replaced) or in alsoDeleteKeys (die without replacement)
-    val srcKeys = allKeys.dropDuplicates()
     val scanned =
       if (lineage) readVisibleWithPosAndRid(db, table, scanSnap, cands)
       else readVisibleWithPos(db, table, scanSnap, cands)
-    val matched =
-      if (!nullSafeKeys) scanned.join(srcKeys, keys, "left_semi")
-      else {
-        val sk = srcKeys.select(keys.map(k => col(s"`$k`").as(s"__uk_$k")): _*)
-        scanned.join(sk,
-          keys.map(k => scanned(s"`$k`") <=> sk(s"`__uk_$k`")).reduce(_ && _),
-          "left_semi")
-      }
+    val matched = small match {
+      case Some(vs) =>
+        // a filter on the scan: the position-delete write has no Exchange
+        val k = keys.head
+        val inList = vs.filter(_ != null).map(v => lit(v).cast(schema(k).dataType))
+        val in = if (inList.isEmpty) lit(false) else col(s"`$k`").isin(inList: _*)
+        scanned.where(if (nullSafeKeys && vs.contains(null)) in || col(s"`$k`").isNull else in)
+      case None =>
+        val srcKeys = allKeys.dropDuplicates()
+        if (!nullSafeKeys) scanned.join(srcKeys, keys, "left_semi")
+        else {
+          val sk = srcKeys.select(keys.map(k => col(s"`$k`").as(s"__uk_$k")): _*)
+          scanned.join(sk,
+            keys.map(k => scanned(s"`$k`") <=> sk(s"`__uk_$k`")).reduce(_ && _),
+            "left_semi")
+        }
+    }
     val fileEntries = SnapshotCatalog.timed(s"upsert.posdel $db.$table#$newId") {
       writePositionDeletes(db, table, newId, matched, tag)
     }
@@ -3931,9 +3974,10 @@ final class SnapshotCatalog(
     * [[updateMoR]]/[[upsertMoR]]: cost is O(matched + inserted), no data
     * file rewritten.
     *
-    * Exactness: per-(delete file, data file) position counts read back
-    * from the just-written delete set (MB at most — the set is the
-    * operation's own output); inserted rows from the fresh footers; both
+    * Exactness: per-(delete file, data file) position counts from the
+    * just-written delete set ([[deleteCoverage]]: footers, and a read-back
+    * of the files that span several data files); inserted rows from the
+    * fresh footers; both
     * keep `record_count` metadata-exact. `expectSnapshotId` guards against
     * a concurrent commit landing between the rewrite's scan and this
     * adoption (the positions were computed against that snapshot — a moved
@@ -3985,9 +4029,8 @@ final class SnapshotCatalog(
     val addedPerFile = newFiles.map(f => newFileStats(f).get("rows").map(_.toLong))
     val added = if (addedPerFile.forall(_.isDefined)) addedPerFile.flatten.sum else -1L
 
-    // position deletes: exact per-(delete file, data file) counts read
-    // back from the just-written set — the same bookkeeping as
-    // writePositionDeletes
+    // position deletes: exact per-(delete file, data file) counts from
+    // the just-written set — the same bookkeeping as writePositionDeletes
     val written = listParquetFiles(delDir)
     val fileEntries =
       if (written.isEmpty) { deleteRecursively(delDir); Seq.empty[DeleteFile] }
@@ -8078,6 +8121,69 @@ object SnapshotCatalog {
         f"[timing] $tag ${(System.nanoTime() - t0) / 1e6}%.1fms")
       r
     }
+
+  /** Most distinct key tuples a delete pass holds on the driver: up to
+    * this many, [[SnapshotCatalog.upsertMoR]] matches its keys as an
+    * inline `IN` on the candidate scan and [[SnapshotCatalog.deleteMoREq]]
+    * scopes and writes a local key frame in this JVM; past it both keep
+    * their distributed paths. */
+  private[graft] val InlineKeyBound = 1024
+
+  /** The distinct rows of `frames` (one schema), while there are at most
+    * [[InlineKeyBound]] of them; `None` past the bound. Frames that plan to
+    * a `LocalRelation` collect with no Spark job. Otherwise the frames'
+    * union costs one job when `localOnly` is false (each task stops at
+    * `InlineKeyBound + 1` distinct rows, the driver merges them) and is
+    * `None` when it is true. Binary fields compare by content. */
+  private[catalog] def smallKeySet(frames: Seq[DataFrame], localOnly: Boolean): Option[Seq[Row]] = {
+    val local = frames.forall(_.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val parts: Seq[Iterable[Row]] =
+      if (local) frames.map(_.collect().toSeq)
+      else if (localOnly) return None
+      else {
+        val bound = InlineKeyBound
+        frames.reduce(_.unionByName(_)).rdd.mapPartitions { rows =>
+          val seen = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
+          while (rows.hasNext && seen.size <= bound) {
+            val r = rows.next(); seen.getOrElseUpdate(keyOf(r), r)
+          }
+          Iterator.single(seen.values.toArray)
+        }.collect().toSeq.map(_.toSeq)
+      }
+    val all = parts.iterator.flatten.distinctBy(keyOf).take(InlineKeyBound + 1).toSeq
+    if (all.sizeIs > InlineKeyBound) None else Some(all)
+  }
+
+  private def keyOf(r: Row): Seq[Any] = r.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  }
+
+  /** The least and greatest non-null `values` (external values of type
+    * `dt`) in Spark's ordering; `None` when all are null or there are
+    * none. */
+  private[catalog] def keyRange(dt: org.apache.spark.sql.types.DataType,
+      values: Seq[Any]): Option[(Any, Any)] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ord = TypeUtils.getInterpretedOrdering(dt).on(toCatalyst)
+    val vs = values.filter(_ != null)
+    if (vs.isEmpty) None else Some((vs.min(ord), vs.max(ord)))
+  }
+
+  /** Key types an inline `IN` matches exactly as an equi-join on the key
+    * does: `In` and `InSet` equate NaN with NaN and -0.0 with 0.0, as the
+    * join's float normalization does. Binary keys would compare by
+    * reference on the driver. */
+  private[catalog] def inlineMatchable(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case FloatType | DoubleType | DateType | TimestampType | TimestampNTZType => true
+      case StringType | _: DecimalType => true
+      case _ => false
+    }
+  }
+
 
   /** Hidden partial columns an augmented aggregate-MV backing carries
     * alongside its visible outputs: group row count, per-sum non-null

@@ -217,7 +217,7 @@ object Dedup {
     val integral = idTypes.distinct.size == 1 && idTypes.forall(t =>
       t == org.apache.spark.sql.types.LongType ||
         t == org.apache.spark.sql.types.IntegerType)
-    val nDirected = edges.count()
+    val nDirected = OnePass.aggregate(edges, Seq(count(lit(1)))).getLong(0)
     if (integral && driverMaxPairs > 0 && nDirected <= 2 * driverMaxPairs &&
         nDirected <= Int.MaxValue) {
       // primitive-array ingest, NOT collect(): collect materializes every

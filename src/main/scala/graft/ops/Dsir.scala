@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OnePass
+
 /** DSIR — Data Selection via Importance Resampling (Xie et al., NeurIPS
   * 2023): pick raw-corpus documents whose hashed n-gram profile looks like
   * a small TARGET corpus (the domain you want more of), by importance
@@ -128,8 +130,8 @@ object Dsir {
         (t, d)
       }
     val rawB = docB.groupBy("b").agg(sum("cnt").as("cr"))
-    val nT = tgtB.agg(coalesce(sum("ct"), lit(0L))).head.getLong(0)
-    val nR = rawB.agg(coalesce(sum("cr"), lit(0L))).head.getLong(0)
+    val nT = OnePass.aggregate(tgtB, Seq(coalesce(sum("ct"), lit(0L)))).getLong(0)
+    val nR = OnePass.aggregate(docB, Seq(coalesce(sum("cnt"), lit(0L)))).getLong(0)
     val denomT = lit(nT + addK * buckets)
     val denomR = lit(nR + addK * buckets)
     // model tables are bucket-bounded: broadcast, so the per-doc

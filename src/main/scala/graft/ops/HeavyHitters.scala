@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.MisraGriesAgg
+import graft.functions.{MgSummary, MisraGriesAgg, OnePass}
 
 /** EXACT distributed heavy hitters in two scans — the composition that
   * turns the Misra–Gries SKETCH into an exact answer:
@@ -68,7 +68,9 @@ object HeavyHitters {
     val items = df.select((if (nullable) esc(raw) else raw).as("item")).as[String]
     // pass 1: sketch + exact n in ONE row on the driver (O(k) by the
     // aggregate's construction — never vocabulary-sized)
-    val s = items.select(new MisraGriesAgg[String](k - 1, identity).toColumn).head()
+    val sketch = udaf(new MisraGriesAgg[String](k - 1, identity), org.apache.spark.sql.Encoders.STRING)
+    val r = OnePass.aggregate(items.toDF("item"), Seq(sketch(col("item")))).getStruct(0)
+    val s = MgSummary(r.getLong(0), r.getMap[String, Long](1).toMap)
     val cands = s.items.keys.toSeq.sorted
     if (cands.isEmpty)
       return items.toDF("item").limit(0)

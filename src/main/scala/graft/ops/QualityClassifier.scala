@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OnePass
+
 /** Hashed bag-of-ngrams linear quality classifier — the fastText shape
   * (Joulin et al. 2016, "Bag of Tricks for Efficient Text
   * Classification") that production LLM pipelines use as the learned
@@ -102,7 +104,8 @@ object QualityClassifier {
       .join(labeled.select(col(idCol).as("doc_id"),
         col(labelCol).cast("double").as("y")), "doc_id")
       .cache()
-    val nDocs = skel.select("doc_id").distinct().count().toDouble
+    val nDocs = OnePass.aggregate(skel.select("doc_id").distinct(),
+      Seq(count(lit(1)))).getLong(0).toDouble
     require(nDocs > 0, "empty training corpus")
     val w = new Array[Double](buckets)
     var bias = 0.0
@@ -118,7 +121,7 @@ object QualityClassifier {
       val grad = skel.join(err.select("doc_id", "e"), "doc_id")
         .groupBy("b").agg(sum(col("x") * col("e")).as("g"))
         .as[(Long, Double)].collect()
-      val biasGrad = err.agg(sum("e")).head.getDouble(0) / nDocs
+      val biasGrad = OnePass.aggregate(err, Seq(sum("e"))).getDouble(0) / nDocs
       grad.foreach { case (b, g) =>
         val i = b.toInt
         w(i) -= lr * (g / nDocs + l2 * w(i))
@@ -137,9 +140,8 @@ object QualityClassifier {
       .join(labeled.select(col(idCol).as("doc_id"),
         col(labelCol).cast("double").as("y")), "doc_id")
       .select((col("logit_q").cast("double") / 1e4).as("z"), col("y"))
-    s.agg(avg(
+    OnePass.aggregate(s, Seq(avg(
       when(col("y") === 1.0, log(lit(1.0) + exp(-col("z"))))
-        .otherwise(log(lit(1.0) + exp(col("z"))))))
-      .head.getDouble(0)
+        .otherwise(log(lit(1.0) + exp(col("z"))))))).getDouble(0)
   }
 }

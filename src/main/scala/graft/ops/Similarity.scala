@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.catalog.MetadataRowCount
+import graft.functions.OnePass
 
 /** Embedding similarity search (north-star surface): brute-force cosine
   * top-k as the exact baseline, and OR-amplified random-hyperplane LSH as
@@ -519,7 +520,7 @@ object Similarity {
     if (sampleMod > 0) sampleMod
     else {
       val n = MetadataRowCount.exact(corpus)
-        .getOrElse(corpus.select(col(corpusId)).count())
+        .getOrElse(OnePass.aggregate(corpus, Seq(count(lit(1)))).getLong(0))
       math.max(1L, (n + IvfTargetSample - 1) / IvfTargetSample)
     }
 

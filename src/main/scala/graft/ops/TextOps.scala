@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.OnePass
+
 /** Text-analysis operators for LLM-data pipelines (north-star surface; no
   * reference counterpart — derived from the public Spark API only).
   *
@@ -239,7 +241,7 @@ object TextOps {
     val trainToks = train.select(toks(col(textCol)).as("ts"))
     val uni = trainToks.select(explode(col("ts")).as("w1"))
       .groupBy("w1").agg(count(lit(1)).as("c1"))
-    val vocab = uni.count() // |V|: the one driver scalar
+    val vocab = OnePass.aggregate(uni, Seq(count(lit(1)))).getLong(0) // |V|: the one driver scalar
     val bi = bigramsOf(trainToks, Seq.empty)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     val scoreBi = bigramsOf(

@@ -1,8 +1,10 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.catalog.SnapshotCatalog
+import graft.functions.OnePass
 
 /** Command-line surface over [[graft.catalog.SnapshotCatalog]].
   *
@@ -87,7 +89,7 @@ object SnapCli {
       val cat = new SnapshotCatalog(spark, wh)
       val df = if (a.length > 3) cat.readAsOf(db, table, a(3).toLong) else cat.readLatest(db, table)
       val limit = if (a.length > 4) a(4).toInt else 20
-      println(s"count=${df.count()}")
+      println(s"count=${OnePass.aggregate(df, Seq(count(lit(1)))).getLong(0)}")
       df.show(limit, truncate = false)
     case "compact" =>
       val Array(wh, db, table, n) = a.take(4)
@@ -143,7 +145,7 @@ object SnapCli {
     case "incremental" =>
       val Array(wh, db, table, from, to) = a.take(5)
       val df = new SnapshotCatalog(spark, wh).readIncremental(db, table, from.toLong, to.toLong)
-      println(s"count=${df.count()}")
+      println(s"count=${OnePass.aggregate(df, Seq(count(lit(1)))).getLong(0)}")
       df.show(20, truncate = false)
     case "orphans" =>
       val Array(wh, db, table) = a.take(3)

@@ -461,7 +461,8 @@ class MorDeleteSpec extends AnyFunSuite {
     cat.deleteMoREq("db", "nation", Seq(9).toDF("n_nationkey"))
     val jobs = jobsOf { assert(cat.convertEqualityDeletes("db", "nation").isDefined) }
     info(s"convertEqualityDeletes: $jobs Spark jobs")
-    assert(jobs <= 15, s"$jobs jobs; the mask-join conversion took 15")
+    // 3 since delete coverage comes from footers first
+    assert(jobs <= 3, s"$jobs jobs; the mask-join conversion took 15")
   }
 
   /** One key type of the equality-delete matrix: `data` (an `id` column

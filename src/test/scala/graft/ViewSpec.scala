@@ -862,7 +862,7 @@ class ViewSpec extends AnyFunSuite {
     cat.append("db", "cust", Seq((4L, "s2")).toDF("ck", "seg"))
     cat.append("db", "prod", Seq((30L, "pc")).toDF("pk", "cat")) // picks up (1,30,50)
     cat.append("db", "fact", Seq((4L, 30L, 6L), (3L, 20L, 8L)).toDF("ck", "pk", "v"))
-    val m3 = gatedRefresh(cat, "star", maxJobs = 18)
+    val m3 = gatedRefresh(cat, "star", maxJobs = 17)
     assert(m3 == "incremental_join_agg", m3)
     assert(got() == expect())
 
@@ -1183,7 +1183,7 @@ class ViewSpec extends AnyFunSuite {
     cat.append("db", "dim", Seq((8L, "s2")).toDF("k", "seg"))
     cat.updateMoR("db", "fact", col("k") === 3L, Map("v" -> lit(31L)))
     cat.append("db", "fact", Seq((8L, 31L)).toDF("k", "v"))
-    val m6 = gatedRefresh(cat, "djr", maxJobs = 50)
+    val m6 = gatedRefresh(cat, "djr", maxJobs = 46)
     assert(m6 == "incremental_join_agg", m6)
     assert(got() == expect())
   }
@@ -1221,7 +1221,7 @@ class ViewSpec extends AnyFunSuite {
     // dim churn COVERS a null-extended key: k=9 moves from the NULL
     // group into s9 — both groups' distinct sets move through bracket 2
     cat.append("db", "dim", Seq((9L, "s9")).toDF("k", "seg"))
-    val mo2 = gatedRefresh(cat, "odr", maxJobs = 46)
+    val mo2 = gatedRefresh(cat, "odr", maxJobs = 41)
     assert(mo2 == "incremental_outer_agg", mo2)
     assert(gotO() == expectO())
     assert(!gotO().exists(_._1.isEmpty), gotO().toString)
@@ -1241,7 +1241,7 @@ class ViewSpec extends AnyFunSuite {
     assert(gotU() == expectU())
     cat.deleteMoR("db", "fact", col("v") === 20L)
     cat.append("db", "fact", Seq((4L, 11L)).toDF("k", "v")) // duplicate value 11
-    val mu1 = gatedRefresh(cat, "udr", maxJobs = 39)
+    val mu1 = gatedRefresh(cat, "udr", maxJobs = 35)
     assert(mu1 == "incremental_union_agg", mu1)
     assert(gotU() == expectU())
     cat.deleteMoR("db", "dim", col("k") === 2L)
@@ -1323,7 +1323,7 @@ class ViewSpec extends AnyFunSuite {
     cat.updateMoR("db", "fact", col("k") === 1L && col("v") === 10L,
       Map("v" -> lit(12L)))
     cat.append("db", "fact", Seq((8L, 2L)).toDF("k", "v"))
-    val m7 = gatedRefresh(cat, "rollup", maxJobs = 21)
+    val m7 = gatedRefresh(cat, "rollup", maxJobs = 18)
     assert(m7 == "incremental_join_agg", m7)
     assert(got() == expect())
   }
@@ -1769,7 +1769,7 @@ class ViewSpec extends AnyFunSuite {
     cat.deleteMoR("db", "fact", col("id") % 13 === 1)
     cat.append("db", "dim", Seq((1001L, "sNEW2")).toDF("ck", "seg"))
     cat.deleteMoR("db", "dim", col("ck") === 4)
-    check("both sides", maxJobs = 33)
+    check("both sides", maxJobs = 30)
     // 5. a fresh view is a no-op
     assert(cat.refreshMaterializedView("db", "omv")._1 == "fresh")
     // 6. a filtered JOIN SIDE declines to full (its delta is not the raw
@@ -1883,7 +1883,7 @@ class ViewSpec extends AnyFunSuite {
     check("blocklist growth")
     // blocklist SHRINKS: h3 docs re-admit
     cat.deleteMoR("db", "block", col("h") === "h3")
-    check("blocklist shrink", maxJobs = 19)
+    check("blocklist shrink", maxJobs = 16)
     // the SEMI twin: docs ON the blocklist, same machinery
     cat.createMaterializedView("db", "dirty_counts",
       "SELECT d.lang, count(*) AS n FROM db.docs d " +
