@@ -50,7 +50,7 @@ final class CommitConflictException(key: String, msg: String)
   * second half of the object-store seam (the [[CommitMutex]] decides how
   * bodies exclude/retry; this decides how the log read observes an etag
   * and how the log write is made conditional on it). The catalog's
-  * `loadRepr`/`writeEntries` are the only call sites.
+  * `loadTable`/`writeEntries` are the only call sites.
   *
   * Contract: `read` returns the content WITH the etag the caller must
   * present to replace it; `writeIf(expected = None)` is create-if-absent

@@ -11,8 +11,8 @@ import java.nio.file.{Files, Path}
   * conditional-put mapping).
   *
   * Implementation contracts an alternative may rely on:
-  *   - every commit path RE-READS table state (`entriesForWrite`,
-  *     `meta`) INSIDE `body`, never before it — so an optimistic
+  *   - every commit path LOADS table state (`loadTable`, `meta`)
+  *     INSIDE `body`, never before it — so an optimistic
   *     implementation can simply re-run `body` after a conflict;
   *   - `body`'s only externally-visible effect is files written under
   *     the table directory plus one atomic publish of the pointer log

@@ -383,15 +383,10 @@ final class SnapshotCatalog(
   def dropNamespace(db: String): Unit = {
     SnapshotCatalog.purgeManifestCache(dbPath(db))
     // the RAW listing: MV backing tables (`__mv_*`) are hidden from the
-    // user-facing listTables but their pointer-log keys + observed-etag
-    // entries still need purging before the directory goes — a
-    // non-directory log backend would otherwise keep stale CAS state
-    // (ADVICE r8). Same for every view document.
-    listTablesRaw(db).foreach { t =>
-      val key = logKey(db, t)
-      log.delete(key)
-      SnapshotCatalog.observedLogEtag.get().remove(key)
-    }
+    // user-facing listTables but their pointer-log keys still need purging
+    // before the directory goes — a non-directory log backend would
+    // otherwise keep stale CAS state. Same for every view document.
+    listTablesRaw(db).foreach(t => log.delete(logKey(db, t)))
     listViews(db).foreach { v => log.delete(viewKey(db, v)) }
     deleteRecursively(dbPath(db))
   }
@@ -436,8 +431,8 @@ final class SnapshotCatalog(
     Files.createDirectories(logPath(db, table).getParent)
     AtomicFile.write(metaPath(db, table), Json.writePretty(TableMeta(db, table, partitionCols, properties).toJson))
     SnapshotCatalog.purgeManifestCache(tablePath(db, table))
-    writeEntries(db, table, Seq(SnapshotEntry(1L, clock().toString, "create",
-      Map("record_count" -> "0", "added_files" -> "0", "total_files" -> "0"),
+    writeEntries(TableState.absent(db, table), Seq(SnapshotEntry(1L, clock().toString,
+      "create", Map("record_count" -> "0", "added_files" -> "0", "total_files" -> "0"),
       schema.toDDL, Seq.empty)))
     true
   }
@@ -604,7 +599,7 @@ final class SnapshotCatalog(
     if (tm.partitionCols.isEmpty) return flatDirName
     val hidden = tm.hiddenCols
     val visible0 = org.apache.spark.sql.types.StructType(
-      currentSnapshot(db, table).schema.fields.filterNot(f => hidden(f.name)))
+      loadTable(db, table).schema.fields.filterNot(f => hidden(f.name)))
     // lineage tables: the flat delta may carry a physical __rid column
     // (the SQL delta writer's preserved identities) — read and re-write
     // it so the re-layout never re-mints. Files without the column read
@@ -639,13 +634,6 @@ final class SnapshotCatalog(
     outName
   }
 
-  /** Former name of [[relayoutLaid]] scoped to bucketed tables. */
-  def relayoutBucketed(db: String, table: String, flatDirName: String): String = {
-    require(meta(db, table).bucketSpec.isDefined,
-      s"$db.$table is not bucketed - nothing to re-lay")
-    relayoutLaid(db, table, flatDirName)
-  }
-
   def tableExists(db: String, table: String): Boolean = Files.exists(metaPath(db, table))
 
   def listTables(db: String): Seq[String] =
@@ -665,9 +653,7 @@ final class SnapshotCatalog(
 
   def dropTable(db: String, table: String): Unit = {
     SnapshotCatalog.purgeManifestCache(tablePath(db, table))
-    val key = logKey(db, table)
-    log.delete(key)
-    SnapshotCatalog.observedLogEtag.get().remove(key)
+    log.delete(logKey(db, table))
     deleteRecursively(tablePath(db, table))
   }
 
@@ -680,7 +666,7 @@ final class SnapshotCatalog(
     * embedded names are stale but harmless (they are display-only; all path
     * resolution keys off the directory). */
   def renameTable(db: String, table: String, newDb: String, newTable: String): Unit =
-    withTableLock(db, table) {
+    lockTable(db, table) {
       require(namespaceExists(newDb), s"no such namespace: $newDb")
       require(!tableExists(newDb, newTable),
         s"table already exists: $newDb.$newTable")
@@ -695,7 +681,6 @@ final class SnapshotCatalog(
       // object-store log: the pointer key embeds the table path, so the
       // rename migrates it (file default: the move above carried the file)
       log.migrate(logKey(db, table), logKey(newDb, newTable))
-      SnapshotCatalog.observedLogEtag.get().remove(logKey(db, table))
     }
 
   // ---- namespace properties ----
@@ -717,20 +702,13 @@ final class SnapshotCatalog(
 
   // ---- snapshot log (format v2: pointer entries + manifest shards) ----
 
-  import SnapshotCatalog.PointerLog
+  import TableState.{isBranchEntry, isStagedEntry}
 
   /** Key of a table's pointer log in the [[PointerLogStore]] (absolute
     * normalized path string — the one spelling two catalog instances over
     * one warehouse agree on). */
   private def logKey(db: String, table: String): String =
     logPath(db, table).toAbsolutePath.normalize().toString
-
-  /** Canonical mutex key of a table — the same spelling [[withTableLock]]
-    * registers in [[SnapshotCatalog.heldLocks]], so [[loadLog]] can tell
-    * "am I inside a commit body for THIS table" (the etag-pinning rule). */
-  private def lockKeyOf(db: String, table: String): String =
-    tablePath(db, table).resolve("_snapshots").resolve("LOCK")
-      .toAbsolutePath.normalize().toString
 
   /** Suffix for per-snapshot artifact names (data dirs, manifest shards,
     * delete shards/dirs), minted once per commit attempt per artifact.
@@ -745,60 +723,23 @@ final class SnapshotCatalog(
     if (!log.conditional) ""
     else "-" + java.util.UUID.randomUUID().toString.take(8)
 
-  private def loadLog(db: String, table: String): PointerLog = {
-    val key = logKey(db, table)
+  /** Read and parse a table's pointer log: one [[TableState]], from
+    * which the caller answers every question it has about the table. No
+    * state is cached across calls — a new operation always loads fresh. */
+  private[graft] def loadTable(db: String, table: String): TableState = {
     SnapshotCatalog.logReads.incrementAndGet()
-    log.read(key) match {
-      case None =>
-        // self-healing etag bookkeeping: a drop/recreate must not leave a
-        // stale expectation behind for this thread
-        SnapshotCatalog.observedLogEtag.get().remove(key)
-        SnapshotCatalog.pinnedEtagKeys.get().remove(key)
-        throw new IllegalArgumentException(
-          s"requirement failed: no such table: $db.$table (missing ${logPath(db, table)})")
-      case Some((txt, etag)) =>
-        // remember the etag this thread's state derives from: the NEXT
-        // writeEntries presents it as the If-Match precondition. Under the
-        // file-lock default the value is unused. Inside a commit body the
-        // etag is PINNED at the body's FIRST read: compound bodies re-read
-        // the log mid-flight (pruneFiles -> snapshotAt, changelog walks),
-        // and if a racer published between the top read and that refresh,
-        // last-read-wins would advance the observed etag past the racer —
-        // writeEntries' If-Match would then pass while publishing an
-        // entries list computed WITHOUT the racer's commit (a silent lost
-        // update). Pinning makes the precondition "the state the body's
-        // FIRST read derived from", so any interleaved racer forces a
-        // CommitConflictException and a clean whole-body retry.
-        val inBody = SnapshotCatalog.heldLocks.get().contains(lockKeyOf(db, table))
-        val pinned = SnapshotCatalog.pinnedEtagKeys.get()
-        if (!inBody) SnapshotCatalog.observedLogEtag.get().put(key, etag)
-        else if (!pinned.contains(key)) {
-          SnapshotCatalog.observedLogEtag.get().put(key, etag)
-          pinned.add(key)
-        } // else: mid-body refresh — keep the etag the body derives from
-        Json.parse(txt) match {
-          case o: JObj => PointerLog(
-            o.arr("entries").map(v => SnapshotEntry.fromJson(v.asInstanceOf[JObj])),
-            o.get("shard_summaries") match {
-              case Some(s: JObj) => s.fields.map { case (name, v) =>
-                name -> ShardSummary.fromJson(v.asInstanceOf[JObj]) }.toMap
-              case _ => Map.empty
-            })
-          case other => throw new IllegalStateException(s"bad snapshot log: $other")
-        }
+    log.read(logKey(db, table)) match {
+      case None => throw new IllegalArgumentException(
+        s"requirement failed: no such table: $db.$table (missing ${logPath(db, table)})")
+      case Some((txt, etag)) => TableState.parse(db, table, txt, etag)
     }
   }
-
-  /** O(pointer log) metadata view of every snapshot — NEVER opens a
-    * manifest. */
-  private def entryMeta(db: String, table: String): Seq[SnapshotEntry] =
-    loadLog(db, table).entries
 
   /** POINTER-LOG view of the snapshot history: id / timestamp / operation /
     * summary / schema, without materializing any manifest shard — the
     * O(KB) read for callers that never look at file lists (metadata
     * tables, the streaming tail's append-only check). */
-  def entryLog(db: String, table: String): Seq[SnapshotEntry] = entryMeta(db, table)
+  def entryLog(db: String, table: String): Seq[SnapshotEntry] = loadTable(db, table).entries
 
   private def manifestPath(db: String, table: String, name: String): Path =
     tablePath(db, table).resolve("_snapshots").resolve(name)
@@ -871,7 +812,8 @@ final class SnapshotCatalog(
   /** Resolve a pointer entry to the full [[Snapshot]] view: concatenate its
     * manifest shards (file order is manifest order — an append's files come
     * after every carried file). */
-  private def materialize(db: String, table: String, e: SnapshotEntry): Snapshot = {
+  private[graft] def materialize(st: TableState, e: SnapshotEntry): Snapshot = {
+    val (db, table) = (st.db, st.table)
     // LAZY (r15, two-level sweep): the inventory parses only when a caller
     // actually walks files/stats/deletes. Schema- and summary-only callers
     // — `currentSnapshot(...).schema` in the SQL plugin's per-analysis
@@ -893,12 +835,12 @@ final class SnapshotCatalog(
     * disjoint), and only an entry carrying neither — a pre-summary log —
     * pays the forced materialization. Keeps pointer-level commits'
     * `total_files` arithmetic O(1). */
-  private def entryFileCount(db: String, table: String, e: SnapshotEntry): Long =
+  private def entryFileCount(st: TableState, e: SnapshotEntry): Long =
     e.summary.get("total_files").map(_.toLong).getOrElse {
-      val sums = loadLog(db, table).summaries
+      val sums = st.summaries
       if (e.manifests.forall(sums.contains))
         e.manifests.iterator.map(sums(_).fileCount.toLong).sum
-      else materialize(db, table, e).files.size.toLong
+      else materialize(st, e).files.size.toLong
     }
 
   /** Which of `probe` are NOT data files of entry `e` — the membership
@@ -907,12 +849,13 @@ final class SnapshotCatalog(
     * snapshot dirs are parsed (a shard without a recorded dir set loads —
     * degrade, never break). A probe set touching one partition of a
     * 10^6-file table opens that partition's shards, not the inventory. */
-  private def unknownFiles(db: String, table: String, e: SnapshotEntry,
+  private def unknownFiles(st: TableState, e: SnapshotEntry,
       probe: Seq[String]): Seq[String] =
     if (probe.isEmpty) Seq.empty
     else {
+      val (db, table) = (st.db, st.table)
       val dirs = probe.map(_.split("/").take(2).mkString("/")).toSet
-      val sums = loadLog(db, table).summaries
+      val sums = st.summaries
       val shards = e.manifests.filter(n => sums.get(n).flatMap(_.dirs) match {
         case Some(ds) => ds.exists(dirs.contains)
         case None => true
@@ -922,8 +865,10 @@ final class SnapshotCatalog(
       probe.filterNot(known)
     }
 
-  def snapshotList(db: String, table: String): Seq[Snapshot] =
-    entryMeta(db, table).map(materialize(db, table, _))
+  def snapshotList(db: String, table: String): Seq[Snapshot] = {
+    val st = loadTable(db, table)
+    st.entries.map(materialize(st, _))
+  }
 
   /** Per-shard manifest inventory (the `manifests` metadata table): one row
     * per live shard with its file count, row count (when every file in the
@@ -934,7 +879,7 @@ final class SnapshotCatalog(
   def manifestInventory(db: String, table: String): Seq[ManifestInfo] = {
     val firstRef = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val refCount = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    entryMeta(db, table).foreach { e =>
+    loadTable(db, table).entries.foreach { e =>
       e.manifests.foreach { m =>
         if (!firstRef.contains(m)) firstRef(m) = e.snapshotId
         refCount(m) += 1
@@ -949,52 +894,21 @@ final class SnapshotCatalog(
     }
   }
 
-  // ---- write-audit-publish visibility ----
-
-  /** A staged (write-audit-publish) snapshot: committed durably, fully
-    * addressable by id, but INVISIBLE to current-state readers until
-    * published. Marked in the summary so the flag rides the atomic log
-    * write and shows up in the `snapshots` metadata table. */
-  private def isStagedEntry(e: SnapshotEntry): Boolean =
-    e.summary.get("wap.staged").contains("true")
-
-  /** A commit made TO A NAMED BRANCH (`branch.ref` in its summary): fully
-    * addressable by id, listed in history, but never the published state —
-    * the same invisibility discipline as a staged snapshot, generalized to
-    * long-lived multi-commit lineages. */
-  private def isBranchEntry(e: SnapshotEntry): Boolean =
-    e.summary.contains("branch.ref")
-
-  /** The last PUBLISHED entry — what "current table state" means
-    * everywhere. Staged and branch-commit entries are skipped (a staged
-    * snapshot is, in effect, a one-commit anonymous branch; named branch
-    * commits reach main only through [[fastForward]]). The create entry is
-    * never staged or branched, so this total function needs no fallback. */
-  private def publishedEntry(entries: Seq[SnapshotEntry]): SnapshotEntry =
-    entries.reverse.find(e => !isStagedEntry(e) && !isBranchEntry(e)).getOrElse(
-      throw new IllegalStateException("corrupt log: no published snapshot"))
-
   /** Id of the current (published) snapshot, pointer-log only — the read
     * the streaming tail's every-trigger `latestOffset` makes: staged
     * snapshots must not leak into streams before their audit passes. */
   def currentSnapshotId(db: String, table: String): Long =
-    publishedEntry(entryMeta(db, table)).snapshotId
+    loadTable(db, table).published.snapshotId
 
-  /** The PUBLISHED main lineage: every entry that was ever the published
-    * head, in commit order — staged entries (their files surface at their
-    * `publish` commit) and branch commits (they reach main only through
-    * fastForward) excluded. This is the sequence whose consecutive
-    * file-list diffs define "what each commit did to main" —
-    * [[commitRange]] walks it to classify in-range commits. Pointer-log
-    * only; no manifest is opened. */
-  def mainLineage(db: String, table: String): Seq[SnapshotEntry] =
-    entryMeta(db, table).filter(e => !isStagedEntry(e) && !isBranchEntry(e))
+  def currentSnapshot(db: String, table: String): Snapshot = {
+    val st = loadTable(db, table)
+    materialize(st, st.published)
+  }
 
-  def currentSnapshot(db: String, table: String): Snapshot =
-    materialize(db, table, publishedEntry(entryMeta(db, table)))
-
-  def snapshotAt(db: String, table: String, snapshotId: Long): Snapshot =
-    materialize(db, table, entryAt(db, table, snapshotId))
+  def snapshotAt(db: String, table: String, snapshotId: Long): Snapshot = {
+    val st = loadTable(db, table)
+    materialize(st, st.entryAt(snapshotId))
+  }
 
   // ---- snapshot-log write helpers (call only under the table lock) ----
 
@@ -1004,43 +918,41 @@ final class SnapshotCatalog(
     SnapshotCatalog.manifestCache.put(p.toAbsolutePath.normalize().toString, m)
   }
 
-  /** Publish the pointer log — the COMMIT POINT of every write path. The
-    * etag observed by this thread's last log read rides as the write
-    * precondition: under the conditional object-store log a racer that
-    * moved the pointer makes this throw [[CommitConflictException]], which
-    * [[CasCommitMutex]] catches to re-run the whole commit body against
-    * the winner's log; under the file default the precondition is moot
-    * (the file lock already serialized us) and the write is the same
-    * temp+atomic-rename as ever. */
-  private def writeEntries(db: String, table: String, entries: Seq[SnapshotEntry]): Unit = {
-    val key = logKey(db, table)
-    val sums = fillShardSummaries(db, table, entries)
-    val expected = Option(SnapshotCatalog.observedLogEtag.get().get(key)).map(_.longValue)
-    val newEtag = log.writeIf(key, Json.writePretty(Json.obj(
+  /** Publish the pointer log — the COMMIT POINT of every write path:
+    * `entries`, derived from `st`, replace the log `st` was read from.
+    * `st`'s etag rides as the write precondition: under the conditional
+    * object-store log a racer that moved the pointer since `st` was loaded
+    * makes this throw [[CommitConflictException]], which [[CasCommitMutex]]
+    * catches to re-run the whole commit body against a fresh state; under
+    * the file default the precondition is moot (the file lock already
+    * serialized us) and the write is the same temp+atomic-rename as ever.
+    * Returns the published state. */
+  private def writeEntries(st: TableState, entries: Seq[SnapshotEntry]): TableState = {
+    val sums = fillShardSummaries(st, entries)
+    val etag = log.writeIf(logKey(st.db, st.table), Json.writePretty(Json.obj(
       (Vector(
         "format_version" -> (Json.num(2L): JValue),
         "entries"        -> (JArr(entries.toVector.map(_.toJson)): JValue)) ++
         (if (sums.isEmpty) Vector.empty
          else Vector("shard_summaries" -> (JObj(sums.toVector.sortBy(_._1)
-           .map { case (n, s) => n -> (s.toJson: JValue) }): JValue)))): _*)), expected)
-    SnapshotCatalog.observedLogEtag.get().put(key, newEtag)
+           .map { case (n, s) => n -> (s.toJson: JValue) }): JValue)))): _*)), st.etag)
+    new TableState(st.db, st.table, entries, sums, Some(etag))
   }
 
   /** The `shard_summaries` map the log being published should carry: one
     * [[ShardSummary]] per shard name any entry references. Carried
-    * summaries come from the on-disk log (write-once shards — a summary
-    * never changes); missing ones are computed from the shard inventory —
+    * summaries come from `st`, the state the entries derive from
+    * (write-once shards — a summary never changes); missing ones are computed from the shard inventory —
     * always for the TAIL entry's shards (the commit being published; its
     * shards were just written and sit in the parse cache), and for older
     * shards only when the cache already holds them (no I/O amplification
     * on long histories — coverage completes opportunistically as shards
     * get read). Names no entry references any more (history expiry,
     * manifest consolidation) drop out here, so the map GCs itself. */
-  private def fillShardSummaries(db: String, table: String,
+  private def fillShardSummaries(st: TableState,
       entries: Seq[SnapshotEntry]): Map[String, ShardSummary] = {
-    val prev: Map[String, ShardSummary] =
-      try loadLog(db, table).summaries
-      catch { case scala.util.control.NonFatal(_) => Map.empty }
+    val (db, table) = (st.db, st.table)
+    val prev = st.summaries
     val pcols =
       try meta(db, table).partitionCols
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
@@ -1120,6 +1032,11 @@ final class SnapshotCatalog(
       exactCount)
   }
 
+  /** What a commit published: the committed snapshot and the state its
+    * publish left the log in — a compound operation's next commit on the
+    * same table derives from that state without reading the log again. */
+  private final class Committed(val snap: Snapshot, val state: TableState)
+
   /** Commit one snapshot: write its delta shard — the ONLY O(files)
     * metadata write — then atomically rename the pointer log over.
     * `reuse` names manifest shards carried verbatim from an earlier entry;
@@ -1130,10 +1047,13 @@ final class SnapshotCatalog(
     * defaulted empty here would silently resurrect merge-on-read-deleted
     * rows on any pointer commit). A crash between the shard write and the
     * log rename leaves an unreferenced `m<id>.json` that the next same-id
-    * commit simply overwrites — never a dangling pointer. */
-  private def commitSnapshot(db: String, table: String, entries: Seq[SnapshotEntry],
+    * commit simply overwrites — never a dangling pointer. The entry lands
+    * on `st`'s entries, published under `st`'s etag; the result carries
+    * the committed snapshot and the published state. */
+  private def commitSnapshot(st: TableState,
       snap: Snapshot, reuse: Seq[String], delta: Manifest,
-      deletes: Seq[String]): Snapshot = {
+      deletes: Seq[String]): Committed = {
+    val (db, table, entries) = (st.db, st.table, st.entries)
     // ROW LINEAGE (opt-in `row.lineage=true`, the Iceberg-v3 model): every
     // commit claims a contiguous row-id range [next-row-id, next') and
     // each NEW data file records its `first_row_id` — a row's stable
@@ -1204,10 +1124,18 @@ final class SnapshotCatalog(
         writeManifest(db, table, name, delta2)
         reuse :+ name
       }
-    writeEntries(db, table, entries :+ SnapshotEntry(snap2.snapshotId, snap2.committedAt,
-      snap2.operation, snap2.summary, snap2.schemaDdl, manifests, deletes))
-    snap2
+    new Committed(snap2, writeEntries(st, entries :+ SnapshotEntry(snap2.snapshotId,
+      snap2.committedAt, snap2.operation, snap2.summary, snap2.schemaDdl, manifests, deletes)))
   }
+
+  /** A PURE POINTER commit: the next entry re-points at `e`'s data and
+    * delete shards under `operation`, `summary` and `ddl`, writing no
+    * O(files) metadata — the snapshot's inventory view defers to `e`'s. */
+  private def repoint(st: TableState, e: SnapshotEntry, operation: String,
+      summary: Map[String, String], ddl: String): Committed =
+    commitSnapshot(st, materialize(st, e).copy(snapshotId = st.nextId,
+      committedAt = clock().toString, operation = operation, summary = summary,
+      schemaDdl = ddl), e.manifests, Manifest.empty, e.deletes)
 
   /** The `<table>.snapshots` metadata table as a DataFrame — the relation
     * stage 1 scans and sorts (`1_collect_src_snapshots.py:61-70`). Columns:
@@ -1217,7 +1145,7 @@ final class SnapshotCatalog(
     */
   def snapshots(db: String, table: String): DataFrame = {
     import spark.implicits._
-    entryMeta(db, table) // pointer log only — no manifest opens
+    loadTable(db, table).entries // pointer log only — no manifest opens
       .map(e => (e.snapshotId, e.committedAt, e.operation, e.summary))
       .toDF("snapshot_id", "committed_at_iso", "operation", "summary")
       .withColumn("committed_at", to_timestamp(col("committed_at_iso")))
@@ -1236,8 +1164,10 @@ final class SnapshotCatalog(
 
   // ---- reads ----
 
-  def readLatest(db: String, table: String): DataFrame =
-    readAsOf(db, table, currentSnapshot(db, table).snapshotId)
+  def readLatest(db: String, table: String): DataFrame = {
+    val st = loadTable(db, table)
+    readAt(st, st.published)
+  }
 
   /** Time-travel read: table contents exactly as of `snapshotId`
     * (`5_migrate_tables_data.py:72-74`, `6_verify_data_integrity.py:66-68`).
@@ -1252,8 +1182,14 @@ final class SnapshotCatalog(
     * across snapshots tolerated via the per-snapshot stored schema).
     */
   def readAsOf(db: String, table: String, snapshotId: Long): DataFrame = {
-    val snap = snapshotAt(db, table, snapshotId)
-    readVisible(db, table, snap, snap.files)
+    val st = loadTable(db, table)
+    readAt(st, st.entryAt(snapshotId))
+  }
+
+  /** [[readAsOf]] of entry `e` of `st`. */
+  private[graft] def readAt(st: TableState, e: SnapshotEntry): DataFrame = {
+    val snap = materialize(st, e)
+    readVisible(st.db, st.table, snap, snap.files)
   }
 
   /** Scan an explicit table-root-relative file list under `schema` —
@@ -1483,8 +1419,12 @@ final class SnapshotCatalog(
     * the decision happens BEFORE any Spark task exists. Files without
     * recorded stats are always scanned (pruning degrades, never breaks). */
   def pruneFiles(db: String, table: String, snapshotId: Long,
+      cond: Column): (Seq[String], Seq[String]) =
+    prune(db, table, snapshotAt(db, table, snapshotId), cond)
+
+  /** [[pruneFiles]] over an already-resolved snapshot. */
+  private def prune(db: String, table: String, snap: Snapshot,
       cond: Column): (Seq[String], Seq[String]) = {
-    val snap = snapshotAt(db, table, snapshotId)
     val ctx = pruneCtx(db, table, snap.schema, cond)
     snap.files.partition(f =>
       fileMayMatch(db, table, ctx, f, snap.fileStats.getOrElse(f, Map.empty)))
@@ -1596,21 +1536,15 @@ final class SnapshotCatalog(
       // skipped shards BY NAME without ever parsing them
       openedNames: Seq[String])
 
-  /** A pointer entry by id out of an already-read log. */
-  private def entryIn(log: PointerLog, db: String, table: String,
-      snapshotId: Long): SnapshotEntry =
-    log.entries.find(_.snapshotId == snapshotId).getOrElse(
-      throw new NoSuchElementException(s"snapshot $snapshotId not found for $db.$table"))
-
-  private[graft] def resolveWhere(db: String, table: String, snapshotId: Long,
+  private[graft] def resolveWhere(st: TableState, snapshotId: Long,
       cond: Column): ScanResolution = {
-    val log = loadLog(db, table)
-    val e = entryIn(log, db, table, snapshotId)
+    val (db, table) = (st.db, st.table)
+    val e = st.entryAt(snapshotId)
     val schema = e.schema
     val ctx = pruneCtx(db, table, schema, cond)
-    val open = e.manifests.filter(name => log.summaries.get(name).forall(s =>
+    val open = e.manifests.filter(name => st.summaries.get(name).forall(s =>
       ShardSummary.mayMatch(s, schema, ctx.preds, ctx.buckets, ctx.ptToken)))
-    val snap = materializePartial(db, table, e, open)
+    val snap = materializePartial(st, e, open)
     val kept = snap.files.filter(f =>
       fileMayMatch(db, table, ctx, f, snap.fileStats.getOrElse(f, Map.empty)))
     ScanResolution(snap, kept, e.manifests.size, open.size, open)
@@ -1622,14 +1556,13 @@ final class SnapshotCatalog(
     * never parsed. File-tier skipping stays with the caller (the scan
     * builder runs it with bloom sidecars and runtime filters folded in).
     * Shards without summaries load in full — degrade, never break. */
-  private[graft] def resolveScanShards(db: String, table: String, snapshotId: Long,
+  private[graft] def resolveScanShards(st: TableState, snapshotId: Long,
       preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Snapshot = {
-    val log = loadLog(db, table)
-    val e = entryIn(log, db, table, snapshotId)
+    val e = st.entryAt(snapshotId)
     val schema = e.schema
-    val ctx = pruneCtxOf(db, table, schema, preds)
-    materializePartial(db, table, e, e.manifests.filter(name =>
-      log.summaries.get(name).forall(s =>
+    val ctx = pruneCtxOf(st.db, st.table, schema, preds)
+    materializePartial(st, e, e.manifests.filter(name =>
+      st.summaries.get(name).forall(s =>
         ShardSummary.mayMatch(s, schema, ctx.preds, ctx.buckets, ctx.ptToken))))
   }
 
@@ -1641,23 +1574,22 @@ final class SnapshotCatalog(
     * keeps including shards until coverage is provable; never provable =
     * everything loads). Armed by the caller only with NO live deletes
     * (footer counts must be visible counts — the file tier's own rule). */
-  private[graft] def resolveScanLimitShards(db: String, table: String,
+  private[graft] def resolveScanLimitShards(st: TableState,
       snapshotId: Long, limit: Int): Snapshot = {
-    val log = loadLog(db, table)
-    val e = entryIn(log, db, table, snapshotId)
+    val e = st.entryAt(snapshotId)
     var acc = 0L
     var covered = false
     val open = Seq.newBuilder[String]
     e.manifests.foreach { name =>
       if (!covered) {
         open += name
-        log.summaries.get(name).flatMap(_.stats.get("rows")).foreach { r =>
+        st.summaries.get(name).flatMap(_.stats.get("rows")).foreach { r =>
           acc += r.toLong
           if (acc >= limit) covered = true
         }
       }
     }
-    materializePartial(db, table, e, open.result())
+    materializePartial(st, e, open.result())
   }
 
   /** Shard-tier TOP-N resolution: the shared box-bound walk
@@ -1668,42 +1600,33 @@ final class SnapshotCatalog(
     * boxes all its files); a shard without a summary keeps and, if its
     * `rows` is unknown, the walk keeps everything (coverage unprovable —
     * degrade, never break). */
-  private[graft] def resolveScanTopNShards(db: String, table: String,
+  private[graft] def resolveScanTopNShards(st: TableState,
       snapshotId: Long, cols: Seq[(String, Boolean, Boolean)],
       limit: Int): Snapshot = {
-    val log = loadLog(db, table)
-    val e = entryIn(log, db, table, snapshotId)
+    val e = st.entryAt(snapshotId)
     val schema = e.schema
     def gtOf(c: String): Option[(String, String) => Boolean] =
       schema.fields.find(_.name == c).map(_.dataType)
         .filter(ColumnStats.statable)
         .map(dt => (a: String, b: String) => ColumnStats.gt(dt, a, b))
     val items = e.manifests.map(name =>
-      name -> log.summaries.get(name).map(_.stats).getOrElse(Map.empty[String, String]))
+      name -> st.summaries.get(name).map(_.stats).getOrElse(Map.empty[String, String]))
     val keep = TopNPruning.prune(items, cols, limit, gtOf).toSet
-    materializePartial(db, table, e, e.manifests.filter(keep))
+    materializePartial(st, e, e.manifests.filter(keep))
   }
 
   /** Partial materialization: the entry's view restricted to `open`
     * shards (delete shards always load in full — they are the merge
     * correctness layer). */
-  private def materializePartial(db: String, table: String, e: SnapshotEntry,
+  private def materializePartial(st: TableState, e: SnapshotEntry,
       open: Seq[String]): Snapshot = {
+    val (db, table) = (st.db, st.table)
     val ms = open.map(loadManifest(db, table, _))
     Snapshot(e.snapshotId, e.committedAt, e.operation, e.summary,
       e.schemaDdl, ms.flatMap(_.files),
       ms.foldLeft(Map.empty[String, Map[String, String]])(_ ++ _.fileStats),
       e.deletes.flatMap(loadDeleteShard(db, table, _)))
   }
-
-  /** Pointer-log entry by id — O(log) metadata, no manifest opened. */
-  private[graft] def entryAt(db: String, table: String, snapshotId: Long): SnapshotEntry =
-    entryIn(loadLog(db, table), db, table, snapshotId)
-
-  /** Current PUBLISHED pointer-log entry — the metadata-only form of
-    * [[currentSnapshot]]. */
-  private[graft] def currentEntry(db: String, table: String): SnapshotEntry =
-    publishedEntry(entryMeta(db, table))
 
   /** The [[DeleteFile]] entries of one pointer entry's delete shards —
     * KB-sized metadata (cache-served), no data manifest opened. */
@@ -1728,16 +1651,15 @@ final class SnapshotCatalog(
     // provably cannot touch are never opened — the delta commit only ADDS
     // delete positions and data files, so the scan never needs their
     // names); full materialization only on an unscoped DML
+    val st = loadTable(db, table)
+    def all = { val s = materialize(st, st.entryAt(snapshotId)); (s, s.files) }
     val (snap, files) = cond match {
       case Some(c) =>
         try {
-          val r = resolveWhere(db, table, snapshotId, c)
+          val r = resolveWhere(st, snapshotId, c)
           (r.snap, r.kept)
-        } catch { case scala.util.control.NonFatal(_) =>
-          val s = snapshotAt(db, table, snapshotId); (s, s.files)
-        }
-      case None =>
-        val s = snapshotAt(db, table, snapshotId); (s, s.files)
+        } catch { case scala.util.control.NonFatal(_) => all }
+      case None => all
     }
     // lineage tables additionally serve each candidate row's stable
     // `__rid` (requested by the operation as a metadata attribute): the
@@ -1753,13 +1675,20 @@ final class SnapshotCatalog(
     * shards take the footer-stat keep test; the predicate is then applied
     * exactly (the skip layers affect which metadata and files are READ,
     * never the result). */
-  def readWhere(db: String, table: String, snapshotId: Long, cond: Column): DataFrame = {
-    val r = resolveWhere(db, table, snapshotId, cond)
-    readVisible(db, table, r.snap, r.kept).where(cond)
+  def readWhere(db: String, table: String, snapshotId: Long, cond: Column): DataFrame =
+    readPruned(loadTable(db, table), snapshotId, cond).where(cond)
+
+  def readLatestWhere(db: String, table: String, cond: Column): DataFrame = {
+    val st = loadTable(db, table)
+    readPruned(st, st.published.snapshotId, cond).where(cond)
   }
 
-  def readLatestWhere(db: String, table: String, cond: Column): DataFrame =
-    readWhere(db, table, currentSnapshotId(db, table), cond)
+  /** The files of `st`'s snapshot `snapshotId` that [[resolveWhere]]
+    * keeps under `cond`, read visible; `cond` itself is not applied. */
+  private[graft] def readPruned(st: TableState, snapshotId: Long, cond: Column): DataFrame = {
+    val r = resolveWhere(st, snapshotId, cond)
+    readVisible(st.db, st.table, r.snap, r.kept)
+  }
 
   /** Pruned read that does NOT re-apply the predicate: files whose
     * stats/layout may satisfy `cond` read merged, nothing else — and the
@@ -1771,8 +1700,8 @@ final class SnapshotCatalog(
     * Callers without such an enforcing operator want [[readLatestWhere]],
     * which stays exact by construction. */
   def readLatestPruned(db: String, table: String, cond: Column): DataFrame = {
-    val r = resolveWhere(db, table, currentSnapshotId(db, table), cond)
-    readVisible(db, table, r.snap, r.kept)
+    val st = loadTable(db, table)
+    readPruned(st, st.published.snapshotId, cond)
   }
 
   /** Incremental (changes-between-snapshots) read: the rows ADDED in
@@ -1815,11 +1744,16 @@ final class SnapshotCatalog(
     *    consequence there: a range that both deletes a pre-range row and
     *    appends an IDENTICAL row nets to zero served copies (the
     *    changelog view is the exact-diff tool). */
-  def readIncremental(db: String, table: String, fromId: Long, toId: Long): DataFrame = {
+  def readIncremental(db: String, table: String, fromId: Long, toId: Long): DataFrame =
+    incrementAt(loadTable(db, table), fromId, toId)
+
+  /** [[readIncremental]] over `st`. */
+  private def incrementAt(st: TableState, fromId: Long, toId: Long): DataFrame = {
+    val (db, table) = (st.db, st.table)
     require(fromId <= toId, s"fromId $fromId > toId $toId")
-    val fromE = entryAt(db, table, fromId)
-    val steps = commitRange(db, table, fromE, toId)
-    val end = steps.lastOption.fold(materialize(db, table, fromE))(_.snap)
+    val fromE = st.entryAt(fromId)
+    val steps = commitRange(st, fromE, toId)
+    val end = steps.lastOption.fold(materialize(st, fromE))(_.snap)
     appendDelta(steps) match {
       // `end` is not `toId` when `toId` is off the published lineage
       // (a staged or branch snapshot)
@@ -1827,8 +1761,8 @@ final class SnapshotCatalog(
         readVisible(db, table,
           end.copy(files = files, fileStats = Map.empty, deleteFiles = deletes), files)
       case _ =>
-        val from = snapshotAt(db, table, fromId)
-        val to = snapshotAt(db, table, toId)
+        val from = materialize(st, fromE)
+        val to = materialize(st, st.entryAt(toId))
         val (removed, added) = changedFileSets(from, to)
         readVisible(db, table, to, added).exceptAll(readVisible(db, table,
           alignEndpoints(db, table, "incremental read", from, to), removed))
@@ -1836,8 +1770,7 @@ final class SnapshotCatalog(
   }
 
   /** The ONE commit-range walk: the published commits in
-    * `(from, toId]`, one [[CommitStep]] each, from a single pointer-log
-    * read. Every incremental surface — [[readIncremental]], the append
+    * `(from, toId]` of `st`, one [[CommitStep]] each. Every incremental surface — [[readIncremental]], the append
     * and `.changes` stream tails, and [[changeSetsAcrossRange]] (every
     * MV and index refresh) — folds these steps, so what a commit did to
     * main is decided here and nowhere else.
@@ -1848,18 +1781,18 @@ final class SnapshotCatalog(
     * side's inventory is materialized — every append-family commit's
     * shape. Other commits (rewrites, manifest consolidation) diff the two
     * file lists. Delete files are compared by path. */
-  private[graft] def commitRange(db: String, table: String, from: SnapshotEntry,
+  private[graft] def commitRange(st: TableState, from: SnapshotEntry,
       toId: Long): Seq[CommitStep] = {
     var parentE = from
-    var parent = materialize(db, table, from)
-    mainLineage(db, table)
+    var parent = materialize(st, from)
+    st.mainLineage
       .filter(e => e.snapshotId > from.snapshotId && e.snapshotId <= toId)
       .map { e =>
-        val snap = materialize(db, table, e)
+        val snap = materialize(st, e)
         val reused = parentE.manifests.toSet
         val (added, removed) =
           if (reused.subsetOf(e.manifests.toSet))
-            (e.manifests.filterNot(reused).flatMap(loadManifest(db, table, _).files),
+            (e.manifests.filterNot(reused).flatMap(loadManifest(st.db, st.table, _).files),
               Seq.empty[String])
           else {
             val (pf, sf) = (parent.files.toSet, snap.files.toSet)
@@ -2024,10 +1957,15 @@ final class SnapshotCatalog(
     * Ranges spanning an ADDITIVE/WIDENING schema evolution serve the diff
     * in the `to` schema ([[alignEndpoints]]); only incompatible changes
     * fail loudly. */
-  def readChangelog(db: String, table: String, fromId: Long, toId: Long): DataFrame = {
+  def readChangelog(db: String, table: String, fromId: Long, toId: Long): DataFrame =
+    changelogAt(loadTable(db, table), fromId, toId)
+
+  /** [[readChangelog]] over `st`. */
+  private[graft] def changelogAt(st: TableState, fromId: Long, toId: Long): DataFrame = {
+    val (db, table) = (st.db, st.table)
     require(fromId <= toId, s"fromId $fromId > toId $toId")
-    val from = snapshotAt(db, table, fromId)
-    val to = snapshotAt(db, table, toId)
+    val from = materialize(st, st.entryAt(fromId))
+    val to = materialize(st, st.entryAt(toId))
     val fromAligned = alignEndpoints(db, table, "changelog", from, to)
     val (removed, added) = changedFileSets(from, to)
     // ROW LINEAGE: the diff carries each pre/post-image's stable `_row_id`
@@ -2066,10 +2004,11 @@ final class SnapshotCatalog(
     * row appended then deleted inside the range appears in
     * BOTH sets (exact per-commit semantics, not a net diff) — consumers
     * folding `+ins −del` cancel it, matching `Q(old) + Q(ins) − Q(del)`. */
-  private[graft] def changeSetsAcrossRange(db: String, table: String,
+  private[graft] def changeSetsAcrossRange(st: TableState,
       fromId: Long, toId: Long): Option[(DataFrame, DataFrame)] = {
-    val fromE = entryAt(db, table, fromId)
-    val steps = commitRange(db, table, fromE, toId)
+    val (db, table) = (st.db, st.table)
+    val fromE = st.entryAt(fromId)
+    val steps = commitRange(st, fromE, toId)
     if (steps.exists(st => st.kind.isInstanceOf[CommitKind.NotEnumerable] ||
         st.entry.schemaDdl != st.parent.schemaDdl)) return None // changelog aligns
     val changes = steps.filter(_.kind == CommitKind.Additive)
@@ -2095,7 +2034,7 @@ final class SnapshotCatalog(
     val allPos = changes.flatMap(_.newDeletes.filter(_.isPositional))
     val posDels =
       if (allPos.isEmpty) None
-      else Some(readMerged(db, table, materialize(db, table, fromE),
+      else Some(readMerged(db, table, materialize(st, fromE),
         allPos.flatMap(_.covers.keys).distinct.sorted, Nil, Some(allPos)))
     val dels = posDels.toSeq ++ eqDels
     Some((readFiles(db, table, schema, changes.flatMap(_.added)),
@@ -2105,19 +2044,19 @@ final class SnapshotCatalog(
   /** Latest snapshot with committed_at <= ts, i.e. the reference's stage-2
     * as-of resolution (`2_collect_database_schema_info.py:43-53`). */
   def readAsOfTimestamp(db: String, table: String, ts: Instant): DataFrame = {
-    val snap = entryMeta(db, table) // as-of resolution never opens a manifest
+    val st = loadTable(db, table)
+    val e = st.entries // as-of resolution never opens a manifest
       .filter(s => !Instant.parse(s.committedAt).isAfter(ts))
       .maxByOption(_.snapshotId)
       .getOrElse(throw new NoSuchElementException(
         s"no snapshot of $db.$table at or before $ts"))
-    readAsOf(db, table, snap.snapshotId)
+    readAt(st, e)
   }
 
   /** O(1) metadata-served row count (Iceberg-manifest style; cf. summary
     * population at `1_collect_src_snapshots.py:69`). */
   def recordCount(db: String, table: String, snapshotId: Long): Long =
-    entryMeta(db, table).find(_.snapshotId == snapshotId).getOrElse(
-      throw new NoSuchElementException(s"snapshot $snapshotId not found for $db.$table"))
+    loadTable(db, table).entryAt(snapshotId)
       .summary.get("record_count").map(_.toLong).getOrElse(-1L)
 
   /** Fold per-file BLOOM sidecar pointers into freshly harvested file
@@ -2151,7 +2090,7 @@ final class SnapshotCatalog(
     * streaming sink's epoch tag for exactly-once replay detection). */
   def append(db: String, table: String, df: DataFrame,
       extraSummary: Map[String, String] = Map.empty): Snapshot =
-    commit(db, table, df, "append", extraSummary = extraSummary)
+    withTableLock(db, table)(commit(_, df, "append", extraSummary = extraSummary).snap)
 
   /** Overwrite commit: new snapshot = newly written files only — the write
     * mode of the migration data plane (`5_migrate_tables_data.py:80-83`).
@@ -2159,7 +2098,7 @@ final class SnapshotCatalog(
     * exactly what keeps time travel valid. */
   def overwrite(db: String, table: String, df: DataFrame,
       extraSummary: Map[String, String] = Map.empty): Snapshot =
-    commit(db, table, df, "overwrite", extraSummary = extraSummary)
+    withTableLock(db, table)(commit(_, df, "overwrite", extraSummary = extraSummary).snap)
 
   /** FILTER-SCOPED OVERWRITE (Spark's OverwriteByExpression — the plan
     * behind `INSERT OVERWRITE t PARTITION (p = 'x')` in static mode and
@@ -2175,10 +2114,10 @@ final class SnapshotCatalog(
     * keep survivors' ids and mint fresh ones for the insert (the CoW-merge
     * mixed-commit discipline). */
   def overwriteWhere(db: String, table: String, cond: Column,
-      df: DataFrame): Snapshot = withTableLock(db, table) {
+      df: DataFrame): Snapshot = withTableLock(db, table) { st =>
     val lineage = rowLineageEnabled(db, table)
     // TWO-LEVEL like [[delete]]: excluded shards carry by name unparsed
-    val e = currentEntry(db, table)
+    val e = st.published
     val frame = deriveLayout(db, table, df)
     val cols = e.schema.fieldNames.toSeq
     val missing = cols.filterNot(frame.schema.fieldNames.contains)
@@ -2192,7 +2131,7 @@ final class SnapshotCatalog(
       s"overwriteWhere type mismatch for $db.$table: " + retyped.map(f =>
         s"${f.name}: table=${f.dataType.sql} frame=${frame.schema(f.name).dataType.sql}")
         .mkString(", "))
-    val res = resolveWhere(db, table, e.snapshotId, cond)
+    val res = resolveWhere(st, e.snapshotId, cond)
     val cands = res.kept
     val untouched = res.snap.files.filterNot(cands.toSet)
     val skipped = e.manifests.filterNot(res.openedNames.toSet)
@@ -2206,9 +2145,9 @@ final class SnapshotCatalog(
       if (!lineage) aligned
       else aligned.withColumn("__rid", lit(null).cast("long"))
         .withColumn("__rseq", lit(null).cast("long"))
-    commit(db, table, survivors.unionByName(incoming), "overwrite-where",
+    commit(st, survivors.unionByName(incoming), "overwrite-where",
       carryFiles = untouched, carryStats = snap.fileStats,
-      carryShards = skipped, ridMixed = lineage)
+      carryShards = skipped, ridMixed = lineage).snap
   }
 
   /** ZERO-COPY TABLE CLONE (Iceberg's `snapshot` procedure / Delta's
@@ -2238,28 +2177,25 @@ final class SnapshotCatalog(
     * collide. */
   def cloneTable(srcDb: String, srcTable: String,
       dstDb: String, dstTable: String,
-      asOfSnapshotId: Option[Long] = None): Snapshot = withTableLock(srcDb, srcTable) {
+      asOfSnapshotId: Option[Long] = None): Snapshot = withTableLock(srcDb, srcTable) { src =>
     require(tableExists(srcDb, srcTable), s"no such table: $srcDb.$srcTable")
     require(!tableExists(dstDb, dstTable),
       s"clone target $dstDb.$dstTable already exists")
     require(!viewExists(dstDb, dstTable),
       s"clone target $dstDb.$dstTable collides with a view")
-    val entries = entryMeta(srcDb, srcTable)
     // asOfSnapshotId clones a HISTORICAL state ("reproduce yesterday's
     // training set as a live table") — any retained main-lineage snapshot,
     // staged/branch entries excluded like every published read
     val prevEntry = asOfSnapshotId match {
-      case None => publishedEntry(entries)
+      case None => src.published
       case Some(id) =>
-        val e = entries.find(_.snapshotId == id).getOrElse(
-          throw new NoSuchElementException(
-            s"snapshot $id not found for $srcDb.$srcTable"))
+        val e = src.entryAt(id)
         require(!isBranchEntry(e) && !isStagedEntry(e),
           s"snapshot $id of $srcDb.$srcTable is a branch/staged commit - " +
             "clone a published state (fastForward/publish first)")
         e
     }
-    val prev = materialize(srcDb, srcTable, prevEntry)
+    val prev = materialize(src, prevEntry)
     val tm = meta(srcDb, srcTable)
     val srcRoot = tablePath(srcDb, srcTable)
     val dstRoot = tablePath(dstDb, dstTable)
@@ -2325,11 +2261,11 @@ final class SnapshotCatalog(
       writeDeleteShard(dstDb, dstTable, dn, loadDeleteShard(srcDb, srcTable, name))
       dn
     }
-    writeEntries(dstDb, dstTable, Seq(SnapshotEntry(prev.snapshotId,
-      clock().toString, "clone",
+    val dst = writeEntries(TableState.absent(dstDb, dstTable), Seq(SnapshotEntry(
+      prev.snapshotId, clock().toString, "clone",
       prev.summary + ("clone.source" -> s"$srcDb.$srcTable"),
       prevEntry.schemaDdl, Seq(shard), delShards)))
-    currentSnapshot(dstDb, dstTable)
+    materialize(dst, dst.published)
   }
 
   /** DYNAMIC PARTITION OVERWRITE (Iceberg's `replacePartitions` / Spark's
@@ -2368,7 +2304,7 @@ final class SnapshotCatalog(
     // append-style schema gate BEFORE any bytes land (carried files must
     // stay readable under the unchanged table schema) — pointer-level,
     // the entry carries the DDL
-    val curSchema = currentEntry(db, table).schema
+    val curSchema = loadTable(db, table).schema
     val missing = curSchema.fieldNames.filterNot(frame.schema.fieldNames.contains)
     val extra = frame.schema.fieldNames.filterNot(curSchema.fieldNames.contains)
     require(missing.isEmpty && extra.isEmpty,
@@ -2424,17 +2360,15 @@ final class SnapshotCatalog(
     * whole commit; flat files that MAY intersect still refuse via the
     * opened-shard classification. */
   def adoptDynamicOverwrite(db: String, table: String,
-      dataDirName: String): Snapshot = withTableLock(db, table) {
+      dataDirName: String): Snapshot = withTableLock(db, table) { st =>
     val tm = meta(db, table)
     require(tm.bucketSpec.isEmpty,
       s"dynamic overwrite of $db.$table refuses bucketed layouts")
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+    val prevEntry = st.commitBase
     // TWO-LEVEL classification below: shards whose recorded summary proves
     // no file lies in a replaced partition carry BY NAME unparsed; the
     // full inventory materializes only on the degrade lanes
-    lazy val prev = materialize(db, table, prevEntry)
+    lazy val prev = materialize(st, prevEntry)
     val root = tablePath(db, table)
     val snapDir = root.resolve("data").resolve(dataDirName)
     val pk = tm.partitionCols
@@ -2473,8 +2407,8 @@ final class SnapshotCatalog(
     // degenerates to the full overwrite (Iceberg's semantics — the SQL
     // path reaches here whenever the session conf is dynamic)
     if (tm.partitionCols.isEmpty)
-      return adoptDir(db, table, "overwrite", dataDirName, Seq.empty,
-        Map.empty, Map.empty, entries, prevEntry)
+      return adoptDir(st, "overwrite", dataDirName, Seq.empty,
+        Map.empty, Map.empty, prevEntry)
     val touched = newFiles.map(f => partTuple(f, "incoming")).toSet
     // one equality conjunction per replaced tuple; a null-partition tuple
     // (`__HIVE_DEFAULT_PARTITION__`) has no admissible predicate form, so
@@ -2493,23 +2427,23 @@ final class SnapshotCatalog(
     if (touched.isEmpty) {
       // empty incoming frame: nothing replaced — a pure carry-all commit,
       // every prior shard reuses by name
-      adoptDir(db, table, "dynamic-overwrite", dataDirName, Seq.empty,
-        Map.empty, Map.empty, entries, prevEntry, prevEntry.manifests)
+      adoptDir(st, "dynamic-overwrite", dataDirName, Seq.empty,
+        Map.empty, Map.empty, prevEntry, prevEntry.manifests)
     } else if (conds.size != touched.size) {
       // degrade: a replaced null partition — classify every file exactly
       val carries = prev.files.filter(f => !touched.contains(partTuple(f, "existing")))
-      adoptDir(db, table, "dynamic-overwrite", dataDirName, carries,
-        prev.fileStats, Map.empty, entries, prevEntry)
+      adoptDir(st, "dynamic-overwrite", dataDirName, carries,
+        prev.fileStats, Map.empty, prevEntry)
     } else {
       // shards the replaced tuples provably cannot touch are never parsed
       // (summaries fold hive path values as exact bounds); opened shards
       // classify file-by-file exactly as before — restating one day of a
       // 10^6-file table parses that day's shards, not the inventory
-      val res = resolveWhere(db, table, prevEntry.snapshotId, conds.reduce(_ || _))
+      val res = resolveWhere(st, prevEntry.snapshotId, conds.reduce(_ || _))
       val carries = res.snap.files.filter(f => !touched.contains(partTuple(f, "existing")))
       val skipped = prevEntry.manifests.filterNot(res.openedNames.toSet)
-      adoptDir(db, table, "dynamic-overwrite", dataDirName, carries,
-        res.snap.fileStats, Map.empty, entries, prevEntry, skipped)
+      adoptDir(st, "dynamic-overwrite", dataDirName, carries,
+        res.snap.fileStats, Map.empty, prevEntry, skipped)
     }
   }
 
@@ -2531,17 +2465,15 @@ final class SnapshotCatalog(
     * survives only when BOTH sides have one. Declared sort orders do not
     * re-lay adopted files (that is the point); run compact() to re-cluster. */
   def adoptFiles(db: String, table: String, srcDir: Path,
-      operation: String = "append"): Snapshot = withTableLock(db, table) {
+      operation: String = "append"): Snapshot = withTableLock(db, table) { st =>
     require(operation == "append" || operation == "overwrite",
       s"adoptFiles operation must be append|overwrite, got '$operation'")
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+    val prevEntry = st.commitBase
     // pointer-level: the previous inventory resolves lazily (only the
     // returned Snapshot's deferred view walks it); schema/summary
     // arithmetic runs off the log entry
-    lazy val prev = materialize(db, table, prevEntry)
-    val newId = entries.last.snapshotId + 1
+    lazy val prev = materialize(st, prevEntry)
+    val newId = st.nextId
     val src = listParquetFiles(srcDir)
     require(src.nonEmpty, s"no parquet files to adopt under $srcDir")
 
@@ -2646,7 +2578,7 @@ final class SnapshotCatalog(
           new DeferredSeq(() => prev.files ++ newFiles): Seq[String],
           new DeferredMap(() => prev.fileStats ++ newFileStats):
             Map[String, Map[String, String]],
-          entryFileCount(db, table, prevEntry) + newFiles.size)
+          entryFileCount(st, prevEntry) + newFiles.size)
       case _ =>
         (Seq.empty[String], Manifest(newFiles, newFileStats), newFiles: Seq[String],
           newFileStats, newFiles.size.toLong)
@@ -2682,7 +2614,7 @@ final class SnapshotCatalog(
         "adopted" -> "true") ++ stats
         ++ streamEpochTags(prevEntry.summary),
       snapSchema.toDDL, allFiles, allFileStats, carriedDeletes)
-    try commitSnapshot(db, table, entries, snap, reuse, delta, deleteShards)
+    try commitSnapshot(st, snap, reuse, delta, deleteShards).snap
     catch {
       case e: CommitConflictException =>
         // optimistic (CAS) commit lost the race AFTER the renames: move
@@ -2705,32 +2637,32 @@ final class SnapshotCatalog(
     * file, not the lake. Their per-file stats (`carryStats`) ride along;
     * snapshot-level numeric min/max fold carried footer bounds with the
     * rewrite's Observation stats. */
-  private def commit(db: String, table: String, df0: DataFrame, operation: String,
+  private def commit(st: TableState, df0: DataFrame, operation: String,
       carryFiles: Seq[String] = Seq.empty,
       carryStats: Map[String, Map[String, String]] = Map.empty,
       carryShards: Seq[String] = Seq.empty,
       extraSummary: Map[String, String] = Map.empty,
       base: Option[SnapshotEntry] = None,
-      ridMixed: Boolean = false): Snapshot = withTableLock(db, table) {
+      ridMixed: Boolean = false): Committed = {
+    val (db, table) = (st.db, st.table)
     val tm = meta(db, table)
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
+    st.requireNoPendingStage()
     // `base` re-bases the commit on a BRANCH HEAD instead of the published
     // head (appendBranch); the log TAIL may be a branch commit, which must
     // never become a main commit's parent. Ids stay globally monotone.
-    val prevEntry = base.getOrElse(publishedEntry(entries))
+    val prevEntry = base.getOrElse(st.published)
     // POINTER-LEVEL previous state: schema / summary / record count live on
     // the log entry itself. The full inventory (`prev.files`) resolves
     // LAZILY — an append never parses a manifest shard at commit time (its
     // entry is prev shards + the delta BY NAME), so the streaming-ingest
     // hot path stays O(delta) even at the 10^6-file regime. Forcing `prev`
     // off the lock is sound: the entry's shards are write-once.
-    lazy val prev = materialize(db, table, prevEntry)
+    lazy val prev = materialize(st, prevEntry)
     val prevSummary = prevEntry.summary
     val prevRecordCount = prevSummary.get("record_count").map(_.toLong).getOrElse(-1L)
     val (cf, cs, cshards, cshardSums) =
-      admitCarryShards(db, table, prevEntry, carryFiles, carryStats, carryShards)
-    val newId = entries.last.snapshotId + 1
+      admitCarryShards(st, prevEntry, carryFiles, carryStats, carryShards)
+    val newId = st.nextId
     val tag = attemptTag()
     val snapDirRel = s"data/s$newId$tag"
     val snapDir = tablePath(db, table).resolve(s"data").resolve(s"s$newId$tag")
@@ -2993,7 +2925,7 @@ final class SnapshotCatalog(
           new DeferredSeq(() => prev.files ++ newFiles): Seq[String],
           new DeferredMap(() => prev.fileStats ++ newFileStats):
             Map[String, Map[String, String]],
-          entryFileCount(db, table, prevEntry) + newFiles.size)
+          entryFileCount(st, prevEntry) + newFiles.size)
       case _ if cf.isEmpty && cshards.isEmpty =>
         // full rewrite (overwrite/compact): the new files ARE the state —
         // nothing carries, so the previous inventory is never consulted
@@ -3096,7 +3028,7 @@ final class SnapshotCatalog(
         ++ extraSummary,
       snapSchema.toDDL, allFiles, allFileStats, carriedDeletes)
     SnapshotCatalog.timed(s"commit.log $db.$table#$newId") {
-      commitSnapshot(db, table, entries, snap, reuse, delta, deleteShards)
+      commitSnapshot(st, snap, reuse, delta, deleteShards)
     }
   }
 
@@ -3112,13 +3044,13 @@ final class SnapshotCatalog(
     * candidate files are rewritten. A selective delete on a 100-TB table
     * costs the candidate files, not the lake. Prior snapshots stay
     * time-travelable. */
-  def delete(db: String, table: String, cond: Column): Snapshot = withTableLock(db, table) {
+  def delete(db: String, table: String, cond: Column): Snapshot = withTableLock(db, table) { st =>
     // TWO-LEVEL: shards the predicate provably excludes are never parsed —
     // they carry BY NAME through the commit (carryShards); only opened
     // shards take the file-granular carry split. A pinned-partition delete
     // on a 10^6-file table parses the matching shards, not the inventory.
-    val e = currentEntry(db, table)
-    val res = resolveWhere(db, table, e.snapshotId, cond)
+    val e = st.published
+    val res = resolveWhere(st, e.snapshotId, cond)
     val candSet = res.kept.toSet
     val untouched = res.snap.files.filterNot(candSet)
     val skipped = e.manifests.filterNot(res.openedNames.toSet)
@@ -3131,9 +3063,9 @@ final class SnapshotCatalog(
       (if (rowLineageEnabled(db, table)) readVisibleWithRidSeq(db, table, res.snap, res.kept)
        else readVisible(db, table, res.snap, res.kept))
         .where(!coalesce(cond, lit(false)))
-    commit(db, table, rewrite, "delete",
+    commit(st, rewrite, "delete",
       carryFiles = untouched, carryStats = res.snap.fileStats,
-      carryShards = skipped)
+      carryShards = skipped).snap
   }
 
   /** MERGE-ON-READ DELETE (Iceberg v2 position-delete semantics): commit
@@ -3160,10 +3092,9 @@ final class SnapshotCatalog(
     * reference's only write is a full overwrite
     * (`/root/reference/5_migrate_tables_data.py:80-83`); semantics follow
     * Iceberg v2 merge-on-read. */
-  def deleteMoR(db: String, table: String, cond: Column): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    deleteMoRFrom(db, table, entries, publishedEntry(entries), cond, Map.empty)
+  def deleteMoR(db: String, table: String, cond: Column): Snapshot = withTableLock(db, table) { st =>
+    st.requireNoPendingStage()
+    deleteMoRFrom(st, st.published, cond, Map.empty).snap
   }
 
   /** MoR delete ON A BRANCH (the audit-lineage DML): position deletes
@@ -3173,25 +3104,14 @@ final class SnapshotCatalog(
     * `snapcat.db.t.branch_<name>` write identifier (Iceberg's branch-write
     * convention). */
   def deleteMoRBranch(db: String, table: String, name: String,
-      cond: Column): Snapshot = withTableLock(db, table) {
-    val headId = resolveBranch(db, table, name).getOrElse(
-      throw new NoSuchElementException(s"no such branch '$name' on $db.$table"))
-    val entries = entryMeta(db, table)
-    val baseEntry = entries.find(_.snapshotId == headId).getOrElse(
-      throw new IllegalStateException(
-        s"branch '$name' points at expired snapshot $headId of $db.$table"))
-    val snap = deleteMoRFrom(db, table, entries, baseEntry, cond,
-      Map("branch.ref" -> name, "branch.parent" -> headId.toString))
-    val tm = meta(db, table)
-    AtomicFile.write(metaPath(db, table),
-      Json.writePretty(tm.copy(branches = tm.branches + (name -> snap.snapshotId)).toJson))
-    snap
+      cond: Column): Snapshot = withTableLock(db, table) { st =>
+    onBranch(st, name)((head, marks) => deleteMoRFrom(st, head, cond, marks).snap)
   }
 
-  private def deleteMoRFrom(db: String, table: String, entries: Seq[SnapshotEntry],
-      prevEntry: SnapshotEntry, cond: Column,
-      extraSummary: Map[String, String]): Snapshot = {
-    val newId = entries.last.snapshotId + 1
+  private def deleteMoRFrom(st: TableState, prevEntry: SnapshotEntry, cond: Column,
+      extraSummary: Map[String, String]): Committed = {
+    val (db, table) = (st.db, st.table)
+    val newId = st.nextId
     val tag = attemptTag()
     // TWO-LEVEL candidate resolution, like the read path: shards whose
     // recorded summary provably excludes `cond` are never parsed, then
@@ -3200,7 +3120,7 @@ final class SnapshotCatalog(
     // metadata and scans the candidate files, never the lake. The commit
     // itself is pointer-level: every manifest shard reuses by name and the
     // returned Snapshot's inventory defers until actually walked.
-    val res = resolveWhere(db, table, prevEntry.snapshotId, cond)
+    val res = resolveWhere(st, prevEntry.snapshotId, cond)
     val cands = res.kept
     val fileEntries = writePositionDeletes(db, table, newId,
       readVisibleWithPos(db, table, res.snap, cands)
@@ -3221,15 +3141,15 @@ final class SnapshotCatalog(
         "added_records" -> "0",
         "added_files" -> "0",
         "deleted_records" -> deleted.toString,
-        "total_files" -> entryFileCount(db, table, prevEntry).toString,
+        "total_files" -> entryFileCount(st, prevEntry).toString,
         "delete_files" -> (prevDeletes.size + fileEntries.size).toString) ++
         extraSummary,
       prevEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, prevEntry).files),
-      new DeferredMap(() => materialize(db, table, prevEntry).fileStats),
+      new DeferredSeq(() => materialize(st, prevEntry).files),
+      new DeferredMap(() => materialize(st, prevEntry).fileStats),
       prevDeletes ++ fileEntries)
     // pure pointer commit on the data side: every manifest shard reuses
-    commitSnapshot(db, table, entries, snap, prevEntry.manifests, Manifest.empty, shards)
+    commitSnapshot(st, snap, prevEntry.manifests, Manifest.empty, shards)
   }
 
   /** EQUALITY DELETE (Iceberg v2): commit `keys` — a frame of key tuples
@@ -3248,20 +3168,18 @@ final class SnapshotCatalog(
     * and recomputes both. Prefer [[deleteMoR]] when the candidate scan is
     * affordable — it keeps every metadata answer exact. */
   def deleteMoREq(db: String, table: String, keys: DataFrame,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+      extraSummary: Map[String, String] = Map.empty): Snapshot = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     // pointer-level like every MoR commit: the inventory materializes only
     // when coverage genuinely spans every file (multi-column or null keys —
     // the covers map then lists the corpus by design); the ranged
     // single-key case resolves TWO-LEVEL and the returned Snapshot's file
     // view defers
-    lazy val prev = materialize(db, table, prevEntry)
+    lazy val prev = materialize(st, prevEntry)
     val prevSummary = prevEntry.summary
     val prevRecordCount = prevSummary.get("record_count").map(_.toLong).getOrElse(-1L)
     val prevDeletes = entryDeleteFiles(db, table, prevEntry)
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     val tag = attemptTag()
     val schema = prevEntry.schema
     val eqCols = keys.schema.fieldNames.toSeq
@@ -3276,7 +3194,7 @@ final class SnapshotCatalog(
         .mkString(", "))
     // a small LOCAL key frame (a LocalRelation, e.g. an index refresh's
     // touched ids) dedupes and scopes in this JVM: its only job is the write
-    val local = SnapshotCatalog.smallKeySet(Seq(keys), localOnly = true)
+    val local = SnapshotCatalog.smallKeySet(keys)
     // candidate coverage: footer-stat range scoping over the KEY frame
     // only (one observed pass, one job — the corpus stays untouched);
     // multi-column keys cover every current file
@@ -3301,27 +3219,21 @@ final class SnapshotCatalog(
           // two-level: shards the key range provably excludes never parse
           // (the file-tier keep set is identical — a skipped shard's fold
           // excludes each of its files for the same range predicate)
-          val ranged = resolveWhere(db, table, prevEntry.snapshotId,
+          val ranged = resolveWhere(st, prevEntry.snapshotId,
             col(s"`$k`") >= lit(mn) && col(s"`$k`") <= lit(mx)).kept
           // null keys match null-keyed rows anywhere — widen to all files
           if (nk < n) prev.files else ranged
         }
       case _ => prev.files
     }
-    def pointerNoOp(): Snapshot = {
-      val snap = Snapshot(newId, clock().toString, "delete",
+    def pointerNoOp(): Snapshot =
+      repoint(st, prevEntry, "delete",
         prevSummary ++ Map(
           "record_count" -> prevRecordCount.toString,
           "added_records" -> "0", "added_files" -> "0",
           "deleted_records" -> "0",
-          "total_files" -> entryFileCount(db, table, prevEntry).toString) ++ extraSummary,
-        prevEntry.schemaDdl,
-        new DeferredSeq(() => materialize(db, table, prevEntry).files),
-        new DeferredMap(() => materialize(db, table, prevEntry).fileStats),
-        prevDeletes)
-      commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-        Manifest.empty, prevEntry.deletes)
-    }
+          "total_files" -> entryFileCount(st, prevEntry).toString) ++ extraSummary,
+        prevEntry.schemaDdl).snap
     if (covers.isEmpty) return pointerNoOp()
     val delDirRel = s"deletes/s$newId$tag"
     val delDir = tablePath(db, table).resolve("deletes").resolve(s"s$newId$tag")
@@ -3346,15 +3258,15 @@ final class SnapshotCatalog(
         "record_count" -> "-1", // unknowable without a scan — never guessed
         "added_records" -> "0", "added_files" -> "0",
         "deleted_records" -> "-1",
-        "total_files" -> entryFileCount(db, table, prevEntry).toString,
+        "total_files" -> entryFileCount(st, prevEntry).toString,
         "delete_files" -> (prevDeletes.size + fileEntries.size).toString) ++
         extraSummary,
       prevEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, prevEntry).files),
-      new DeferredMap(() => materialize(db, table, prevEntry).fileStats),
+      new DeferredSeq(() => materialize(st, prevEntry).files),
+      new DeferredMap(() => materialize(st, prevEntry).fileStats),
       prevDeletes ++ fileEntries)
-    commitSnapshot(db, table, entries, snap, prevEntry.manifests, Manifest.empty,
-      prevEntry.deletes :+ deleteShardName(newId, tag))
+    commitSnapshot(st, snap, prevEntry.manifests, Manifest.empty,
+      prevEntry.deletes :+ deleteShardName(newId, tag)).snap
   }
 
   /** Lazy EXACT-COUNT backfill for an equality-delete history.
@@ -3402,8 +3314,8 @@ final class SnapshotCatalog(
       else OnePass.aggregate(readVisibleRaw(db, table, snap, scanFiles0),
         Seq(count(lit(1)))).getLong(0)
     val exact = metaCount + scanned
-    withTableLock(db, table) {
-      val entries = entryMeta(db, table)
+    withTableLock(db, table) { st =>
+      val entries = st.entries
       val idx = entries.indexWhere(_.snapshotId == snapshotId)
       if (idx >= 0 && entries(idx).summary.get("record_count").contains("-1")) {
         val prevCount = (if (idx > 0) entries(idx - 1).summary.get("record_count")
@@ -3433,7 +3345,7 @@ final class SnapshotCatalog(
           }
           i += 1
         }
-        writeEntries(db, table, amended)
+        writeEntries(st, amended)
       }
     }
     exact
@@ -3549,13 +3461,11 @@ final class SnapshotCatalog(
     * routes through the delta writer ([[graft.catalog.spark.SnapDeltaOperation]])
     * and commits the same position-delta shape. */
   def updateMoR(db: String, table: String, cond: Column,
-      set: Map[String, Column]): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+      set: Map[String, Column]): Snapshot = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     val prevSummary = prevEntry.summary
     val prevRecordCount = prevSummary.get("record_count").map(_.toLong).getOrElse(-1L)
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     val tag = attemptTag()
     val tm = meta(db, table)
     val schema = prevEntry.schema
@@ -3567,7 +3477,7 @@ final class SnapshotCatalog(
     // excludes are never parsed) + pointer-level commit, like
     // [[deleteMoRFrom]]: a selective MoR update touches the matching
     // shards' metadata, never the inventory
-    val res = resolveWhere(db, table, prevEntry.snapshotId, cond)
+    val res = resolveWhere(st, prevEntry.snapshotId, cond)
     val cands = res.kept
     val prevDeletes = res.snap.deleteFiles
     // ROW LINEAGE: scan WITH each matched row's stable id so the updated
@@ -3583,18 +3493,13 @@ final class SnapshotCatalog(
     val deleted = fileEntries.map(_.rows).sum
     if (fileEntries.isEmpty) {
       // nothing matched: pointer-only commit, mirror of a no-match delete
-      val snap = Snapshot(newId, clock().toString, "update",
+      return repoint(st, prevEntry, "update",
         prevSummary ++ Map(
           "record_count" -> prevRecordCount.toString,
           "added_records" -> "0", "added_files" -> "0",
           "deleted_records" -> "0",
-          "total_files" -> entryFileCount(db, table, prevEntry).toString),
-        prevEntry.schemaDdl,
-        new DeferredSeq(() => materialize(db, table, prevEntry).files),
-        new DeferredMap(() => materialize(db, table, prevEntry).fileStats),
-        prevDeletes)
-      return commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-        Manifest.empty, prevEntry.deletes)
+          "total_files" -> entryFileCount(st, prevEntry).toString),
+        prevEntry.schemaDdl).snap
     }
     // pass 2: the updated copies append as new data files (partition
     // layout honored; declared sort order intentionally skipped — like the
@@ -3640,14 +3545,14 @@ final class SnapshotCatalog(
         "added_records" -> deleted.toString,
         "added_files" -> newFiles.size.toString,
         "deleted_records" -> deleted.toString,
-        "total_files" -> (entryFileCount(db, table, prevEntry) + newFiles.size).toString,
+        "total_files" -> (entryFileCount(st, prevEntry) + newFiles.size).toString,
         "delete_files" -> (prevDeletes.size + fileEntries.size).toString),
       prevEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, prevEntry).files ++ newFiles),
-      new DeferredMap(() => materialize(db, table, prevEntry).fileStats ++ newFileStats),
+      new DeferredSeq(() => materialize(st, prevEntry).files ++ newFiles),
+      new DeferredMap(() => materialize(st, prevEntry).fileStats ++ newFileStats),
       prevDeletes ++ fileEntries)
-    commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-      Manifest(newFiles, newFileStats), prevEntry.deletes :+ deleteShardName(newId, tag))
+    commitSnapshot(st, snap, prevEntry.manifests,
+      Manifest(newFiles, newFileStats), prevEntry.deletes :+ deleteShardName(newId, tag)).snap
   }
 
   /** Copy-on-write UPDATE: `SET col = expr` for rows matching `cond`,
@@ -3656,13 +3561,13 @@ final class SnapshotCatalog(
     * moves. Prune-aware like [[delete]]: files that provably contain no
     * matching row carry over without a rewrite. */
   def update(db: String, table: String, cond: Column,
-      set: Map[String, Column]): Snapshot = withTableLock(db, table) {
+      set: Map[String, Column]): Snapshot = withTableLock(db, table) { st =>
     // TWO-LEVEL like [[delete]]: excluded shards carry by name unparsed
-    val e = currentEntry(db, table)
+    val e = st.published
     val schema = e.schema
     val unknown = set.keys.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty, s"UPDATE of unknown columns: ${unknown.mkString(",")}")
-    val res = resolveWhere(db, table, e.snapshotId, cond)
+    val res = resolveWhere(st, e.snapshotId, cond)
     val cands = res.kept
     val untouched = res.snap.files.filterNot(cands.toSet)
     val skipped = e.manifests.filterNot(res.openedNames.toSet)
@@ -3684,9 +3589,9 @@ final class SnapshotCatalog(
     } ++ (if (lineage) Seq(col("`__rid`"),
       when(c, lit(null).cast("long")).otherwise(col("`__rseq`")).as("__rseq"))
     else Nil)).toIndexedSeq: _*)
-    commit(db, table, updated, "update",
+    commit(st, updated, "update",
       carryFiles = untouched, carryStats = snap.fileStats,
-      carryShards = skipped)
+      carryShards = skipped).snap
   }
 
   /** MERGE-ON-READ MERGE/upsert: source rows REPLACE target rows sharing
@@ -3703,10 +3608,10 @@ final class SnapshotCatalog(
     * cannot contain any key are never read), then the key match. While
     * the distinct keys number at most [[SnapshotCatalog.InlineKeyBound]]
     * they are learned on the driver (no job for a local source, one
-    * otherwise), give the range there, and match as an inline `IN` on
-    * the scan: the position-delete write is then one job with no
-    * `Exchange`. Larger key sets take the range from one observed pass
-    * and semi-join the distinct keys; multi-column keys semi-join every
+    * otherwise) and match as an inline `IN` on the scan: the
+    * position-delete write is then one job with no `Exchange`. The same
+    * pass gives the range; larger key sets take it from there and
+    * semi-join the distinct keys; multi-column keys semi-join every
     * file. Existing deletes apply first, so chained
     * MoR operations never double-kill. Source must carry exactly the
     * table's columns (same gate as [[upsert]]); bucketed tables derive
@@ -3716,12 +3621,10 @@ final class SnapshotCatalog(
       extraSummary: Map[String, String] = Map.empty,
       explicitRids: Boolean = false,
       nullSafeKeys: Boolean = false,
-      alsoDeleteKeys: Option[DataFrame] = None): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+      alsoDeleteKeys: Option[DataFrame] = None): Snapshot = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     val prevSummary = prevEntry.summary
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     val tag = attemptTag()
     val tm = meta(db, table)
     val schema = prevEntry.schema
@@ -3781,14 +3684,15 @@ final class SnapshotCatalog(
     // in the same shard, so the scoping below must cover both ranges
     val keyFrames = (srcVisible +: alsoDeleteKeys.toSeq).map(_.select(keys.map(k => col(s"`$k`")): _*))
     val allKeys = keyFrames.reduce(_.unionByName(_))
-    // a single-column key set of at most InlineKeyBound values is learned
-    // on the driver (no job for a local source, else one) and matched as
-    // an inline IN; larger sets and multi-column keys semi-join
-    val small = keys match {
+    // one pass over a single-column key set (no job for a local source,
+    // else one) learns its range and null flag, and its distinct values
+    // while they number at most InlineKeyBound: those match as an inline
+    // IN, larger sets and multi-column keys semi-join
+    val probe = keys match {
       case Seq(k) if SnapshotCatalog.inlineMatchable(schema(k).dataType) =>
-        SnapshotCatalog.timed(s"upsert.keys $db.$table") {
-          SnapshotCatalog.smallKeySet(keyFrames, localOnly = false)
-        }.map(_.map(_.get(0)))
+        Some(SnapshotCatalog.timed(s"upsert.keys $db.$table") {
+          SnapshotCatalog.probeKeys(keyFrames, schema(k).dataType)
+        })
       case _ => None
     }
     // candidate scope: for a single key, the key set's [min,max] bounds
@@ -3797,32 +3701,20 @@ final class SnapshotCatalog(
     // Multi-column keys (and null-safe key sets carrying a null) must
     // match every file anyway, so the full materialization is
     // proportionate to the scan they already pay.
-    val (scanSnap, cands) = keys match {
-      case Seq(k) if small.isDefined || ColumnStats.statable(schema(k).dataType) =>
-        // (least, greatest) non-null key, and whether a null key is present
-        val (range, hasNull) = small match {
-          case Some(vs) => (SnapshotCatalog.keyRange(schema(k).dataType, vs), vs.contains(null))
-          case None =>
-            val mm = SnapshotCatalog.timed(s"upsert.scope $db.$table") {
-              OnePass.aggregate(allKeys, Seq(min(col(s"`$k`")).as("mn"), max(col(s"`$k`")).as("mx"),
-                max(col(s"`$k`").isNull.cast("int")).as("hasNull")))
-            }
-            (Option.when(!mm.isNullAt(0))((mm.get(0), mm.get(1))),
-              !mm.isNullAt(2) && mm.getInt(2) == 1)
-        }
-        // footer [min,max] ranges say nothing about null-keyed rows: a
-        // null-safe source carrying null keys scans every file (the rare
-        // null-group-churn refresh; range pruning resumes when it's absent)
-        if (nullSafeKeys && hasNull) { val p = materialize(db, table, prevEntry); (p, p.files) }
-        else range match {
-          case None => // empty/all-null source matches nothing
-            (materializePartial(db, table, prevEntry, Seq.empty), Seq.empty[String])
-          case Some((mn, mx)) =>
-            val res = resolveWhere(db, table, prevEntry.snapshotId,
-              col(s"`$k`") >= lit(mn) && col(s"`$k`") <= lit(mx))
-            (res.snap, res.kept)
-        }
-      case _ => val p = materialize(db, table, prevEntry); (p, p.files)
+    val (scanSnap, cands) = probe match {
+      // footer [min,max] ranges say nothing about null-keyed rows: a
+      // null-safe source carrying null keys scans every file (the rare
+      // null-group-churn refresh; range pruning resumes when it's absent)
+      case Some(p) if !(nullSafeKeys && p.hasNull) => p.range match {
+        case None => // empty/all-null source matches nothing
+          (materializePartial(st, prevEntry, Seq.empty), Seq.empty[String])
+        case Some((mn, mx)) =>
+          val k = keys.head
+          val res = resolveWhere(st, prevEntry.snapshotId,
+            col(s"`$k`") >= lit(mn) && col(s"`$k`") <= lit(mx))
+          (res.snap, res.kept)
+      }
+      case _ => val p = materialize(st, prevEntry); (p, p.files)
     }
     val prevDeletes = scanSnap.deleteFiles // delete shards always load in full
     // pass 1: positions of target rows whose key appears in the source
@@ -3830,7 +3722,7 @@ final class SnapshotCatalog(
     val scanned =
       if (lineage) readVisibleWithPosAndRid(db, table, scanSnap, cands)
       else readVisibleWithPos(db, table, scanSnap, cands)
-    val matched = small match {
+    val matched = probe.flatMap(_.values) match {
       case Some(vs) =>
         // a filter on the scan: the position-delete write has no Exchange
         val k = keys.head
@@ -3919,16 +3811,16 @@ final class SnapshotCatalog(
         "added_records" -> added.toString,
         "added_files" -> newFiles.size.toString,
         "deleted_records" -> deleted.toString,
-        "total_files" -> (entryFileCount(db, table, prevEntry) + newFiles.size).toString,
+        "total_files" -> (entryFileCount(st, prevEntry) + newFiles.size).toString,
         "delete_files" -> (prevDeletes.size + fileEntries.size).toString) ++
         floorSummary ++ extraSummary,
       prevEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, prevEntry).files ++ newFiles),
-      new DeferredMap(() => materialize(db, table, prevEntry).fileStats ++ newFileStats),
+      new DeferredSeq(() => materialize(st, prevEntry).files ++ newFiles),
+      new DeferredMap(() => materialize(st, prevEntry).fileStats ++ newFileStats),
       prevDeletes ++ fileEntries)
     SnapshotCatalog.timed(s"upsert.log $db.$table#$newId") {
-      commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-        Manifest(newFiles, newFileStats), shards)
+      commitSnapshot(st, snap, prevEntry.manifests,
+        Manifest(newFiles, newFileStats), shards).snap
     }
   }
 
@@ -3987,16 +3879,14 @@ final class SnapshotCatalog(
   def adoptDelta(db: String, table: String, operation: String,
       dataDirName: String, dataFiles: Seq[String],
       deleteDirName: String, deleteFiles: Seq[String],
-      expectSnapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+      expectSnapshotId: Long): Snapshot = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     val prevSummary = prevEntry.summary
     require(prevEntry.snapshotId == expectSnapshotId,
       s"concurrent commit on $db.$table: the delta rewrite read snapshot " +
         s"$expectSnapshotId but the table is now at ${prevEntry.snapshotId}; " +
         "retry the statement")
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     val tag = attemptTag()
     val root = tablePath(db, table)
     val schema = prevEntry.schema
@@ -4045,7 +3935,7 @@ final class SnapshotCatalog(
     // anything else means the rewrite scan and this commit disagree. The
     // membership probe is TWO-LEVEL: only shards whose recorded dir set
     // intersects the covered files' snapshot dirs are parsed
-    val foreign = unknownFiles(db, table, prevEntry,
+    val foreign = unknownFiles(st, prevEntry,
       fileEntries.flatMap(_.covers.keys).distinct)
     require(foreign.isEmpty,
       s"delta commit on $db.$table records deletes against unknown files: " +
@@ -4055,18 +3945,13 @@ final class SnapshotCatalog(
     if (newFiles.isEmpty && fileEntries.isEmpty) {
       // nothing matched and nothing inserted: pointer-only commit
       deleteRecursively(dataDir)
-      val snap = Snapshot(newId, clock().toString, operation,
+      return repoint(st, prevEntry, operation,
         prevSummary ++ Map(
           "record_count" -> prevSummary.getOrElse("record_count", "-1"),
           "added_records" -> "0", "added_files" -> "0",
           "deleted_records" -> "0",
-          "total_files" -> entryFileCount(db, table, prevEntry).toString),
-        prevEntry.schemaDdl,
-        new DeferredSeq(() => materialize(db, table, prevEntry).files),
-        new DeferredMap(() => materialize(db, table, prevEntry).fileStats),
-        prevDeletes)
-      return commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-        Manifest.empty, prevEntry.deletes)
+          "total_files" -> entryFileCount(st, prevEntry).toString),
+        prevEntry.schemaDdl).snap
     }
     val prevRows = prevSummary.get("record_count").map(_.toLong).getOrElse(-1L)
     val total = if (prevRows >= 0 && added >= 0) prevRows - deleted + added else -1L
@@ -4080,14 +3965,14 @@ final class SnapshotCatalog(
         "added_records" -> added.toString,
         "added_files" -> newFiles.size.toString,
         "deleted_records" -> deleted.toString,
-        "total_files" -> (entryFileCount(db, table, prevEntry) + newFiles.size).toString,
+        "total_files" -> (entryFileCount(st, prevEntry) + newFiles.size).toString,
         "delete_files" -> (prevDeletes.size + fileEntries.size).toString),
       prevEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, prevEntry).files ++ newFiles),
-      new DeferredMap(() => materialize(db, table, prevEntry).fileStats ++ newFileStats),
+      new DeferredSeq(() => materialize(st, prevEntry).files ++ newFiles),
+      new DeferredMap(() => materialize(st, prevEntry).fileStats ++ newFileStats),
       prevDeletes ++ fileEntries)
-    commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-      Manifest(newFiles, newFileStats), shards)
+    commitSnapshot(st, snap, prevEntry.manifests,
+      Manifest(newFiles, newFileStats), shards).snap
   }
 
   /** Copy-on-write MERGE (upsert): source rows REPLACE target rows sharing
@@ -4097,12 +3982,12 @@ final class SnapshotCatalog(
     * a union; the join is the irreducible cost of keyed reconciliation at
     * any scale. Source must carry exactly the table's columns. */
   def upsert(db: String, table: String, source: DataFrame,
-      keys: Seq[String]): Snapshot = withTableLock(db, table) {
+      keys: Seq[String]): Snapshot = withTableLock(db, table) { st =>
     val lineage = rowLineageEnabled(db, table)
-    val snap = currentSnapshot(db, table)
+    val snap = materialize(st, st.published)
     val cur =
       if (lineage) readVisibleWithRidSeq(db, table, snap, snap.files)
-      else readLatest(db, table)
+      else readVisible(db, table, snap, snap.files)
     val cols = cur.schema.fieldNames.toSeq.filterNot(Set("__rid", "__rseq"))
     require(source.schema.fieldNames.sorted.sameElements(cols.sorted),
       s"upsert source columns ${source.schema.fieldNames.mkString(",")} " +
@@ -4137,7 +4022,7 @@ final class SnapshotCatalog(
         src0.join(dying.join(uniqueSrcKeys, keys, "left_semi"), keys, "left")
           .withColumn("__rseq", lit(null).cast("long"))
       }
-    commit(db, table, kept.unionByName(incoming), "merge", ridMixed = lineage)
+    commit(st, kept.unionByName(incoming), "merge", ridMixed = lineage).snap
   }
 
   /** Adopt a snapshot directory populated by an EXTERNAL V2 writer (the
@@ -4162,10 +4047,8 @@ final class SnapshotCatalog(
       carryFiles: Seq[String] = Seq.empty,
       carryStats: Map[String, Map[String, String]] = Map.empty,
       expectSnapshotId: Option[Long] = None,
-      carryShards: Seq[String] = Seq.empty): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+      carryShards: Seq[String] = Seq.empty): Snapshot = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     expectSnapshotId.foreach(id => require(prevEntry.snapshotId == id,
       s"concurrent commit on $db.$table: the rewrite read snapshot $id but " +
         s"the table is now at ${prevEntry.snapshotId}; retry the statement"))
@@ -4179,7 +4062,7 @@ final class SnapshotCatalog(
         "would resurrect deleted rows: compact() the table first")
     // two-level membership probe: only shards whose recorded dir set
     // intersects the carried files' snapshot dirs are parsed
-    val missingCarry = unknownFiles(db, table, prevEntry, carryFiles)
+    val missingCarry = unknownFiles(st, prevEntry, carryFiles)
     require(missingCarry.isEmpty,
       s"carry files not in current snapshot of $db.$table: " +
         missingCarry.take(3).mkString(","))
@@ -4190,8 +4073,8 @@ final class SnapshotCatalog(
     require(foreignShards.isEmpty,
       s"carry shards not in current snapshot of $db.$table: " +
         foreignShards.take(3).mkString(","))
-    adoptDir(db, table, operation, dataDirName, carryFiles, carryStats,
-      Map.empty, entries, prevEntry, carryShards)
+    adoptDir(st, operation, dataDirName, carryFiles, carryStats,
+      Map.empty, prevEntry, carryShards)
   }
 
   /** Commit a data directory populated by the NATIVE streaming write
@@ -4205,12 +4088,10 @@ final class SnapshotCatalog(
     * replaces table state each epoch, as streaming aggregations require. */
   def adoptStreaming(db: String, table: String, operation: String,
       dataDirName: String, writeSchema: StructType,
-      sinkId: String, epochId: Long): Option[Snapshot] = withTableLock(db, table) {
+      sinkId: String, epochId: Long): Option[Snapshot] = withTableLock(db, table) { st =>
     require(operation == "append" || operation == "overwrite",
       s"streaming adoption must be append or overwrite, got $operation")
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+    val prevEntry = st.commitBase
     val key = s"stream-epoch.$sinkId"
     if (prevEntry.summary.get(key).exists(epochId <= _.toLong)) {
       // replayed batch (detected from the pointer log alone): drop the
@@ -4229,8 +4110,8 @@ final class SnapshotCatalog(
       // never parsed); complete mode replaces state, nothing carries
       val carryShards =
         if (operation == "append") prevEntry.manifests else Seq.empty[String]
-      Some(adoptDir(db, table, operation, dataDirName, Seq.empty, Map.empty,
-        Map(key -> epochId.toString), entries, prevEntry, carryShards))
+      Some(adoptDir(st, operation, dataDirName, Seq.empty, Map.empty,
+        Map(key -> epochId.toString), prevEntry, carryShards))
     }
   }
 
@@ -4244,17 +4125,17 @@ final class SnapshotCatalog(
     * covers). Otherwise they fold into the file-granular carry: identical
     * semantics, the pre-summary cost. Returns the carried files and
     * stats, the admitted shard names and their summaries. */
-  private def admitCarryShards(db: String, table: String, prevEntry: SnapshotEntry,
+  private def admitCarryShards(st: TableState, prevEntry: SnapshotEntry,
       carryFiles: Seq[String], carryStats: Map[String, Map[String, String]],
       carryShards: Seq[String]): (Seq[String], Map[String, Map[String, String]],
         Seq[String], Map[String, ShardSummary]) = {
-    lazy val sums = loadLog(db, table).summaries
+    val sums = st.summaries
     if (carryShards.isEmpty) (carryFiles, carryStats, Seq.empty, Map.empty)
     else if (prevEntry.deletes.isEmpty &&
         carryShards.forall(n => sums.get(n).exists(_.stats.contains("rows"))))
       (carryFiles, carryStats, carryShards, carryShards.map(n => n -> sums(n)).toMap)
     else {
-      val ms = carryShards.map(n => loadManifest(db, table, n))
+      val ms = carryShards.map(n => loadManifest(st.db, st.table, n))
       (carryFiles ++ ms.flatMap(_.files),
         carryStats ++ ms.iterator.flatMap(_.fileStats).toMap, Seq.empty, Map.empty)
     }
@@ -4268,19 +4149,19 @@ final class SnapshotCatalog(
     * delete shards; otherwise they fold into the file-granular carry. The
     * streaming append epoch rides this with carryShards = ALL prior
     * shards, making every epoch commit O(epoch files). */
-  private def adoptDir(db: String, table: String, operation: String,
+  private def adoptDir(st: TableState, operation: String,
       dataDirName: String, carryFiles: Seq[String],
       carryStats: Map[String, Map[String, String]],
-      extraSummary: Map[String, String],
-      entries: Seq[SnapshotEntry], prevEntry: SnapshotEntry,
+      extraSummary: Map[String, String], prevEntry: SnapshotEntry,
       carryShards: Seq[String] = Seq.empty): Snapshot = {
-    val newId = entries.last.snapshotId + 1
+    val (db, table) = (st.db, st.table)
+    val newId = st.nextId
     val snapDirRel = s"data/$dataDirName"
     val root = tablePath(db, table)
     val snapDir = root.resolve("data").resolve(dataDirName)
     val schema = prevEntry.schema
     val (cf, cs, cshards, cshardSums) =
-      admitCarryShards(db, table, prevEntry, carryFiles, carryStats, carryShards)
+      admitCarryShards(st, prevEntry, carryFiles, carryStats, carryShards)
     val newFiles = listParquetFiles(snapDir).map(relPath(snapDir, snapDirRel, _))
     val conf = spark.sessionState.newHadoopConf()
     val newFileStats = withBloomStats(db, table,
@@ -4330,7 +4211,7 @@ final class SnapshotCatalog(
         ++ streamEpochTags(prevEntry.summary)
         ++ extraSummary,
       schema.toDDL, allFiles, allFileStats, carriedDeletes)
-    commitSnapshot(db, table, entries, snap, reuse, delta, deleteShards)
+    commitSnapshot(st, snap, reuse, delta, deleteShards).snap
   }
 
   /** Roll the table back to an earlier snapshot's state (Iceberg
@@ -4339,36 +4220,28 @@ final class SnapshotCatalog(
     * rolled-back-from state remains time-travelable and a bad rollback is
     * itself rollback-able. Pure metadata; no data moves. */
   def rollback(db: String, table: String,
-      toSnapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val targetEntry = entries.find(_.snapshotId == toSnapshotId).getOrElse(
-      throw new NoSuchElementException(
-        s"snapshot $toSnapshotId not found for $db.$table"))
-    require(publishedEntry(entries).snapshotId != toSnapshotId,
+      toSnapshotId: Long): Snapshot = withTableLock(db, table) { st =>
+    st.requireNoPendingStage()
+    val targetEntry = st.entryAt(toSnapshotId)
+    require(st.published.snapshotId != toSnapshotId,
       s"table $db.$table is already at snapshot $toSnapshotId")
     // a branch commit's summary marker would make the rollback entry itself
     // invisible to published readers — branch states publish via fastForward
     require(!isBranchEntry(targetEntry),
       s"snapshot $toSnapshotId is a branch commit " +
         s"(branch '${targetEntry.summary("branch.ref")}'): use fastForward to publish it")
-    val snap = Snapshot(entries.last.snapshotId + 1, clock().toString, "rollback",
+    // pure pointer commit: re-point at the target's shards (data AND
+    // position-delete), write no O(files) metadata at all — rollback of a
+    // petabyte table IS a KB rename
+    repoint(st, targetEntry, "rollback",
       targetEntry.summary
         // the rolled-back-FROM head carries the streaming high-water
         // marks; losing them to the older summary would reopen the
         // replay window
-        ++ streamEpochTags(publishedEntry(entries).summary)
+        ++ streamEpochTags(st.published.summary)
         + ("rolled_back_to" -> toSnapshotId.toString,
           "added_records" -> "0", "added_files" -> "0"),
-      targetEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, targetEntry).files),
-      new DeferredMap(() => materialize(db, table, targetEntry).fileStats),
-      entryDeleteFiles(db, table, targetEntry))
-    // pure pointer commit: re-point at the target's shards (data AND
-    // position-delete), write no O(files) metadata at all — rollback of a
-    // petabyte table IS a KB rename (the inventory view above defers)
-    commitSnapshot(db, table, entries, snap, targetEntry.manifests, Manifest.empty,
-      targetEntry.deletes)
+      targetEntry.schemaDdl).snap
   }
 
   /** Backfill/refresh BLOOM sidecars for the current snapshot's files
@@ -4383,16 +4256,14 @@ final class SnapshotCatalog(
     * no-op — no files added or removed.
     *
     * Returns None when nothing is missing a bloom (no commit). */
-  def rebuildBlooms(db: String, table: String): Option[Snapshot] = withTableLock(db, table) {
+  def rebuildBlooms(db: String, table: String): Option[Snapshot] = withTableLock(db, table) { st =>
     val tm = meta(db, table)
     val cols = BloomStats.columnsOf(tm.properties)
       .filterNot(tm.partitionCols.contains)
     require(cols.nonEmpty,
       s"rebuildBlooms($db.$table): set ${BloomStats.PropCols} first")
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
-    val prev = materialize(db, table, prevEntry)
+    val prevEntry = st.commitBase
+    val prev = materialize(st, prevEntry)
     val missing = prev.files.filter(f =>
       cols.exists(c => !prev.fileStats.getOrElse(f, Map.empty).contains(s"bloom.$c")))
     if (missing.isEmpty) return None
@@ -4406,13 +4277,13 @@ final class SnapshotCatalog(
       prev.schema, cols, rowsOf, fpp, maxBytes)
     val newStats = prev.fileStats.map { case (f, st) =>
       f -> (st ++ extra.getOrElse(f, Map.empty)) }
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     val snap = Snapshot(newId, clock().toString, "rebuild_blooms",
       prev.summary + ("added_records" -> "0", "added_files" -> "0",
         "bloomed_files" -> extra.size.toString),
       prevEntry.schemaDdl, prev.files, newStats, prev.deleteFiles)
-    Some(commitSnapshot(db, table, entries, snap, Seq.empty,
-      Manifest(prev.files, newStats), prevEntry.deletes))
+    Some(commitSnapshot(st, snap, Seq.empty,
+      Manifest(prev.files, newStats), prevEntry.deletes).snap)
   }
 
   /** Compute per-column NDV sketches from the CURRENT live rows — the
@@ -4428,12 +4299,10 @@ final class SnapshotCatalog(
     * `columns` defaults to `write.ndv.columns`, else every supported
     * column. Returns None for an empty column set resolution. */
   def analyzeNdv(db: String, table: String,
-      columns: Seq[String] = Seq.empty): Option[Snapshot] = withTableLock(db, table) {
+      columns: Seq[String] = Seq.empty): Option[Snapshot] = withTableLock(db, table) { st =>
     val tm = meta(db, table)
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
-    val prev = materialize(db, table, prevEntry)
+    val prevEntry = st.commitBase
+    val prev = materialize(st, prevEntry)
     val visible = prev.schema.fields.filterNot(f => tm.hiddenCols(f.name))
     val cols =
       (if (columns.nonEmpty) columns
@@ -4451,12 +4320,12 @@ final class SnapshotCatalog(
     if (cols.isEmpty) return None
     val lgK = NdvStats.lgKOf(tm.properties)
     val aggs = cols.map(c => expr(s"hll_sketch_agg(`$c`, $lgK)").as(c))
-    val row = OnePass.aggregate(readAsOf(db, table, prev.snapshotId), aggs)
+    val row = OnePass.aggregate(readVisible(db, table, prev, prev.files), aggs)
     val sketches = cols.zipWithIndex.map { case (c, i) =>
       c -> Option(row.get(i)).map(_.asInstanceOf[Array[Byte]])
         .getOrElse(NdvStats.emptySketch(lgK))
     }.toMap
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     NdvStats.writeSidecar(tablePath(db, table), newId, sketches)
     val snap = Snapshot(newId, clock().toString, "analyze_ndv",
       prev.summary + ("added_records" -> "0", "added_files" -> "0") ++
@@ -4464,8 +4333,8 @@ final class SnapshotCatalog(
           s"ndv.$c" -> NdvStats.estimate(b).toString } +
         ("ndv.snapshot" -> newId.toString),
       prevEntry.schemaDdl, prev.files, prev.fileStats, prev.deleteFiles)
-    Some(commitSnapshot(db, table, entries, snap, Seq.empty,
-      Manifest(prev.files, prev.fileStats), prevEntry.deletes))
+    Some(commitSnapshot(st, snap, Seq.empty,
+      Manifest(prev.files, prev.fileStats), prevEntry.deletes).snap)
   }
 
   /** Equi-height histograms for CBO filter/join selectivity — the last
@@ -4487,13 +4356,11 @@ final class SnapshotCatalog(
     * Constant columns (fewer than 2 distinct boundaries) are skipped. */
   def analyzeHistogram(db: String, table: String,
       columns: Seq[String] = Seq.empty, bins: Int = 64): Option[Snapshot] =
-    withTableLock(db, table) {
+    withTableLock(db, table) { st =>
     require(bins >= 2 && bins <= 1024, s"bins must be in [2,1024], got $bins")
     val tm = meta(db, table)
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
-    val prev = materialize(db, table, prevEntry)
+    val prevEntry = st.commitBase
+    val prev = materialize(st, prevEntry)
     def numeric(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType |
            _: org.apache.spark.sql.types.ShortType | _: org.apache.spark.sql.types.ByteType |
@@ -4511,7 +4378,7 @@ final class SnapshotCatalog(
         s"analyzeHistogram($db.$table): column '$c' has non-numeric type ${f.dataType.sql}")
     }
     if (cols.isEmpty) return None
-    val df = readAsOf(db, table, prev.snapshotId)
+    val df = readVisible(db, table, prev, prev.files)
     val pcts = (0 to bins).map(i => i.toDouble / bins)
     val pctAggs = cols.map(c => expr(
       s"percentile_approx(CAST(`$c` AS DOUBLE), array(${pcts.mkString(",")}), 10000)").as(c))
@@ -4547,12 +4414,12 @@ final class SnapshotCatalog(
       }
     }.toMap
     if (histJson.isEmpty) return None
-    val newId = entries.last.snapshotId + 1
+    val newId = st.nextId
     val snap = Snapshot(newId, clock().toString, "analyze_histogram",
       prev.summary + ("added_records" -> "0", "added_files" -> "0") ++ histJson,
       prevEntry.schemaDdl, prev.files, prev.fileStats, prev.deleteFiles)
-    Some(commitSnapshot(db, table, entries, snap, Seq.empty,
-      Manifest(prev.files, prev.fileStats), prevEntry.deletes))
+    Some(commitSnapshot(st, snap, Seq.empty,
+      Manifest(prev.files, prev.fileStats), prevEntry.deletes).snap)
   }
 
   // ---- versioned SQL views (the Iceberg VIEW spec shape, metastore-free) ----
@@ -5622,16 +5489,23 @@ final class SnapshotCatalog(
     val bases = baseTablesOf(db, body)
     val from = bases.map { case (d, t) =>
       (d, t) -> docMeta.properties.get(s"mv.base.$d.$t").map(_.toLong) }.toMap
-    val cur = bases.map { case (d, t) => (d, t) -> currentSnapshotId(d, t) }.toMap
+    // each base's pointer log is read ONCE: every high-water, range walk
+    // and read of the refresh derives from these states
+    val baseSt = bases.map { case (d, t) => (d, t) -> loadTable(d, t) }.toMap
+    val cur = bases.map(b => b -> baseSt(b).published.snapshotId).toMap
     if (bases.forall(b => from(b).contains(cur(b)))) return ("fresh", 0L)
+    // the backing's state, loaded at its first read: every backing read
+    // of a refresh precedes the refresh's commit to it
+    lazy val backingSt = loadTable(db, mvT)
+    def backingLatest: DataFrame = readAt(backingSt, backingSt.published)
 
     type Base = (String, String)
     /** `x` at snapshot `id`, layout columns hidden (the SQL surface). */
     def at(x: Base, id: Long): DataFrame =
-      readAsOf(x._1, x._2, id).drop(meta(x._1, x._2).hiddenCols.toSeq: _*)
+      readAt(baseSt(x), baseSt(x).entryAt(id)).drop(meta(x._1, x._2).hiddenCols.toSeq: _*)
     /** `x`'s rows added across the refresh range ([[readIncremental]]). */
     def increment(x: Base): DataFrame =
-      readIncremental(x._1, x._2, from(x).get, cur(x))
+      incrementAt(baseSt(x), from(x).get, cur(x))
         .drop(meta(x._1, x._2).hiddenCols.toSeq: _*)
 
     // a subquery expression disqualifies incremental outright: the
@@ -5656,11 +5530,10 @@ final class SnapshotCatalog(
     val appendOnlyOps = Set("append", "compact", "rewrite_manifests",
       "rebuild_blooms", "analyze_ndv", "analyze_histogram")
     // each base's range is classified ONCE per refresh: the mode gates
-    // and the delta extraction all ask, and each answer walks the
-    // pointer log
+    // and the delta extraction all ask
     val appendOnlyMemo = scala.collection.mutable.Map.empty[Base, Boolean]
     def appendOnlyRange(x: Base): Boolean = appendOnlyMemo.getOrElseUpdate(x,
-      mainLineage(x._1, x._2).filter(e => e.snapshotId > from(x).get && e.snapshotId <= cur(x))
+      baseSt(x).mainLineage.filter(e => e.snapshotId > from(x).get && e.snapshotId <= cur(x))
         .forall(e => appendOnlyOps(e.operation)))
 
     /** UNION ALL of project/filter arms, each over exactly ONE base
@@ -5704,11 +5577,15 @@ final class SnapshotCatalog(
       * predicate, more a semi-join (one pass, still key-bounded rows). */
     def baseAtKeys(keyCols: Seq[String], keys: DataFrame, few: Array[Row]): DataFrame = {
       val (d, t) = bases.head
+      val st = baseSt(bases.head)
       (if (few.length > 64 || few.isEmpty) None
-      else scala.util.Try(readWhere(d, t, cur(bases.head), keyPredicate(keyCols, few))).toOption)
+      else scala.util.Try {
+        val pred = keyPredicate(keyCols, few)
+        readPruned(st, cur(bases.head), pred).where(pred)
+      }.toOption)
         .getOrElse {
           val aff = keys.toDF(keyCols.map(k => s"__a_$k"): _*)
-          val base0 = readAsOf(d, t, cur(bases.head))
+          val base0 = readAt(st, st.entryAt(cur(bases.head)))
           base0.join(aff, keyCols.map(k =>
             base0(s"`$k`") <=> aff(s"`__a_$k`")).reduce(_ && _), "left_semi")
         }.drop(meta(d, t).hiddenCols.toSeq: _*)
@@ -5746,13 +5623,13 @@ final class SnapshotCatalog(
       val hidden = meta(d, t).hiddenCols.toSeq
       if (lo == hi) Some((None, None))
       else if (appendOnlyRange(x)) Some((Some(increment(x)), None))
-      else (try changeSetsAcrossRange(d, t, lo, hi) catch {
+      else (try changeSetsAcrossRange(baseSt(x), lo, hi) catch {
         case scala.util.control.NonFatal(_) => None
       }) match {
         case Some((i, dl)) => Some((Some(i.drop(hidden: _*)), Some(dl.drop(hidden: _*))))
         case None =>
           try {
-            val clean = readChangelog(d, t, lo, hi).drop(hidden: _*).drop("_row_id")
+            val clean = changelogAt(baseSt(x), lo, hi).drop(hidden: _*).drop("_row_id")
             Some((
               Some(clean.where(col("_change_type") === "insert").drop("_change_type")),
               Some(clean.where(col("_change_type") === "delete").drop("_change_type"))))
@@ -6008,7 +5885,7 @@ final class SnapshotCatalog(
     // outputs colliding with the partial columns, a backing written
     // before augmentation — keeps the append-only merge
     val backingHasPartials = tableExists(db, mvT) &&
-      currentSnapshot(db, mvT).schema.fieldNames.contains(MvPartialRows)
+      backingSt.schema.fieldNames.contains(MvPartialRows)
     // DISTINCT-aggregate sidecars recorded at create time (per output
     // position). Every merge path — single-base AND (r13) the join/
     // outer/union telescopes — requires every distinct position's
@@ -6232,7 +6109,7 @@ final class SnapshotCatalog(
       }
       // merge net against the stored state; every column exact by
       // partial bookkeeping
-      val backing = readLatest(db, mvT)
+      val backing = backingLatest
       val cond = keyNames.map(k => net(s"`$k`") <=> backing(s"`$k`"))
         .reduceOption(_ && _).getOrElse(lit(true))
       val joined = net.join(backing, cond, "left")
@@ -6486,7 +6363,7 @@ final class SnapshotCatalog(
       val ins0 = visSel(bodyOver(tk.rowPlan,
         insOpt.getOrElse(at(bases.head, from(bases.head).get).limit(0))))
       val del0 = delOpt.map(f => visSel(bodyOver(tk.rowPlan, f)))
-      val backing = readLatest(db, mvT)
+      val backing = backingLatest
       // groups whose stored rows were hit (null-safe value match)
       val deadKeys: Option[DataFrame] = del0.map { dl =>
         val m = dl.select(visNR.map(n => col(s"`$n`").as(s"__d_$n")).toIndexedSeq: _*)
@@ -6595,7 +6472,7 @@ final class SnapshotCatalog(
           if (from(key).get == cur(key)) None
           else Some(bodyOverBases(arm, Map(key -> increment(key))))
         }
-        val names = currentSnapshot(db, mvT).schema.fieldNames.toIndexedSeq
+        val names = backingSt.schema.fieldNames.toIndexedSeq
         append(db, mvT, parts.reduce(_ union _).toDF(names: _*)).addedRecords
       case "incremental_join" =>
         // the inner-join maintenance identity under insert-only deltas —
@@ -6641,7 +6518,7 @@ final class SnapshotCatalog(
           // merge each delta group against its stored partial: count/sum
           // add (sum stays NULL only if both sides are), min/max fold via
           // least/greatest (null-skipping) — the self-maintainable merge
-          val backing = readLatest(db, mvT)
+          val backing = backingLatest
           val cond = keyNames.map(k =>
             deltaAgg(s"`$k`") <=> backing(s"`$k`")).reduceOption(_ && _)
             .getOrElse(lit(true)) // global aggregate: single-row "join"
@@ -6715,13 +6592,11 @@ final class SnapshotCatalog(
     * keep resolving their original shards (time travel untouched); expire
     * reclaims shards no surviving snapshot references. Returns None when
     * the current sharding already equals the target (idempotent). */
-  def rewriteManifests(db: String, table: String): Option[Snapshot] = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+  def rewriteManifests(db: String, table: String): Option[Snapshot] = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     if (prevEntry.manifests.size <= 1) return None
-    val prev = materialize(db, table, prevEntry)
-    val newId = entries.last.snapshotId + 1
+    val prev = materialize(st, prevEntry)
+    val newId = st.nextId
     val tag = attemptTag()
     def token(f: String): String =
       f.split('/').iterator.filter(_.contains('=')).mkString("/")
@@ -6775,24 +6650,18 @@ final class SnapshotCatalog(
         "rewritten_manifests" -> prevEntry.manifests.size.toString,
         "manifest_shards" -> names.size.toString),
       prevEntry.schemaDdl, prev.files, prev.fileStats, prev.deleteFiles)
-    Some(commitSnapshot(db, table, entries, snap, names, Manifest.empty,
-      prevEntry.deletes))
+    Some(commitSnapshot(st, snap, names, Manifest.empty,
+      prevEntry.deletes).snap)
   }
 
   // ---- write-audit-publish (Iceberg's WAP pattern, single-lineage form) ----
-
-  private def requireNoPendingStage(db: String, table: String,
-      entries: Seq[SnapshotEntry]): Unit =
-    require(!isStagedEntry(entries.last),
-      s"$db.$table has a pending staged snapshot ${entries.last.snapshotId}: " +
-        "publishStaged or discardStaged it before committing anything else")
 
   /** Id of the pending staged (WAP) snapshot, if any — pointer-log only.
     * The SQL `publish_staged`/`discard_staged` procedures default their
     * snapshot_id argument through this, so the audit job never has to
     * scrape the snapshots table for the wap.staged flag. */
   def pendingStagedId(db: String, table: String): Option[Long] = {
-    val last = entryMeta(db, table).last
+    val last = loadTable(db, table).entries.last
     if (isStagedEntry(last)) Some(last.snapshotId) else None
   }
 
@@ -6834,20 +6703,22 @@ final class SnapshotCatalog(
     * unreferenced for expire to reclaim. This is also the delete shape
     * multi-table transactions stage ([[Transaction.deleteMoR]]). */
   def stageDeleteMoR(db: String, table: String, cond: Column): Snapshot =
-    withTableLock(db, table) {
-      val entries = entryMeta(db, table)
-      requireNoPendingStage(db, table, entries)
-      deleteMoRFrom(db, table, entries, publishedEntry(entries), cond,
-        Map("wap.staged" -> "true"))
-    }
+    withTableLock(db, table)(stageDeleteMoRIn(_, cond).snap)
+
+  private def stageDeleteMoRIn(st: TableState, cond: Column): Committed = {
+    st.requireNoPendingStage()
+    deleteMoRFrom(st, st.published, cond, Map("wap.staged" -> "true"))
+  }
 
   /** Publish a staged snapshot: one pointer-log entry re-pointing current
     * state at the staged snapshot's manifests — O(KB) regardless of data
     * size, the property that makes audit-then-publish free at 100 TB. */
-  def publishStaged(db: String, table: String,
-      snapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    val staged = entries.last
+  def publishStaged(db: String, table: String, snapshotId: Long): Snapshot =
+    withTableLock(db, table)(publishStagedIn(_, snapshotId).snap)
+
+  private def publishStagedIn(st: TableState, snapshotId: Long): Committed = {
+    val (db, table) = (st.db, st.table)
+    val staged = st.entries.last
     require(isStagedEntry(staged) && staged.snapshotId == snapshotId,
       s"snapshot $snapshotId is not the pending staged snapshot of $db.$table" +
         (if (isStagedEntry(staged)) s" (pending is ${staged.snapshotId})" else ""))
@@ -6858,7 +6729,7 @@ final class SnapshotCatalog(
     // evaluate in ONE scan of the staged state; violations stay staged
     // (fix and re-stage, or discard) with per-expectation counts in the
     // error. auditExpectations() runs the same battery standalone.
-    val violations = auditExpectations(db, table, snapshotId)
+    val violations = auditAt(st, snapshotId)
     if (violations.exists(_._2 > 0)) {
       val bad = violations.filter(_._2 > 0)
         .map { case (n, c) => s"$n ($c rows)" }.mkString(", ")
@@ -6866,16 +6737,11 @@ final class SnapshotCatalog(
         s"publish of $db.$table snapshot $snapshotId refused: " +
           s"expectation(s) violated: $bad. Fix and re-stage, or discard.")
     }
-    val snap = Snapshot(staged.snapshotId + 1, clock().toString, "publish",
+    repoint(st, staged, "publish",
       staged.summary - "wap.staged" +
         ("wap.source" -> snapshotId.toString,
           "added_records" -> "0", "added_files" -> "0"),
-      staged.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, staged).files),
-      new DeferredMap(() => materialize(db, table, staged).fileStats),
-      entryDeleteFiles(db, table, staged))
-    commitSnapshot(db, table, entries, snap, staged.manifests, Manifest.empty,
-      staged.deletes)
+      staged.schemaDdl)
   }
 
   /** A table's `expect.<name>` predicates, name-sorted (`expect.mode` is
@@ -6903,11 +6769,18 @@ final class SnapshotCatalog(
     * (expectation, violating-row count) pairs — empty when no
     * expectations are declared. */
   def auditExpectations(db: String, table: String,
-      snapshotId: Long = -1L): Seq[(String, Long)] = {
-    val exps = expectationsOf(db, table)
-    if (exps.isEmpty) return Seq.empty
-    val id = if (snapshotId >= 0) snapshotId else currentSnapshot(db, table).snapshotId
-    expectationViolations(readAsOf(db, table, id), exps)
+      snapshotId: Long = -1L): Seq[(String, Long)] =
+    if (expectationsOf(db, table).isEmpty) Seq.empty
+    else {
+      val st = loadTable(db, table)
+      auditAt(st, if (snapshotId >= 0) snapshotId else st.published.snapshotId)
+    }
+
+  /** [[auditExpectations]] of `st`'s snapshot `snapshotId`. */
+  private def auditAt(st: TableState, snapshotId: Long): Seq[(String, Long)] = {
+    val exps = expectationsOf(st.db, st.table)
+    if (exps.isEmpty) Seq.empty
+    else expectationViolations(readAt(st, st.entryAt(snapshotId)), exps)
   }
 
   /** Discard a staged snapshot: a pointer commit restoring the published
@@ -6915,15 +6788,17 @@ final class SnapshotCatalog(
     * for post-mortems) until [[expireSnapshots]] collects it — and expire
     * reclaims its data files then, since no surviving state references
     * them. */
-  def discardStaged(db: String, table: String,
-      snapshotId: Long): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
+  def discardStaged(db: String, table: String, snapshotId: Long): Snapshot =
+    withTableLock(db, table)(discardStagedIn(_, snapshotId).snap)
+
+  private def discardStagedIn(st: TableState, snapshotId: Long): Committed = {
+    val (db, table, entries) = (st.db, st.table, st.entries)
     val staged = entries.last
     require(isStagedEntry(staged) && staged.snapshotId == snapshotId,
       s"snapshot $snapshotId is not the pending staged snapshot of $db.$table" +
         (if (isStagedEntry(staged)) s" (pending is ${staged.snapshotId})" else ""))
-    val headEntry = publishedEntry(entries)
-    val snap = Snapshot(staged.snapshotId + 1, clock().toString, "discard",
+    val headEntry = st.published
+    repoint(st, headEntry, "discard",
       headEntry.summary
         // the staged append carried the streaming high-water marks
         // forward; the restored head's copy is identical by construction,
@@ -6931,12 +6806,7 @@ final class SnapshotCatalog(
         ++ streamEpochTags(staged.summary)
         + ("wap.discarded" -> snapshotId.toString,
           "added_records" -> "0", "added_files" -> "0"),
-      headEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, headEntry).files),
-      new DeferredMap(() => materialize(db, table, headEntry).fileStats),
-      entryDeleteFiles(db, table, headEntry))
-    commitSnapshot(db, table, entries, snap, headEntry.manifests, Manifest.empty,
-      headEntry.deletes)
+      headEntry.schemaDdl)
   }
 
   /** Schema-evolution commit (Iceberg `ALTER TABLE ADD COLUMN` semantics):
@@ -6947,10 +6817,8 @@ final class SnapshotCatalog(
     * before the evolution serves the old schema, because every snapshot
     * stores its own DDL. */
   def evolveSchema(db: String, table: String, newSchema: StructType,
-      allowDrop: Boolean = false): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
-    val prevEntry = publishedEntry(entries)
+      allowDrop: Boolean = false): Snapshot = withTableLock(db, table) { st =>
+    val prevEntry = st.commitBase
     // pointer-level DDL: schema arithmetic runs off the log entry; the
     // inventory materializes ONLY for the rare re-add probe below, and the
     // committed snapshot's file view defers until actually walked
@@ -6979,12 +6847,12 @@ final class SnapshotCatalog(
     // dodges this with field-ids; here the safe path is compact() first
     // (the rewrite lands files under the post-drop schema).
     val added = newSchema.fieldNames.filterNot(prevSchema.fieldNames.contains)
-    lazy val curFiles = materialize(db, table, prevEntry).files.toSet
+    lazy val curFiles = materialize(st, prevEntry).files.toSet
     // the schema probe is pointer-only; only schema-matching historical
     // snapshots (rare) materialize their file lists
     val resurfacing = added.filter(name =>
-      entries.exists(e => e.schema.fieldNames.contains(name) &&
-        materialize(db, table, e).files.exists(curFiles.contains)))
+      st.entries.exists(e => e.schema.fieldNames.contains(name) &&
+        materialize(st, e).files.exists(curFiles.contains)))
     require(resurfacing.isEmpty,
       s"cannot re-add previously dropped column(s) ${resurfacing.mkString(",")}: " +
         "current data files still contain them under name-based mapping - " +
@@ -6999,15 +6867,10 @@ final class SnapshotCatalog(
       .filterNot(f => prevSchema.fieldNames.contains(f.name))
       .filter(f => ColumnStats.statable(f.dataType))
       .map(f => s"nullcol.${f.name}" -> "true")
-    val snap = Snapshot(entries.last.snapshotId + 1, clock().toString, "evolve",
-      prevEntry.summary ++ addedStatable + ("added_records" -> "0", "added_files" -> "0"),
-      newSchema.toDDL,
-      new DeferredSeq(() => materialize(db, table, prevEntry).files),
-      new DeferredMap(() => materialize(db, table, prevEntry).fileStats),
-      entryDeleteFiles(db, table, prevEntry))
     // pure pointer commit: same shards (data and delete), new schema DDL
-    commitSnapshot(db, table, entries, snap, prevEntry.manifests, Manifest.empty,
-      prevEntry.deletes)
+    repoint(st, prevEntry, "evolve",
+      prevEntry.summary ++ addedStatable + ("added_records" -> "0", "added_files" -> "0"),
+      newSchema.toDDL).snap
   }
 
   /** Update one table property (ALTER TABLE SET/UNSET TBLPROPERTIES). */
@@ -7017,7 +6880,7 @@ final class SnapshotCatalog(
   /** Set (`Some`) and unset (`None`) table properties in ONE metadata
     * write, so no reader or crash ever sees part of the change. */
   def setProperties(db: String, table: String,
-      changes: Map[String, Option[String]]): Unit = withTableLock(db, table) {
+      changes: Map[String, Option[String]]): Unit = lockTable(db, table) {
     val tm = meta(db, table)
     val props = changes.foldLeft(tm.properties) {
       case (ps, (k, Some(v))) => ps + (k -> v)
@@ -7038,13 +6901,13 @@ final class SnapshotCatalog(
     * Bucketed tables are refused: the bucket layout is load-bearing for
     * storage-partitioned joins. */
   def evolvePartitionSpec(db: String, table: String,
-      partitionCols: Seq[String]): Unit = withTableLock(db, table) {
+      partitionCols: Seq[String]): Unit = withTableLock(db, table) { st =>
     val tm = meta(db, table)
     require(tm.bucketSpec.isEmpty,
       s"cannot change the partition spec of bucketed table $db.$table")
     require(partitionCols != tm.partitionCols,
       s"$db.$table is already partitioned by (${partitionCols.mkString(",")})")
-    val schema = currentSnapshot(db, table).schema
+    val schema = st.schema
     val unknown = partitionCols.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty, s"partition columns not in schema: ${unknown.mkString(",")}")
     AtomicFile.write(metaPath(db, table),
@@ -7057,7 +6920,7 @@ final class SnapshotCatalog(
     * working because data files and the log stay in place. */
   def replaceTableSpec(db: String, table: String,
       partitionCols: Seq[String],
-      properties: Map[String, String]): Unit = withTableLock(db, table) {
+      properties: Map[String, String]): Unit = lockTable(db, table) {
     val tm = meta(db, table) // refs survive the spec replace
     AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(partitionCols = partitionCols, properties = properties).toJson))
@@ -7134,12 +6997,16 @@ final class SnapshotCatalog(
 
   /** Nested, canonically-ordered lock acquisition: every transaction
     * sorts its table set the same way, so two transactions can never
-    * hold-and-wait in opposite orders. */
-  private def withTableLocks[T](keys: Seq[(String, String)])(body: => T): T =
-    keys match {
-      case Seq() => body
-      case k +: rest => withTableLock(k._1, k._2)(withTableLocks(rest)(body))
+    * hold-and-wait in opposite orders. The innermost body loads one state
+    * per table, so a conflict retry of it reloads them all. */
+  private def withTableLocks[T](keys: Seq[(String, String)])(
+      body: Map[(String, String), TableState] => T): T = {
+    def nest(ks: Seq[(String, String)]): T = ks match {
+      case Seq() => body(keys.map(k => k -> loadTable(k._1, k._2)).toMap)
+      case k +: rest => lockTable(k._1, k._2)(nest(rest))
     }
+    nest(keys)
+  }
 
   private def writeIntent(id: String, status: String,
       ops: Seq[((String, String), Long)]): Unit =
@@ -7158,51 +7025,57 @@ final class SnapshotCatalog(
     val order = keys.sorted
     val txnId = s"txn-${java.util.UUID.randomUUID().toString.take(12)}"
     val intentPath = txnsDir.resolve(s"$txnId.json")
-    withTableLocks(order) {
+    withTableLocks(order) { states =>
       // single-lineage discipline: a pending staged snapshot on any
       // target (someone's unfinished WAP audit) refuses loudly
       order.foreach { case (d, t) =>
-        require(pendingStagedId(d, t).isEmpty,
+        require(!isStagedEntry(states((d, t)).entries.last),
           s"$d.$t has a pending staged snapshot; publish or discard it first") }
       // durable intent BEFORE any staging: a crash anywhere in the
       // prepare phase rolls BACK. The intent re-records after each stage
       // so recovery discards exactly OUR staged ids (a post-crash
       // bystander's stage is never touched).
       writeIntent(txnId, "preparing", Seq.empty)
-      val staged = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
+      // each stage commit's published state: the publish (or the
+      // discard) derives from it
+      val staged = scala.collection.mutable.LinkedHashMap.empty[(String, String), Committed]
+      def stagedIds = staged.toSeq.map { case (k, c) => k -> c.snap.snapshotId }
       try {
         ops.foreach { op =>
-          val sid = op match {
-            case TxnAppend(d, t, df) => stageAppend(d, t, df).snapshotId
-            case TxnOverwrite(d, t, df) => stageOverwrite(d, t, df).snapshotId
-            case TxnDeleteMoR(d, t, cond) => stageDeleteMoR(d, t, cond).snapshotId
+          val st = states((op.db, op.table))
+          val wap = Map("wap.staged" -> "true")
+          staged((op.db, op.table)) = op match {
+            case TxnAppend(_, _, df) => commit(st, df, "append", extraSummary = wap)
+            case TxnOverwrite(_, _, df) => commit(st, df, "overwrite", extraSummary = wap)
+            case TxnDeleteMoR(_, _, cond) => stageDeleteMoRIn(st, cond)
           }
-          staged((op.db, op.table)) = sid
-          writeIntent(txnId, "preparing", staged.toSeq)
+          writeIntent(txnId, "preparing", stagedIds)
         }
         // pre-audit EVERY table's expectations over its staged state
         // BEFORE publishing ANY — publish-time surprises would break
         // atomicity, so they must all pass here first
         order.foreach { case (d, t) =>
-          val bad = auditExpectations(d, t, staged((d, t))).filter(_._2 > 0)
+          val c = staged((d, t))
+          val bad = auditAt(c.state, c.snap.snapshotId).filter(_._2 > 0)
           if (bad.nonEmpty) throw new IllegalStateException(
             s"transaction $txnId refused: $d.$t expectation(s) violated over " +
               s"the staged state: ${bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", ")}")
         }
       } catch {
         case e: Throwable =>
-          staged.toSeq.reverse.foreach { case ((d, t), sid) =>
-            try discardStaged(d, t, sid)
+          staged.toSeq.reverse.foreach { case (_, c) =>
+            try discardStagedIn(c.state, c.snap.snapshotId)
             catch { case scala.util.control.NonFatal(_) => () }
           }
           Files.deleteIfExists(intentPath)
           throw e
       }
       // the COMMIT POINT: from here recovery rolls FORWARD
-      writeIntent(txnId, "prepared", staged.toSeq)
+      writeIntent(txnId, "prepared", stagedIds)
       try {
-        val pins = order.map { case (d, t) =>
-          (d, t) -> publishStaged(d, t, staged((d, t))).snapshotId }.toMap
+        val pins = order.map { k =>
+          val c = staged(k)
+          k -> publishStagedIn(c.state, c.snap.snapshotId).snap.snapshotId }.toMap
         Files.deleteIfExists(intentPath)
         pins
       } catch {
@@ -7236,16 +7109,20 @@ final class SnapshotCatalog(
       val ops = j.arr("ops").collect { case o: JObj =>
         ((o.str("db"), o.str("table")), o.long("staged")) }
       val live = ops.filter { case ((d, t), _) => tableExists(d, t) }
-      withTableLocks(live.map(_._1).sorted) {
+      withTableLocks(live.map(_._1).sorted) { states =>
+        def pending(k: (String, String), sid: Long): Boolean = {
+          val last = states(k).entries.last
+          isStagedEntry(last) && last.snapshotId == sid
+        }
         j.str("status") match {
           case "preparing" =>
             // roll back exactly OUR stages, newest first
-            live.reverse.foreach { case ((d, t), sid) =>
-              if (pendingStagedId(d, t).contains(sid)) discardStaged(d, t, sid) }
+            live.reverse.foreach { case (k, sid) =>
+              if (pending(k, sid)) discardStagedIn(states(k), sid) }
           case "prepared" =>
             // roll forward; a table whose pending is gone already published
-            live.foreach { case ((d, t), sid) =>
-              if (pendingStagedId(d, t).contains(sid)) publishStaged(d, t, sid) }
+            live.foreach { case (k, sid) =>
+              if (pending(k, sid)) publishStagedIn(states(k), sid) }
           case _ => ()
         }
       }
@@ -7299,10 +7176,10 @@ final class SnapshotCatalog(
     * PROTECT their target from [[expireSnapshots]]; dropping the ref
     * releases it. For WRITABLE refs see [[createBranch]]. */
   def createTag(db: String, table: String, name: String,
-      snapshotId: Long): Unit = withTableLock(db, table) {
+      snapshotId: Long): Unit = withTableLock(db, table) { st =>
     require(name.nonEmpty && !name.forall(_.isDigit),
       s"tag name '$name' must not be empty or all-numeric (ambiguous with snapshot ids)")
-    snapshotAt(db, table, snapshotId) // must exist
+    st.entryAt(snapshotId) // must exist
     val tm = meta(db, table)
     require(!tm.refs.contains(name), s"tag '$name' already exists on $db.$table")
     require(!tm.branches.contains(name),
@@ -7311,7 +7188,7 @@ final class SnapshotCatalog(
       Json.writePretty(tm.copy(refs = tm.refs + (name -> snapshotId)).toJson))
   }
 
-  def dropTag(db: String, table: String, name: String): Unit = withTableLock(db, table) {
+  def dropTag(db: String, table: String, name: String): Unit = lockTable(db, table) {
     val tm = meta(db, table)
     require(tm.refs.contains(name), s"no such tag '$name' on $db.$table")
     AtomicFile.write(metaPath(db, table),
@@ -7338,12 +7215,11 @@ final class SnapshotCatalog(
     * share the table's snapshot-id space and data directory; no data is
     * copied at create (same property that makes tags free). */
   def createBranch(db: String, table: String, name: String,
-      fromSnapshotId: Option[Long] = None): Unit = withTableLock(db, table) {
+      fromSnapshotId: Option[Long] = None): Unit = withTableLock(db, table) { st =>
     require(name.nonEmpty && !name.forall(_.isDigit),
       s"branch name '$name' must not be empty or all-numeric (ambiguous with snapshot ids)")
-    val entries = entryMeta(db, table)
-    val from = fromSnapshotId.getOrElse(publishedEntry(entries).snapshotId)
-    require(entries.exists(_.snapshotId == from),
+    val from = fromSnapshotId.getOrElse(st.published.snapshotId)
+    require(st.entries.exists(_.snapshotId == from),
       s"snapshot $from not found for $db.$table")
     val tm = meta(db, table)
     require(!tm.branches.contains(name), s"branch '$name' already exists on $db.$table")
@@ -7353,7 +7229,7 @@ final class SnapshotCatalog(
       Json.writePretty(tm.copy(branches = tm.branches + (name -> from)).toJson))
   }
 
-  def dropBranch(db: String, table: String, name: String): Unit = withTableLock(db, table) {
+  def dropBranch(db: String, table: String, name: String): Unit = lockTable(db, table) {
     val tm = meta(db, table)
     require(tm.branches.contains(name), s"no such branch '$name' on $db.$table")
     AtomicFile.write(metaPath(db, table),
@@ -7370,17 +7246,23 @@ final class SnapshotCatalog(
     * Main's state and the branch evolve independently; both stay
     * time-travelable. */
   def appendBranch(db: String, table: String, name: String, df: DataFrame,
-      extraSummary: Map[String, String] = Map.empty): Snapshot = withTableLock(db, table) {
+      extraSummary: Map[String, String] = Map.empty): Snapshot = withTableLock(db, table) { st =>
+    onBranch(st, name)((head, marks) =>
+      commit(st, df, "append", extraSummary = extraSummary ++ marks, base = Some(head)).snap)
+  }
+
+  /** A commit to branch `name` of `st`: `write` commits based at the
+    * branch head entry, carrying the `branch.ref`/`branch.parent` summary
+    * marks it is given; then the branch ref advances to the new snapshot. */
+  private def onBranch(st: TableState, name: String)(
+      write: (SnapshotEntry, Map[String, String]) => Snapshot): Snapshot = {
+    val (db, table) = (st.db, st.table)
     val headId = resolveBranch(db, table, name).getOrElse(
       throw new NoSuchElementException(s"no such branch '$name' on $db.$table"))
-    val entries = entryMeta(db, table)
-    val baseEntry = entries.find(_.snapshotId == headId).getOrElse(
+    val head = st.entries.find(_.snapshotId == headId).getOrElse(
       throw new IllegalStateException(
         s"branch '$name' points at expired snapshot $headId of $db.$table"))
-    val snap = commit(db, table, df, "append",
-      extraSummary = extraSummary ++ Map(
-        "branch.ref" -> name, "branch.parent" -> headId.toString),
-      base = Some(baseEntry))
+    val snap = write(head, Map("branch.ref" -> name, "branch.parent" -> headId.toString))
     val tm = meta(db, table)
     AtomicFile.write(metaPath(db, table),
       Json.writePretty(tm.copy(branches = tm.branches + (name -> snap.snapshotId)).toJson))
@@ -7402,18 +7284,16 @@ final class SnapshotCatalog(
     * since the fork, adopting the branch would silently drop main's
     * commits — fail loudly instead (merge by hand, or re-branch). The
     * branch ref itself stays where it is, like a published WAP stage. */
-  def fastForward(db: String, table: String, name: String): Snapshot = withTableLock(db, table) {
-    val entries = entryMeta(db, table)
-    requireNoPendingStage(db, table, entries)
+  def fastForward(db: String, table: String, name: String): Snapshot = withTableLock(db, table) { st =>
+    val published = st.commitBase
     val headId = resolveBranch(db, table, name).getOrElse(
       throw new NoSuchElementException(s"no such branch '$name' on $db.$table"))
-    val published = publishedEntry(entries)
     require(headId != published.snapshotId,
       s"branch '$name' is already at the published head of $db.$table")
     @annotation.tailrec
     def reachesPublished(id: Long): Boolean =
       if (id == published.snapshotId) true
-      else entries.find(_.snapshotId == id) match {
+      else st.entries.find(_.snapshotId == id) match {
         case Some(e) => e.summary.get("branch.parent") match {
           case Some(p) => reachesPublished(p.toLong)
           case None => false // hit a main-lineage snapshot that is not the head
@@ -7424,19 +7304,14 @@ final class SnapshotCatalog(
       s"cannot fast-forward $db.$table to branch '$name': the published head " +
         s"${published.snapshotId} is not an ancestor of the branch head $headId " +
         "(main advanced since the fork, or the fork ancestry was expired)")
-    val branchEntry = entries.find(_.snapshotId == headId).get
-    val snap = Snapshot(entries.last.snapshotId + 1, clock().toString, "fastforward",
+    val branchEntry = st.entries.find(_.snapshotId == headId).get
+    repoint(st, branchEntry, "fastforward",
       branchEntry.summary -- Seq("branch.ref", "branch.parent")
         // main's stream high-water marks are the authoritative ones
         ++ streamEpochTags(branchEntry.summary) ++ streamEpochTags(published.summary)
         + ("branch.forwarded" -> name,
           "added_records" -> "0", "added_files" -> "0"),
-      branchEntry.schemaDdl,
-      new DeferredSeq(() => materialize(db, table, branchEntry).files),
-      new DeferredMap(() => materialize(db, table, branchEntry).fileStats),
-      entryDeleteFiles(db, table, branchEntry))
-    commitSnapshot(db, table, entries, snap, branchEntry.manifests, Manifest.empty,
-      branchEntry.deletes)
+      branchEntry.schemaDdl).snap
   }
 
   // ---- maintenance (the "table maintenance" half of the Iceberg surface:
@@ -7455,15 +7330,14 @@ final class SnapshotCatalog(
     * would then depend on data volume. Compaction rewrites every byte
     * anyway, so the shuffle is the cost of choosing the layout.
     */
-  def compact(db: String, table: String, numFiles: Int): Snapshot = withTableLock(db, table) {
+  def compact(db: String, table: String, numFiles: Int): Snapshot = withTableLock(db, table) { st =>
     // lineage tables: the rewrite carries each row's __rid so compaction
     // preserves identity (Iceberg v3's materialize-on-rewrite)
+    val snap = materialize(st, st.published)
     val current =
-      if (rowLineageEnabled(db, table)) {
-        val snap = currentSnapshot(db, table)
-        readVisibleWithRidSeq(db, table, snap, snap.files)
-      } else readLatest(db, table)
-    commit(db, table, current.repartition(numFiles), "compact")
+      if (rowLineageEnabled(db, table)) readVisibleWithRidSeq(db, table, snap, snap.files)
+      else readVisible(db, table, snap, snap.files)
+    commit(st, current.repartition(numFiles), "compact").snap
   }
 
   /** Target positions per consolidated positional-delete shard. After
@@ -7531,21 +7405,19 @@ final class SnapshotCatalog(
     * until expire, then sweeps as usual. */
   def compactDeleteFiles(db: String, table: String,
       where: Option[Column] = None): Option[Snapshot] =
-    withTableLock(db, table) {
-      val entries = entryMeta(db, table)
-      requireNoPendingStage(db, table, entries)
-      val prevEntry = publishedEntry(entries)
-      val prev = materialize(db, table, prevEntry)
+    withTableLock(db, table) { st =>
+      val prevEntry = st.commitBase
+      val prev = materialize(st, prevEntry)
       val (pos, eq) = prev.deleteFiles.partition(_.isPositional)
       val live = prev.files.toSet
       val (fold, carryPos) = where match {
         case None => (pos, Seq.empty[DeleteFile])
         case Some(cond) =>
-          val admitted = pruneFiles(db, table, prev.snapshotId, cond)._1.toSet
+          val admitted = prune(db, table, prev, cond)._1.toSet
           pos.partition(_.covers.keysIterator.exists(admitted))
       }
       if (fold.size < 2) return None
-      val newId = entries.last.snapshotId + 1
+      val newId = st.nextId
       val tag = attemptTag()
       val root = tablePath(db, table)
       val delDirRel = s"deletes/s$newId$tag"
@@ -7577,8 +7449,8 @@ final class SnapshotCatalog(
           "delete_files" -> newDeletes.size.toString,
           "rewritten_delete_files" -> fold.size.toString),
         prev.schemaDdl, prev.files, prev.fileStats, newDeletes)
-      Some(commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-        Manifest.empty, Seq(shardName)))
+      Some(commitSnapshot(st, snap, prevEntry.manifests,
+        Manifest.empty, Seq(shardName)).snap)
     }
 
   /** Convert EQUALITY delete shards into consolidated POSITIONAL deletes
@@ -7608,21 +7480,19 @@ final class SnapshotCatalog(
     * CDC ingest, partition-scoped where the ingest is. */
   def convertEqualityDeletes(db: String, table: String,
       where: Option[Column] = None): Option[Snapshot] =
-    withTableLock(db, table) {
-      val entries = entryMeta(db, table)
-      requireNoPendingStage(db, table, entries)
-      val prevEntry = publishedEntry(entries)
-      val prev = materialize(db, table, prevEntry)
+    withTableLock(db, table) { st =>
+      val prevEntry = st.commitBase
+      val prev = materialize(st, prevEntry)
       val (pos, eqAll) = prev.deleteFiles.partition(_.isPositional)
       val live = prev.files.toSet
       val (eq, carryEq) = where match {
         case None => (eqAll, Seq.empty[DeleteFile])
         case Some(cond) =>
-          val admitted = pruneFiles(db, table, prev.snapshotId, cond)._1.toSet
+          val admitted = prune(db, table, prev, cond)._1.toSet
           eqAll.partition(_.covers.keysIterator.filter(live).exists(admitted))
       }
       if (eq.isEmpty) return None
-      val newId = entries.last.snapshotId + 1
+      val newId = st.nextId
       val tag = attemptTag()
       val root = tablePath(db, table)
       // only LIVE covered files participate (rewritten-away names are
@@ -7677,8 +7547,8 @@ final class SnapshotCatalog(
           "delete_files" -> newDeletes.size.toString,
           "converted_delete_files" -> eq.size.toString),
         prev.schemaDdl, prev.files, prev.fileStats, newDeletes)
-      Some(commitSnapshot(db, table, entries, snap, prevEntry.manifests,
-        Manifest.empty, Seq(shardName)))
+      Some(commitSnapshot(st, snap, prevEntry.manifests,
+        Manifest.empty, Seq(shardName)).snap)
     }
 
   /** TARGETED small-file compaction (Iceberg `rewrite_data_files` bin-pack
@@ -7705,10 +7575,10 @@ final class SnapshotCatalog(
     * threshold — rewriting one small file into one small file is churn. */
   def rewriteSmallFiles(db: String, table: String, smallBytes: Long,
       targetBytes: Long,
-      where: Option[Column] = None): Option[Snapshot] = withTableLock(db, table) {
+      where: Option[Column] = None): Option[Snapshot] = withTableLock(db, table) { st =>
     require(smallBytes > 0 && targetBytes > 0,
       s"thresholds must be positive: smallBytes=$smallBytes targetBytes=$targetBytes")
-    val snap = currentSnapshot(db, table)
+    val snap = materialize(st, st.published)
     val root = tablePath(db, table)
     def sizeOf(f: String): Long =
       snap.fileStats.get(f).flatMap(_.get("bytes")).map(_.toLong)
@@ -7717,7 +7587,7 @@ final class SnapshotCatalog(
     val (small, big) = where match {
       case None => (small0, big0)
       case Some(cond) =>
-        val admitted = pruneFiles(db, table, snap.snapshotId, cond)._1.toSet
+        val admitted = prune(db, table, snap, cond)._1.toSet
         val (in, out) = small0.partition(admitted)
         (in, big0 ++ out)
     }
@@ -7732,8 +7602,8 @@ final class SnapshotCatalog(
         if (rowLineageEnabled(db, table)) readVisibleWithRidSeq(db, table, snap, small)
         else readVisible(db, table, snap, small)
       val rewrite = smallRows.repartition(nOut)
-      Some(commit(db, table, rewrite, "rewrite",
-        carryFiles = big, carryStats = snap.fileStats))
+      Some(commit(st, rewrite, "rewrite",
+        carryFiles = big, carryStats = snap.fileStats).snap)
     }
   }
 
@@ -7749,11 +7619,11 @@ final class SnapshotCatalog(
     * incremental/streaming consumers see a no-op). Returns None when
     * fewer than two files are admitted — nothing worth folding. */
   def compactWhere(db: String, table: String, cond: Column,
-      numFiles: Int): Option[Snapshot] = withTableLock(db, table) {
+      numFiles: Int): Option[Snapshot] = withTableLock(db, table) { st =>
     require(numFiles >= 1, s"numFiles must be positive, got $numFiles")
     // TWO-LEVEL like [[delete]]: out-of-scope shards carry by name unparsed
-    val e = currentEntry(db, table)
-    val res = resolveWhere(db, table, e.snapshotId, cond)
+    val e = st.published
+    val res = resolveWhere(st, e.snapshotId, cond)
     val cands = res.kept
     if (cands.size < 2) None
     else {
@@ -7763,9 +7633,9 @@ final class SnapshotCatalog(
       val rows =
         if (rowLineageEnabled(db, table)) readVisibleWithRidSeq(db, table, snap, cands)
         else readVisible(db, table, snap, cands)
-      Some(commit(db, table, rows.repartition(numFiles), "compact",
+      Some(commit(st, rows.repartition(numFiles), "compact",
         carryFiles = untouched, carryStats = snap.fileStats,
-        carryShards = skipped))
+        carryShards = skipped).snap)
     }
   }
 
@@ -7783,9 +7653,9 @@ final class SnapshotCatalog(
     * codegen'd builtins (`width_bucket`, shifts, masks).
     */
   def compactZOrder(db: String, table: String, cols: Seq[String],
-      numFiles: Int): Snapshot = withTableLock(db, table) {
+      numFiles: Int): Snapshot = withTableLock(db, table) { st =>
     require(cols.size >= 2, "z-order needs at least two columns (use compact for one)")
-    val snap = currentSnapshot(db, table)
+    val snap = materialize(st, st.published)
     val schema = snap.schema
     val bits = 8
     val interleaved = cols.zipWithIndex.map { case (c, ci) =>
@@ -7824,22 +7694,22 @@ final class SnapshotCatalog(
     val base =
       if (rowLineageEnabled(db, table))
         readVisibleWithRidSeq(db, table, snap, snap.files)
-      else readLatest(db, table)
+      else readVisible(db, table, snap, snap.files)
     val z = base
       .withColumn("__z", interleaved)
       .repartitionByRange(numFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-    commit(db, table, z, "compact")
+    commit(st, z, "compact").snap
   }
 
   /** Snapshot expiration: keep only the most recent `keepLast` snapshots,
     * delete log entries and any data files no surviving snapshot
     * references (Iceberg `expire_snapshots` semantics — bounds storage
     * growth from overwrite/compact chains). Returns deleted file count. */
-  def expireSnapshots(db: String, table: String, keepLast: Int): Int = withTableLock(db, table) {
+  def expireSnapshots(db: String, table: String, keepLast: Int): Int = withTableLock(db, table) { st =>
     require(keepLast >= 1, "must keep at least one snapshot")
-    expireOldest(db, table, keepOldest = entries => entries.size - keepLast)
+    expireOldest(st, keepOldest = entries => entries.size - keepLast)
   }
 
   /** Time-based retention (Iceberg `expire_snapshots(older_than => ts)`):
@@ -7848,9 +7718,9 @@ final class SnapshotCatalog(
     * retention sweep must never leave the table without a current state.
     * Returns deleted data-file count, like [[expireSnapshots]]. */
   def expireSnapshotsOlderThan(db: String, table: String, olderThan: Instant,
-      keepLast: Int = 1): Int = withTableLock(db, table) {
+      keepLast: Int = 1): Int = withTableLock(db, table) { st =>
     require(keepLast >= 1, "must keep at least one snapshot")
-    expireOldest(db, table, keepOldest = { entries =>
+    expireOldest(st, keepOldest = { entries =>
       val byAge = entries.indexWhere(e => Instant.parse(e.committedAt).isAfter(olderThan))
       val aged = if (byAge < 0) entries.size else byAge
       math.min(aged, entries.size - keepLast)
@@ -7862,12 +7732,12 @@ final class SnapshotCatalog(
     * trimmed log FIRST (atomic rename), delete after — Iceberg's ordering: a
     * crash mid-delete leaves only orphans a re-run can sweep, never live log
     * entries pointing at deleted files. */
-  private def expireOldest(db: String, table: String,
+  private def expireOldest(st: TableState,
       keepOldest: Seq[SnapshotEntry] => Int): Int = {
-    val entries = entryMeta(db, table)
+    val (db, table, entries) = (st.db, st.table, st.entries)
     // an expire that kept ONLY a staged tail would leave a table with no
     // published state; resolve the pending audit first
-    requireNoPendingStage(db, table, entries)
+    st.requireNoPendingStage()
     val n = keepOldest(entries)
     if (n <= 0) return 0
     // named refs PROTECT their targets (Iceberg retention semantics for
@@ -7887,7 +7757,7 @@ final class SnapshotCatalog(
     // branch commits alone would otherwise leave the table stateless
     val protectedIds = tm.refs.values.toSet ++
       tm.branches.values.flatMap(h => branchChain(h, Set.empty) + h).toSet +
-      publishedEntry(entries).snapshotId
+      st.published.snapshotId
     val (expired, kept0) = {
       val (e, k) = entries.splitAt(n)
       val (rescued, reallyExpired) = e.partition(x => protectedIds(x.snapshotId))
@@ -7913,7 +7783,7 @@ final class SnapshotCatalog(
     val doomedShardFiles = doomedManifests
       .flatMap(loadManifest(db, table, _).files).distinct
     val doomedDirs = doomedShardFiles.map(_.split("/").take(2).mkString("/")).toSet
-    val sums = loadLog(db, table).summaries
+    val sums = st.summaries
     val overlappingKept =
       if (doomedDirs.isEmpty) Seq.empty // nothing doomed: nothing to subtract
       else keptManifests.toSeq.filter(n =>
@@ -7936,7 +7806,7 @@ final class SnapshotCatalog(
     // files — Iceberg-style ordering. A crash mid-delete leaves only harmless
     // orphan files a re-run can sweep; the reverse order would leave live log
     // entries pointing at deleted files (readAsOf -> FileNotFound).
-    writeEntries(db, table, kept)
+    writeEntries(st, kept)
     doomedManifests.foreach { name =>
       val p = manifestPath(db, table, name)
       SnapshotCatalog.manifestCache.remove(p.toAbsolutePath.normalize().toString)
@@ -7963,8 +7833,8 @@ final class SnapshotCatalog(
     * writer assumed (as documented on the commit protocol): do not run
     * concurrently with a write. Returns deleted data-file paths
     * (table-root-relative). */
-  def removeOrphanFiles(db: String, table: String): Seq[String] = withTableLock(db, table) {
-    val snaps = snapshotList(db, table)
+  def removeOrphanFiles(db: String, table: String): Seq[String] = withTableLock(db, table) { st =>
+    val snaps = st.entries.map(materialize(st, _))
     val root = tablePath(db, table)
     val deleted = Seq.newBuilder[String]
     // data/ and deletes/ follow the same sweep: a crashed MoR delete
@@ -8002,7 +7872,7 @@ final class SnapshotCatalog(
     // and its shard deletions) leaves m<id>.json / d<id>.json files no
     // entry references — each can be O(files) sized, and nothing else ever
     // reclaims them
-    val em = entryMeta(db, table)
+    val em = st.entries
     val referencedShards = (em.flatMap(_.manifests) ++ em.flatMap(_.deletes)).toSet
     val snapsDir = logPath(db, table).getParent
     withList(snapsDir)(_.filter { p =>
@@ -8028,21 +7898,29 @@ final class SnapshotCatalog(
   /** Serialize read-modify-write cycles on a table's log/meta: two
     * concurrent appenders both reading log tail N and both publishing a
     * log with snapshot N+1 would silently lose one commit — the publish
-    * is atomic, the cycle is not. The actual exclusion mechanism is the
+    * is atomic, the cycle is not. Each attempt of `body` gets ONE freshly
+    * loaded [[TableState]]: the body derives its commit from it and
+    * publishes under its etag, and a [[CasCommitMutex]] retry re-runs the
+    * body against a fresh load. COMMITS.md documents the protocol. */
+  private def withTableLock[T](db: String, table: String)(body: TableState => T): T =
+    lockTable(db, table)(body(loadTable(db, table)))
+
+  /** The mutual exclusion under [[withTableLock]], also taken alone by
+    * bodies that change only the table document (properties, spec,
+    * refs), never the pointer log. The actual mechanism is the
     * constructor-injected [[CommitMutex]] (default: OS file lock on
     * `_snapshots/LOCK` + JVM monitor); this method is the catalog's ONLY
     * call site, so an object-store deployment swaps the primitive —
-    * conditional-put CAS with retry — without touching a commit path.
-    * COMMITS.md documents the protocol and the mapping. */
-  private def withTableLock[T](db: String, table: String)(body: => T): T = {
+    * conditional-put CAS with retry — without touching a commit path. */
+  private def lockTable[T](db: String, table: String)(body: => T): T = {
     require(tableExists(db, table), s"no such table: $db.$table")
     val lockPath = tablePath(db, table).resolve("_snapshots").resolve("LOCK")
     // normalize: "wh" and "./wh" must map to ONE mutex key, or two catalog
     // instances would race each other (symlinked warehouse spellings
     // remain the caller's responsibility)
     val key = lockPath.toAbsolutePath.normalize().toString
-    // reentrant per thread: a compound op (delete = prune + commit) holds
-    // the lock across both, and the nested commit must not re-acquire
+    // reentrant per thread: a transaction holds every member table's lock
+    // across its stage and publish commits
     if (SnapshotCatalog.heldLocks.get().contains(key)) return body
     mutex.withLock(key, lockPath) {
       // re-check under the lock: a renameTable/dropTable that held it
@@ -8059,15 +7937,7 @@ final class SnapshotCatalog(
           s"table $db.$table was concurrently dropped or renamed")
       }
       SnapshotCatalog.heldLocks.get().add(key)
-      // fresh etag derivation per body ATTEMPT: this closure re-runs on a
-      // CasCommitMutex conflict retry, and the retry's top read must
-      // re-pin against the winner's log (a stale pin would conflict
-      // forever); see the pinning rule in loadLog
-      SnapshotCatalog.pinnedEtagKeys.get().remove(logKey(db, table))
-      try body finally {
-        SnapshotCatalog.heldLocks.get().remove(key)
-        SnapshotCatalog.pinnedEtagKeys.get().remove(logKey(db, table))
-      }
+      try body finally SnapshotCatalog.heldLocks.get().remove(key)
     }
   }
 
@@ -8129,29 +7999,56 @@ object SnapshotCatalog {
     * their distributed paths. */
   private[graft] val InlineKeyBound = 1024
 
-  /** The distinct rows of `frames` (one schema), while there are at most
-    * [[InlineKeyBound]] of them; `None` past the bound. Frames that plan to
-    * a `LocalRelation` collect with no Spark job. Otherwise the frames'
-    * union costs one job when `localOnly` is false (each task stops at
-    * `InlineKeyBound + 1` distinct rows, the driver merges them) and is
-    * `None` when it is true. Binary fields compare by content. */
-  private[catalog] def smallKeySet(frames: Seq[DataFrame], localOnly: Boolean): Option[Seq[Row]] = {
-    val local = frames.forall(_.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-    val parts: Seq[Iterable[Row]] =
-      if (local) frames.map(_.collect().toSeq)
-      else if (localOnly) return None
-      else {
-        val bound = InlineKeyBound
-        frames.reduce(_.unionByName(_)).rdd.mapPartitions { rows =>
-          val seen = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Row]
-          while (rows.hasNext && seen.size <= bound) {
-            val r = rows.next(); seen.getOrElseUpdate(keyOf(r), r)
-          }
-          Iterator.single(seen.values.toArray)
-        }.collect().toSeq.map(_.toSeq)
-      }
-    val all = parts.iterator.flatten.distinctBy(keyOf).take(InlineKeyBound + 1).toSeq
-    if (all.sizeIs > InlineKeyBound) None else Some(all)
+  /** The distinct rows of `keys` while it plans to a `LocalRelation` and
+    * holds at most [[InlineKeyBound]] of them, collected with no Spark
+    * job; `None` otherwise. Binary fields compare by content. */
+  private[catalog] def smallKeySet(keys: DataFrame): Option[Seq[Row]] =
+    if (!keys.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) None
+    else {
+      val all = keys.collect().iterator.distinctBy(keyOf).take(InlineKeyBound + 1).toSeq
+      Option.when(all.sizeIs <= InlineKeyBound)(all)
+    }
+
+  /** What one pass over a single-column key set learned: its distinct
+    * `values` while they number at most [[InlineKeyBound]] (`None` past
+    * it), the least and greatest non-null key, and whether a null key is
+    * present. */
+  private[catalog] final case class KeyProbe(values: Option[Seq[Any]],
+      range: Option[(Any, Any)], hasNull: Boolean)
+
+  /** [[KeyProbe]] of the union of `frames` (one key column of type `dt`,
+    * an [[inlineMatchable]] type). Frames that plan to a `LocalRelation`
+    * collect with no Spark job; otherwise one job: each task keeps up to
+    * `InlineKeyBound + 1` distinct keys and folds its own range and null
+    * flag, and the driver merges them. */
+  private[catalog] def probeKeys(frames: Seq[DataFrame],
+      dt: org.apache.spark.sql.types.DataType): KeyProbe = {
+    val bound = InlineKeyBound
+    def ends(r: Option[(Any, Any)]): Seq[Any] = r.toSeq.flatMap(p => Seq(p._1, p._2))
+    val parts: Seq[(Array[Any], Option[(Any, Any)], Boolean)] =
+      if (frames.forall(_.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]))
+        frames.map { f =>
+          val vs = f.collect().map(_.get(0))
+          (vs.distinct.take(bound + 1), keyRange(dt, vs.toSeq), vs.contains(null))
+        }
+      else frames.reduce(_.unionByName(_)).rdd.mapPartitions { rows =>
+        val seen = scala.collection.mutable.LinkedHashSet.empty[Any]
+        val chunk = scala.collection.mutable.ArrayBuffer.empty[Any]
+        var range = Option.empty[(Any, Any)]
+        var hasNull = false
+        def fold(): Unit = { range = keyRange(dt, chunk.toSeq ++ ends(range)); chunk.clear() }
+        rows.foreach { r =>
+          val v = r.get(0)
+          if (v == null) hasNull = true
+          else { chunk += v; if (chunk.size >= 4096) fold() }
+          if (seen.size <= bound) seen += v
+        }
+        fold()
+        Iterator.single((seen.toArray, range, hasNull))
+      }.collect().toSeq
+    val values = parts.iterator.flatMap(_._1).distinct.take(bound + 1).toSeq
+    KeyProbe(Option.when(values.sizeIs <= bound)(values),
+      keyRange(dt, parts.flatMap(p => ends(p._2))), parts.exists(_._3))
   }
 
   private def keyOf(r: Row): Seq[Any] = r.toSeq.map {
@@ -8196,22 +8093,13 @@ object SnapshotCatalog {
   /** Value column of a DISTINCT-aggregate copy-count sidecar. */
   private[graft] val MvDvValue = "__mv_v"
 
-  /** The pointer log (`format_version` 2, the sharded format described in
-    * the class doc): pointer entries plus the table-level
-    * `shard_summaries` map (one [[ShardSummary]] per live shard NAME —
-    * stored once at log level, not per entry, so shard reuse across
-    * entries costs nothing). Absent summaries (older logs) simply never
-    * skip. */
-  private final case class PointerLog(entries: Seq[SnapshotEntry],
-      summaries: Map[String, ShardSummary] = Map.empty)
-
   /** Planning instrumentation: total [[loadManifest]] calls ("opens") and
     * cache-miss JSON parses — the two-level planner's spec gates assert a
     * pinned-partition plan opens only the matching shards. Test-visible,
     * never consulted by product logic. */
   private[graft] val manifestOpens = new java.util.concurrent.atomic.AtomicLong
-  /** Pointer-log reads ([[loadLog]] calls), JVM-wide: the stream-drain
-    * gate asserts they stay flat in the number of commits drained. */
+  /** Pointer-log reads ([[SnapshotCatalog.loadTable]] calls), JVM-wide:
+    * the spec gates count the reads one operation makes. */
   private[graft] val logReads = new java.util.concurrent.atomic.AtomicLong
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
   /** Drop the JVM-wide parse cache (spec-only): cold-cache parse counts
@@ -8225,23 +8113,6 @@ object SnapshotCatalog {
 
   /** Lock paths held by the current thread (reentrancy). */
   private val heldLocks: ThreadLocal[java.util.HashSet[String]] =
-    ThreadLocal.withInitial(() => new java.util.HashSet[String]())
-
-  /** Per-thread pointer-log etags, keyed by log key: the etag the thread's
-    * last read of that log observed, presented by the next [[PointerLogStore
-    * .writeIf]] as its If-Match precondition. Thread-local because a commit
-    * body is single-threaded and re-reads state at its top — "my last read"
-    * is exactly "the state my commit derives from". */
-  private val observedLogEtag: ThreadLocal[java.util.HashMap[String, java.lang.Long]] =
-    ThreadLocal.withInitial(() => new java.util.HashMap[String, java.lang.Long]())
-
-  /** Log keys whose observed etag is PINNED for the duration of the
-    * current commit-body attempt (see loadLog): the first in-body read
-    * pins; mid-body refreshes must not advance the etag past a racer's
-    * publish, or the If-Match precondition would mask a lost update.
-    * Cleared per body attempt by withTableLock (so CAS retries re-pin
-    * against the winner's log). */
-  private val pinnedEtagKeys: ThreadLocal[java.util.HashSet[String]] =
     ThreadLocal.withInitial(() => new java.util.HashSet[String]())
 
   /** JVM-wide parsed-manifest LRU, keyed by absolute shard path. Sound

@@ -16,7 +16,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.catalog.{CommitKind, SchemaEvolve, Snapshot, SnapshotCatalog, SnapshotEntry, TableMeta}
+import graft.catalog.{CommitKind, SchemaEvolve, Snapshot, SnapshotCatalog, SnapshotEntry, TableMeta, TableState}
 
 /** Spark V2 `TableCatalog` over [[graft.catalog.SnapshotCatalog]] — gives
   * the engine the reference's exact SQL operating surface without an
@@ -177,7 +177,9 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
   private var warehouse: String = _
 
   private def spark: SparkSession = SparkSession.active
-  private def cat: SnapshotCatalog = new SnapshotCatalog(spark, warehouse)
+  // one catalog per plugin instance: it holds no table state, every
+  // operation loads what it reads
+  private lazy val cat: SnapshotCatalog = new SnapshotCatalog(spark, warehouse)
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -505,7 +507,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     * are exposed so SQL `DESCRIBE TABLE EXTENDED` shows the partitioning /
     * provider / location rows the reference string-parses
     * (`2_collect_database_schema_info.py:186-214`). */
-  private final class SnapTable(tableName: String, entry: SnapshotEntry,
+  private final class SnapTable(tableName: String, st: TableState, entry: SnapshotEntry,
       tableMeta: TableMeta, db: String, table: String,
       branch: Option[String] = None)
       extends Table with SupportsRead
@@ -523,7 +525,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       * two-level planner exists to avoid). Forced only by paths that
       * genuinely consume the inventory (metadata-served aggregates, DML
       * rewrites, unpruned scans). */
-    private lazy val snap: Snapshot = cat.snapshotAt(db, table, entry.snapshotId)
+    private lazy val snap: Snapshot = cat.materialize(st, entry)
 
     /** Live delete-file entries — KB-sized pointer metadata, never forces
       * the data inventory. */
@@ -583,7 +585,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       * override, or this table's own. */
     private def morSnap(snapshotId: Option[Long]): Snapshot =
       snapshotId.filter(_ != entry.snapshotId)
-        .map(cat.snapshotAt(db, table, _)).getOrElse(snap)
+        .map(id => cat.materialize(st, st.entryAt(id))).getOrElse(snap)
 
     /** Can the V2 scan itself merge this snapshot's deletes (reader-level,
       * [[MorScanMerge]])? Bucketed tables: the in-scan merge keeps
@@ -599,7 +601,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       * must not parse its manifests here). */
     override def morHasDeletes(snapshotId: Option[Long]): Boolean = {
       val e = snapshotId.filter(_ != entry.snapshotId)
-        .map(cat.entryAt(db, table, _)).getOrElse(entry)
+        .map(st.entryAt).getOrElse(entry)
       val dels = cat.entryDeleteFiles(db, table, e)
       dels.nonEmpty && !scanMergesDeletes(dels)
     }
@@ -720,7 +722,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
                   Map.empty[String, Map[String, String]], Seq.empty[String],
                   None)
                 case Some(c) =>
-                  val res = cat.resolveWhere(db, table, entry.snapshotId, c)
+                  val res = cat.resolveWhere(st, entry.snapshotId, c)
                   val keptSet = res.kept.toSet
                   (res.snap.files.filterNot(keptSet), res.snap.fileStats,
                     entry.manifests.filterNot(res.openedNames.toSet),
@@ -737,7 +739,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
                 // scanned FLAT — no basePath means the __bucket=b layout
                 // dirs resolve to nothing and the scan emits exactly the
                 // visible columns; the write side re-derives the layout
-                // ([[SnapshotCatalog.relayoutBucketed]])
+                // ([[SnapshotCatalog.relayoutLaid]])
                 val entrySchema = entry.schema
                 val scanSchema =
                   if (laidHidden) StructType(entrySchema.fields.filterNot(f =>
@@ -1114,9 +1116,8 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         private def innerFor(preds: Seq[Expression]): ScanBuilder = {
           if (inner == null) {
             val part =
-              try cat.resolveScanShards(db, table, entry.snapshotId, preds)
-              catch { case scala.util.control.NonFatal(_) =>
-                cat.snapshotAt(db, table, entry.snapshotId) }
+              try cat.resolveScanShards(st, entry.snapshotId, preds)
+              catch { case scala.util.control.NonFatal(_) => snap }
             inner = scanBuilderOver(part, options)
           }
           inner
@@ -1165,13 +1166,12 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
             val part = try {
               (pendingLimit, pendingTopN) match {
                 case (Some(n), _) =>
-                  cat.resolveScanLimitShards(db, table, entry.snapshotId, n)
+                  cat.resolveScanLimitShards(st, entry.snapshotId, n)
                 case (_, Some((cols, n))) =>
-                  cat.resolveScanTopNShards(db, table, entry.snapshotId, cols, n)
-                case _ => cat.resolveScanShards(db, table, entry.snapshotId, Nil)
+                  cat.resolveScanTopNShards(st, entry.snapshotId, cols, n)
+                case _ => cat.resolveScanShards(st, entry.snapshotId, Nil)
               }
-            } catch { case scala.util.control.NonFatal(_) =>
-              cat.snapshotAt(db, table, entry.snapshotId) }
+            } catch { case scala.util.control.NonFatal(_) => snap }
             val partial = pendingLimit.isDefined || pendingTopN.isDefined
             inner = scanBuilderOver(part, options, fullInventory = !partial)
             // replay the deferred pushdowns so the FILE tier prunes
@@ -1431,7 +1431,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
             case _: NumberFormatException => throw new IllegalArgumentException(
               s"snapshot-id option must be numeric, got '$v'")
           }
-          snapshotTable(Identifier.of(Array(db), table), cat.entryAt(db, table, snapId))
+          snapshotTable(Identifier.of(Array(db), table), st, st.entryAt(snapId))
             .asInstanceOf[SnapTable].lazyScan(options)
         case None => lazyScan(options)
       }
@@ -1492,14 +1492,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     * the snapshot a resumed checkpoint's high-water points at, and the
     * raw not-found error gives an operator nothing to act on. The message
     * names the earliest retained snapshot and both recovery paths. */
-  private def resolveStreamStart(db: String, table: String, id: Long,
+  private def resolveStreamStart(st: TableState, id: Long,
       what: String): SnapshotEntry =
-    try cat.entryAt(db, table, id)
+    try st.entryAt(id)
     catch {
       case _: NoSuchElementException =>
-        val retained = cat.entryLog(db, table).map(_.snapshotId)
+        val retained = st.entries.map(_.snapshotId)
         throw new IllegalStateException(
-          s"$what of $db.$table: checkpointed offset points at snapshot $id, " +
+          s"$what of ${st.db}.${st.table}: checkpointed offset points at snapshot $id, " +
             s"which has been EXPIRED (earliest retained: " +
             s"${retained.headOption.getOrElse(-1L)}, current head: " +
             s"${retained.lastOption.getOrElse(-1L)}). Restart the stream " +
@@ -1552,7 +1552,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
           // must name a real log entry: a typo'd future id would otherwise
           // make the tail silently empty forever (latest < start) —
           // existence check from the pointer log alone
-          require(cat.entryLog(db, table).exists(_.snapshotId == id),
+          require(cat.loadTable(db, table).entries.exists(_.snapshotId == id),
             s"no snapshot $id in $db.$table")
           id
       })
@@ -1581,12 +1581,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         k
       }
     override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-      val head = availableNowCap.fold(currentId)(c => math.min(currentId, c))
+      val st = cat.loadTable(db, table)
+      val cur = st.published.snapshotId
+      val head = availableNowCap.fold(cur)(c => math.min(cur, c))
       maxCommitsPerTrigger match {
         case None => SnapOffset(head)
         case Some(k) =>
           val s = start.asInstanceOf[SnapOffset].id
-          val inRange = cat.mainLineage(db, table)
+          val inRange = st.mainLineage
             .filter(e => e.snapshotId > s && e.snapshotId <= head)
           if (inRange.isEmpty) SnapOffset(math.max(s, head))
           else SnapOffset(inRange.take(k).last.snapshotId)
@@ -1638,8 +1640,9 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       // an in-range compact that swallowed emitted appends (frozen
       // coverage cannot see it). A pure-append trigger parses only its
       // commits' own manifest shards, never the inventory.
-      val (added, deletes) = cat.appendDelta(cat.commitRange(db, table,
-        resolveStreamStart(db, table, s, "streaming read"), e)).fold(
+      val st = cat.loadTable(db, table)
+      val (added, deletes) = cat.appendDelta(cat.commitRange(st,
+        resolveStreamStart(st, s, "streaming read"), e)).fold(
         why => throw new IllegalStateException(
           s"streaming read of $db.$table ($s, $e]: $why; restart the stream " +
             "from the current snapshot (or consume the batch db.t.changes " +
@@ -1648,7 +1651,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       def covFor(rel: String): Seq[graft.catalog.DeleteFile] =
         deletes.filter(_.covers.contains(rel))
       val coveredRel = added.filter(f => covFor(f).nonEmpty).toSet
-      lazy val schema = tableSchema.getOrElse(cat.entryLog(db, table).last.schema)
+      lazy val schema = tableSchema.getOrElse(st.entries.last.schema)
       val root = java.nio.file.Paths.get(warehouse, db, table)
       val rootPrefix = root.toString + java.io.File.separator
       // PARTITIONED tables: each appended snapshot dir is hive-laid, so the
@@ -1732,7 +1735,7 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
         case Some(v) =>
           val id = v.toLongOption.getOrElse(throw new IllegalArgumentException(
             s"starting-snapshot-id must be numeric, got '$v'"))
-          require(cat.entryLog(db, table).exists(_.snapshotId == id),
+          require(cat.loadTable(db, table).entries.exists(_.snapshotId == id),
             s"no snapshot $id in $db.$table")
           id
       })
@@ -1761,9 +1764,10 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       }.getOrElse(1)
     override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
       val s = start.asInstanceOf[ChgOffset].id
-      val trueHead = cat.currentSnapshotId(db, table)
+      val st = cat.loadTable(db, table)
+      val trueHead = st.published.snapshotId
       val head = availableNowCap.fold(trueHead)(c => math.min(trueHead, c))
-      val inRange = cat.mainLineage(db, table)
+      val inRange = st.mainLineage
         .filter(e => e.snapshotId > s && e.snapshotId <= head)
       if (inRange.isEmpty) start
       else ChgOffset(inRange.take(maxCommitsPerTrigger).last.snapshotId)
@@ -1804,7 +1808,8 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
             new CaseInsensitiveStringMap((if (partitioned) Map("basePath" -> root.resolve(dir).toString)
               else Map.empty[String, String]).asJava) -> fs.map(f => root.resolve(f).toString)
           }, visibleSchema, Nil, out, out, rootPrefix, of, Some(tag)).planInputPartitions().toSeq
-      cat.commitRange(db, table, resolveStreamStart(db, table, s, "changes stream"), e)
+      val st = cat.loadTable(db, table)
+      cat.commitRange(st, resolveStreamStart(st, s, "changes stream"), e)
         .flatMap { st =>
           st.kind match {
             case CommitKind.NotEnumerable(why) =>
@@ -1903,10 +1908,10 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
     }
   }
 
-  private def snapshotTable(ident: Identifier, entry: SnapshotEntry): Table = {
+  private def snapshotTable(ident: Identifier, st: TableState, entry: SnapshotEntry): Table = {
     val db = ident.namespace().head
     val table = ident.name()
-    new SnapTable(s"$catalogName.$db.$table", entry, cat.meta(db, table), db, table)
+    new SnapTable(s"$catalogName.$db.$table", st, entry, cat.meta(db, table), db, table)
   }
 
   /** The `<table>.snapshots` metadata relation the reference scans
@@ -2074,8 +2079,9 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
           case "all_files" =>
             val refs = scala.collection.mutable.LinkedHashMap
               .empty[(String, String), (Option[Long], Long, Long, Long)]
-            cat.entryLog(db, table).foreach { e =>
-              val snap = cat.snapshotAt(db, table, e.snapshotId)
+            val st = cat.loadTable(db, table)
+            st.entries.foreach { e =>
+              val snap = cat.materialize(st, e)
               val files =
                 snap.files.map { f => (f, "data",
                   snap.fileStats.getOrElse(f, Map.empty)
@@ -2159,9 +2165,9 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
     override def changelogPlan(fromId: Option[Long],
         toId: Option[Long]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-      val from = fromId.getOrElse(cat.entryLog(db, table).head.snapshotId)
-      val to = toId.getOrElse(cat.currentSnapshotId(db, table))
-      val diff = cat.readChangelog(db, table, from, to)
+      val st = cat.loadTable(db, table)
+      val diff = cat.changelogAt(st, fromId.getOrElse(st.entries.head.snapshotId),
+        toId.getOrElse(st.published.snapshotId))
       // bucketed tables hide the derived __bucket layout column from SQL
       val visible = diff.select(tableSchema.fieldNames.map(n =>
         org.apache.spark.sql.functions.col(s"`$n`")).toIndexedSeq: _*)
@@ -2266,12 +2272,14 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
       val name = ident.name().stripPrefix("branch_")
       val headId = cat.resolveBranch(db, table, name).getOrElse(
         throw new NoSuchTableException(ident))
+      val st = cat.loadTable(db, table)
       return new SnapTable(s"$catalogName.$db.$table.branch_$name",
-        cat.entryAt(db, table, headId), cat.meta(db, table), db, table,
+        st, st.entryAt(headId), cat.meta(db, table), db, table,
         branch = Some(name))
     }
     checkExists(ident)
-    snapshotTable(ident, cat.currentEntry(ident.namespace().head, ident.name()))
+    val st = cat.loadTable(ident.namespace().head, ident.name())
+    snapshotTable(ident, st, st.published)
   }
 
   /** VERSION AS OF <snapshotId | 'tag' | 'branch'>
@@ -2291,19 +2299,20 @@ class SnapCatalogPlugin extends TableCatalog with SupportsNamespaces
           cat.meta(db, table).refs.keys.toSeq.sorted.mkString(",") +
           "; branches: " +
           cat.meta(db, table).branches.keys.toSeq.sorted.mkString(",") + ")"))
-    snapshotTable(ident, cat.entryAt(db, table, snapId))
+    val st = cat.loadTable(db, table)
+    snapshotTable(ident, st, st.entryAt(snapId))
   }
 
   /** TIMESTAMP AS OF — micros since epoch (Spark converts literals). */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     checkExists(ident)
     val ts = java.time.Instant.EPOCH.plusNanos(timestamp * 1000L)
-    val db = ident.namespace().head
-    val e = cat.entryLog(db, ident.name())
+    val st = cat.loadTable(ident.namespace().head, ident.name())
+    val e = st.entries
       .filter(s => !java.time.Instant.parse(s.committedAt).isAfter(ts))
       .maxByOption(_.snapshotId)
       .getOrElse(throw new NoSuchTableException(ident))
-    snapshotTable(ident, e)
+    snapshotTable(ident, st, e)
   }
 
   private def checkExists(ident: Identifier): Unit = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.catalog.SnapshotCatalog
+import graft.catalog.{SnapshotCatalog, TableState}
 import graft.functions.OnePass
 
 /** ONE MAINTAINER FOR THE PERSISTENT INDEXES — [[TextIndex]] (BM25
@@ -139,8 +139,11 @@ object IndexMaintainer {
     val p = cat.meta(db, name).properties
     val pin = p(pinKey).toLong
     if (target == pin) return ("fresh", 0L)
+    // the base's pointer log is read once: the range walk and every base
+    // read of the refresh derive from this state
+    val baseSt = cat.loadTable(baseDb, baseTable)
     val sets =
-      try cat.changeSetsAcrossRange(baseDb, baseTable, pin, target)
+      try cat.changeSetsAcrossRange(baseSt, pin, target)
       catch { case NonFatal(_) => None }
     val (mode, props) = sets match {
       case Some((ins, del)) =>
@@ -155,7 +158,7 @@ object IndexMaintainer {
           if (m(NDel) == 0) {
             if (m(NIns) > 0) cat.append(db, name, derive(churn.drop(Sign)))
           } else {
-            val (keys, rows) = touched(cat, kind, churn, m(NDel) + m(NIns), target)
+            val (keys, rows) = touched(cat, kind, baseSt, churn, m(NDel) + m(NIns), target)
             try {
               cat.deleteMoREq(db, name, keys)
               val found = Observation()
@@ -169,7 +172,7 @@ object IndexMaintainer {
           ("incremental", counters.keys.map(k => k -> (p(k).toLong + m(k))).toMap)
         } finally SnapshotCatalog.releaseCheckpoint(churn)
       case None =>
-        val base = project(cat.readAsOf(baseDb, baseTable, target))
+        val base = project(cat.readAt(baseSt, baseSt.entryAt(target)))
         val (obs, aggs) = (Observation(), counterSums(kind, lit(1L)))
         cat.overwrite(db, name, derive(
           if (aggs.isEmpty) base else base.observe(obs, aggs.head, aggs.tail: _*)))
@@ -190,18 +193,18 @@ object IndexMaintainer {
     * the checkpoint): the key frame is local and the base read prunes
     * files on an inline IN. Above it, both stay distributed: a distinct
     * checkpoint and a semi-join. */
-  private def touched(cat: SnapshotCatalog, kind: Kind, churn: DataFrame,
-      churned: Long, target: Long): (DataFrame, DataFrame) = {
+  private def touched(cat: SnapshotCatalog, kind: Kind, baseSt: TableState,
+      churn: DataFrame, churned: Long, target: Long): (DataFrame, DataFrame) = {
     import kind._
     if (churned <= maxInline(cat)) {
       val ids = churn.select(col(idCol)).collect().map(_.get(0)).filter(_ != null).distinct
       val keys = cat.spark.createDataFrame(ids.toSeq.map(Row(_)).asJava,
         StructType(Seq(churn.schema(idCol))))
-      (keys, cat.readWhere(baseDb, baseTable, target,
-        if (ids.isEmpty) lit(false) else col(idCol).isin(ids.toIndexedSeq: _*)))
+      val pred = if (ids.isEmpty) lit(false) else col(idCol).isin(ids.toIndexedSeq: _*)
+      (keys, cat.readPruned(baseSt, target, pred).where(pred))
     } else {
       val keys = churn.select(col(idCol)).distinct().localCheckpoint()
-      (keys, cat.readAsOf(baseDb, baseTable, target).join(keys, Seq(idCol), "left_semi"))
+      (keys, cat.readAt(baseSt, baseSt.entryAt(target)).join(keys, Seq(idCol), "left_semi"))
     }
   }
 

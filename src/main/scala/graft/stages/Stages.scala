@@ -95,8 +95,10 @@ object SchemaCapture {
   def captureTable(cat: SnapshotCatalog, db: String, table: String,
       snapshotId: Long): Option[TableInfo] =
     Try {
-      val snap = cat.snapshotAt(db, table, snapshotId)
+      val st = cat.loadTable(db, table)
+      val snap = cat.materialize(st, st.entryAt(snapshotId))
       val meta = cat.meta(db, table)
+      val location = java.nio.file.Paths.get(cat.warehouse, db, table)
       val schema = snap.schema
       val columns = schema.fields.toSeq.map(f => ColumnInfo(f.name, f.dataType.sql))
       val partCols = meta.partitionCols.map { p =>
@@ -107,9 +109,9 @@ object SchemaCapture {
         tableName = table,
         columns = columns,
         partitionCols = partCols,
-        location = java.nio.file.Paths.get(cat.warehouse, db, table).toString,
+        location = location.toString,
         properties = meta.properties + ("Provider" -> "snapcat"),
-        files = cat.files(db, table, snapshotId),
+        files = snap.files.map(f => location.resolve(f).toString),
         snapshotId = snapshotId)
     } match {
       case Success(info) => Some(info)
@@ -219,11 +221,10 @@ object Migrator {
   def migrateOne(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo): MigrationResult = {
     val t0 = System.currentTimeMillis() / 1000.0
     Try {
-      val snapExists = src.snapshotList(info.database, info.tableName)
-        .exists(_.snapshotId == info.snapshotId)
-      if (!snapExists)
-        throw new NoSuchElementException(s"Cannot find snapshot with ID ${info.snapshotId}")
-      val df = src.readAsOf(info.database, info.tableName, info.snapshotId)
+      val st = src.loadTable(info.database, info.tableName)
+      val entry = st.entries.find(_.snapshotId == info.snapshotId).getOrElse(
+        throw new NoSuchElementException(s"Cannot find snapshot with ID ${info.snapshotId}"))
+      val df = src.readAt(st, entry)
       if (!dst.tableExists(info.database, info.tableName)) {
         // saveAsTable-like behavior: create on demand (`5:80-83` note in SURVEY §3 E3)
         dst.createTable(info.database, info.tableName, df.schema,
@@ -312,13 +313,14 @@ object IntegrityVerifier {
 
   def verifyOne(src: SnapshotCatalog, dst: SnapshotCatalog, info: TableInfo): DataVerificationResult = {
     val t0 = System.currentTimeMillis() / 1000.0
-    val targetId = Try(dst.currentSnapshotId(info.database, info.tableName))
-    val recorded = targetId.toOption.flatMap(SourceDigest.recorded(src, dst, info, _))
+    val target = Try(dst.loadTable(info.database, info.tableName))
+    val recorded = target.toOption
+      .flatMap(st => SourceDigest.recorded(src, dst, info, st.published.snapshotId))
     val sourceDigest = if (recorded.isDefined) "recorded" else "scanned"
     Try {
       val srcDigest = recorded.getOrElse(
         Fingerprint.digest(src.readAsOf(info.database, info.tableName, info.snapshotId)))
-      val dstDigest = Fingerprint.digest(dst.readAsOf(info.database, info.tableName, targetId.get))
+      val dstDigest = Fingerprint.digest(dst.readAt(target.get, target.get.published))
       (srcDigest, dstDigest)
     } match {
       case Success((s, d)) =>

@@ -5,7 +5,7 @@ import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{CasCommitMutex, CommitConflictException, InMemoryObjectStore, ObjectStorePointerLogStore, SnapshotCatalog}
+import graft.catalog.{CasCommitMutex, CommitConflictException, InMemoryObjectStore, ObjectStorePointerLogStore, Snapshot, SnapshotCatalog}
 
 /** The object-store commit loop (COMMITS.md §"Object-store mapping")
   * exercised end-to-end against the in-memory conditional-put store:
@@ -221,62 +221,65 @@ class CasCommitSpec extends AnyFunSuite {
   }
 
   test("catalog-level: a racer landing between a MoR body's two log reads is never lost") {
-    // The lost-update shape: deleteMoR reads the log at its top
-    // (entriesForWrite), then AGAIN mid-body (pruneFiles -> snapshotAt).
-    // If a racer publishes between the two reads, last-read-wins etag
-    // bookkeeping would adopt the racer's etag, the victim's If-Match
-    // would pass, and the entries list (computed WITHOUT the racer's
-    // commit) would silently drop the racer's snapshot. The pinned-etag
-    // rule must instead force a conflict + clean whole-body retry.
+    // The lost-update shape: a commit body derives its entries list from
+    // the table state it loaded, then publishes it. If a racer publishes
+    // between the load and the publish, the entries list (computed WITHOUT
+    // the racer's commit) would silently drop the racer's snapshot unless
+    // the publish's If-Match precondition is the LOADED state's etag —
+    // which must force a conflict + clean whole-body retry. Two victims:
+    // the MoR delete, and the compound CoW delete (prune, then the nested
+    // commit of the rewrite).
     val spark = TestSpark.spark
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_caswh4_").toString
-    val store = new InMemoryObjectStore
-    val inner = new ObjectStorePointerLogStore(store)
-    val armed = new java.util.concurrent.atomic.AtomicInteger(0) // reads remaining until injection
-    @volatile var racerErr: Option[Throwable] = None
-    val interposing = new graft.catalog.PointerLogStore {
-      override def delete(key: String): Unit = inner.delete(key)
-      override def conditional: Boolean = true
-      override def writeIf(key: String, content: String, expected: Option[Long]): Long =
-        inner.writeIf(key, content, expected)
-      override def read(key: String) = {
-        // one-shot: on the Nth read after arming (the victim body's
-        // MID-BODY refresh), let a racer publish FIRST, then serve the
-        // racer's log + etag — exactly the interleaving of a real race
-        if (key.endsWith("log.json") && armed.get() > 0 && armed.decrementAndGet() == 0) {
-          val racer = new Thread(() => {
-            try {
-              val cat = new SnapshotCatalog(spark, wh,
-                mutex = new CasCommitMutex, log = inner)
-              cat.append("db", "t", Seq((100L, "racer")).toDF("id", "v"))
-            } catch { case t: Throwable => racerErr = Some(t) }
-          })
-          racer.start(); racer.join()
+    def raceVictim(victimOp: SnapshotCatalog => Snapshot): Unit = {
+      val wh = java.nio.file.Files.createTempDirectory("graft_caswh4_").toString
+      val store = new InMemoryObjectStore
+      val inner = new ObjectStorePointerLogStore(store)
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      @volatile var racerErr: Option[Throwable] = None
+      val interposing = new graft.catalog.PointerLogStore {
+        override def delete(key: String): Unit = inner.delete(key)
+        override def conditional: Boolean = true
+        override def read(key: String) = inner.read(key)
+        override def writeIf(key: String, content: String, expected: Option[Long]): Long = {
+          // one-shot: at the victim's first conditional put after arming
+          // (its publish), let a racer publish FIRST — the racer lands
+          // between the victim body's state load and its publish, exactly
+          // the interleaving of a real race
+          if (key.endsWith("log.json") && armed.compareAndSet(true, false)) {
+            val racer = new Thread(() => {
+              try {
+                val cat = new SnapshotCatalog(spark, wh,
+                  mutex = new CasCommitMutex, log = inner)
+                cat.append("db", "t", Seq((100L, "racer")).toDF("id", "v"))
+              } catch { case t: Throwable => racerErr = Some(t) }
+            })
+            racer.start(); racer.join()
+          }
+          inner.writeIf(key, content, expected)
         }
-        inner.read(key)
       }
+      val victim = new SnapshotCatalog(spark, wh,
+        mutex = new CasCommitMutex, log = interposing)
+      victim.createNamespace("db")
+      victim.createTable("db", "t", Seq((1L, "x")).toDF("id", "v").schema)
+      victim.append("db", "t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+      armed.set(true)
+      victimOp(victim)
+      assert(racerErr.isEmpty, s"racer failed: $racerErr")
+      // the victim's first attempt must have LOST the conditional put
+      assert(store.conflicts >= 1, s"expected the victim to conflict, got ${store.conflicts}")
+      // nothing lost: racer's row present, victim's delete applied, and the
+      // racer's snapshot is in the lineage (create=1, append=2, racer=3, delete=4)
+      val clean = new SnapshotCatalog(spark, wh,
+        mutex = new CasCommitMutex, log = inner)
+      val rows = clean.readLatest("db", "t").select("id").as[Long].collect().sorted.toSeq
+      assert(rows == Seq(2L, 100L), s"lost update: $rows")
+      assert(clean.currentSnapshot("db", "t").snapshotId == 4L)
+      assert(clean.entryLog("db", "t").map(_.snapshotId) == Seq(1L, 2L, 3L, 4L))
     }
-    val victim = new SnapshotCatalog(spark, wh,
-      mutex = new CasCommitMutex, log = interposing)
-    victim.createNamespace("db")
-    victim.createTable("db", "t", Seq((1L, "x")).toDF("id", "v").schema)
-    victim.append("db", "t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    // victim body's read #1 = entriesForWrite (top), read #2 = pruneFiles
-    // -> snapshotAt — inject the racer at read #2
-    armed.set(2)
-    victim.deleteMoR("db", "t", org.apache.spark.sql.functions.col("id") === 1)
-    assert(racerErr.isEmpty, s"racer failed: $racerErr")
-    // the victim's first attempt must have LOST the conditional put
-    assert(store.conflicts >= 1, s"expected the victim to conflict, got ${store.conflicts}")
-    // nothing lost: racer's row present, victim's delete applied, and the
-    // racer's snapshot is in the lineage (create=1, append=2, racer=3, delete=4)
-    val clean = new SnapshotCatalog(spark, wh,
-      mutex = new CasCommitMutex, log = inner)
-    val rows = clean.readLatest("db", "t").select("id").as[Long].collect().sorted.toSeq
-    assert(rows == Seq(2L, 100L), s"lost update: $rows")
-    assert(clean.currentSnapshot("db", "t").snapshotId == 4L)
-    assert(clean.entryLog("db", "t").map(_.snapshotId) == Seq(1L, 2L, 3L, 4L))
+    raceVictim(_.deleteMoR("db", "t", org.apache.spark.sql.functions.col("id") === 1))
+    raceVictim(_.delete("db", "t", org.apache.spark.sql.functions.col("id") === 1))
   }
 
   test("catalog-level: crash between data write and log publish leaves orphans only") {

@@ -40,7 +40,7 @@ class ManifestPruneSpec extends AnyFunSuite {
         (i * 100 until i * 100 + 50).map(j => (j.toLong, s"n$j")).toDF("id", "name"))
     }
     val cur = cat.currentSnapshotId("db", "t")
-    val r = cat.resolveWhere("db", "t", cur, col("id") === 240L)
+    val r = cat.resolveWhere(cat.loadTable("db", "t"), cur, col("id") === 240L)
     assert(r.shardsTotal == 10, s"expected 10 shards, got ${r.shardsTotal}")
     assert(r.shardsOpened == 1, s"expected 1 opened shard, got ${r.shardsOpened}")
     assert(r.kept.nonEmpty)
@@ -49,7 +49,7 @@ class ManifestPruneSpec extends AnyFunSuite {
     // never parsed (this is the driver-cost claim, not just bookkeeping)
     SnapshotCatalog.clearManifestCacheForTest()
     val p0 = SnapshotCatalog.manifestParses.get()
-    val r2 = cat.resolveWhere("db", "t", cur, col("id") === 240L)
+    val r2 = cat.resolveWhere(cat.loadTable("db", "t"), cur, col("id") === 240L)
     val parsed = SnapshotCatalog.manifestParses.get() - p0
     assert(r2.shardsOpened == 1 && parsed == 1,
       s"cold plan parsed $parsed shards (expected 1)")
@@ -60,11 +60,11 @@ class ManifestPruneSpec extends AnyFunSuite {
     assert(got == Seq((240L, "n240")))
 
     // a predicate spanning two ranges opens exactly those two shards
-    val r3 = cat.resolveWhere("db", "t", cur,
+    val r3 = cat.resolveWhere(cat.loadTable("db", "t"), cur,
       col("id").isin(40L, 440L))
     assert(r3.shardsOpened == 2, s"got ${r3.shardsOpened}")
     // an unmatched predicate opens nothing
-    val r4 = cat.resolveWhere("db", "t", cur, col("id") === 99999L)
+    val r4 = cat.resolveWhere(cat.loadTable("db", "t"), cur, col("id") === 99999L)
     assert(r4.shardsOpened == 0 && r4.kept.isEmpty)
   }
 
@@ -77,14 +77,14 @@ class ManifestPruneSpec extends AnyFunSuite {
         (i.toLong, f"2024-01-$d%02d", i * 1.5)).toDF("id", "day", "v"))
     }
     val cur = cat.currentSnapshotId("db", "p")
-    val r = cat.resolveWhere("db", "p", cur, col("day") === "2024-01-05")
+    val r = cat.resolveWhere(cat.loadTable("db", "p"), cur, col("day") === "2024-01-05")
     assert(r.shardsTotal == 8 && r.shardsOpened == 1,
       s"opened ${r.shardsOpened} of ${r.shardsTotal}")
     assert(cat.readLatestWhere("db", "p", col("day") === "2024-01-05").count() == 20L)
     // cold-cache parse accounting
     SnapshotCatalog.clearManifestCacheForTest()
     val p0 = SnapshotCatalog.manifestParses.get()
-    cat.resolveWhere("db", "p", cur, col("day") === "2024-01-03")
+    cat.resolveWhere(cat.loadTable("db", "p"), cur, col("day") === "2024-01-03")
     assert(SnapshotCatalog.manifestParses.get() - p0 == 1)
   }
 
@@ -98,7 +98,7 @@ class ManifestPruneSpec extends AnyFunSuite {
       mk(1).schema, "t", "day")
     (1 to 8).foreach(d => cat.appendTransformed("db", "ev", mk(d)))
     val cur = cat.currentSnapshotId("db", "ev")
-    val r = cat.resolveWhere("db", "ev", cur,
+    val r = cat.resolveWhere(cat.loadTable("db", "ev"), cur,
       col("t") >= lit("2024-02-04 00:00:00").cast("timestamp") &&
         col("t") < lit("2024-02-05 00:00:00").cast("timestamp"))
     assert(r.shardsTotal == 8 && r.shardsOpened == 1,
@@ -118,7 +118,7 @@ class ManifestPruneSpec extends AnyFunSuite {
     }
     cat.deleteMoR("db", "m", col("id") === 25L || col("id") === 26L)
     val cur = cat.currentSnapshotId("db", "m")
-    val r = cat.resolveWhere("db", "m", cur, col("id").between(20L, 29L))
+    val r = cat.resolveWhere(cat.loadTable("db", "m"), cur, col("id").between(20L, 29L))
     assert(r.shardsOpened < r.shardsTotal, s"${r.shardsOpened}/${r.shardsTotal}")
     val got = cat.readLatestWhere("db", "m", col("id").between(20L, 29L))
       .select("id").as[Long].collect().toSet
@@ -140,7 +140,7 @@ class ManifestPruneSpec extends AnyFunSuite {
         col("s").isin((0 until 3).map(_ => s"s${rng.nextInt(40)}"): _*),
         col("id") > rng.nextInt(300).toLong && col("k") < rng.nextInt(60).toLong)
       preds.foreach { p =>
-        val r = cat.resolveWhere("db", "r", cur, p)
+        val r = cat.resolveWhere(cat.loadTable("db", "r"), cur, p)
         plans += 1; skips += (r.shardsTotal - r.shardsOpened)
         val twoLevel = cat.readLatestWhere("db", "r", p)
           .select("id", "k", "s").as[(Long, Long, String)].collect().toSet
@@ -282,18 +282,18 @@ class ManifestPruneSpec extends AnyFunSuite {
     // warm the JVM constants (first-call Catalyst analysis, classloading)
     // so the timed comparison isolates METADATA cost, the thing that
     // scales with file count
-    cat.resolveWhere("db", "big", 2L, col("day") === "2024-03-000")
+    cat.resolveWhere(cat.loadTable("db", "big"), 2L, col("day") === "2024-03-000")
     // pinned-partition plan, COLD manifest cache: parses exactly 1 of the
     // 125 shards — the million-file inventory is never read
     SnapshotCatalog.clearManifestCacheForTest()
     val p0 = SnapshotCatalog.manifestParses.get()
-    val (r, coldMs) = timed(cat.resolveWhere("db", "big", 2L, col("day") === "2024-03-042"))
+    val (r, coldMs) = timed(cat.resolveWhere(cat.loadTable("db", "big"), 2L, col("day") === "2024-03-042"))
     assert(r.shardsTotal == nShards && r.shardsOpened == 1,
       s"opened ${r.shardsOpened} of ${r.shardsTotal}")
     assert(SnapshotCatalog.manifestParses.get() - p0 == 1)
     assert(r.kept.size == filesPerShard) // every file of the day's shard
     // a key pin composes: day + id range prunes to the one file
-    val r2 = cat.resolveWhere("db", "big", 2L,
+    val r2 = cat.resolveWhere(cat.loadTable("db", "big"), 2L,
       col("day") === "2024-03-042" && col("id") === 33600550L)
     assert(r2.shardsOpened == 1 && r2.kept.size == 1, s"${r2.kept.size} files")
     // and the pinned plan is an order of magnitude cheaper than full
@@ -424,7 +424,7 @@ class ManifestPruneSpec extends AnyFunSuite {
     }
     assert(cat.rewriteManifests("db", "c").isDefined)
     val cur = cat.currentSnapshotId("db", "c")
-    val r = cat.resolveWhere("db", "c", cur, col("day") === "2024-02-04")
+    val r = cat.resolveWhere(cat.loadTable("db", "c"), cur, col("day") === "2024-02-04")
     assert(r.shardsTotal == 6, s"expected one shard per day, got ${r.shardsTotal}")
     assert(r.shardsOpened == 1, s"opened ${r.shardsOpened}")
     assert(cat.readLatestWhere("db", "c", col("day") === "2024-02-04").count() == 20L)
@@ -445,7 +445,7 @@ class ManifestPruneSpec extends AnyFunSuite {
     try {
       assert(cat2.rewriteManifests("db", "u").isDefined)
       val cur2 = cat2.currentSnapshotId("db", "u")
-      val r2 = cat2.resolveWhere("db", "u", cur2, col("id") === 5L)
+      val r2 = cat2.resolveWhere(cat2.loadTable("db", "u"), cur2, col("id") === 5L)
       assert(r2.shardsTotal > 1 && r2.shardsOpened == 1,
         s"${r2.shardsOpened}/${r2.shardsTotal}")
       assert(cat2.readLatest("db", "u").count() == 60L)
@@ -500,7 +500,7 @@ class ManifestPruneSpec extends AnyFunSuite {
     cat.compact("db", "g", 1)
     cat.expireSnapshots("db", "g", keepLast = 1)
     val cur = cat.currentSnapshotId("db", "g")
-    val r = cat.resolveWhere("db", "g", cur, col("id") === 3L)
+    val r = cat.resolveWhere(cat.loadTable("db", "g"), cur, col("id") === 3L)
     assert(r.shardsOpened <= r.shardsTotal)
     assert(cat.readLatestWhere("db", "g", col("id") === 3L).count() == 1L)
   }

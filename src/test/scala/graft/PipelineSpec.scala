@@ -237,6 +237,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(jobs == 2, s"jobs: $jobs")
   }
 
+  test("migrating one table reads each pointer log once plus once per commit attempt") {
+    val src = newCat()
+    val dst = newCat()
+    val ti = morSource(src)
+    assert(TableCreator.createOne(dst, ti).status == "success")
+    val r0 = SnapshotCatalog.logReads.get()
+    assert(Migrator.migrateOne(src, dst, ti).status == "success")
+    val reads = SnapshotCatalog.logReads.get() - r0
+    info(s"migrate of one table: $reads pointer-log reads")
+    // two tables touched (source and target), one commit attempt
+    assert(reads <= 3, s"migrate read the pointer logs $reads times")
+    assert(IntegrityVerifier.verifyOne(src, dst, ti).ok)
+  }
+
   test("verify with no recorded source digest runs 2 Spark jobs (counter gate)") {
     val src = newCat()
     val dst = newCat()

@@ -314,4 +314,29 @@ class PointerCommitSpec extends AnyFunSuite {
     assert(cat.readLatest("db", "dg").where(col("day") === "2024-03-03")
       .select("id").as[Long].collect().toSet == (3L until 10L).toSet)
   }
+
+  test("one CoW delete and one upsertMoR read the pointer log once per commit attempt") {
+    val cat = freshCat()
+    cat.createTable("db", "lr", StructType.fromDDL("id BIGINT, v STRING"))
+    (0 until 4).foreach { i =>
+      cat.append("db", "lr",
+        (i * 10 until i * 10 + 10).map(j => (j.toLong, s"v$j")).toDF("id", "v"))
+    }
+    def reads[A](body: => A): (A, Long) = {
+      val r0 = SnapshotCatalog.logReads.get()
+      val out = body
+      (out, SnapshotCatalog.logReads.get() - r0)
+    }
+    val (del, delReads) = reads(cat.delete("db", "lr", col("id") < 5L))
+    val (up, upReads) = reads(cat.upsertMoR("db", "lr",
+      Seq((7L, "u7"), (99L, "n99")).toDF("id", "v"), Seq("id")))
+    info(s"CoW delete: $delReads pointer-log reads; upsertMoR: $upReads")
+    // one table touched, one commit attempt: its state load is the read
+    assert(delReads <= 2, s"CoW delete read the pointer log $delReads times")
+    assert(upReads <= 2, s"upsertMoR read the pointer log $upReads times")
+    assert(del.recordCount == 35L && up.recordCount == 36L)
+    assert(cat.readLatest("db", "lr").select("id", "v").as[(Long, String)]
+      .collect().toMap.filter(r => r._1 == 7L || r._1 == 99L) == Map(7L -> "u7", 99L -> "n99"))
+    assert(cat.readLatest("db", "lr").count() == 36L)
+  }
 }

@@ -197,6 +197,14 @@ class PositionDeleteSpec extends AnyFunSuite {
     val dup = spark.range(0, 4 * SnapshotCatalog.InlineKeyBound)
       .select((col("id") % 7).as("k"), lit(-1).as("v"))
     assert(!posDeletePlan(checkUpsert(cat, dup)).contains("Join"))
+    // the key probe's one pass also yields the key range: no second
+    // (min/max) pass over the key frame before the position-delete write
+    val cat2 = freshCatalog()
+    twoFileTable(cat2, spark.range(0, 3000).select(col("id").as("k"), col("id").cast("int").as("v")))
+    val (_, jobs, _) = traced(cat2.upsertMoR("db", "t",
+      spark.range(0, n).select((col("id") * 2).as("k"), (-col("id")).cast("int").as("v")), Seq("k")))
+    info(s"past-the-bound upsert: $jobs Spark jobs")
+    assert(jobs <= 5, s"$jobs jobs")
   }
 
   test("job gates: a 50-row local upsert runs 2 jobs, a MoR delete 1") {

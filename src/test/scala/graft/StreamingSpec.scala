@@ -682,6 +682,8 @@ class StreamingSpec extends AnyFunSuite {
     }
     val (r4, r16) = (readsFor(4), readsFor(16))
     assert(r16 <= r4, s"log reads grew with the commit count: k=4 -> $r4, k=16 -> $r16")
+    // each offset and planning call loads the log once
+    assert(r16 <= 14, s"a drain read the pointer log $r16 times")
   }
 
   test("resume from an expired snapshot surfaces an actionable error; re-checkpoint recovers") {

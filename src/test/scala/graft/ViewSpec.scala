@@ -578,7 +578,7 @@ class ViewSpec extends AnyFunSuite {
     val eqLo = cat.currentSnapshotId("db", "base")
     cat.deleteMoREq("db", "base", Seq(Tuple1(2L)).toDF("id"))
     val eqHi = cat.currentSnapshotId("db", "base")
-    val eqSets = cat.changeSetsAcrossRange("db", "base", eqLo, eqHi)
+    val eqSets = cat.changeSetsAcrossRange(cat.loadTable("db", "base"), eqLo, eqHi)
     assert(eqSets.isDefined, "eq-delete range must resolve from metadata")
     val (eqIns, eqDel) = eqSets.get
     assert(eqIns.isEmpty && eqDel.select("id").as[Long].collect().toSeq == Seq(2L),
@@ -595,7 +595,7 @@ class ViewSpec extends AnyFunSuite {
     cat.deleteMoR("db", "base", col("id") === 960L) // a LIVE row dies
     cat.rollback("db", "base", rbLo)               // ...and resurrects
     val rbHi = cat.currentSnapshotId("db", "base")
-    assert(cat.changeSetsAcrossRange("db", "base", rbLo, rbHi).isEmpty,
+    assert(cat.changeSetsAcrossRange(cat.loadTable("db", "base"), rbLo, rbHi).isEmpty,
       "a shard-dropping rollback must decline the metadata walk")
     assert(cat.refreshMaterializedView("db", "agg")._1 == "incremental_agg")
     assert(got() == expect())
@@ -790,7 +790,9 @@ class ViewSpec extends AnyFunSuite {
     val (m1, _) = cat.refreshMaterializedView("db", "nkv")
     val reads = SnapshotCatalog.logReads.get() - reads0
     info(s"incremental_agg refresh: $reads pointer-log reads")
-    assert(reads <= 13, s"incremental_agg refresh read the pointer log $reads times")
+    // the base and the backing load once each for the refresh's reads,
+    // and each commit attempt loads its table once
+    assert(reads <= 5, s"incremental_agg refresh read the pointer log $reads times")
     assert(m1 == "incremental_agg", m1)
     assert(got() == expect())
     assert(got().count(_._1.isEmpty) == 1, got().toString)
